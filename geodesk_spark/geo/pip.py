@@ -10,9 +10,11 @@ by the same arithmetic.  Multiple rings XOR together
 (``PointInPolygon.java:21-23``) so holes fall out naturally.
 
 Shapely is not available in this environment; these kernels are the
-engine's geometry core and are deliberately simple, branch-free numpy —
-they vectorize over *all points in an Arrow batch at once* per ring,
-which is the shape that matters inside ``mapInPandas``.
+engine's geometry core and are deliberately simple, branch-free numpy
+that vectorizes over many points at once per ring: driver-side layer
+preparation (cell classification) and the test references use them.
+The join's exact test is their JVM twin,
+``operators.spatial_join.odd_crossings``, the same ops in float64.
 """
 
 from __future__ import annotations

@@ -1,9 +1,9 @@
 """Shuffle (big-big) point-in-polygon join — the non-broadcast scale path.
 
 The flagship ``spatial_join.contains_points`` assumes a dimension-sized
-polygon layer: bands broadcast, segments either plan literals or a
-driver-held broadcast variable.  That is the right plan for the
-reference's typical query shape (a handful of query polygons,
+polygon layer: the band table and the per-row slab edge table are
+both broadcast.  That is the right plan for the reference's typical
+query shape (a handful of query polygons,
 ContainsPointFilter.java:26-72), but at 100 TB the layer itself can be a
 fact table — every building footprint on Earth is ~10^9 polygons, far
 past any broadcast threshold, and nothing may ever touch the driver.
@@ -26,13 +26,13 @@ distributed:
    (see ``_quadtree_bands``: every polygon's bands land on that fixed
    level set), so probe fan-out is 4 rows/point regardless of layer
    size or polygon size mix.
-3. **The exact ray-cast is the same 100% whole-stage-codegen fold as
-   the flagship**, but over a segment-array COLUMN fetched by a second
-   equi-join on poly_id — geometry arrives as data, never as plan
-   literals, so Catalyst plan size and codegen method size stay O(1) in
-   the layer (the broadcast path's JVM_SEG_BUDGET ceiling does not
-   exist here).  Only BOUNDARY-band candidates take this join; INTERIOR
-   matches bypass it entirely.
+3. **The exact ray-cast is the flagship's fold**
+   (``spatial_join.odd_crossings``), but over a whole-polygon segment
+   array fetched by a second shuffle equi-join on poly_id, where the
+   flagship broadcasts per-row slabs.  Geometry arrives as data, never
+   as plan literals, so plan size stays O(1) in the layer.  Only
+   BOUNDARY-band candidates take this join; INTERIOR matches bypass it
+   entirely.
 
 Skew note: the boundary⋈segments join keys on poly_id, so one enormous
 polygon with millions of boundary candidates is a hot key — exactly the
@@ -54,27 +54,22 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from geodesk_spark.geo import pip
-from geodesk_spark.geo import tile as T
 from geodesk_spark.operators.spatial_join import (
     BOUNDARY,
     INTERIOR,
+    EDGE_FIELDS,
+    EDGE_SCHEMA,
     _quadtree_bands,
+    _segments,
+    edge_fields,
+    odd_crossings,
+    point_cell_col,
 )
 
 #: The fixed quadtree level set every polygon's bands land on
 #: (spatial_join._quadtree_bands snaps bases to multiples of 4 and
 #: refines in steps of 4).
 SHARED_LEVELS = (4, 8, 12, 16)
-
-
-def _cell_expr(zoom: int):
-    """Point's quadtree cell id at ``zoom`` — pure JVM bit arithmetic,
-    identical packing to spatial_join._cell_ids: (zoom<<40)|(row<<20)|col."""
-    return (
-        F.lit(zoom << 40).cast("long")
-        + F.shiftleft(T.row_from_y_col(F.col("y"), zoom).cast("long"), 20)
-        + T.column_from_x_col(F.col("x"), zoom).cast("long")
-    )
 
 
 def layer_bands(polygons: DataFrame) -> DataFrame:
@@ -115,41 +110,25 @@ def layer_bands(polygons: DataFrame) -> DataFrame:
 
 
 def layer_segments(polygons: DataFrame) -> DataFrame:
-    """(poly_id, rings binary) → (poly_id, segs array<struct<x1,y1,x2,y2>>).
+    """(poly_id, rings binary) → (poly_id, segs array<struct<ylo,yhi,x1,y1,dx,dy>>).
 
-    Segments are emitted as four parallel double arrays (columnar through
-    Arrow) and zipped JVM-side — the exact-test fold then runs on a plain
-    column, keeping plan size independent of the layer.  All rings'
-    segments concatenate into one array: crossing parity over the union
-    of rings == XOR of per-ring parities (PointInPolygon.java:21-23).
+    The fold's per-edge fields (``spatial_join.edge_fields``) are emitted
+    as parallel double arrays (columnar through Arrow) and zipped
+    JVM-side — the exact-test fold then runs on a plain column, keeping
+    plan size independent of the layer.  All rings' segments
+    concatenate into one array: crossing parity over the union of rings
+    == XOR of per-ring parities (PointInPolygon.java:21-23).
     """
 
     def gen(batches):
         for pdf in batches:
-            rows = []
-            for pid, blob in zip(pdf["poly_id"], pdf["rings"]):
-                rings = pip.unpack_rings(bytes(blob))
-                a = np.concatenate(
-                    [np.concatenate([r[:-1], r[1:]], axis=1) for r in rings], axis=0
-                )
-                rows.append(
-                    (pid, a[:, 0].tolist(), a[:, 1].tolist(), a[:, 2].tolist(), a[:, 3].tolist())
-                )
+            rows = [(pid, *edge_fields(_segments(pip.unpack_rings(bytes(blob)))))
+                    for pid, blob in zip(pdf["poly_id"], pdf["rings"])]
             if rows:
-                yield pd.DataFrame(
-                    rows, columns=["poly_id", "x1", "y1", "x2", "y2"]
-                )
+                yield pd.DataFrame(rows, columns=["poly_id", *EDGE_FIELDS])
 
-    cols = polygons.mapInPandas(
-        gen,
-        schema=(
-            "poly_id string, x1 array<double>, y1 array<double>, "
-            "x2 array<double>, y2 array<double>"
-        ),
-    )
-    return cols.select(
-        "poly_id", F.arrays_zip("x1", "y1", "x2", "y2").alias("segs")
-    )
+    cols = polygons.mapInPandas(gen, schema="poly_id string, " + EDGE_SCHEMA)
+    return cols.select("poly_id", F.arrays_zip(*EDGE_FIELDS).alias("segs"))
 
 
 def contains_points_big(
@@ -168,14 +147,14 @@ def contains_points_big(
     Results are identical to ``spatial_join.contains_points`` on the same
     layer (pinned in tests/test_bigjoin.py); only the physical plan
     differs: shuffle joins instead of broadcast, Arrow layer prep instead
-    of driver prep, segment column instead of plan literals.
+    of driver prep, whole-polygon segment arrays instead of slab edges.
     """
     keep = keep_cols or [c for c in points.columns if c not in ("x", "y")]
     bands = layer_bands(polygons)
     segs = layer_segments(polygons)
 
     probe = points.withColumn(
-        "_cell", F.explode(F.array(*[_cell_expr(z) for z in SHARED_LEVELS]))
+        "_cell", F.explode(F.array(*[point_cell_col(z) for z in SHARED_LEVELS]))
     )
     j = probe.join(bands, probe["_cell"] == bands["cell"])
 
@@ -183,23 +162,13 @@ def contains_points_big(
 
     boundary = (
         j.filter(F.col("band") == BOUNDARY)
-        .select(*keep, "x", "y", "poly_id")
+        .select(*keep, F.col("x").cast("double").alias("_xd"),
+                F.col("y").cast("double").alias("_yd"), "poly_id")
         .join(segs, "poly_id")
     )
-    xd = F.col("x").cast("double")
-    yd = F.col("y").cast("double")
-
-    def _crosses(sg):
-        c = ((sg["y1"] <= yd) & (sg["y2"] > yd)) | (
-            (sg["y1"] > yd) & (sg["y2"] <= yd)
-        )
-        return c & (
-            xd
-            < sg["x1"] + (yd - sg["y1"]) / (sg["y2"] - sg["y1"]) * (sg["x2"] - sg["x1"])
-        )
-
-    ncross = F.size(F.filter(F.col("segs"), _crosses))
-    exact = boundary.filter(ncross % 2 == 1).select(*keep, "poly_id")
+    exact = boundary.filter(
+        odd_crossings(F.col("segs"), F.col("_xd"), F.col("_yd"))
+    ).select(*keep, "poly_id")
 
     matches = interior.unionByName(exact)
     if not anti:

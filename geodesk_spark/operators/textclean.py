@@ -418,6 +418,9 @@ def bpe_train(
     ).alias("word")
     vocab = (
         df.select(words)
+        # trim strips spaces only: tab/newline-edged text splits into a
+        # '' word, which would yield a phantom ('', '') pair
+        .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn(

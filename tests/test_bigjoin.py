@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from geodesk_spark.geo import pip
 from geodesk_spark.operators import bigjoin, spatial_join, tiling
 from geodesk_spark.sources import synth
+from tests.test_spatial_join import assert_geometry_as_data
 
 
 @pytest.fixture(scope="module")
@@ -86,14 +87,11 @@ def test_big_join_no_duplicate_candidates(spark, world, layer):
 
 def test_big_join_plan_has_no_layer_literals(spark, world, layer):
     """Plan size stays O(1) in the layer: geometry travels as data, so the
-    analyzed plan string must not embed per-vertex literals (the broadcast
-    jvm_exact path embeds thousands of float literals; this path none)."""
+    analyzed plan string must not embed per-vertex literals (the same
+    check pins the broadcast path in tests/test_spatial_join.py)."""
     df, _ = world
     out = bigjoin.contains_points_big(df, _layer_df(spark, layer), keep_cols=["image_id"])
-    plan = out._jdf.queryExecution().analyzed().toString()
-    ring0 = pip.unpack_rings(layer[0]["rings"])[0]
-    assert repr(float(ring0[0, 0])) not in plan
-    assert len(plan) < 100_000
+    assert_geometry_as_data(out, layer, max_len=100_000)
 
 
 # ---------------------------------------------------------------- crossing join

@@ -105,26 +105,79 @@ def _ngon_layer(n_polys: int, n_verts: int) -> list[dict]:
     return polys
 
 
-def test_jvm_auto_switch_identical(world, monkeypatch):
-    """Vertex-budget auto-switch (VERDICT r01 #5): above JVM_SEG_BUDGET the
-    join must drop the literal-segment plan for the Arrow kernel, with
-    identical output; the auto plan must not embed the segment map."""
-    df, _ = world
-    pts = df.select("image_id", "x", "y").limit(4000)
-    layer = _ngon_layer(12, 60)  # 720 segments
-    prepared = spatial_join.prepare_layer(layer)
-    monkeypatch.setattr(spatial_join, "JVM_SEG_BUDGET", 500)
+def _hand_layer() -> list[dict]:
+    """Edge cases for the slab-indexed exact test: horizontal edges on a
+    row bottom (y = 0) and on a row top (y = (3 << 20) - 1) at every zoom
+    from 12 up, a vertex starting an edge on that row top, a vertical edge
+    spanning dozens of slab rows, a hole, and a second polygon across
+    y = 0 with negative coordinates."""
+    top = (3 << 20) - 1
+    shell = np.array([(0, 0), (4_000_000, 0), (4_000_000, top),
+                      (2_500_000, top), (1_000_000, 6_000_000), (0, 0)],
+                     dtype=np.float64)
+    hole = np.array([(1_000_000, 1_000_000), (2_000_000, 1_000_000),
+                     (2_000_000, 2_000_000), (1_000_000, 2_000_000),
+                     (1_000_000, 1_000_000)], dtype=np.float64)
+    tri = np.array([(-3e6, -2e6), (-1e6, 2.5e6), (-5e6, 1e6), (-3e6, -2e6)])
+    return [dict(poly_id="hand_holed", rings=pip.pack_rings([shell, hole])),
+            dict(poly_id="hand_tri", rings=pip.pack_rings([tri]))]
 
-    auto = spatial_join.contains_points(pts, prepared, keep_cols=["image_id"])
-    forced = spatial_join.contains_points(pts, prepared, keep_cols=["image_id"], jvm_exact=True)
-    got_auto = set(map(tuple, auto.toPandas()[["image_id", "poly_id"]].to_numpy().tolist()))
-    got_jvm = set(map(tuple, forced.toPandas()[["image_id", "poly_id"]].to_numpy().tolist()))
-    assert got_auto == got_jvm and len(got_auto) > 0
-    # the auto plan fell back to the kernel: no giant map literal
-    auto_plan = auto._jdf.queryExecution().executedPlan().toString()
-    forced_plan = forced._jdf.queryExecution().executedPlan().toString()
-    assert "map(" not in auto_plan and "MapInPandas" in auto_plan
-    assert len(auto_plan) < len(forced_plan)
+
+def assert_geometry_as_data(df, layer, max_len: int = 10_000):
+    """The analyzed plan embeds no ring-vertex literal, in either the
+    Python or the JVM spelling of the double, and stays under a fixed
+    length: the plan does not grow with the layer's vertex count."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    jdouble = df.sparkSession._jvm.java.lang.Double
+    for p in layer:
+        for ring in pip.unpack_rings(p["rings"]):
+            for v in ring[:-1].ravel().tolist():
+                assert repr(v) not in plan and jdouble.toString(v) not in plan, v
+    assert len(plan) < max_len, len(plan)
+
+
+@pytest.mark.parametrize(
+    "make_layer",
+    [lambda: _ngon_layer(12, 60), lambda: _ngon_layer(12, 1000), _hand_layer],
+    ids=["ngon_720_segs", "ngon_12000_segs", "hand_edge_cases"],
+)
+def test_contains_points_slab_exact_matches_bruteforce(spark, make_layer):
+    """The one exact path (BOUNDARY candidates fold over their slab's
+    edges only) equals the numpy ray-cast over every ring, including
+    points whose y sits exactly on a slab row's bottom and top value."""
+    layer = make_layer()
+    prepared = spatial_join.prepare_layer(layer)
+    rng = np.random.default_rng(5)
+    xs, ys = [], []
+    for p in prepared:
+        xs.append(rng.integers(int(p.minx), int(p.maxx), 400))
+        ys.append(rng.integers(int(p.miny), int(p.maxy), 400))
+        # on every boundary slab's bottom and top row: on, just left and
+        # just right of each edge that spans it
+        x1, y1, x2, y2 = np.concatenate(
+            [np.concatenate([r[:-1], r[1:]], axis=1) for r in p.rings]).T
+        for key in p.slab_keys:
+            for yv in spatial_join._row_y_range(key & ((1 << 20) - 1), key >> 20):
+                on = (np.minimum(y1, y2) <= yv) & (yv <= np.maximum(y1, y2)) & (y1 != y2)
+                xi = x1[on] + (yv - y1[on]) / (y2[on] - y1[on]) * (x2[on] - x1[on])
+                xs += [np.floor(xi) - 1, np.floor(xi), np.ceil(xi) + 1]
+                ys.append(np.full(3 * len(xi), yv))
+    x, y = np.concatenate(xs), np.concatenate(ys)
+    ids = np.array([f"p{i}" for i in range(len(x))])
+    pts = spark.createDataFrame(
+        [(i, int(a), int(b)) for i, a, b in zip(ids, x, y)],
+        "image_id string, x long, y long",
+    )
+    out = spatial_join.contains_points(pts, prepared, keep_cols=["image_id"])
+    got = set(map(tuple, out.toPandas()[["image_id", "poly_id"]].to_numpy().tolist()))
+    exp = set()
+    for p in layer:
+        inside = pip.points_in_polygon(x.astype(np.float64), y.astype(np.float64),
+                                       pip.unpack_rings(p["rings"]))
+        exp |= {(i, p["poly_id"]) for i in ids[inside]}
+    assert got == exp
+    assert len(exp) > 100
+    assert_geometry_as_data(out, layer)
 
 
 def test_knn_many_queries_bounded(world):
@@ -401,7 +454,9 @@ def test_flagship_plan_shape_regression(spark, tmp_path):
     - the polygon band table arrives by BroadcastExchange into a
       BroadcastHashJoin,
     - no BatchEvalPython / ArrowEvalPython / MapInPandas / FlatMapsInPandas
-      nodes anywhere (100% JVM whole-stage codegen)."""
+      nodes anywhere (no Python worker),
+    - no ring-vertex literal in the analyzed plan, whose length stays
+      bounded (the layer's geometry arrives as broadcast data)."""
     import re
 
     from geodesk_spark.operators import spatial_join, tiling
@@ -427,3 +482,5 @@ def test_flagship_plan_shape_regression(spark, tmp_path):
         assert py_node not in nodes, py_node
     # the projection must prune to the three columns the kernel needs
     assert re.search(r"ReadSchema: struct<image_id:string,lon:double,lat:double>", plan)
+    # geometry travels as data: no ring-vertex literal, bounded plan
+    assert_geometry_as_data(joined, synth.polygon_layer())

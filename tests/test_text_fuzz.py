@@ -6,7 +6,7 @@ against its DuckDB oracle twin.  Few examples, whole-corpus per example
 
 import duckdb
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from geodesk_spark.operators import dedup, text, textclean
 
@@ -113,13 +113,15 @@ def test_fuzz_gopher_quality_parity(spark, docs):
 
 
 @settings(max_examples=4, deadline=None)
-@given(docs=st.lists(st.lists(st.text(alphabet="ab", min_size=1, max_size=5),
+@given(docs=st.lists(st.lists(st.text(alphabet="ab\t\n", min_size=1, max_size=5),
                               min_size=0, max_size=6).map(" ".join),
                      min_size=1, max_size=6))
+@example(docs=["\tab ba", "ab\n", "a\tb"])
 def test_fuzz_bpe_train_parity(spark, docs):
     """bpe_train merge lists + final segmentations match the Python
     Sennrich reference on adversarial two-letter corpora (maximal
-    overlapping-merge chains)."""
+    overlapping-merge chains), with tab/newline-edged words that Spark's
+    space-only trim leaves in place."""
     from tests.test_textclean import _bpe_reference
 
     sdf, _ = _frames(spark, docs)
