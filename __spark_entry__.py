@@ -1,12 +1,9 @@
 """Driver contract: entry(spark), queries(), oracle_sql().
 
 Thin shim over :mod:`geodesk_spark.driver_queries` — the per-family
-query-builder modules plus the assembled registry.  The former
-4.4k-line single file was split by ``tools/split_entry.py`` (VERDICT
-r02 #7): statements kept their original relative order, cross-module
-imports were computed from the actual name-reference graph, and the
-registry (names, order, oracle SQL) was hash-verified identical across
-the split.
+query-builder modules plus the assembled registry.  The modules are
+hand-maintained; add a query to its family module and register it in
+geodesk_spark/driver_queries/registry.py.
 
 Registry ordering contract: TIER A = the canonical 50 (one query per
 operator family, every SURVEY §2.3 join, the tile family, the flagship

@@ -46,7 +46,7 @@ def ensure_input(n_rows: int) -> str:
     from geodesk_spark.session import get_spark
     from geodesk_spark.sources import synth
 
-    spark = get_spark("bench-gen", cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    spark = get_spark("bench-gen")
     try:
         synth.images_df(spark, n_rows, with_bytes=False, partitions=128).write.mode(
             "overwrite"
@@ -113,26 +113,6 @@ def _scan_roofline_once(spark, path: str) -> float:
     return time.time() - t0
 
 
-def _flagship_mpb(path: str, cores: int) -> str:
-    """Scan-partition size targeting ~10 tasks/core (clamped 16–128 MB).
-
-    Measured (r03, 128 M rows): the default 128 MB packed the input into
-    43 scan partitions — 1.34 waves at 32 cores, so up to 25% of cores
-    idled in the tail of the ONE long codegen stage, and coarse tasks
-    amplified the city-hot-cell per-row skew.  16–24 MB (≈8–12
-    tasks/core) cut local[32] wall 11.4 → 7.0 s in the same window; the
-    lo side prefers coarser tasks (64 MB at 8 cores), hence the
-    per-core rule rather than a fixed size.  At 100 TB this is the same
-    standard sizing rule — tasks ≈ a small multiple of total cores."""
-    total = 0
-    for dirpath, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(dirpath, fn))
-    mpb = min(max(total // (10 * cores), 16 << 20), 128 << 20)
-    return str(mpb)
-
-
 def timed_flagship(
     cores: int, path: str, n_rows: int, reps: int = 2
 ) -> tuple[float, float, float, float]:
@@ -142,14 +122,10 @@ def timed_flagship(
     Returns (engine_sec, engine_rows_per_sec, ceiling_sec, scan_sec).
     Best-of-N: the sandbox host has noisy co-tenants, so the minimum is
     the faithful estimate of steady-state throughput."""
-    from geodesk_spark.session import get_spark
+    from geodesk_spark.session import get_spark, size_scan_partitions
 
-    spark = get_spark(
-        f"bench-{cores}",
-        cores=cores,
-        shuffle_partitions=max(cores, 8),
-        extra_conf={"spark.sql.files.maxPartitionBytes": _flagship_mpb(path, cores)},
-    )
+    spark = get_spark(f"bench-{cores}", cores=cores)
+    size_scan_partitions(spark, path)
     try:
         flagship(spark, path)  # warm: JIT, Arrow init, python workers
         dt = min(_timed_once(spark, path) for _ in range(reps))
@@ -177,22 +153,23 @@ def timed_flagship_cluster(
     """Flagship on ``local-cluster[n,c]`` — REAL separate executor JVMs
     with their own heaps and shuffle/broadcast transport, the literal
     single-box analog of the BASELINE "N vs 4N executors" criterion
-    (local[k] shares one JVM; this does not).  Returns (sec, rows/sec)."""
-    from pyspark.sql import SparkSession
+    (local[k] shares one JVM; this does not).  Returns (sec, rows/sec).
 
-    total = n_exec * cores_each
-    spark = (
-        SparkSession.builder.master(f"local-cluster[{n_exec},{cores_each},4096]")
-        .appName(f"bench-lc-{n_exec}x{cores_each}")
-        .config("spark.executor.memory", "4g")
-        .config("spark.sql.shuffle.partitions", str(max(total, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", _flagship_mpb(path, total))
-        .getOrCreate()
+    Each executor gets at most 1/8 of the physical RAM (4 GiB cap), so
+    four of them take at most half of it."""
+    from geodesk_spark.session import get_spark, size_scan_partitions
+
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    mem_mb = min(4096, ram_mb // 8)
+    spark = get_spark(
+        f"bench-lc-{n_exec}x{cores_each}",
+        cores=n_exec * cores_each,
+        extra_conf={
+            "spark.master": f"local-cluster[{n_exec},{cores_each},{mem_mb}]",
+            "spark.executor.memory": f"{mem_mb}m",
+        },
     )
+    size_scan_partitions(spark, path)
     try:
         flagship(spark, path)  # warm
         dt = min(_timed_once(spark, path) for _ in range(reps))
@@ -257,15 +234,15 @@ def run_headline(spark, sf_dir: str) -> dict[str, float]:
 
 
 def main():
+    from geodesk_spark.session import get_spark, host_cores
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = host_cores()
     sf = sf_dir.rstrip("/").split("sf")[-1]
 
     input_path = ensure_input(FLAGSHIP_ROWS)
 
-    from geodesk_spark.session import get_spark
-
-    spark = get_spark("bench", cores=cores, shuffle_partitions=max(cores, 8))
+    spark = get_spark("bench", cores=cores)
     queries = run_headline(spark, sf_dir)
     total = round(sum(queries.values()), 3)  # sum of best-of-2 latencies
     spark.stop()
@@ -297,8 +274,8 @@ def main():
                 "scan_eff": (scan_lo / scan_hi) / ratio,
             }
         )
-        dt1, thr1 = timed_flagship_cluster(1, 8, input_path, FLAGSHIP_ROWS)
-        dt4, thr4 = timed_flagship_cluster(4, 8, input_path, FLAGSHIP_ROWS)
+        dt1, thr1 = timed_flagship_cluster(1, lo_cores, input_path, FLAGSHIP_ROWS)
+        dt4, thr4 = timed_flagship_cluster(4, lo_cores, input_path, FLAGSHIP_ROWS)
         lc_pairs.append(
             {"dt_lo": dt1, "thr_lo": thr1, "dt_hi": dt4, "thr_hi": thr4,
              "eff": (thr4 / thr1) / 4.0}
@@ -333,12 +310,12 @@ def main():
         "scaling_efficiency_normalized": round(min(eff / ceil_eff, 1.0), 3),
         "scaling_efficiency_vs_scan_roofline": round(min(eff / scan_eff, 1.0), 3),
         "local_cluster_flagship_sec": {
-            "1x8": round(lc_med["dt_lo"], 2),
-            "4x8": round(lc_med["dt_hi"], 2),
+            f"1x{lo_cores}": round(lc_med["dt_lo"], 2),
+            f"4x{lo_cores}": round(lc_med["dt_hi"], 2),
         },
         "local_cluster_rows_per_sec": {
-            "1x8": round(lc_med["thr_lo"]),
-            "4x8": round(lc_med["thr_hi"]),
+            f"1x{lo_cores}": round(lc_med["thr_lo"]),
+            f"4x{lo_cores}": round(lc_med["thr_hi"]),
         },
         "local_cluster_scaling_pairs": [round(p["eff"], 3) for p in lc_pairs],
         "local_cluster_scaling_efficiency": round(lc_med["eff"], 3),

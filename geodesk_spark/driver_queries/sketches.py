@@ -1,8 +1,4 @@
-"""Driver-contract query builders (split from __spark_entry__.py).
-
-Auto-split by tools/split_entry.py: statements keep their original
-relative order; cross-module imports are computed from the actual
-name-reference graph.  See registry.py for the assembled QUERIES."""
+"""Driver-contract query builders; registry.py assembles them into QUERIES."""
 
 from __future__ import annotations
 

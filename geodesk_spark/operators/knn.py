@@ -68,6 +68,15 @@ def _guarantee_m(qy: int, radius_imps: int) -> float:
     return radius_imps * m_per_imp
 
 
+def _query_frame(spark, queries: list[tuple[str, float, float]]) -> DataFrame:
+    """[(query_id, lon, lat), ...] → (query_id string, x long, y long) in imps."""
+    qrows = [
+        (qid, int(mercator.x_from_lon(lon)[()]), int(mercator.y_from_lat(lat)[()]))
+        for qid, lon, lat in queries
+    ]
+    return spark.createDataFrame(qrows, "query_id string, x long, y long")
+
+
 def knn(
     points: DataFrame,
     queries: list[tuple[str, float, float]],
@@ -91,18 +100,13 @@ def knn(
     pay one aggregate up front and fail fast on duplicates (off by
     default: the check is a full shuffle of the fact table).
     """
-    spark = points.sparkSession
     if assert_unique_ids:
         dup = (
             points.groupBy(id_col).count().filter(F.col("count") > 1).limit(1).count()
         )
         if dup:
             raise ValueError(f"knn: id column {id_col!r} has duplicate values")
-    qrows = [
-        (qid, int(mercator.x_from_lon(lon)[()]), int(mercator.y_from_lat(lat)[()]))
-        for qid, lon, lat in queries
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id string, x long, y long")
+    qdf = _query_frame(points.sparkSession, queries)
     return knn_join(
         points, qdf, k, init_radius_imps=init_radius_imps, id_col=id_col,
         n_points=n_points,
@@ -591,19 +595,10 @@ def idw_interpolate(
     fact table, and the final fold groups k·|queries| rows.  Returns
     (query_id, idw_value, n_samples).
     """
-    spark = points.sparkSession
     # project the query list ONCE and share the frame between the kNN
     # candidate machinery and the value join-back (r03 review: knn()
     # used to re-project the same list internally)
-    qrows = [
-        (
-            qid,
-            int(mercator.x_from_lon(lon)[()]),
-            int(mercator.y_from_lat(lat)[()]),
-        )
-        for qid, lon, lat in queries
-    ]
-    qdf = spark.createDataFrame(qrows, "query_id string, x long, y long")
+    qdf = _query_frame(points.sparkSession, queries)
     nn = knn_join(points, qdf, k, id_col=id_col, n_points=n_points).select(
         "query_id", id_col, "rank"
     )

@@ -154,6 +154,17 @@ def ccw_ring_expr(r: str, engine: str, tag: str = "n") -> str:
     return f"case when {sh} < 0 then {rev} else {r} end"
 
 
+def _zones_sql(cid: str) -> str:
+    """The DuckDB twins' zone select over the ``clip0`` CTE: degenerate
+    zones dropped by the guard, the rest CCW-normalized as ``cr``.  Both
+    expressions name the raw ``clip0.cr`` so DuckDB cannot bind the
+    same-level ``cr`` alias (the normalized ring) in the guard."""
+    return (
+        f"select {cid}, {ccw_ring_expr('clip0.cr', 'duckdb')} as cr from clip0"
+        f" where {ring_area_positive_expr('clip0.cr', 'duckdb')}"
+    )
+
+
 def _edge_exprs(cring: str, clip_k: int, engine: str) -> list[tuple[str, str, str, str]]:
     """(ax, ay, bx, by) expression strings for each directed edge of a
     clip ring column holding exactly ``clip_k`` vertices (1-based
@@ -268,8 +279,7 @@ def overlay_area_sql(
         clipn_cte = (
             f"clipn as materialized (select {cid}, cr"
             + bb.format(r="cr", px="c")
-            + f" from (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr"
-            f" from clip0 where {ring_area_positive_expr('cr', 'duckdb')}))"
+            + f" from ({_zones_sql(cid)}))"
         )
         where = (
             "where s.sx0 <= c.cx1 and c.cx0 <= s.sx1"
@@ -290,8 +300,7 @@ def overlay_area_sql(
     return f"""
       with subj as materialized ({subject_sql}),
       clip0 as materialized ({clip_sql}),
-      clipn as (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from clip0
-                where {ring_area_positive_expr('cr', 'duckdb')}),
+      clipn as ({_zones_sql(cid)}),
       pairs as (select s.{sid}, c.{cid}, s.r, c.cr from subj s cross join clipn c),
       clipped as (select {sid}, {cid}, {cur} as rc from pairs),
       ar as (select {sid}, {cid},
@@ -395,8 +404,7 @@ def areal_interpolate_sql(
     return f"""
       with subj as materialized ({subject_sql}),
       clip0 as materialized ({clip_sql}),
-      clipn as (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from clip0
-                where {ring_area_positive_expr('cr', 'duckdb')}),
+      clipn as ({_zones_sql(cid)}),
       pairs as (select s.{sid}, c.{cid}, s.val, s.r, c.cr
                 from subj s cross join clipn c),
       clipped as (select {sid}, {cid}, val, r, {cur} as rc from pairs),
@@ -559,8 +567,7 @@ def zone_line_length_sql(
     return f"""
       with segs as materialized ({segs_sql}),
       clip0 as materialized ({clip_sql}),
-      clipn as (select {cid}, {ccw_ring_expr('cr', 'duckdb')} as cr from clip0
-                where {ring_area_positive_expr('cr', 'duckdb')}),
+      clipn as ({_zones_sql(cid)}),
       pairs as (select s.{sid}, c.{cid}, s.x1, s.y1, s.x2, s.y2, c.cr
                 from segs s cross join clipn c),
       lens as (select {sid}, {cid}, {len_expr} as len_in from pairs)
@@ -926,7 +933,7 @@ def overlay_area_big(
 
     s_pre = pre(subject, sid, s_ring, "s")
     c_pre = pre(
-        clip.select(
+        clip.filter(F.expr(ring_area_positive_expr(c_ring, "spark"))).select(
             F.col(cid), F.expr(ccw_ring_expr(c_ring, "spark", tag="bb")).alias(c_ring)
         ),
         cid,

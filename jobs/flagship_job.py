@@ -51,30 +51,16 @@ def main():
     from pyspark.sql import SparkSession, functions as F
 
     from geodesk_spark.operators import spatial_join, tiling
+    from geodesk_spark.session import size_scan_partitions
     from geodesk_spark.sources import synth
     from geodesk_spark.streaming.checkpoint import Pipeline
 
     spark = SparkSession.builder.appName("geodesk-flagship").getOrCreate()
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    # Scan-partition sizing (measured, BENCH.md r03): the pipeline is ONE
-    # long codegen stage rooted at the scan, so scan partitions ARE the
-    # task granularity — target ~10 tasks/core; the 128 MB default left
-    # a 32-core run at 1.34 waves (25% tail idle) and let coarse tasks
-    # amplify city-hot-cell skew.  When reading an existing input whose
-    # size we can cheaply know, shrink maxPartitionBytes accordingly.
+    # The pipeline is ONE long codegen stage rooted at the scan, so scan
+    # partitions ARE the task granularity: size them to the input.
     if args.input:
-        try:
-            cores = spark.sparkContext.defaultParallelism
-            total = sum(
-                int(f.length)
-                for f in spark._jvm.org.apache.hadoop.fs.FileSystem.get(
-                    spark._jsc.hadoopConfiguration()
-                ).listStatus(spark._jvm.org.apache.hadoop.fs.Path(args.input))
-            )
-            mpb = min(max(total // (10 * cores), 16 << 20), 128 << 20)
-            spark.conf.set("spark.sql.files.maxPartitionBytes", str(mpb))
-        except Exception:
-            pass  # keep the default on exotic filesystems
+        size_scan_partitions(spark, args.input)
     t0 = time.time()
     pipe = Pipeline(spark, args.workdir)
 

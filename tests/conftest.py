@@ -10,8 +10,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from geodesk_spark.session import get_spark
 
-    cores = int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))
-    s = get_spark("geodesk-spark-tests", cores=cores, shuffle_partitions=8)
+    s = get_spark("geodesk-spark-tests")
     yield s
     s.stop()
 

@@ -397,7 +397,8 @@ def test_overlay_big_equals_broadcast(spark):
     """The cell-blocked big-big overlay must return EXACTLY the broadcast
     variant's rows — same pairs (exactly-once despite multi-cell
     sharing), same quantized areas — across cell sizes straddling the
-    geometry scale."""
+    geometry scale.  A point zone and a collinear zone inside a subject
+    ride along: both variants must drop them (the zone guard)."""
     rng = np.random.default_rng(23)
     subs, clips = [], []
     for s in range(15):
@@ -410,6 +411,13 @@ def test_overlay_big_equals_broadcast(spark):
         r = rng.uniform(4, 10)
         cx, cy = rng.uniform(-25, 25, 2)
         clips.append((100 + c, _ring(*[(cx + r * np.cos(a), cy + r * np.sin(a)) for a in ang])))
+    # integer vertices: the collinear zone's shoelace sum is exactly 0
+    (px, py), (lx, ly) = (
+        (round(np.mean([p["x"] for p in ring])), round(np.mean([p["y"] for p in ring])))
+        for _sid, ring in subs[:2]
+    )
+    clips.append((200, _ring(*[(px, py)] * 4)))  # point
+    clips.append((201, _ring(*[(lx + d, ly + d) for d in (-1, 0, 1, 2)])))  # collinear
     subj = spark.createDataFrame(subs, "sid long, ring array<struct<x:double,y:double>>")
     clip = spark.createDataFrame(clips, "cid long, cring array<struct<x:double,y:double>>")
     want = sorted(

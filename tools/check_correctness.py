@@ -45,7 +45,7 @@ def _fmt(v) -> str:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("correctness-check", cores=16, shuffle_partitions=16)
+    spark = get_spark("correctness-check")
     con = duckdb.connect()
     # spill to /tmp, not cwd/.tmp — a super-linear oracle once left 74 GB
     # of temp blocks inside the repo checkout

@@ -5,7 +5,9 @@ the metrics manifest — the CI-fashion twin of
 tests/test_deploy.py::test_spark_submit_multi_executor (which proves
 the multi-executor + resume path at 100k).
 
-    python tools/deploy_smoke.py [--rows 200000] [--master local[8]]
+    python tools/deploy_smoke.py [--rows 200000] [--master MASTER]
+
+MASTER defaults to ``local[N]``, N = geodesk_spark.session.host_cores().
 
 Exit 0 iff the job ran, all four stages committed rows, and the
 polygon match counts are non-empty.
@@ -23,12 +25,15 @@ import tempfile
 import time
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from geodesk_spark.session import host_cores  # noqa: E402
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=200_000)
-    ap.add_argument("--master", default="local[8]")
+    ap.add_argument("--master", default=f"local[{host_cores()}]")
     ap.add_argument("--partitions", type=int, default=16)
     args = ap.parse_args()
 

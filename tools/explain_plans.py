@@ -21,7 +21,7 @@ def plan_of(df) -> str:
 
 
 def main():
-    spark = get_spark("plans", cores=8, shuffle_partitions=8)
+    spark = get_spark("plans")
     sf_dir = "/root/testdata/sf0.01"
     qs = em.queries()
     names = [
