@@ -21,7 +21,9 @@ Spark shape (no per-query scans):
    cell ids, exact Mercator distance as a codegen'd column — no Python
    workers anywhere.
 3. ``Window.partitionBy(query_id).orderBy(dist)`` + row_number ≤ k;
-   the shuffle moves only ring-bounded candidate rows.
+   Spark cuts each query's top-k inside every map task (a partial
+   ``WindowGroupLimit``) before the shuffle, so at most k rows per query
+   per task move.
 4. Queries whose k-th distance is NOT provably inside their window
    double the window and re-run (only those queries).
 
@@ -74,7 +76,12 @@ def _query_frame(spark, queries: list[tuple[str, float, float]]) -> DataFrame:
         (qid, int(mercator.x_from_lon(lon)[()]), int(mercator.y_from_lat(lat)[()]))
         for qid, lon, lat in queries
     ]
-    return spark.createDataFrame(qrows, "query_id string, x long, y long")
+    # from pandas, the rows cross Arrow into a LocalRelation inside the
+    # plan; a list would become an RDD scan that costs a Spark job per use
+    return spark.createDataFrame(
+        pd.DataFrame(qrows, columns=["query_id", "x", "y"]),
+        "query_id string, x long, y long",
+    )
 
 
 def knn(
@@ -176,8 +183,15 @@ def knn_join(
        the in-small-window flag a pure range test.  No driver cell math.
     2. Candidates = one hash join on the cell id (broadcast when the
        query side is dimension-sized — ``broadcast_queries`` — else a
-       shuffle join keyed on the cell), exact Mercator distance and the
-       dual small/big rank computed exactly like :func:`knn`.
+       shuffle join keyed on the cell) with exact Mercator distance.
+       They are ranked by ONE ``row_number()`` window per query under
+       the ``rank <= k`` filter, so Spark places a partial
+       ``WindowGroupLimit`` before the ``Exchange``: each map task keeps
+       only its top k rows per query, and the shuffle moves at most
+       k × |queries| × tasks rows however many candidates the window
+       holds.  The small window needs no rank of its own — it is proven
+       only when all k surviving rows are small, and then their small
+       rank is the overall one.
     3. The completion test (k-th distance provably inside the window,
        :func:`_guarantee_col`) is a per-query COLUMN over the aggregated
        stats frame; finished queries' top-k detach via localCheckpoint,
@@ -236,10 +250,11 @@ def knn_join(
         if broadcast_queries:
             if not act_rows:
                 break
-            # NB: no coalesce() here — it would block the LocalRelation
-            # conversion and turn the broadcast build into a real stage
-            # (measured 6× on the round's one action)
-            active = spark.createDataFrame(act_rows, act_schema)
+            # a LocalRelation, not an RDD scan: the broadcast build then
+            # needs no job of its own (see _query_frame)
+            active = spark.createDataFrame(
+                pd.DataFrame(act_rows, columns=act_schema.names), act_schema
+            )
 
         def col_range(rad):
             x0 = F.greatest(F.col("_qx") - F.lit(rad).cast("long"), F.lit(I32_MIN).cast("long"))
@@ -291,16 +306,12 @@ def knn_join(
             )
             .select(id_col, "_qid", "dist_m", "small")
         )
+        # row_number must stay the window's ONLY function (docstring step
+        # 2): a second one blocks the partial WindowGroupLimit, and every
+        # candidate row is shuffled again
         w = Window.partitionBy("_qid").orderBy(F.col("dist_m").asc(), F.col(id_col).asc())
-        ranked = (
-            cand.withColumn("rank_all", F.row_number().over(w))
-            .withColumn(
-                "rank_small",
-                F.sum(F.when(F.col("small"), 1).otherwise(0)).over(
-                    w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                ),
-            )
-            .filter(F.col("rank_all") <= k)
+        ranked = cand.withColumn("rank_all", F.row_number().over(w)).filter(
+            F.col("rank_all") <= k
         )
         final_round = big >= (1 << 31)
         if broadcast_queries:
@@ -311,7 +322,7 @@ def knn_join(
             next_act = []
             for qid, qx, qy in act_rows:
                 rs = by_q.get(qid, [])
-                small_rows = [r for r in rs if r["small"] and r["rank_small"] <= k]
+                small_rows = [r for r in rs if r["small"]]
                 kth_s = max((r["dist_m"] for r in small_rows), default=None)
                 kth_a = max((r["dist_m"] for r in rs), default=None)
                 ok_s = (
@@ -322,12 +333,7 @@ def knn_join(
                 ok_a = (
                     len(rs) >= k and kth_a is not None and kth_a <= _guarantee_m(qy, big)
                 )
-                if ok_s:
-                    collected_rows.extend(
-                        (r[id_col], qid, r["dist_m"], int(r["rank_small"]))
-                        for r in small_rows
-                    )
-                elif ok_a or final_round:
+                if ok_s or ok_a or final_round:
                     collected_rows.extend(
                         (r[id_col], qid, r["dist_m"], int(r["rank_all"])) for r in rs
                     )
@@ -339,12 +345,8 @@ def knn_join(
             continue
         ranked = ranked.cache()
         stats = ranked.groupBy("_qid").agg(
-            F.sum(
-                F.when(F.col("small") & (F.col("rank_small") <= k), 1).otherwise(0)
-            ).alias("cnt_s"),
-            F.max(
-                F.when(F.col("small") & (F.col("rank_small") <= k), F.col("dist_m"))
-            ).alias("kth_s"),
+            F.sum(F.col("small").cast("int")).alias("cnt_s"),
+            F.max(F.when(F.col("small"), F.col("dist_m"))).alias("kth_s"),
             F.count("*").alias("cnt_a"),
             F.max("dist_m").alias("kth_a"),
         )
@@ -362,25 +364,14 @@ def knn_join(
             "_qid",
             "_qx",
             "_qy",
-            ok_s.alias("take_small"),
             (ok_s | ok_a | F.lit(final_round)).alias("done"),
         )
-        done_q = decide.filter(F.col("done")).select("_qid", "take_small")
-        round_out = (
-            ranked.join(maybe_b(done_q), "_qid")
-            .filter(
-                (F.col("take_small") & F.col("small") & (F.col("rank_small") <= k))
-                | (~F.col("take_small") & (F.col("rank_all") <= k))
-            )
-            .select(
-                id_col,
-                F.col("_qid").alias(query_id),
-                "dist_m",
-                F.when(F.col("take_small"), F.col("rank_small"))
-                .otherwise(F.col("rank_all"))
-                .cast("int")  # rank_small is a sum (long); contract says int
-                .alias("rank"),
-            )
+        done_q = decide.filter(F.col("done")).select("_qid")
+        round_out = ranked.join(maybe_b(done_q), "_qid").select(
+            id_col,
+            F.col("_qid").alias(query_id),
+            "dist_m",
+            F.col("rank_all").alias("rank"),
         )
         # ≤ k rows per finished query: detach from the cached candidate
         # lineage so the round cache releases immediately
@@ -406,7 +397,9 @@ def knn_join(
                 T_.StructField("rank", T_.IntegerType()),
             ]
         )
-        return spark.createDataFrame(collected_rows, out_schema)
+        return spark.createDataFrame(
+            pd.DataFrame(collected_rows, columns=out_schema.names), out_schema
+        )
     # the schedule always runs ≥1 round and every round appends (possibly
     # empty) output, so `results` is never empty — even for zero queries
     out = results[0]

@@ -460,10 +460,11 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     os.makedirs(out, exist_ok=True)
     # The vector is O(deleted rows): hash-partition it by data file so a
     # mass delete (10% of 10^12 rows) spreads over the cluster instead of
-    # funnelling through one task / one parquet file.  No explicit
-    # partition count — AQE's coalescePartitions folds a small vector
-    # back to ~1 file, so the common-case manifest stays compact.
-    new_dels.repartition(F.col("file")).write.mode("overwrite").parquet(
+    # funnelling through one task / one parquet file.  The partition count
+    # is capped at the stage's data-file count, so the vector never has
+    # more files than the data it deletes from.
+    n_parts = min(len(parts), int(p.spark.conf.get("spark.sql.shuffle.partitions")))
+    new_dels.repartition(n_parts, F.col("file")).write.mode("overwrite").parquet(
         _deletes_dir(out)
     )
     n_deleted = sum(

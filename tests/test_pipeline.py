@@ -1277,10 +1277,10 @@ def test_merge_on_read_position_deletes(spark, tmp_path):
 def test_delete_vector_not_single_file_funnel(spark, tmp_path):
     """A mass delete must NOT funnel the position-delete vector through
     one task / one parquet file (the r4 verdict's scale finding): the
-    vector write is hash-partitioned by data file, so with AQE's
-    advisory target shrunk the writer provably spreads it across
-    multiple files — and the MoR read over a multi-file vector is
-    byte-identical to the logical result."""
+    vector write is hash-partitioned by data file into an explicit
+    partition count, so the writer spreads it across multiple files but
+    never more files than the stage has data files — and the MoR read
+    over a multi-file vector is byte-identical to the logical result."""
     from geodesk_spark.streaming import checkpoint as cp
 
     p = Pipeline(spark, str(tmp_path / "morv"))
@@ -1292,26 +1292,18 @@ def test_delete_vector_not_single_file_funnel(spark, tmp_path):
         )
 
     p.stage("base", gen)
-    # shrink BOTH AQE coalesce floors so the KB-scale test vector emulates
-    # a production GB-scale one (where no coalescing would apply)
-    knobs = {
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4KB",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1KB",
-    }
-    old = {k: spark.conf.get(k, None) for k in knobs}
-    for k, v in knobs.items():
-        spark.conf.set(k, v)
-    try:
-        cp.delete_where(p, "base", "v < 3")  # ~43% of rows, all 8 files
-    finally:
-        for k, v in old.items():
-            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    n_data_files = len(p.lineage("base")["partitions"])
+    assert n_data_files == 8
+    # the KB-scale vector is far below AQE's coalescing target: the
+    # explicit partition count alone must keep it spread
+    cp.delete_where(p, "base", "v < 3")  # ~43% of rows, all 8 files
 
     vd = p._dir("base")
     vec_files = [
         f for f in os.listdir(os.path.join(vd, "_deletes")) if f.endswith(".parquet")
     ]
     assert len(vec_files) > 1, f"vector funnelled into {vec_files}"
+    assert len(vec_files) <= n_data_files, vec_files
     lin = p.lineage("base")
     expect_deleted = sum(1 for i in range(40_000) if i % 7 < 3)
     assert lin["n_deleted_total"] == expect_deleted

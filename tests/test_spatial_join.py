@@ -1,6 +1,7 @@
 """Three-band PIP join + distance filter + kNN vs brute-force numpy."""
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -262,21 +263,30 @@ def test_knn_join_matches_knn(world):
 
 def test_knn_join_shuffle_path(world):
     """broadcast_queries=False (the huge-query-side path) returns the
-    identical result through a shuffle join."""
-    df, pdf = world
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
-        [("qa", int(mercator.x_from_lon(139.7)[()]), int(mercator.y_from_lat(35.7)[()]))],
-        "query_id string, x long, y long",
-    )
+    identical rows through a shuffle join, also for a query that must
+    re-expand: from a small first window the ocean query's k-th
+    neighbour is not provably inside, so it takes later rounds."""
+    df, _ = world
+    queries = [("q_tokyo", 139.7, 35.7), ("q_paris", 2.3, 48.9), ("q_ocean", -140.0, -30.0)]
+    qdf = knn_mod._query_frame(df.sparkSession, queries)
     pts = df.select("image_id", "x", "y")
-    a = knn_mod.knn_join(pts, qdf, k=5).toPandas().sort_values("rank")
-    b = (
-        knn_mod.knn_join(pts, qdf, k=5, broadcast_queries=False)
-        .toPandas()
-        .sort_values("rank")
+    key = ["query_id", "rank"]
+    cols = ["query_id", "image_id", "dist_m", "rank"]
+    a, b = (
+        knn_mod.knn_join(pts, qdf, k=5, init_radius_imps=1 << 20, broadcast_queries=bq)
+        .toPandas()[cols].sort_values(key).reset_index(drop=True)
+        for bq in (True, False)
     )
-    assert list(a["image_id"]) == list(b["image_id"])
+    assert len(a) == 3 * 5
+    assert a.to_dict("records") == b.to_dict("records")
+
+
+# knn_join's output types: the id and query_id types come from the inputs
+_KNN_OUT_TYPES = {"image_id": "string", "query_id": "string", "dist_m": "double", "rank": "int"}
+
+
+def _knn_out_types(out):
+    return {f.name: f.dataType.simpleString() for f in out.schema.fields}
 
 
 def test_knn_join_k_exceeds_points(spark):
@@ -287,7 +297,9 @@ def test_knn_join_k_exceeds_points(spark):
         "image_id string, x long, y long",
     )
     qdf = spark.createDataFrame([("q", 0, 0)], "query_id string, x long, y long")
-    got = knn_mod.knn_join(pts, qdf, k=10).toPandas().sort_values("rank")
+    out = knn_mod.knn_join(pts, qdf, k=10)
+    assert _knn_out_types(out) == _KNN_OUT_TYPES
+    got = out.toPandas().sort_values("rank")
     # by exact distance: a (~14 imps), c (~300k imps), b (500k imps)
     assert list(got["image_id"]) == ["a", "c", "b"]
     assert list(got["rank"]) == [1, 2, 3]
@@ -298,7 +310,65 @@ def test_knn_join_empty_queries(spark):
     qdf = spark.createDataFrame([], "query_id string, x long, y long")
     out = knn_mod.knn_join(pts, qdf, k=3)
     assert out.count() == 0
-    assert set(out.columns) == {"image_id", "query_id", "dist_m", "rank"}
+    assert _knn_out_types(out) == _KNN_OUT_TYPES
+    # non-string ids keep their input types too
+    pts = spark.createDataFrame([(7, 0, 0)], "pid long, x long, y long")
+    qdf = spark.createDataFrame([], "qid int, x long, y long")
+    out = knn_mod.knn_join(pts, qdf, k=3, id_col="pid", query_id="qid")
+    assert out.count() == 0
+    assert _knn_out_types(out) == {"pid": "bigint", "qid": "int", "dist_m": "double", "rank": "int"}
+
+
+def test_knn_join_round_plan_limits_before_shuffle(spark):
+    """Pin the executed plan of knn_join's last round, read from the SQL
+    status store (the AQE-final plan): each query's top-k is cut by a
+    partial WindowGroupLimit before the candidates are shuffled on the
+    query id, one Window ranks them, and every leaf is a JVM local
+    relation (no Scan ExistingRDD, no Python worker)."""
+    import time
+
+    rng = np.random.default_rng(2)
+    pts = spark.createDataFrame(
+        pd.DataFrame({
+            "image_id": [f"p{i}" for i in range(5_000)],
+            "x": rng.integers(-(1 << 31), 1 << 31, 5_000),
+            "y": rng.integers(-(1 << 31), 1 << 31, 5_000),
+        })
+    )
+    queries = [("q_tokyo", 139.7, 35.7), ("q_ocean", -140.0, -30.0)]
+    qdf = knn_mod._query_frame(spark, queries)
+    store = spark._jsparkSession.sharedState().statusStore()
+    first = store.executionsCount()
+    assert len(knn_mod.knn_join(pts, qdf, k=5, init_radius_imps=1 << 22).collect()) == 10
+    rounds = []
+    execs = store.executionsList(first, 1 << 20)
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        deadline = time.time() + 10
+        # the listener bus is asynchronous: wait for the end event
+        while store.execution(eid).get().completionTime().isEmpty() and time.time() < deadline:
+            time.sleep(0.05)
+        graph = store.planGraph(eid)
+        nodes = {n.id(): n for n in (graph.allNodes().apply(j) for j in range(graph.allNodes().size()))}
+        if any(n.name() == "Window" for n in nodes.values()):
+            edges = [graph.edges().apply(j) for j in range(graph.edges().size())]
+            rounds.append((nodes, edges))
+    assert len(rounds) >= 2  # sparse points, small first window: re-expansion
+    nodes, edges = rounds[-1]
+    names = [n.name() for n in nodes.values()]
+    assert names.count("Window") == 1
+    assert "Scan ExistingRDD" not in names
+    for name in names:
+        assert "Python" not in name and "InPandas" not in name and "InArrow" not in name, name
+    # edges point from child to parent
+    below_qid_exchange = [
+        nodes[e.fromId()] for e in edges
+        if nodes[e.toId()].name() == "Exchange"
+        and "hashpartitioning(_qid" in nodes[e.toId()].desc()
+    ]
+    assert [(n.name(), n.desc().endswith("Partial")) for n in below_qid_exchange] == [
+        ("WindowGroupLimit", True)
+    ]
 
 
 def test_knn_assert_unique_ids(spark):
