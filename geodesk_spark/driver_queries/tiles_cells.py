@@ -935,10 +935,12 @@ def _q_tile_walk(spark, sf_dir):
 
 def _tile_walk_sql() -> str:
     """Independent SQL derivation of the walk: the tree from the same z6
-    cells, pre-order via recursive path arrays, NW flags from the
+    cells, pre-order via a scalar fixed-radix key, NW flags from the
     dense-bbox rule, and TIPs from cumulative record sizes in FULL-tree
     pre-order (records = 1 page word + 1 mask word (extent 4) +
-    one slot per child; leaf TIP = parent record + 2 + child index)."""
+    one slot per child; leaf TIP = parent record + 2 + child index).
+    Portable oracle SQL: integer keys, no array paths, explicit
+    anti-joins (see CLAUDE.md)."""
     qminx, qminy, qmaxx, qmaxy = WALK_BBOX
     zs = WALK_ZOOMS
     lvl_preds = []
@@ -978,50 +980,52 @@ def _tile_walk_sql() -> str:
       cn as (select parent, child,
                     (((child >> 12) & 4095) % 4) * 4 + ((child & 4095) % 4) as num
              from edges),
-      -- FULL-tree pre-order (no bbox): path arrays, lexicographic = walk order
-      full_walk(tile, path) as (
-        select child, [num] from cn where parent = 0
+      -- FULL-tree pre-order (no bbox) as one integer: the path's digits
+      -- childNumber + 1 (1..16) in base 32, most significant first, over
+      -- the three levels; a node's trailing digits are 0, so it sorts
+      -- before its whole subtree
+      full_walk(tile, depth, okey) as (
+        select child, 1, (num + 1) << 10 from cn where parent = 0
         union all
-        select c.child, f.path || [c.num]
+        select c.child, f.depth + 1, f.okey + ((c.num + 1) << (5 * (2 - f.depth)))
         from full_walk f join cn c on c.parent = f.tile
       ),
       kids as (select parent, count(*) as n from cn group by 1),
-      -- records: the root (pos 1) + every internal node, in pre-order;
-      -- record size = 1 page word + 1 mask word + n slots (extent 4)
+      -- records: the root (pos 1, key 0) + every internal node, in
+      -- pre-order; record size = 1 page word + 1 mask word + n slots
+      -- (extent 4)
       recs as (
-        select 0 as tile, cast(null as bigint[]) as path, 0 as ord0,
-               2 + (select n from kids where parent = 0) as size
+        select 0 as tile, 0 as okey, 2 + (select n from kids where parent = 0) as size
         union all
-        select f.tile, f.path, row_number() over (order by f.path) as ord0,
-               2 + k.n as size
+        select f.tile, f.okey, 2 + k.n as size
         from full_walk f join kids k on k.parent = f.tile
       ),
       rpos as (select tile,
-                      1 + coalesce(sum(size) over (order by ord0
+                      1 + coalesce(sum(size) over (order by okey
                             rows between unbounded preceding and 1 preceding), 0) as pos
                from recs),
-      -- leaf TIP: parent record pos + 2 + index among the parent's children
+      -- leaf TIP: parent record pos + 2 + index among the parent's
+      -- children; a leaf is a child that is no one's parent
       slot as (select c.child as tile,
                       rp.pos + 2 + (row_number() over (partition by c.parent order by c.num) - 1) as tip
                from cn c join rpos rp on rp.tile = c.parent
-               where c.child not in (select parent from kids)),
+               left join kids k on k.parent = c.child
+               where k.parent is null),
       tips as (select tile, pos as tip from rpos where tile <> 0
                union all select tile, tip from slot),
       visible as (
-        select f.tile, f.path from full_walk f
+        select f.tile, f.depth, f.okey from full_walk f
         where {in_bbox.replace('tile', 'f.tile')}
-          -- every ancestor must be in bbox range too (the walker prunes
-          -- whole subtrees): enforce by requiring the parent visible
       ),
-      vis_rec(tile, path) as (
-        select tile, path from visible v
-        where len(v.path) = 1
+      -- the walker prunes whole subtrees: a node is visited only when
+      -- it and its parent are
+      vis_rec(tile, okey) as (
+        select tile, okey from visible where depth = 1
         union all
-        select v.tile, v.path from visible v
-        join vis_rec p on len(v.path) = len(p.path) + 1
-                      and v.path[1:len(p.path)] = p.path
+        select v.tile, v.okey
+        from vis_rec p join cn c on c.parent = p.tile join visible v on v.tile = c.child
       )
-      select cast(row_number() over (order by v.path) as int) as ord,
+      select cast(row_number() over (order by v.okey) as int) as ord,
              v.tile,
              t.tip,
              cast(case when {qmaxy} > 2147483647 - (((v.tile >> 12) & 4095) << (32 - (v.tile >> 24))) then 128 else 0 end

@@ -429,6 +429,56 @@ def _slab_frame(spark, prepared: list[PreparedPolygon]) -> DataFrame:
     return cols.select("_slab", F.arrays_zip(*EDGE_FIELDS).alias("_edges")).cache()
 
 
+def _layer_plan(spark, prepared: list[PreparedPolygon]) -> dict:
+    """One ``_BANDS_CACHE`` entry: the cached band frame (``"bands"``),
+    the cached slab frame (``"rings_bc"``, the key perfbench/run.py
+    reads) and the Column expressions ``contains_points`` plans with.
+
+    The probe explodes the point's quadtree cell id at every zoom level
+    present in the layer (packed in the cell ids' high bits), joined
+    once against the broadcast band table.  A quadtree leaf matches at
+    most one zoom per polygon, so no duplicates arise.  A BOUNDARY row
+    keys the slab table by its polygon's index and its point's cell
+    >> 20 at the cell's zoom + SLAB_STEP, (zoom << 20) | row; INTERIOR
+    rows get a null key and pass the slab join untouched."""
+    zoom_list = sorted(
+        {int(z) for p in prepared for z in np.unique(p.qt_cells >> 40).tolist()}
+    )
+    # band rows assembled vectorized per polygon (the old per-cell
+    # Python loop ran on EVERY call, cache hit or not — r03 review)
+    bands_pdf = pd.concat(
+        [
+            pd.DataFrame(
+                {
+                    "_band_cell": p.qt_cells.astype(np.int64),
+                    "poly_id": p.poly_id,
+                    "_band": p.qt_codes.astype(np.int32),
+                    "_pidx": i,
+                }
+            )
+            for i, p in enumerate(prepared)
+        ],
+        ignore_index=True,
+    )
+    bands_df = spark.createDataFrame(
+        bands_pdf, schema="_band_cell long, poly_id string, _band int, _pidx long"
+    ).cache()
+    return {
+        "bands": bands_df,
+        "rings_bc": _slab_frame(spark, prepared),
+        "probe": F.explode(F.array(*[point_cell_col(z) for z in zoom_list])),
+        "on": F.col("_cell") == bands_df._band_cell,
+        "slab": F.coalesce(*[
+            F.when((F.col("_band") == BOUNDARY) & (F.shiftright("_band_cell", 40) == z),
+                   F.shiftleft("_pidx", 32) + F.shiftright(point_cell_col(z + SLAB_STEP), 20))
+            for z in zoom_list
+        ]),
+        "xy": {"_xd": F.col("x").cast("double"), "_yd": F.col("y").cast("double")},
+        "match": (F.col("_band") == INTERIOR)
+        | odd_crossings(F.col("_edges"), F.col("_xd"), F.col("_yd")),
+    }
+
+
 def contains_points(
     points: DataFrame,
     prepared: list[PreparedPolygon],
@@ -459,19 +509,14 @@ def contains_points(
     keep = keep_cols or [c for c in points.columns if c not in ("x", "y")]
     spark = points.sparkSession
 
-    # Zooms present in the layer (packed in the cell ids' high bits) —
-    # needed for the probe explode whether or not the band table is
-    # cached; vectorized, no per-cell Python.
-    zoom_list = sorted(
-        {int(z) for p in prepared for z in np.unique(p.qt_cells >> 40).tolist()}
-    )
-
-    # The band and slab tables are query-compilation state (like the
-    # reference's cached matchers, MatcherCompiler.java:37-46) — build
-    # them once per (layer, session).  The key hashes the cell AND ring
-    # CONTENT, not just the shape: re-preparing an edited polygon with
-    # the same id/count must miss the cache (rings are in the key because
-    # the slab edges come from them).
+    # The band and slab tables, and the Column expressions of the plan
+    # over them, are query-compilation state (like the reference's
+    # cached matchers, MatcherCompiler.java:37-46) — build them once per
+    # (layer, session): rebuilding the expressions costs py4j round trips
+    # on every call.  The key hashes the cell AND ring CONTENT, not just
+    # the shape: re-preparing an edited polygon with the same id/count
+    # must miss the cache (rings are in the key because the slab edges
+    # come from them).
     import zlib
 
     cache_key = (
@@ -500,55 +545,16 @@ def contains_points(
             old = _BANDS_CACHE.pop(k)
             old["bands"].unpersist()
             old["rings_bc"].unpersist()
-        # band rows assembled vectorized per polygon (the old per-cell
-        # Python loop ran on EVERY call, cache hit or not — r03 review)
-        bands_pdf = pd.concat(
-            [
-                pd.DataFrame(
-                    {
-                        "_band_cell": p.qt_cells.astype(np.int64),
-                        "poly_id": p.poly_id,
-                        "_band": p.qt_codes.astype(np.int32),
-                        "_pidx": i,
-                    }
-                )
-                for i, p in enumerate(prepared)
-            ],
-            ignore_index=True,
-        )
-        bands_df = spark.createDataFrame(
-            bands_pdf, schema="_band_cell long, poly_id string, _band int, _pidx long"
-        ).cache()
-        # perfbench/run.py reads the slab frame under the "rings_bc" key
-        entry = {"bands": bands_df, "rings_bc": _slab_frame(spark, prepared)}
+        entry = _layer_plan(spark, prepared)
         _BANDS_CACHE[cache_key] = entry
-    bands_df, slabs_df = entry["bands"], entry["rings_bc"]
 
-    # One exploded probe: the point's quadtree cell id at every zoom level
-    # present in the layer, joined once against the broadcast band table.
-    # A quadtree leaf matches at most one zoom per polygon, so no
-    # duplicates arise.  A BOUNDARY row keys the slab table by its
-    # polygon's index and its point's cell >> 20 at the cell's zoom +
-    # SLAB_STEP, (zoom << 20) | row; INTERIOR rows get a null key and
-    # pass the slab join untouched.
-    probe = points.withColumn(
-        "_cell", F.explode(F.array(*[point_cell_col(z) for z in zoom_list]))
-    )
     j = (
-        probe.join(F.broadcast(bands_df), F.col("_cell") == bands_df._band_cell)
-        .withColumn("_slab", F.coalesce(*[
-            F.when((F.col("_band") == BOUNDARY) & (F.shiftright("_band_cell", 40) == z),
-                   F.shiftleft("_pidx", 32) + F.shiftright(point_cell_col(z + SLAB_STEP), 20))
-            for z in zoom_list
-        ]))
-        .join(F.broadcast(slabs_df), "_slab", "left")
+        points.withColumn("_cell", entry["probe"])
+        .join(F.broadcast(entry["bands"]), entry["on"])
+        .withColumn("_slab", entry["slab"])
+        .join(F.broadcast(entry["rings_bc"]), "_slab", "left")
     )
-    xd, yd = F.col("_xd"), F.col("_yd")
-    matches = (
-        j.withColumns({"_xd": F.col("x").cast("double"), "_yd": F.col("y").cast("double")})
-        .filter((F.col("_band") == INTERIOR) | odd_crossings(F.col("_edges"), xd, yd))
-        .select(*keep, "poly_id")
-    )
+    matches = j.withColumns(entry["xy"]).filter(entry["match"]).select(*keep, "poly_id")
     if not anti:
         return matches
     return points.select(*keep).join(

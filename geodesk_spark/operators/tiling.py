@@ -42,18 +42,37 @@ from geodesk_spark.geo import mercator, tile as T
 ZOOM_LEVELS = T.DEFAULT_ZOOM_LEVELS
 
 
+# Column expressions of the point-tiling hot path, built once per
+# (session, arguments): rebuilding them costs py4j round trips per call.
+_EXPR_CACHE: dict = {}
+
+
+def _session_exprs(df: DataFrame, key: tuple, build) -> dict:
+    k = (id(df.sparkSession), *key)
+    exprs = _EXPR_CACHE.get(k)
+    if exprs is None:
+        exprs = _EXPR_CACHE[k] = build()
+    return exprs
+
+
 def with_imp_coords(df: DataFrame, lon="lon", lat="lat") -> DataFrame:
     """Add int32 imp x/y from lon/lat — JVM-side, no UDF."""
-    return df.withColumn("x", mercator.x_from_lon_col(F.col(lon))).withColumn(
-        "y", mercator.y_from_lat_col(F.col(lat))
-    )
+    return df.withColumns(_session_exprs(df, ("imp", lon, lat), lambda: {
+        "x": mercator.x_from_lon_col(F.col(lon)),
+        "y": mercator.y_from_lat_col(F.col(lat)),
+    }))
 
 
 def with_point_tiles(df: DataFrame, zooms=ZOOM_LEVELS) -> DataFrame:
     """Add one tile column per zoom level + the canonical cell at max zoom."""
-    for z in zooms:
-        df = df.withColumn(f"tile_z{z}", T.tile_col(F.col("x"), F.col("y"), z))
-    return df.withColumn("cell", F.col(f"tile_z{max(zooms)}").cast("long"))
+
+    def build():
+        x, y = F.col("x"), F.col("y")
+        exprs = {f"tile_z{z}": T.tile_col(x, y, z) for z in zooms}
+        exprs["cell"] = exprs[f"tile_z{max(zooms)}"].cast("long")
+        return exprs
+
+    return df.withColumns(_session_exprs(df, ("tiles", tuple(zooms)), build))
 
 
 def assign_zoom_col(minx: Column, miny: Column, maxx: Column, maxy: Column, zooms=ZOOM_LEVELS) -> Column:

@@ -20,7 +20,15 @@ parquet + _SUCCESS layout stands in with the same commit semantics.
 Lineage manifest per stage (<root>/<stage>/_lineage.json):
   stage, inputs (upstream stage names), elapsed_sec, n_rows,
   rows_per_sec, per-partition file entries
-  [{file, rows, bytes, stats: {col: [min, max]}}, ...], schema.
+  [{file, rows, bytes, stats: {col: [min, max]}}, ...], schema (the
+  version's Spark data schema as JSON, without the ``partition_by``
+  columns a read takes from the directory names).
+
+Every version read passes that schema to ``spark.read.schema`` (see
+``_scan``): a schema-less ``spark.read.parquet(dir)`` re-reads the
+footers of files the pipeline has just written, and that costs a Spark
+job per read.  Only manifests written before the schema was recorded
+are inferred.
 
 The per-file min/max ``stats`` (read from the parquet footers the
 manifest pass already parses — zero extra I/O) are the Iceberg
@@ -40,17 +48,51 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
+
+# Position-delete vectors (delete_where): data file name, physical row index.
+_DELETES_SCHEMA = "file string, pos long"
+
+
+def _load_manifest(vd: str) -> dict:
+    with open(os.path.join(vd, "_lineage.json")) as f:
+        return json.load(f)
+
+
+def _data_schema(df: DataFrame, partition_by: list[str] | None, has_files: bool) -> dict:
+    """The schema a version's manifest records: ``df``'s, without the
+    ``partition_by`` columns, which a read takes from the directory
+    names.  A version with no data files has no such directories, so it
+    keeps them all."""
+    drop = set(partition_by or ()) if has_files else set()
+    return StructType([f for f in df.schema.fields if f.name not in drop]).jsonValue()
+
+
+def _scan(
+    spark: SparkSession, vd: str, lin: dict, files: list[str] | None = None
+) -> DataFrame:
+    """The one parquet read of a version (all of it, or ``files``
+    relative to it) with the schema its manifest records.  A manifest
+    written before the schema was recorded holds no schema dict (or a
+    simpleString), and only then does Spark infer it from the footers."""
+    paths = [os.path.join(vd, f) for f in files] if files is not None else [vd]
+    reader = spark.read.option("basePath", vd)
+    schema = lin.get("schema")
+    if isinstance(schema, dict):
+        reader = reader.schema(StructType.fromJson(schema))
+    return reader.parquet(*paths)
 
 
 def _file_manifest(files: list[str], base: str) -> list[dict]:
     """Per-file lineage entries from parquet FOOTERS only (driver-side
     pyarrow — no Spark job, no data read): row count, byte size, and
     min/max stats for every top-level primitive column whose footer
-    statistics are present in ALL row groups.  Non-JSON-able and
-    non-finite values are dropped (a missing stat only disables pruning
-    for that column/file, never correctness)."""
+    statistics are present in ALL row groups.  Non-JSON-able,
+    non-finite and unreadable values are dropped (a missing stat only
+    disables pruning for that column/file, never correctness)."""
     import math
 
+    import pyarrow as _pa
     import pyarrow.parquet as _pq
 
     out = []
@@ -72,7 +114,12 @@ def _file_manifest(files: list[str], base: str) -> list[dict]:
                 if st is None or not st.has_min_max:
                     bad.add(name)
                     continue
-                mn, mx = st.min, st.max
+                try:
+                    mn, mx = st.min, st.max
+                except _pa.ArrowNotImplementedError:
+                    # e.g. INT64-backed decimal(p <= 18) on pyarrow 16
+                    bad.add(name)
+                    continue
                 if not all(
                     isinstance(v, (bool, int, float, str))
                     and not (isinstance(v, float) and not math.isfinite(v))
@@ -147,39 +194,53 @@ class Pipeline:
                 out.append(int(d[1:]))
         return sorted(out)
 
-    def _active_version(self, stage: str) -> int | None:
-        """Highest committed, non-invalidated version.
+    def _resolve(self, stage: str) -> tuple[bool, list[int], int | None]:
+        """(is an append stage, version dirs, active version) from ONE
+        parse of the snapshot log and one listing of the stage dir.
 
-        Committed = _SUCCESS present AND recorded in the snapshot log;
-        the log append is the single commit point, so a crash after the
-        parquet write but before the log append leaves an invisible
+        The active version is the highest committed, non-invalidated
+        one.  Committed = _SUCCESS present AND recorded in the snapshot
+        log; the log append is the single commit point, so a crash after
+        the parquet write but before the log append leaves an invisible
         orphan directory (re-run supersedes it), never a half-committed
         'done' stage (r03 review)."""
-        logged = {e["version"] for e in self.snapshots() if e["stage"] == stage}
-        for v in reversed(self._versions(stage)):
+        mine = [e for e in self.snapshots() if e["stage"] == stage]
+        logged = {e["version"] for e in mine}
+        versions = self._versions(stage)
+        active = None
+        for v in reversed(versions):
             vd = self._version_dir(stage, v)
             if (
                 v in logged
                 and os.path.exists(os.path.join(vd, "_SUCCESS"))
                 and not os.path.exists(os.path.join(vd, "_INVALIDATED"))
             ):
-                return v
-        return None
+                active = v
+                break
+        return any(e.get("mode") == "append" for e in mine), versions, active
 
-    def _dir(self, stage: str) -> str:
+    def _active_version(self, stage: str) -> int | None:
+        return self._resolve(stage)[2]
+
+    def _active(self, stage: str) -> tuple[str, dict]:
+        """(dir, manifest) of the active version; raises when none."""
         v = self._active_version(stage)
         if v is None:
-            v = (self._versions(stage)[-1] + 1) if self._versions(stage) else 1
+            raise ValueError(f"stage {stage!r} has no committed snapshot")
+        vd = self._version_dir(stage, v)
+        return vd, _load_manifest(vd)
+
+    def _dir(self, stage: str) -> str:
+        _, versions, v = self._resolve(stage)
+        if v is None:
+            v = (versions[-1] + 1) if versions else 1
         return self._version_dir(stage, v)
 
     def is_done(self, stage: str) -> bool:
         return self._active_version(stage) is not None
 
     def lineage(self, stage: str) -> dict:
-        if self._active_version(stage) is None:
-            raise ValueError(f"stage {stage!r} has no committed snapshot")
-        with open(os.path.join(self._dir(stage), "_lineage.json")) as f:
-            return json.load(f)
+        return self._active(stage)[1]
 
     def stage(
         self,
@@ -190,13 +251,13 @@ class Pipeline:
     ) -> DataFrame:
         """Run (or resume) a stage.  ``fn(spark) -> DataFrame``; upstream
         stages are read back from their snapshots via ``self.read``."""
-        if self._is_append_stage(name):
+        is_append, versions, active = self._resolve(name)
+        if is_append:
             raise ValueError(
                 f"{name!r} is an append stage — use append_stage/read_all"
             )
-        if self.is_done(name):
-            return self.read(name)
-        versions = self._versions(name)
+        if active is not None:
+            return self._read_version(name, active)
         out = self._version_dir(name, (versions[-1] + 1) if versions else 1)
         t0 = time.time()
         df = fn(self.spark)
@@ -206,7 +267,6 @@ class Pipeline:
         writer.parquet(out)
         elapsed = time.time() - t0
 
-        snap = self.spark.read.parquet(out)
         # per-partition lineage from the parquet FOOTERS (driver-side,
         # pyarrow): the old groupBy(input_file_name) rescanned the whole
         # just-written snapshot purely for metrics (r03 review)
@@ -219,7 +279,7 @@ class Pipeline:
             "n_rows": n_rows,
             "rows_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else None,
             "partitions": per_file,
-            "schema": snap.schema.simpleString(),
+            "schema": _data_schema(df, partition_by, bool(per_file)),
             "committed_at_unix": int(time.time()),
         }
         with open(os.path.join(out, "_lineage.json"), "w") as f:
@@ -232,7 +292,7 @@ class Pipeline:
                 "committed_at_unix": manifest["committed_at_unix"],
             }
         )
-        return snap
+        return _scan(self.spark, out, manifest)
 
     def _is_append_stage(self, stage: str) -> bool:
         return any(
@@ -246,25 +306,29 @@ class Pipeline:
         vector (``delete_where``) is served MERGE-ON-READ: the delete
         rows anti-join out at scan time."""
         if snapshot_id is None:
-            if self._is_append_stage(stage):
+            is_append, _, v = self._resolve(stage)
+            if is_append:
                 return self.read_all(stage)
-            if self._active_version(stage) is None:
+            if v is None:
                 raise ValueError(f"stage {stage!r} has no committed snapshot")
-            return _apply_deletes(self.spark, self._dir(stage))
-        for e in self.snapshots():
-            if e["snapshot_id"] == snapshot_id:
-                if e["stage"] != stage:
-                    raise ValueError(
-                        f"snapshot {snapshot_id} belongs to stage {e['stage']!r}"
-                    )
-                if e.get("expired"):
-                    raise ValueError(
-                        f"snapshot {snapshot_id} was expired by expire_snapshots"
-                    )
-                return _apply_deletes(
-                    self.spark, self._version_dir(stage, e["version"])
+        else:
+            e = next((e for e in self.snapshots() if e["snapshot_id"] == snapshot_id), None)
+            if e is None:
+                raise ValueError(f"unknown snapshot_id {snapshot_id}")
+            if e["stage"] != stage:
+                raise ValueError(
+                    f"snapshot {snapshot_id} belongs to stage {e['stage']!r}"
                 )
-        raise ValueError(f"unknown snapshot_id {snapshot_id}")
+            if e.get("expired"):
+                raise ValueError(
+                    f"snapshot {snapshot_id} was expired by expire_snapshots"
+                )
+            v = e["version"]
+        return self._read_version(stage, v)
+
+    def _read_version(self, stage: str, version: int) -> DataFrame:
+        vd = self._version_dir(stage, version)
+        return _apply_deletes(self.spark, vd, _load_manifest(vd))
 
     def invalidate(self, stage: str):
         """Start a new version on the next run; the old snapshot stays
@@ -336,6 +400,15 @@ def read_incremental(p: "Pipeline", stage: str, since_snapshot_id: int) -> DataF
     return p.spark.read.parquet(*dirs)
 
 
+def _pruned(lin: dict, col: str, lo, hi) -> list[str]:
+    keep = []
+    for part in lin["partitions"]:
+        st = part.get("stats", {}).get(col)
+        if st is None or not (st[1] < lo or st[0] > hi):
+            keep.append(part["file"])
+    return keep
+
+
 def pruned_files(
     p: "Pipeline", stage: str, col: str, lo, hi
 ) -> tuple[list[str], int]:
@@ -345,12 +418,7 @@ def pruned_files(
     no recorded stats for ``col`` is conservatively kept.  Driver-side
     manifest arithmetic only — nothing is scanned."""
     lin = p.lineage(stage)
-    keep = []
-    for part in lin["partitions"]:
-        st = part.get("stats", {}).get(col)
-        if st is None or not (st[1] < lo or st[0] > hi):
-            keep.append(part["file"])
-    return keep, len(lin["partitions"])
+    return _pruned(lin, col, lo, hi), len(lin["partitions"])
 
 
 def read_pruned(p: "Pipeline", stage: str, col: str, lo, hi) -> DataFrame:
@@ -364,13 +432,13 @@ def read_pruned(p: "Pipeline", stage: str, col: str, lo, hi) -> DataFrame:
     ``col`` makes the file ranges disjoint, so the prune rate approaches
     the selectivity."""
     residual = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    keep, total = pruned_files(p, stage, col, lo, hi)
+    vd, lin = p._active(stage)
+    keep = _pruned(lin, col, lo, hi)
     if not keep:
-        return p.read(stage).where(F.lit(False))
-    vd = p._dir(stage)
+        return _apply_deletes(p.spark, vd, lin).where(F.lit(False))
     # merge-on-read aware: a pending position-delete vector applies to
     # the pruned scan exactly as to the full one
-    return _apply_deletes(p.spark, vd, keep).filter(residual)
+    return _apply_deletes(p.spark, vd, lin, keep).filter(residual)
 
 
 def _deletes_dir(vd: str) -> str:
@@ -379,15 +447,19 @@ def _deletes_dir(vd: str) -> str:
     return os.path.join(vd, "_deletes")
 
 
-def _read_with_pos(spark: SparkSession, vd: str, files: list[str] | None = None):
+def _read_deletes(spark: SparkSession, vd: str) -> DataFrame:
+    return spark.read.schema(_DELETES_SCHEMA).parquet(_deletes_dir(vd))
+
+
+def _read_with_pos(
+    spark: SparkSession, vd: str, lin: dict, files: list[str] | None = None
+) -> DataFrame:
     """Data rows of a version plus (_f, _pos) identity from the parquet
     reader's hidden ``_metadata`` columns — file NAME (versions are
     flat by the _flat_or_raise contract) and physical row index.  Row
     indexes are positions inside the physical file, so hard-linked CoW
     copies keep every delete vector valid across versions."""
-    paths = [os.path.join(vd, f) for f in files] if files is not None else [vd]
-    df = spark.read.option("basePath", vd).parquet(*paths)
-    return df.select(
+    return _scan(spark, vd, lin, files).select(
         "*",
         F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias("_f"),
         F.col("_metadata.row_index").alias("_pos"),
@@ -395,19 +467,17 @@ def _read_with_pos(spark: SparkSession, vd: str, files: list[str] | None = None)
 
 
 def _apply_deletes(
-    spark: SparkSession, vd: str, files: list[str] | None = None
+    spark: SparkSession, vd: str, lin: dict, files: list[str] | None = None
 ) -> DataFrame:
     """Merge-on-read scan of a version dir: plain parquet read when no
     delete vector exists; otherwise ONE broadcast anti-join on
     (file, pos).  The broadcast is bounded by the delete count — the
     contract mirrors Iceberg's: large accumulated vectors are
     materialized away by ``rewrite_deletes``."""
-    ddir = _deletes_dir(vd)
-    if not os.path.isdir(ddir):
-        paths = [os.path.join(vd, f) for f in files] if files is not None else [vd]
-        return spark.read.option("basePath", vd).parquet(*paths)
-    data = _read_with_pos(spark, vd, files)
-    dels = spark.read.parquet(ddir).select(
+    if not os.path.isdir(_deletes_dir(vd)):
+        return _scan(spark, vd, lin, files)
+    data = _read_with_pos(spark, vd, lin, files)
+    dels = _read_deletes(spark, vd).select(
         F.col("file").alias("_f"), F.col("pos").alias("_pos")
     )
     cols = [c for c in data.columns if c not in ("_f", "_pos")]
@@ -437,24 +507,18 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     Returns the new snapshot_id."""
     if p._is_append_stage(stage):
         raise ValueError(f"{stage!r} is an append stage — rewrite it into a batch stage")
-    v = p._active_version(stage)
-    if v is None:
-        raise ValueError(f"stage {stage!r} has no committed snapshot")
-    vd = p._version_dir(stage, v)
-    parts = p.lineage(stage)["partitions"]
+    vd, lin = p._active(stage)
+    parts = lin["partitions"]
     _flat_or_raise(parts, "delete_where")
 
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     new_dels = (
-        _read_with_pos(p.spark, vd)
+        _read_with_pos(p.spark, vd, lin)
         .filter(cond)
         .select(F.col("_f").alias("file"), F.col("_pos").alias("pos"))
     )
-    old_ddir = _deletes_dir(vd)
-    if os.path.isdir(old_ddir):
-        new_dels = new_dels.unionByName(
-            p.spark.read.parquet(old_ddir).select("file", "pos")
-        ).distinct()
+    if os.path.isdir(_deletes_dir(vd)):
+        new_dels = new_dels.unionByName(_read_deletes(p.spark, vd)).distinct()
 
     out = p._version_dir(stage, p._versions(stage)[-1] + 1)
     os.makedirs(out, exist_ok=True)
@@ -478,6 +542,7 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
         None,
         list(parts),
         vd,
+        lin,
         "delete_where",
         {
             "delete_files": [
@@ -496,20 +561,17 @@ def rewrite_deletes(p: "Pipeline", stage: str) -> int | None:
     deleted positions; untouched files hard-link through.  The new
     snapshot carries no ``_deletes`` — reads go back to plain scans.
     Returns the new snapshot_id, or None when no deletes are pending."""
-    v = p._active_version(stage)
-    if v is None:
-        raise ValueError(f"stage {stage!r} has no committed snapshot")
-    vd = p._version_dir(stage, v)
+    vd, lin = p._active(stage)
     if not os.path.isdir(_deletes_dir(vd)):
         return None
-    parts = p.lineage(stage)["partitions"]
+    parts = lin["partitions"]
     _flat_or_raise(parts, "rewrite_deletes")
-    dels = p.spark.read.parquet(_deletes_dir(vd))
+    dels = _read_deletes(p.spark, vd)
     affected = {r["file"] for r in dels.select("file").distinct().collect()}
     kept = [part for part in parts if part["file"] not in affected]
     rewritten = None
     if affected:
-        rewritten = _apply_deletes(p.spark, vd, sorted(affected))
+        rewritten = _apply_deletes(p.spark, vd, lin, sorted(affected))
     out = p._version_dir(stage, p._versions(stage)[-1] + 1)
     return _commit_rewrite(
         p,
@@ -518,6 +580,7 @@ def rewrite_deletes(p: "Pipeline", stage: str) -> int | None:
         rewritten,
         kept,
         vd,
+        lin,
         "rewrite_deletes",
         {"rewrote_files": sorted(affected), "kept_files": len(kept)},
         prefix=f"d{os.path.basename(out)}",
@@ -550,6 +613,7 @@ def _commit_rewrite(
     rewritten: DataFrame | None,
     kept: list[dict],
     vd_old: str,
+    lin_old: dict,
     action: str,
     extra: dict,
     n_out_files: int | None = None,
@@ -557,7 +621,8 @@ def _commit_rewrite(
 ) -> int:
     """Shared CoW commit: hard-link ``kept`` files from the old version,
     write ``rewritten`` (if any) as fresh files, rebuild the manifest
-    (footers only), and commit via the snapshot log append."""
+    (footers only; the schema is the old version's), and commit via the
+    snapshot log append."""
     t0 = time.time()
     os.makedirs(out, exist_ok=True)
     for part in kept:
@@ -588,7 +653,7 @@ def _commit_rewrite(
         "n_rows": n_rows,
         "rows_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else None,
         "partitions": per_file,
-        "schema": p.spark.read.parquet(out).schema.simpleString(),
+        "schema": lin_old.get("schema"),
         "committed_at_unix": int(time.time()),
         **extra,
     }
@@ -621,18 +686,15 @@ def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str])
     rewrite touches ~|updates| worth of files, not the table."""
     if p._is_append_stage(stage):
         raise ValueError(f"{stage!r} is an append stage — just append a new batch")
-    v = p._active_version(stage)
-    if v is None:
-        raise ValueError(f"stage {stage!r} has no committed snapshot")
-    vd = p._version_dir(stage, v)
+    vd, lin = p._active(stage)
     _no_pending_deletes_or_raise(vd, "merge_upsert")
-    parts = p.lineage(stage)["partitions"]
+    parts = lin["partitions"]
     _flat_or_raise(parts, "merge_upsert")
 
-    snap_cols = set(p.read(stage).columns)
-    if set(updates.columns) != snap_cols:
+    cols = _scan(p.spark, vd, lin).columns
+    if set(updates.columns) != set(cols):
         raise ValueError(
-            f"updates columns {sorted(updates.columns)} != snapshot {sorted(snap_cols)}"
+            f"updates columns {sorted(updates.columns)} != snapshot {sorted(cols)}"
         )
 
     key = keys[0]
@@ -653,11 +715,8 @@ def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str])
         affected = {part["file"] for part in parts}
 
     kept = [part for part in parts if part["file"] not in affected]
-    cols = p.read(stage).columns
     if affected:
-        old = p.spark.read.option("basePath", vd).parquet(
-            *[os.path.join(vd, f) for f in sorted(affected)]
-        )
+        old = _scan(p.spark, vd, lin, sorted(affected))
         rewritten = old.join(updates.select(*keys).distinct(), keys, "left_anti").select(
             *cols
         ).unionByName(updates.select(*cols))
@@ -671,6 +730,7 @@ def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str])
         rewritten,
         kept,
         vd,
+        lin,
         "merge_upsert",
         {"rewrote_files": sorted(affected), "kept_files": len(kept)},
         prefix=f"u{os.path.basename(out)}",
@@ -691,12 +751,9 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
         raise ValueError(
             f"{stage!r} is an append stage — materialize it into a batch stage first"
         )
-    v = p._active_version(stage)
-    if v is None:
-        raise ValueError(f"stage {stage!r} has no committed snapshot")
-    vd = p._version_dir(stage, v)
+    vd, lin = p._active(stage)
     _no_pending_deletes_or_raise(vd, "compact")
-    parts = p.lineage(stage)["partitions"]
+    parts = lin["partitions"]
     _flat_or_raise(parts, "compact")
 
     sizes = {
@@ -711,9 +768,7 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
     kept = [part for part in parts if sizes[part["file"]] >= target_bytes]
     total_small = sum(sizes[part["file"]] for part in small)
     n_out = max(1, -(-total_small // target_bytes))
-    packed = p.spark.read.option("basePath", vd).parquet(
-        *[os.path.join(vd, part["file"]) for part in small]
-    )
+    packed = _scan(p.spark, vd, lin, [part["file"] for part in small])
     out = p._version_dir(stage, p._versions(stage)[-1] + 1)
     return _commit_rewrite(
         p,
@@ -722,6 +777,7 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
         packed,
         kept,
         vd,
+        lin,
         "compact",
         {"packed_files": len(small), "kept_files": len(kept)},
         n_out_files=int(n_out),

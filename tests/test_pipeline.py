@@ -1367,3 +1367,148 @@ def test_overview_pyramid_pixels(spark, tmp_path):
         exp8[(rr & 1) * 32:(rr & 1) * 32 + 32, (c & 1) * 32:(c & 1) * 32 + 32] = ds(px)
     got8 = codec.decode(open(by_zoom[8][0].path, "rb").read())
     assert np.array_equal(got8, exp8)
+
+
+def _shapes_frame(spark, lo: int, hi: int):
+    """One column per schema shape a manifest must carry through a read:
+    non-nullable literals, nested array/struct/map, decimal,
+    timestamp_ntz, field metadata, and a partition-able column."""
+    import datetime
+    import decimal
+
+    return spark.range(lo, hi, 1, 4).select(
+        F.col("id"),
+        F.lit(7).alias("lit_nn"),
+        F.array(F.col("id"), F.lit(2)).alias("arr"),
+        F.struct(F.col("id").alias("a"), F.lit("s").alias("b")).alias("st"),
+        F.create_map(F.lit("k"), F.col("id")).alias("m"),
+        (F.col("id") / 4).cast("decimal(12,3)").alias("dec"),
+        F.lit(datetime.datetime(2020, 1, 2, 3, 4, 5)).cast("timestamp_ntz").alias("tsn"),
+        F.col("id").alias("md", metadata={"comment": "carried", "unit": 1}),
+        (F.col("id") % 3).alias("part"),
+    )
+
+
+def _inferred(spark, p, stage):
+    return spark.read.parquet(p._dir(stage)).schema.json()
+
+
+@pytest.mark.parametrize("shape", ["rows", "zero_rows", "partitioned"])
+def test_snapshot_reads_carry_manifest_schema(spark, tmp_path, shape):
+    """Every read of a committed version yields exactly the schema that
+    footer inference gives (nullability and metadata included), while
+    taking it from the manifest."""
+    from geodesk_spark.streaming.checkpoint import read_pruned
+
+    root = str(tmp_path / "pipe")
+    p = Pipeline(spark, root)
+    df = _shapes_frame(spark, 0, 0 if shape == "zero_rows" else 40)
+    part = ["part"] if shape == "partitioned" else None
+    staged = p.stage("tbl", lambda s: df, partition_by=part)
+    assert isinstance(p.lineage("tbl")["schema"], dict)
+    want = _inferred(spark, p, "tbl")
+    sid = p.snapshots()[-1]["snapshot_id"]
+    reads = {
+        "stage": staged,
+        "read": p.read("tbl"),
+        "time_travel": p.read("tbl", snapshot_id=sid),
+        "read_pruned": read_pruned(p, "tbl", "id", 5, 30),
+        "fresh_pipeline": Pipeline(spark, root).read("tbl"),
+        "resumed_stage": Pipeline(spark, root).stage("tbl", lambda s: df, partition_by=part),
+    }
+    for name, got in reads.items():
+        assert got.schema.json() == want, name
+    n = 0 if shape == "zero_rows" else 40
+    assert p.read("tbl").count() == n
+    if shape != "rows":
+        return
+
+    # every rewrite commits a version whose reads match inference too
+    from geodesk_spark.streaming.checkpoint import (
+        compact, delete_where, merge_upsert, rewrite_deletes,
+    )
+
+    merge_upsert(p, "tbl", _shapes_frame(spark, 35, 45), ["id"])
+    compact(p, "tbl")
+    delete_where(p, "tbl", "id < 5")
+    rewrite_deletes(p, "tbl")
+    actions = []
+    for e in p.snapshots()[1:]:
+        vd = p._version_dir("tbl", e["version"])
+        with open(os.path.join(vd, "_lineage.json")) as f:
+            actions.append(json.load(f)["action"])
+        got = p.read("tbl", snapshot_id=e["snapshot_id"])
+        assert got.schema.json() == spark.read.parquet(vd).schema.json(), actions[-1]
+    assert actions == ["merge_upsert", "compact", "delete_where", "rewrite_deletes"]
+    assert sorted(r["id"] for r in p.read("tbl").collect()) == list(range(5, 45))
+
+
+def _job_ids_after(spark, group: str, action) -> list[int]:
+    """Job ids ``action`` starts, then a sentinel job, under one job
+    group.  Listener events are processed in order, so once the
+    sentinel is visible every earlier job of the group is too."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        sc.parallelize([0], 1).count()  # the sentinel: exactly one job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    import time
+
+    deadline = time.time() + 30
+    while True:
+        ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+        if ids or time.time() > deadline:
+            break
+        time.sleep(0.05)
+    assert ids, "sentinel job never appeared"
+    return ids[:-1]
+
+
+def test_committed_stage_reads_start_no_spark_job(spark, tmp_path):
+    """Reading a committed stage, and re-running it, plans from the
+    manifest: no footer-inference job."""
+    p = Pipeline(spark, str(tmp_path / "pipe"))
+    p.stage("tbl", lambda s: _shapes_frame(spark, 0, 40))
+
+    def reads():
+        p.read("tbl").schema
+        p.stage("tbl", lambda s: pytest.fail("a committed stage must not rerun")).schema
+
+    assert _job_ids_after(spark, "ckpt-read-no-job", reads) == []
+
+
+def test_read_falls_back_to_inference_for_old_manifest(spark, tmp_path):
+    """A manifest written before the schema was recorded still reads."""
+    p = Pipeline(spark, str(tmp_path / "pipe"))
+    p.stage("tbl", lambda s: _shapes_frame(spark, 0, 40))
+    lin_path = os.path.join(p._dir("tbl"), "_lineage.json")
+    with open(lin_path) as f:
+        lin = json.load(f)
+    del lin["schema"]
+    with open(lin_path, "w") as f:
+        json.dump(lin, f)
+    got = p.read("tbl")
+    assert got.schema.json() == _inferred(spark, p, "tbl")
+    assert sorted(r["id"] for r in got.collect()) == list(range(40))
+
+
+def test_empty_partitioned_stage_commits(spark, tmp_path):
+    """A partition_by stage with zero rows writes no parquet file; it
+    still commits an empty snapshot (with every column) and resumes."""
+    root = str(tmp_path / "pipe")
+    calls = []
+
+    def empty(s):
+        calls.append(1)
+        return _shapes_frame(spark, 0, 0)
+
+    p = Pipeline(spark, root)
+    out = p.stage("tbl", empty, partition_by=["part"])
+    assert out.count() == 0
+    assert out.columns == _shapes_frame(spark, 0, 0).columns
+    assert p.lineage("tbl")["n_rows"] == 0
+    again = Pipeline(spark, root).stage("tbl", empty, partition_by=["part"])
+    assert again.count() == 0 and len(calls) == 1

@@ -57,6 +57,27 @@ def test_disjoint_anti_join(world, layer):
     assert anti == n_total - matched
 
 
+def test_contains_points_reuses_layer_expressions(world, layer, monkeypatch):
+    """A second call on the same layer plans from the expressions cached
+    beside the layer's frames (no cell-id expression is rebuilt) and
+    returns the same rows."""
+    df, _ = world
+    prepared = spatial_join.prepare_layer(layer)
+
+    def rows():
+        out = spatial_join.contains_points(df, prepared, keep_cols=["image_id"])
+        return sorted(map(tuple, out.collect()))
+
+    first = rows()
+    n_entries = len(spatial_join._BANDS_CACHE)
+    built = []
+    real = spatial_join.point_cell_col
+    monkeypatch.setattr(spatial_join, "point_cell_col", lambda z: built.append(z) or real(z))
+    assert rows() == first
+    assert built == []
+    assert len(spatial_join._BANDS_CACHE) == n_entries
+
+
 def test_within_distance(world):
     df, pdf = world
     lon, lat, radius = 139.69, 35.69, 25_000.0  # 25 km around Tokyo

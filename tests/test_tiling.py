@@ -48,6 +48,26 @@ def test_point_tiles_match_numpy(spark):
         assert (out[f"tile_z{z}"].to_numpy() == expect).all(), f"zoom {z}"
 
 
+def test_point_tiling_expressions_built_once_per_session(spark, monkeypatch):
+    """with_point_tiles builds its tile expressions on the session's
+    first call only; cell is the max-zoom tile as a long."""
+    import pandas as pd
+
+    monkeypatch.setattr(tiling, "_EXPR_CACHE", {})
+    built = []
+    real = T.tile_col
+    monkeypatch.setattr(T, "tile_col", lambda x, y, z: built.append(z) or real(x, y, z))
+    df = spark.createDataFrame(pd.DataFrame({"lon": [-122.4, 2.35, 139.7], "lat": [37.8, 48.9, 35.7]}))
+    first = tiling.with_point_tiles(tiling.with_imp_coords(df)).toPandas()
+    assert sorted(built) == sorted(tiling.ZOOM_LEVELS)
+    second = tiling.with_point_tiles(tiling.with_imp_coords(df)).toPandas()
+    assert sorted(built) == sorted(tiling.ZOOM_LEVELS)
+    assert first.equals(second)
+    assert (first["cell"] == first[f"tile_z{max(tiling.ZOOM_LEVELS)}"]).all()
+    assert list(first.columns) == ["lon", "lat", "x", "y",
+                                   *[f"tile_z{z}" for z in tiling.ZOOM_LEVELS], "cell"]
+
+
 def test_explode_matches_slow_reference(spark):
     rng = np.random.default_rng(2)
     n = 500
