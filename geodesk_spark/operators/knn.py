@@ -15,17 +15,21 @@ fan-out bounded (TileIndexWalker.java:85-107).
 
 Spark shape (no per-query scans):
 
-1. Driver: per-query candidate cell set from int math (cheap).
+1. Per round, each query's candidate cell cover is generated as
+   columns (``explode(sequence(...))`` over its clamped cell ranges).
+   Every round's Column expressions are built once per session and
+   round shape (``_round_exprs``), not once per call.
 2. Broadcast the (cell, query, in-small-window) table; candidates are
-   a pure-JVM broadcast hash join against the point's exploded pyramid
-   cell ids, exact Mercator distance as a codegen'd column — no Python
-   workers anywhere.
-3. ``Window.partitionBy(query_id).orderBy(dist)`` + row_number ≤ k;
+   a pure-JVM broadcast hash join against the point's pyramid cell id,
+   exact Mercator distance as a codegen'd column — no Python workers
+   anywhere.
+3. ``Window.partitionBy(_qid).orderBy(dist)`` + row_number ≤ k;
    Spark cuts each query's top-k inside every map task (a partial
    ``WindowGroupLimit``) before the shuffle, so at most k rows per query
-   per task move.
+   per task move.  On the broadcast path ``_qid`` is a dense int the
+   driver assigns per distinct query id, so that sort compares ints.
 4. Queries whose k-th distance is NOT provably inside their window
-   double the window and re-run (only those queries).
+   widen the window and re-run (only those queries).
 
 Acceptance proof: all points within Chebyshev radius ``radius_imps``
 of (qx,qy) are candidates, so if kth_dist_m ≤ radius_imps × (min
@@ -39,6 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T_
 
 from geodesk_spark.geo import mercator, tile as T
+from geodesk_spark.operators.tiling import session_exprs
 
 I32_MAX = (1 << 31) - 1
 I32_MIN = -(1 << 31)
@@ -156,6 +161,105 @@ def _auto_radius(points: DataFrame, k: int, n_points: int | None = None) -> int:
     return min(max(r, 1 << 18), 1 << 28)
 
 
+# the broadcast path's per-round query frame: a driver-assigned int per
+# distinct query id, and the query point in imps
+_ACTIVE_SCHEMA = T_.StructType(
+    [
+        T_.StructField("_qid", T_.IntegerType()),
+        T_.StructField("_qx", T_.LongType()),
+        T_.StructField("_qy", T_.LongType()),
+    ]
+)
+
+
+def _round_exprs(
+    points: DataFrame, zoom: int, radius: int, big: int, id_col: str, query_id: str, k: int
+) -> dict:
+    """Column expressions of one :func:`knn_join` round, built once per
+    (session, zoom, radius, big, id_col, query_id, k) in
+    ``tiling._EXPR_CACHE``: the cover's row/column ranges and cell key,
+    the small-window flag, the probe's tile, the Mercator distance, the
+    top-k window and its filter, and the table path's stats, completion
+    test and output/next-round column lists.  Each expression node costs
+    a py4j round trip to build; rebuilt on every call they were most of
+    a warm call's ~2,700 round trips.  Both query paths plan from these."""
+
+    def build():
+        shift = 32 - zoom
+        qx, qy = F.col("_qx"), F.col("_qy")
+        lo, hi = F.lit(I32_MIN).cast("long"), F.lit(I32_MAX).cast("long")
+
+        def col_range(rad):
+            r, off = F.lit(rad).cast("long"), F.lit(1 << 31).cast("long")
+            x0, x1 = F.greatest(qx - r, lo), F.least(qx + r, hi)
+            return (
+                F.shiftright(x0 + off, shift).cast("int"),
+                F.shiftright(x1 + off, shift).cast("int"),
+            )
+
+        def row_range(rad):
+            r = F.lit(rad).cast("long")
+            y0, y1 = F.greatest(qy - r, lo), F.least(qy + r, hi)
+            return (
+                F.shiftright(hi - y1, shift).cast("int"),
+                F.shiftright(hi - y0, shift).cast("int"),
+            )
+
+        bc0, bc1 = col_range(big)
+        br0, br1 = row_range(big)
+        sc0, sc1 = col_range(radius)
+        sr0, sr1 = row_range(radius)
+        row, col = F.col("_row"), F.col("_col")
+        qid, dist, small, done = F.col("_qid"), F.col("dist_m"), F.col("small"), F.col("done")
+        w = Window.partitionBy("_qid").orderBy(dist.asc(), F.col(id_col).asc())
+        # the table path's completion test over the per-query stats
+        ok_s = (
+            (F.coalesce(F.col("cnt_s"), F.lit(0)) >= k)
+            & F.col("kth_s").isNotNull()
+            & (F.col("kth_s") <= _guarantee_col(qy, radius))
+        )
+        ok_a = (
+            (F.coalesce(F.col("cnt_a"), F.lit(0)) >= k)
+            & F.col("kth_a").isNotNull()
+            & (F.col("kth_a") <= _guarantee_col(qy, big))
+        )
+        return {
+            "rows": F.explode(F.sequence(br0, br1)),
+            "cols": F.explode(F.sequence(bc0, bc1)),
+            "cover": [
+                (
+                    F.lit(zoom << 24).cast("long")
+                    + F.shiftleft(row.cast("long"), 12)
+                    + col.cast("long")
+                ).alias("_qcell"),
+                qid,
+                qx,
+                qy,
+                ((col >= sc0) & (col <= sc1) & (row >= sr0) & (row <= sr1)).alias("small"),
+            ],
+            "tile": T.tile_col(F.col("x"), F.col("y"), zoom).cast("long"),
+            "dist": mercator.distance_col(F.col("x"), F.col("y"), qx, qy),
+            "cand": [F.col(id_col), qid, dist, small],
+            "rank": F.row_number().over(w),
+            "top_k": F.col("rank_all") <= k,
+            "stats": [
+                F.sum(small.cast("int")).alias("cnt_s"),
+                F.max(F.when(small, dist)).alias("kth_s"),
+                F.count("*").alias("cnt_a"),
+                F.max(dist).alias("kth_a"),
+            ],
+            "decide": [qid, qx, qy, (ok_s | ok_a | F.lit(big >= (1 << 31))).alias("done")],
+            "qid": qid,
+            "done": done,
+            "not_done": ~done,
+            "out": [F.col(id_col), qid.alias(query_id), dist, F.col("rank_all").alias("rank")],
+            "active": [qid, qx, qy],
+        }
+
+    key = ("knn_round", zoom, radius, big, id_col, query_id, k)
+    return session_exprs(points, key, build)
+
+
 def knn_join(
     points: DataFrame,
     queries: DataFrame,
@@ -205,17 +309,30 @@ def knn_join(
     candidate).  Semantics match :func:`knn` exactly: same pyramid, same
     acceptance proof, same (dist, id) deterministic tie-break.
 
+    Planning is cheap on a warm session: each round's Column
+    expressions (:func:`_round_exprs`) are built once per session and
+    round shape, so a warm call makes a few hundred py4j round trips,
+    not thousands.
+    The broadcast path maps each distinct query id to a dense ``int``
+    on the driver (it holds the query rows anyway), ranks and shuffles
+    on that ``_qid``, and maps the ids back when it builds the output
+    frame, so the output's query-id values and type are the input's.
+
     ``queries`` must carry (``query_id``, x, y) with imp-space coords;
     ``id_col`` must be unique per point (the tie-break).
     """
     if init_radius_imps == "auto":
         init_radius_imps = _auto_radius(points, k, n_points)
-    pts = points.select(id_col, "x", "y")
-    active = queries.select(
-        F.col(query_id).alias("_qid"),
-        F.col("x").cast("long").alias("_qx"),
-        F.col("y").cast("long").alias("_qy"),
-    )
+    sel = session_exprs(points, ("knn_select", id_col, query_id), lambda: {
+        "pts": [F.col(id_col), F.col("x"), F.col("y")],
+        "query": [
+            F.col(query_id).alias("_qid"),
+            F.col("x").cast("long").alias("_qx"),
+            F.col("y").cast("long").alias("_qy"),
+        ],
+    })
+    pts = points.select(sel["pts"])
+    active = queries.select(sel["query"])
     maybe_b = (lambda df: F.broadcast(df)) if broadcast_queries else (lambda df: df)
 
     # radius schedule: (r, 4r) per round, 16× between rounds, final round
@@ -241,87 +358,50 @@ def knn_join(
         # fixed scheduler overhead each (measured: 3.8s → ~1.3s on the
         # interactive bench query); the table×table path below keeps the
         # fully distributed machinery because its state is table-sized.
-        act_schema = active.schema
-        act_rows = [(r["_qid"], r["_qx"], r["_qy"]) for r in active.collect()]
+        # Rounds rank and shuffle on a dense int per distinct query id
+        # (an int sort key is cheaper than a string one); the ids come
+        # back when the output frame is built.
+        qid_type = active.schema["_qid"].dataType
+        qrows = active.collect()
+        qids = list(dict.fromkeys(qid for qid, _, _ in qrows))  # first-seen order
+        qidx = {qid: i for i, qid in enumerate(qids)}
+        act_rows = [(qidx[qid], qx, qy) for qid, qx, qy in qrows]
         collected_rows: list = []
     for radius, big in schedule:
         zoom = _window_zoom(big, max_per_axis)
-        shift = 32 - zoom
+        ex = _round_exprs(points, zoom, radius, big, id_col, query_id, k)
+        final_round = big >= (1 << 31)
         if broadcast_queries:
             if not act_rows:
                 break
             # a LocalRelation, not an RDD scan: the broadcast build then
             # needs no job of its own (see _query_frame)
             active = spark.createDataFrame(
-                pd.DataFrame(act_rows, columns=act_schema.names), act_schema
+                pd.DataFrame(act_rows, columns=_ACTIVE_SCHEMA.names), _ACTIVE_SCHEMA
             )
-
-        def col_range(rad):
-            x0 = F.greatest(F.col("_qx") - F.lit(rad).cast("long"), F.lit(I32_MIN).cast("long"))
-            x1 = F.least(F.col("_qx") + F.lit(rad).cast("long"), F.lit(I32_MAX).cast("long"))
-            return (
-                F.shiftright(x0 + F.lit(1 << 31).cast("long"), shift).cast("int"),
-                F.shiftright(x1 + F.lit(1 << 31).cast("long"), shift).cast("int"),
-            )
-
-        def row_range(rad):
-            y0 = F.greatest(F.col("_qy") - F.lit(rad).cast("long"), F.lit(I32_MIN).cast("long"))
-            y1 = F.least(F.col("_qy") + F.lit(rad).cast("long"), F.lit(I32_MAX).cast("long"))
-            return (
-                F.shiftright(F.lit((1 << 31) - 1).cast("long") - y1, shift).cast("int"),
-                F.shiftright(F.lit((1 << 31) - 1).cast("long") - y0, shift).cast("int"),
-            )
-
-        bc0, bc1 = col_range(big)
-        br0, br1 = row_range(big)
-        sc0, sc1 = col_range(radius)
-        sr0, sr1 = row_range(radius)
         cover = (
-            active.withColumn("_row", F.explode(F.sequence(br0, br1)))
-            .withColumn("_col", F.explode(F.sequence(bc0, bc1)))
-            .select(
-                (
-                    F.lit(zoom << 24).cast("long")
-                    + F.shiftleft(F.col("_row").cast("long"), 12)
-                    + F.col("_col").cast("long")
-                ).alias("_qcell"),
-                "_qid",
-                "_qx",
-                "_qy",
-                (
-                    (F.col("_col") >= sc0)
-                    & (F.col("_col") <= sc1)
-                    & (F.col("_row") >= sr0)
-                    & (F.col("_row") <= sr1)
-                ).alias("small"),
-            )
+            active.withColumn("_row", ex["rows"])
+            .withColumn("_col", ex["cols"])
+            .select(ex["cover"])
         )
-
-        probe = pts.withColumn("_qcell", T.tile_col(F.col("x"), F.col("y"), zoom).cast("long"))
         cand = (
-            probe.join(maybe_b(cover), "_qcell")
-            .withColumn(
-                "dist_m",
-                mercator.distance_col(F.col("x"), F.col("y"), F.col("_qx"), F.col("_qy")),
-            )
-            .select(id_col, "_qid", "dist_m", "small")
+            pts.withColumn("_qcell", ex["tile"])
+            .join(maybe_b(cover), "_qcell")
+            .withColumn("dist_m", ex["dist"])
+            .select(ex["cand"])
         )
         # row_number must stay the window's ONLY function (docstring step
         # 2): a second one blocks the partial WindowGroupLimit, and every
         # candidate row is shuffled again
-        w = Window.partitionBy("_qid").orderBy(F.col("dist_m").asc(), F.col(id_col).asc())
-        ranked = cand.withColumn("rank_all", F.row_number().over(w)).filter(
-            F.col("rank_all") <= k
-        )
-        final_round = big >= (1 << 31)
+        ranked = cand.withColumn("rank_all", ex["rank"]).filter(ex["top_k"])
         if broadcast_queries:
             rows = ranked.collect()  # the round's ONE action: ≤ k·|queries| rows
             by_q: dict = {}
             for r in rows:
                 by_q.setdefault(r["_qid"], []).append(r)
             next_act = []
-            for qid, qx, qy in act_rows:
-                rs = by_q.get(qid, [])
+            for qi, qx, qy in act_rows:
+                rs = by_q.get(qi, [])
                 small_rows = [r for r in rs if r["small"]]
                 kth_s = max((r["dist_m"] for r in small_rows), default=None)
                 kth_a = max((r["dist_m"] for r in rs), default=None)
@@ -335,44 +415,19 @@ def knn_join(
                 )
                 if ok_s or ok_a or final_round:
                     collected_rows.extend(
-                        (r[id_col], qid, r["dist_m"], int(r["rank_all"])) for r in rs
+                        (r[id_col], qids[qi], r["dist_m"], int(r["rank_all"])) for r in rs
                     )
                 else:
-                    next_act.append((qid, qx, qy))
+                    next_act.append((qi, qx, qy))
             act_rows = next_act
             if final_round or not act_rows:
                 break
             continue
         ranked = ranked.cache()
-        stats = ranked.groupBy("_qid").agg(
-            F.sum(F.col("small").cast("int")).alias("cnt_s"),
-            F.max(F.when(F.col("small"), F.col("dist_m"))).alias("kth_s"),
-            F.count("*").alias("cnt_a"),
-            F.max("dist_m").alias("kth_a"),
-        )
-        ok_s = (
-            (F.coalesce(F.col("cnt_s"), F.lit(0)) >= k)
-            & F.col("kth_s").isNotNull()
-            & (F.col("kth_s") <= _guarantee_col(F.col("_qy"), radius))
-        )
-        ok_a = (
-            (F.coalesce(F.col("cnt_a"), F.lit(0)) >= k)
-            & F.col("kth_a").isNotNull()
-            & (F.col("kth_a") <= _guarantee_col(F.col("_qy"), big))
-        )
-        decide = active.join(stats, "_qid", "left").select(
-            "_qid",
-            "_qx",
-            "_qy",
-            (ok_s | ok_a | F.lit(final_round)).alias("done"),
-        )
-        done_q = decide.filter(F.col("done")).select("_qid")
-        round_out = ranked.join(maybe_b(done_q), "_qid").select(
-            id_col,
-            F.col("_qid").alias(query_id),
-            "dist_m",
-            F.col("rank_all").alias("rank"),
-        )
+        stats = ranked.groupBy(ex["qid"]).agg(*ex["stats"])
+        decide = active.join(stats, "_qid", "left").select(ex["decide"])
+        done_q = decide.filter(ex["done"]).select(ex["qid"])
+        round_out = ranked.join(maybe_b(done_q), "_qid").select(ex["out"])
         # ≤ k rows per finished query: detach from the cached candidate
         # lineage so the round cache releases immediately
         results.append(round_out.localCheckpoint(eager=True))
@@ -380,9 +435,7 @@ def knn_join(
             ranked.unpersist()
             break
         active = (
-            decide.filter(~F.col("done"))
-            .select("_qid", "_qx", "_qy")
-            .localCheckpoint(eager=True)
+            decide.filter(ex["not_done"]).select(ex["active"]).localCheckpoint(eager=True)
         )
         ranked.unpersist()
         if active.isEmpty():  # scalar signal only — no per-query collect
@@ -392,7 +445,7 @@ def knn_join(
         out_schema = T_.StructType(
             [
                 pts.schema[id_col],
-                T_.StructField(query_id, act_schema["_qid"].dataType),
+                T_.StructField(query_id, qid_type),
                 T_.StructField("dist_m", T_.DoubleType()),
                 T_.StructField("rank", T_.IntegerType()),
             ]
@@ -473,13 +526,23 @@ def segment_candidates(
     point_cols: list[str],
     seg_id: str = "seg_id",
     slack: float = 1.5,
+    max_cands: int | None = None,
 ) -> DataFrame:
     """Point × segment candidates within ``meters`` — the shared front
     half of ``snap_to_segments`` (argmin) and ``mobility.map_match``
     (HMM lattice).  ``points`` needs (point_cols…, x, y); returns
     (point_cols…, px, py, seg_id, t, sx, sy, dist_m) with the clamped
     int64-exact projection and exact Mercator foot distance (expression
-    order documented in snap_to_segments — its oracle mirrors this)."""
+    order documented in snap_to_segments — its oracle mirrors this).
+
+    ``max_cands`` keeps only each point's nearest ``max_cands`` by
+    (dist_m, seg_id), ranked by one ``row_number()`` window BEFORE the
+    ``dist_m <= meters`` filter.  That filter drops a suffix of every
+    point's order, so the ranks are the same as filtering first; but a
+    filter below the window is pushed into the join condition with the
+    foot point written out at every use inside the distance polynomial,
+    and the stage feeding the window's sort then overflows janino's
+    64 KB method limit (interpreted fallback)."""
     p = points.select(
         *point_cols, F.col("x").alias("px"), F.col("y").alias("py")
     )
@@ -509,16 +572,23 @@ def segment_candidates(
     )
     sx = F.col("x1") + t * abx
     sy = F.col("y1") + t * aby
-    return cand.select(
-        *point_cols,
-        "px",
-        "py",
-        seg_id,
-        t.alias("t"),
-        sx.alias("sx"),
-        sy.alias("sy"),
-        mercator.distance_col(F.col("px"), F.col("py"), sx, sy).alias("dist_m"),
-    ).filter(F.col("dist_m") <= meters)
+    # the foot point is projected BEFORE the distance reads it: written
+    # inline, every use of sx/sy inside the distance polynomial copies the
+    # projection (same float ops either way, so the same bits)
+    foot = cand.select(
+        *point_cols, "px", "py", seg_id,
+        t.alias("t"), sx.alias("sx"), sy.alias("sy"),
+    ).withColumn(
+        "dist_m", mercator.distance_col(F.col("px"), F.col("py"), F.col("sx"), F.col("sy"))
+    )
+    if max_cands is not None:
+        w = Window.partitionBy(*point_cols).orderBy(F.asc("dist_m"), F.asc(seg_id))
+        foot = (
+            foot.withColumn("_rk", F.row_number().over(w))
+            .filter(F.col("_rk") <= max_cands)
+            .drop("_rk")
+        )
+    return foot.filter(F.col("dist_m") <= meters)
 
 
 def snap_to_segments(
@@ -551,15 +621,9 @@ def snap_to_segments(
     division is the only float step before the distance itself, so an
     oracle mirroring the op order is hash-exact.
     """
-    snapped = segment_candidates(
-        points, segs, meters, [point_id], seg_id=seg_id, slack=slack
+    return segment_candidates(
+        points, segs, meters, [point_id], seg_id=seg_id, slack=slack, max_cands=1
     ).drop("px", "py")
-    w = Window.partitionBy(point_id).orderBy(F.asc("dist_m"), F.asc(seg_id))
-    return (
-        snapped.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .drop("rnk")
-    )
 
 
 def idw_interpolate(

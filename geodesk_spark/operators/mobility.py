@@ -236,16 +236,9 @@ def map_match(
     from geodesk_spark.operators.knn import segment_candidates
 
     cand = segment_candidates(
-        points, segments, radius_m, [traj_col, seq_col], seg_id=seg_id
-    )
-    w = Window.partitionBy(traj_col, seq_col).orderBy(
-        F.asc("dist_m"), F.asc(seg_id)
-    )
-    cand = (
-        cand.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= max_cands)
-        .drop("_rk", "t")
-    )
+        points, segments, radius_m, [traj_col, seq_col], seg_id=seg_id,
+        max_cands=max_cands,
+    ).drop("t")
     two_sig2 = 2.0 * sigma_m * sigma_m
     beta = float(beta_m)
 

@@ -42,12 +42,16 @@ from geodesk_spark.geo import mercator, tile as T
 ZOOM_LEVELS = T.DEFAULT_ZOOM_LEVELS
 
 
-# Column expressions of the point-tiling hot path, built once per
-# (session, arguments): rebuilding them costs py4j round trips per call.
+# Column expressions of the hot paths (point tiling here, kNN rounds in
+# knn.py), built once per (session, arguments): rebuilding them costs
+# py4j round trips per call.
 _EXPR_CACHE: dict = {}
 
 
-def _session_exprs(df: DataFrame, key: tuple, build) -> dict:
+def session_exprs(df: DataFrame, key: tuple, build) -> dict:
+    """``build()``'s Column expressions for ``df``'s session and ``key``,
+    built on the first call only.  ``key`` starts with the caller's name
+    so two callers never share an entry."""
     k = (id(df.sparkSession), *key)
     exprs = _EXPR_CACHE.get(k)
     if exprs is None:
@@ -57,7 +61,7 @@ def _session_exprs(df: DataFrame, key: tuple, build) -> dict:
 
 def with_imp_coords(df: DataFrame, lon="lon", lat="lat") -> DataFrame:
     """Add int32 imp x/y from lon/lat — JVM-side, no UDF."""
-    return df.withColumns(_session_exprs(df, ("imp", lon, lat), lambda: {
+    return df.withColumns(session_exprs(df, ("imp", lon, lat), lambda: {
         "x": mercator.x_from_lon_col(F.col(lon)),
         "y": mercator.y_from_lat_col(F.col(lat)),
     }))
@@ -72,7 +76,7 @@ def with_point_tiles(df: DataFrame, zooms=ZOOM_LEVELS) -> DataFrame:
         exprs["cell"] = exprs[f"tile_z{max(zooms)}"].cast("long")
         return exprs
 
-    return df.withColumns(_session_exprs(df, ("tiles", tuple(zooms)), build))
+    return df.withColumns(session_exprs(df, ("tiles", tuple(zooms)), build))
 
 
 def assign_zoom_col(minx: Column, miny: Column, maxx: Column, maxy: Column, zooms=ZOOM_LEVELS) -> Column:

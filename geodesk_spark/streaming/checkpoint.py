@@ -27,8 +27,11 @@ Lineage manifest per stage (<root>/<stage>/_lineage.json):
 Every version read passes that schema to ``spark.read.schema`` (see
 ``_scan``): a schema-less ``spark.read.parquet(dir)`` re-reads the
 footers of files the pipeline has just written, and that costs a Spark
-job per read.  Only manifests written before the schema was recorded
-are inferred.
+job per read.  Append-stage batches record theirs too, and
+``read_all``/``read_incremental`` pass it when every batch they union
+recorded the same one (``_scan_batches``).  Only manifests written
+before the schema was recorded, or batches whose schemas differ, are
+inferred.
 
 The per-file min/max ``stats`` (read from the parquet footers the
 manifest pass already parses — zero extra I/O) are the Iceberg
@@ -224,11 +227,21 @@ class Pipeline:
 
     def _active(self, stage: str) -> tuple[str, dict]:
         """(dir, manifest) of the active version; raises when none."""
-        v = self._active_version(stage)
+        return self._committed(stage, self._active_version(stage))
+
+    def _committed(self, stage: str, v: int | None) -> tuple[str, dict]:
         if v is None:
             raise ValueError(f"stage {stage!r} has no committed snapshot")
         vd = self._version_dir(stage, v)
         return vd, _load_manifest(vd)
+
+    def _active_batch(self, stage: str, why: str) -> tuple[str, dict]:
+        """(dir, manifest) of a batch stage's active version, from ONE
+        ``_resolve``; an append stage raises with ``why``."""
+        is_append, _, v = self._resolve(stage)
+        if is_append:
+            raise ValueError(f"{stage!r} is an append stage — {why}")
+        return self._committed(stage, v)
 
     def _dir(self, stage: str) -> str:
         _, versions, v = self._resolve(stage)
@@ -293,11 +306,6 @@ class Pipeline:
             }
         )
         return _scan(self.spark, out, manifest)
-
-    def _is_append_stage(self, stage: str) -> bool:
-        return any(
-            e["stage"] == stage and e.get("mode") == "append" for e in self.snapshots()
-        )
 
     def read(self, stage: str, snapshot_id: int | None = None) -> DataFrame:
         """Current snapshot (append stages: union of ALL committed
@@ -369,8 +377,14 @@ def append_stage(p: "Pipeline", name: str, fn) -> int:
     df.write.mode("overwrite").parquet(out)
     per_file = _file_manifest(_parquet_files(out), out)
     n_rows = sum(r["rows"] for r in per_file)
+    manifest = {
+        "stage": name,
+        "n_rows": n_rows,
+        "partitions": per_file,
+        "schema": _data_schema(df, None, bool(per_file)),
+    }
     with open(os.path.join(out, "_lineage.json"), "w") as f:
-        json.dump({"stage": name, "n_rows": n_rows, "partitions": per_file}, f, indent=1)
+        json.dump(manifest, f, indent=1)
     return p._append_snapshot(
         {
             "stage": name,
@@ -382,11 +396,23 @@ def append_stage(p: "Pipeline", name: str, fn) -> int:
     )
 
 
+def _scan_batches(spark: SparkSession, dirs: list[str]) -> DataFrame:
+    """The one parquet read of an append stage's batch ``dirs``, with
+    the schema their manifests record when every batch recorded the
+    same one; otherwise (batches written before the schema was recorded,
+    or batches whose schemas differ) Spark infers it from the footers."""
+    schemas = [_load_manifest(d).get("schema") for d in dirs]
+    reader = spark.read
+    if isinstance(schemas[0], dict) and all(s == schemas[0] for s in schemas):
+        reader = reader.schema(StructType.fromJson(schemas[0]))
+    return reader.parquet(*dirs)
+
+
 def read_all(p: "Pipeline", stage: str) -> DataFrame:
     dirs = list(_committed_dirs(p, stage).values())
     if not dirs:
         raise ValueError(f"no committed snapshots for stage {stage!r}")
-    return p.spark.read.parquet(*dirs)
+    return _scan_batches(p.spark, dirs)
 
 
 def read_incremental(p: "Pipeline", stage: str, since_snapshot_id: int) -> DataFrame:
@@ -396,8 +422,8 @@ def read_incremental(p: "Pipeline", stage: str, since_snapshot_id: int) -> DataF
         any_dir = next(iter(_committed_dirs(p, stage).values()), None)
         if any_dir is None:
             raise ValueError(f"no committed snapshots for stage {stage!r}")
-        return p.spark.read.parquet(any_dir).limit(0)
-    return p.spark.read.parquet(*dirs)
+        return _scan_batches(p.spark, [any_dir]).limit(0)
+    return _scan_batches(p.spark, dirs)
 
 
 def _pruned(lin: dict, col: str, lo, hi) -> list[str]:
@@ -505,9 +531,7 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     is the materialize half (Iceberg's rewrite_position_delete_files).
 
     Returns the new snapshot_id."""
-    if p._is_append_stage(stage):
-        raise ValueError(f"{stage!r} is an append stage — rewrite it into a batch stage")
-    vd, lin = p._active(stage)
+    vd, lin = p._active_batch(stage, "rewrite it into a batch stage")
     parts = lin["partitions"]
     _flat_or_raise(parts, "delete_where")
 
@@ -684,9 +708,7 @@ def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str])
     here a duplicate key would insert duplicate rows) and share the
     snapshot's column set.  At 10^12 rows with a range/Z-sorted key the
     rewrite touches ~|updates| worth of files, not the table."""
-    if p._is_append_stage(stage):
-        raise ValueError(f"{stage!r} is an append stage — just append a new batch")
-    vd, lin = p._active(stage)
+    vd, lin = p._active_batch(stage, "just append a new batch")
     _no_pending_deletes_or_raise(vd, "merge_upsert")
     parts = lin["partitions"]
     _flat_or_raise(parts, "merge_upsert")
@@ -747,11 +769,7 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
     trip at plan time; 10^6 tiny files = a planning outage).  Returns
     the new snapshot_id, or None when fewer than two small files exist
     (nothing to pack — no empty commit)."""
-    if p._is_append_stage(stage):
-        raise ValueError(
-            f"{stage!r} is an append stage — materialize it into a batch stage first"
-        )
-    vd, lin = p._active(stage)
+    vd, lin = p._active_batch(stage, "materialize it into a batch stage first")
     _no_pending_deletes_or_raise(vd, "compact")
     parts = lin["partitions"]
     _flat_or_raise(parts, "compact")
@@ -804,7 +822,7 @@ def expire_snapshots(
     Returns the expired snapshot ids."""
     import shutil
 
-    if p._is_append_stage(stage):
+    if p._resolve(stage)[0]:
         raise ValueError(
             f"{stage!r} is an append stage — its batches are live data, "
             "not history (materialize into a batch stage to roll up)"

@@ -10,7 +10,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def spark():
     from geodesk_spark.session import get_spark
 
-    s = get_spark("geodesk-spark-tests")
+    # codegen fallback off: a plan whose generated code fails to compile
+    # raises here instead of silently running interpreted
+    s = get_spark("geodesk-spark-tests", extra_conf={"spark.sql.codegen.fallback": "false"})
     yield s
     s.stop()
 

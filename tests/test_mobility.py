@@ -161,6 +161,42 @@ def test_staypoints_hand_case(spark):
     ]
 
 
+def test_map_match_compiles_on_driver_query_points(spark, monkeypatch):
+    """map_match over the driver query's point frame (``_mm_points``: a
+    windowed events frame, so the candidate join is not folded into a
+    local relation) runs compiled.  With codegen fallback off, a
+    generated method past janino's 64 KB limit raises instead of
+    silently running interpreted."""
+    import pandas as pd
+
+    from geodesk_spark.driver_queries import graph_mobility as gm
+
+    rng = np.random.default_rng(0)
+    n = 3_000
+    events = spark.createDataFrame(pd.DataFrame({
+        "user_id": rng.integers(0, 300, n).astype("int64"),
+        "ts": pd.to_datetime(rng.integers(0, 10**9, n), unit="s"),
+        "event_id": np.arange(n, dtype="int64"),
+    }))
+    monkeypatch.setattr(gm.tables, "load_spread", lambda s, sf_dir, name: events)
+    pts = gm._mm_points(spark, None)
+    segs = spark.createDataFrame(
+        gm._mm_segments(), "seg_id int, x1 long, y1 long, x2 long, y2 long"
+    )
+    old = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        got = mobility.map_match(
+            pts, segs, gm.MM_RADIUS, sigma_m=gm.MM_SIGMA, beta_m=gm.MM_BETA,
+            max_cands=gm.MM_CANDS,
+        ).toPandas()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", old)
+    assert len(got) > 0
+    assert not got.duplicated(["traj_id", "seq"]).any()
+    assert set(got["seq"]) <= set(range(gm.MM_STEPS))
+
+
 def test_map_match_matches_path_enumeration(spark):
     """HMM map matching equals brute-force enumeration of ALL candidate
     paths (the definitional check), and differs from greedy per-point

@@ -1480,6 +1480,43 @@ def test_committed_stage_reads_start_no_spark_job(spark, tmp_path):
     assert _job_ids_after(spark, "ckpt-read-no-job", reads) == []
 
 
+def test_append_stage_reads_carry_manifest_schema(spark, tmp_path):
+    """append_stage records each batch's schema; read_all, read() and
+    read_incremental plan from it without a footer-inference job and
+    yield the schema inference gives.  Batches whose recorded schemas
+    differ are inferred."""
+    from geodesk_spark.streaming.checkpoint import _committed_dirs, _load_manifest
+
+    p = Pipeline(spark, str(tmp_path / "pipe"))
+    s1 = p.append_stage("ing", lambda s: _shapes_frame(spark, 0, 20))
+    s2 = p.append_stage("ing", lambda s: _shapes_frame(spark, 20, 40))
+    dirs = list(_committed_dirs(p, "ing").values())
+    assert all(isinstance(_load_manifest(d)["schema"], dict) for d in dirs)
+    got = {}
+
+    def reads():
+        got["all"] = p.read_all("ing").schema.json()
+        got["read"] = p.read("ing").schema.json()
+        got["since_s1"] = p.read_incremental("ing", since_snapshot_id=s1).schema.json()
+        got["since_s2"] = p.read_incremental("ing", since_snapshot_id=s2).schema.json()
+
+    assert _job_ids_after(spark, "ckpt-append-read-no-job", reads) == []
+    want = spark.read.parquet(*dirs).schema.json()
+    assert got == {
+        "all": want,
+        "read": want,
+        "since_s1": spark.read.parquet(dirs[1]).schema.json(),
+        "since_s2": spark.read.parquet(dirs[0]).schema.json(),
+    }
+    assert sorted(r["id"] for r in p.read_all("ing").collect()) == list(range(40))
+    assert p.read_incremental("ing", since_snapshot_id=s2).count() == 0
+
+    # a batch with another schema: the union is inferred, as before
+    p.append_stage("ing", lambda s: _shapes_frame(spark, 40, 50).drop("md"))
+    dirs = list(_committed_dirs(p, "ing").values())
+    assert p.read_all("ing").schema.json() == spark.read.parquet(*dirs).schema.json()
+
+
 def test_read_falls_back_to_inference_for_old_manifest(spark, tmp_path):
     """A manifest written before the schema was recorded still reads."""
     p = Pipeline(spark, str(tmp_path / "pipe"))

@@ -302,6 +302,68 @@ def test_knn_join_shuffle_path(world):
     assert a.to_dict("records") == b.to_dict("records")
 
 
+def test_knn_join_reuses_round_expressions(world, monkeypatch):
+    """knn_join builds each round's Column expressions once per session,
+    and both query paths plan from them: after the first call neither
+    the probe's tile nor the Mercator distance is built again, and the
+    rows stay the same."""
+    from geodesk_spark.geo import tile as T
+
+    monkeypatch.setattr(tiling, "_EXPR_CACHE", {})
+    built = []
+    real_tile, real_dist = T.tile_col, mercator.distance_col
+    monkeypatch.setattr(T, "tile_col", lambda *a: built.append("tile") or real_tile(*a))
+    monkeypatch.setattr(
+        mercator, "distance_col", lambda *a: built.append("dist") or real_dist(*a)
+    )
+    df, _ = world
+    queries = [("q_tokyo", 139.7, 35.7), ("q_paris", 2.3, 48.9), ("q_ocean", -140.0, -30.0)]
+    qdf = knn_mod._query_frame(df.sparkSession, queries)
+    pts = df.select("image_id", "x", "y")
+    key = ["query_id", "rank"]
+    cols = ["query_id", "image_id", "dist_m", "rank"]
+
+    def run(bq):
+        out = knn_mod.knn_join(pts, qdf, k=5, init_radius_imps=1 << 20, broadcast_queries=bq)
+        return out.toPandas()[cols].sort_values(key).reset_index(drop=True).to_dict("records")
+
+    first = run(True)
+    assert "tile" in built and "dist" in built
+    n_built = len(built)
+    assert run(True) == first
+    assert run(False) == first
+    assert len(built) == n_built
+
+
+@pytest.mark.parametrize("qtype", ["int", "bigint"])
+def test_knn_join_integer_query_ids_round_trip(world, qtype):
+    """Integer query ids come back unchanged, with their input type, on
+    both paths (the broadcast path ranks on its own dense int key and
+    maps it back)."""
+    df, _ = world
+    ids = [7, -3, (1 << 31) - 1] if qtype == "int" else [1 << 40, 5, -(1 << 35)]
+    lonlat = [(139.7, 35.7), (2.3, 48.9), (-140.0, -30.0)]
+    qdf = df.sparkSession.createDataFrame(
+        pd.DataFrame({
+            "qid": ids,
+            "x": [int(mercator.x_from_lon(lon)[()]) for lon, _ in lonlat],
+            "y": [int(mercator.y_from_lat(lat)[()]) for _, lat in lonlat],
+        }),
+        f"qid {qtype}, x long, y long",
+    )
+    pts = df.select("image_id", "x", "y")
+    got = []
+    for bq in (True, False):
+        out = knn_mod.knn_join(pts, qdf, k=3, query_id="qid", broadcast_queries=bq)
+        assert _knn_out_types(out)["qid"] == qtype
+        got.append(
+            out.toPandas().sort_values(["qid", "rank"]).reset_index(drop=True).to_dict("records")
+        )
+    assert got[0] == got[1]
+    assert sorted({r["qid"] for r in got[0]}) == sorted(ids)
+    assert len(got[0]) == 3 * 3
+
+
 # knn_join's output types: the id and query_id types come from the inputs
 _KNN_OUT_TYPES = {"image_id": "string", "query_id": "string", "dist_m": "double", "rank": "int"}
 
