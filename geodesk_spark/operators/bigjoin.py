@@ -78,7 +78,9 @@ def layer_bands(polygons: DataFrame) -> DataFrame:
 
     One Arrow pass over the layer; each task classifies its polygons with
     the same adaptive quadtree kernel the broadcast path uses driver-side,
-    so both paths see byte-identical band tables for the same layer.
+    so both paths see byte-identical band tables for the same layer
+    (pinned in tests/test_bigjoin.py against ``prepare_layer``'s
+    ``qt_cells``/``qt_codes``).
     """
 
     def gen(batches):
@@ -87,12 +89,7 @@ def layer_bands(polygons: DataFrame) -> DataFrame:
             ids_out: list[np.ndarray] = []
             codes_out: list[np.ndarray] = []
             for pid, blob in zip(pdf["poly_id"], pdf["rings"]):
-                rings = pip.unpack_rings(bytes(blob))
-                xs = np.concatenate([r[:, 0] for r in rings])
-                ys = np.concatenate([r[:, 1] for r in rings])
-                cells, codes = _quadtree_bands(
-                    rings, xs.min(), ys.min(), xs.max(), ys.max()
-                )
+                _, cells, codes = _quadtree_bands(pip.unpack_rings(bytes(blob)))
                 cells_out.append(cells)
                 codes_out.append(codes.astype(np.int32))
                 ids_out.append(np.full(len(cells), pid, dtype=object))
@@ -178,6 +175,35 @@ def contains_points_big(
     )
 
 
+def _proper_crossing(zoom: int):
+    """Proper-crossing test of a cell-joined segment pair over its
+    ``a``/``b``-prefixed x1,y1,x2,y2 long columns → (proper, t, ix, iy,
+    icell): the exact int64 orientation test, the intersection point and
+    the ``zoom`` cover cell holding it (steps 3-4 of
+    ``crossing_segments_join``)."""
+    from geodesk_spark.operators.tiling import cover_cell_col
+
+    ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
+    bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
+    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
+    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
+    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
+    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
+    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
+        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
+    )
+    step = 1 << (32 - zoom)
+    t = d1 / (d1 - d2)
+    ix = ax1 + t * (ax2 - ax1)
+    iy = ay1 + t * (ay2 - ay1)
+    icell = cover_cell_col(
+        zoom,
+        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
+        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
+    )
+    return proper, t, ix, iy, icell
+
+
 def crossing_segments_join(
     a: DataFrame,
     b: DataFrame,
@@ -207,9 +233,7 @@ def crossing_segments_join(
        both covers) — the NW-flag exactly-once rule generalized to
        pair joins (tiling.nw_dedup_filter, SURVEY §2.1).
     """
-    from geodesk_spark.operators.tiling import cover_cell_col, explode_cover
-
-    step = 1 << (32 - zoom)
+    from geodesk_spark.operators.tiling import explode_cover
 
     def cover(df, idc, prefix):
         cov = explode_cover(df.select(idc, "x1", "y1", "x2", "y2"), zoom)
@@ -220,24 +244,7 @@ def crossing_segments_join(
     cb = cover(b, b_id, "b")
     j = ca.join(cb, "cell")
 
-    ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
-    bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
-    # orientation determinants, exact int64
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-    t = d1 / (d1 - d2)
-    ix = ax1 + t * (ax2 - ax1)
-    iy = ay1 + t * (ay2 - ay1)
-    icell = cover_cell_col(
-        zoom,
-        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
-        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
-    )
+    proper, t, ix, iy, icell = _proper_crossing(zoom)
     return (
         j.filter(proper)
         .withColumn("t", t)
@@ -276,7 +283,7 @@ def ring_self_intersections(
     tests are exact int64 while segment extents stay < 2²⁸ (the module
     contract above).
     """
-    from geodesk_spark.operators.tiling import cover_cell_col, explode_cover
+    from geodesk_spark.operators.tiling import explode_cover
 
     xs = F.col(xs_col)
     ys = F.col(ys_col)
@@ -314,24 +321,7 @@ def ring_self_intersections(
         & ~((F.col("i") == 0) & (F.col("j") == F.col("_n") - 1))
     )
 
-    ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
-    bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
-    d1 = (bx2 - bx1) * (ay1 - by1) - (by2 - by1) * (ax1 - bx1)
-    d2 = (bx2 - bx1) * (ay2 - by1) - (by2 - by1) * (ax2 - bx1)
-    d3 = (ax2 - ax1) * (by1 - ay1) - (ay2 - ay1) * (bx1 - ax1)
-    d4 = (ax2 - ax1) * (by2 - ay1) - (ay2 - ay1) * (bx2 - ax1)
-    proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
-        ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
-    )
-    step = 1 << (32 - zoom)
-    t = d1 / (d1 - d2)
-    ix = ax1 + t * (ax2 - ax1)
-    iy = ay1 + t * (ay2 - ay1)
-    icell = cover_cell_col(
-        zoom,
-        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
-        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
-    )
+    proper, _, _, _, icell = _proper_crossing(zoom)
     return (
         j.filter(proper)
         .filter(F.col("cell") == icell)

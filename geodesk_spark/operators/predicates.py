@@ -5,7 +5,9 @@ The full predicate surface of the reference (filter/*.java — SURVEY
 work avoidance (Filter.filterForTile, AbstractRelateFilter.java:61-72):
 
 - candidates: feature bbox ∩ polygon bbox (vectorized per Arrow batch);
-- waive band: every tile under the feature's bbox classified INTERIOR →
+- waive band: the feature's bbox lies in ≤ 2×2 cells of one level of
+  the polygon's quadtree classification (``PreparedPolygon.qt_cells``,
+  the same bands the point joins read), all INTERIOR →
   within/covered_by/intersects are TRUE and disjoint/touches/crosses
   FALSE without any geometry test (FastTileFilter.java:40-60);
 - boundary band: exact `geom.relate` kernel on the candidate subset.
@@ -65,6 +67,31 @@ def register_predicate(name: str, kernel, interior_waive: bool | None = None) ->
     _CUSTOM[name] = (interior_waive, kernel)
 
 
+def _interior_bboxes(p: PreparedPolygon, minx, miny, maxx, maxy) -> np.ndarray:
+    """Which bboxes (float64 imp arrays) lie inside ``p`` by its quadtree
+    bands alone: at some level of ``p.qt_cells``, the bbox spans at most
+    2×2 cells and all four corner cells are INTERIOR.  Sound: those ≤ 4
+    cells cover the bbox, and an INTERIOR cell is untouched by every
+    segment bbox and has its centre inside."""
+    inner = p.qt_cells[p.qt_codes == INTERIOR]
+    out = np.zeros(len(minx), dtype=bool)
+    if len(inner) == 0:
+        return out
+    x0 = minx.astype(np.int64) + (1 << 31)
+    x1 = maxx.astype(np.int64) + (1 << 31)
+    y0 = (1 << 31) - 1 - maxy.astype(np.int64)
+    y1 = (1 << 31) - 1 - miny.astype(np.int64)
+    for z in np.unique(inner >> 40).tolist():
+        shift = 32 - z
+        cx0, cx1, ry0, ry1 = x0 >> shift, x1 >> shift, y0 >> shift, y1 >> shift
+        ok = (cx1 - cx0 <= 1) & (ry1 - ry0 <= 1)
+        for r, c in ((ry0, cx0), (ry0, cx1), (ry1, cx0), (ry1, cx1)):
+            ids = _cell_ids(z, r, c)
+            ok &= inner[np.minimum(np.searchsorted(inner, ids), len(inner) - 1)] == ids
+        out |= ok
+    return out
+
+
 def spatial_predicate_join(
     features: DataFrame,
     prepared: list[PreparedPolygon],
@@ -114,29 +141,15 @@ def spatial_predicate_join(
                 if len(idx_all) == 0:
                     continue
 
-                # Band classification on the 4 bbox-corner tiles at the
-                # polygon's classification zoom.
-                shift = 32 - p.zoom
                 hits = np.zeros(len(pdf), dtype=bool)
                 if len(idx) > 0:
-                    cx0 = (fminx[idx].astype(np.int64) + (1 << 31)) >> shift
-                    cx1 = (fmaxx[idx].astype(np.int64) + (1 << 31)) >> shift
-                    ry0 = ((1 << 31) - 1 - fmaxy[idx].astype(np.int64)) >> shift
-                    ry1 = ((1 << 31) - 1 - fminy[idx].astype(np.int64)) >> shift
-                    bands = np.stack(
-                        [
-                            p.lookup_bands(_cell_ids(p.zoom, ry0, cx0)),
-                            p.lookup_bands(_cell_ids(p.zoom, ry0, cx1)),
-                            p.lookup_bands(_cell_ids(p.zoom, ry1, cx0)),
-                            p.lookup_bands(_cell_ids(p.zoom, ry1, cx1)),
-                        ],
-                        axis=0,
-                    )
-                    all_interior = (bands == INTERIOR).all(axis=0) & (cx1 - cx0 <= 1) & (ry1 - ry0 <= 1)
                     waive_val, exact_fn = resolved_waive, resolved_kernel
                     if waive_val is None:
                         all_interior = np.zeros(len(idx), dtype=bool)
                     else:
+                        all_interior = _interior_bboxes(
+                            p, fminx[idx], fminy[idx], fmaxx[idx], fmaxy[idx]
+                        )
                         hits[idx[all_interior]] = waive_val
                     # exact kernel for the rest of the candidates
                     for j in idx[~all_interior]:

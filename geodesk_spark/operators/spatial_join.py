@@ -8,12 +8,13 @@ Replicates the reference's tile-accelerated predicate evaluation
   FastTileFilter.java:40-60) classifies every visited tile as
   *disjoint* (prune), *interior* (waive the geometry test) or
   *boundary* (full test);
-- here, each broadcast polygon carries a precomputed tile
-  classification at an adaptive zoom, and the join is ONE scan of the
-  point table through two broadcast hash joins: no shuffle, no Python
-  worker.  The band join classifies each point per polygon; BOUNDARY
-  candidates then fetch the edges of their own thin row of the grid
-  (their "slab") and run the half-open ray-cast fold on them as data.
+- here, each broadcast polygon carries a precomputed adaptive
+  quadtree tile classification (``_quadtree_bands``), and the join is
+  ONE scan of the point table through two broadcast hash joins: no
+  shuffle, no Python worker.  The band join classifies each point per
+  polygon; BOUNDARY candidates then fetch the edges of their own thin
+  row of the grid (their "slab") and run the half-open ray-cast fold
+  on them as data.
 
 At 100 TB this is the right shape: the polygon side is dimension-sized
 (broadcast), the fact side streams through executors once, partition
@@ -31,7 +32,7 @@ Predicates offered (reference files in parens):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -54,6 +55,12 @@ SLAB_STEP = 2
 # at zoom z pack (z<<40)|(row<<20)|col — consistent across prepare and
 # join, independent of the 12-bit GOL tile layout.
 MAX_CLASSIFY_ZOOM = 16
+# Quadtree levels are LEVEL_STEP zooms apart; the base grid spans at
+# most _BASE_AXIS cells per axis; boundary refinement stops before a
+# polygon's table would pass _MAX_CELLS cells (see _quadtree_bands).
+LEVEL_STEP = 4
+_BASE_AXIS = 64
+_MAX_CELLS = 6_000
 
 
 def _cell_ids(zoom: int, rows, cols):
@@ -73,34 +80,19 @@ class PreparedPolygon:
     miny: float
     maxx: float
     maxy: float
-    zoom: int = 12
-    # Flat single-zoom classification (for bbox-feature corner lookups in
-    # operators/predicates.py): sorted int64 cell ids + band codes.
-    band_tiles: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-    band_codes: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int8))
-    # Quadtree classification for the point join: interior kept at the
+    # Quadtree classification, read by every join: interior kept at the
     # coarsest zoom where it is certain, boundary refined down to
     # MAX_CLASSIFY_ZOOM — a small table AND a small boundary band
     # (the analog of the reference's zoom-step tile tree,
-    # ZoomLevels.java:98-113).
-    qt_cells: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-    qt_codes: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int8))
+    # ZoomLevels.java:98-113).  Sorted cell ids + band codes.
+    qt_cells: np.ndarray
+    qt_codes: np.ndarray
     # Exact-test geometry per boundary slab: slab_keys[i] is
     # (zoom << 20) | row of a sub-row (zoom + SLAB_STEP) of a row holding
     # BOUNDARY qt cells, slab_edges[i] the (k, 4) x1,y1,x2,y2 edges of
     # all rings whose y-range meets that sub-row.
-    slab_keys: np.ndarray = field(default_factory=lambda: np.empty(0, dtype=np.int64))
-    slab_edges: list = field(default_factory=list)
-
-    def lookup_bands(self, tile_ids: np.ndarray) -> np.ndarray:
-        """Vectorized band lookup: 0 = disjoint, else INTERIOR/BOUNDARY."""
-        if len(self.band_tiles) == 0:
-            return np.zeros(len(tile_ids), dtype=np.int8)
-        pos = np.searchsorted(self.band_tiles, tile_ids)
-        pos = np.clip(pos, 0, len(self.band_tiles) - 1)
-        hit = self.band_tiles[pos] == tile_ids
-        out = np.where(hit, self.band_codes[pos], 0).astype(np.int8)
-        return out
+    slab_keys: np.ndarray
+    slab_edges: list
 
 
 def _cell_range(minx, miny, maxx, maxy, zoom: int) -> tuple[int, int, int, int]:
@@ -130,9 +122,8 @@ def _segments(rings: list[np.ndarray]) -> np.ndarray:
 
 
 def _segment_bbox_mins_maxs(rings: list[np.ndarray]):
-    """Per-segment bbox corners as (n_segs, 1) columns for broadcast
-    cell-intersection tests (shared by the quadtree classifier and the
-    conservative boundary rasterizer)."""
+    """Per-segment bbox corners as (n_segs, 1) columns for the quadtree
+    classifier's broadcast cell-intersection tests (``_touched_mask``)."""
     segs = _segments(rings)
     return (
         np.minimum(segs[:, 0], segs[:, 2])[:, None],
@@ -162,22 +153,15 @@ def _touched_mask(cur_c, cur_r, zoom, sminx, smaxx, sminy, smaxy, chunk: int = 8
     return touched
 
 
-def _quadtree_bands(
-    rings: list[np.ndarray],
-    minx: float,
-    miny: float,
-    maxx: float,
-    maxy: float,
-    base_axis: int = 64,
-    max_zoom: int = MAX_CLASSIFY_ZOOM,
-    max_cells: int = 6_000,
-    level_step: int = 4,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Adaptive quadtree classification: interior cells recorded at the
-    coarsest certain zoom; boundary cells refined until max_zoom or the
-    cell budget.  Returns (sorted cell ids, band codes).
+def _quadtree_bands(rings: list[np.ndarray]) -> tuple[tuple, np.ndarray, np.ndarray]:
+    """Adaptive quadtree classification of one polygon — the ONE tile
+    labelling every join reads (broadcast point join, big join,
+    predicate joins).  Returns ((minx, miny, maxx, maxy), sorted cell
+    ids, band codes): interior cells recorded at the coarsest certain
+    zoom; boundary cells refined until MAX_CLASSIFY_ZOOM or the
+    ``_MAX_CELLS`` budget.
 
-    ``max_cells`` (per polygon) is deliberately small: the band table is
+    ``_MAX_CELLS`` (per polygon) is deliberately small: the band table is
     the probe side of a broadcast hash join evaluated once per point ×
     level, so it must stay CACHE-resident on every executor — measured
     on the 128M-row flagship, a ~10k-cell layer table beats a ~360k-cell
@@ -186,31 +170,38 @@ def _quadtree_bands(
     coarser boundary admits (the fold is pure in-register compute).  A
     small table also keeps the 1000-executor broadcast cheap.
 
-    All levels live on the FIXED set {4, 8, 12, 16}: every polygon's
-    base snaps down to a multiple of 4 and boundary cells refine in
-    steps of 4 (256 children).  The probe side then explodes exactly
-    one cell id per SHARED level — 4 probe rows per point total,
-    regardless of how many polygons the layer holds or how their sizes
-    differ.  (The reference's zoom-step tree bounds fan-out the same
-    way: ZoomLevels.java:98-113 allows steps of 1-3; we trade a deeper
-    step for a narrower probe because OUR probe cost is per-level, not
-    per-tile.)"""
+    All levels live on the FIXED set {4, 8, 12, 16}
+    (bigjoin.SHARED_LEVELS): the base is the finest zoom where the bbox
+    spans ≤ ``_BASE_AXIS`` cells per axis, snapped down to a multiple of
+    ``LEVEL_STEP`` (lifted to 8 when the bbox spans ≤ 256 cells per axis
+    there, so only world-spanning polygons use 4), and boundary cells
+    refine in steps of ``LEVEL_STEP`` (256 children).  The probe side
+    then explodes exactly one cell id per SHARED level — 4 probe rows
+    per point total, regardless of how many polygons the layer holds or
+    how their sizes differ.  (The reference's zoom-step tree bounds
+    fan-out the same way: ZoomLevels.java:98-113 allows steps of 1-3; we
+    trade a deeper step for a narrower probe because OUR probe cost is
+    per-level, not per-tile.)
+
+    Boundary marking is conservative: every cell touched by a ring
+    segment's bbox is boundary; interior = centre inside and untouched.
+    Conservative boundary only moves rows from the free band to the
+    exact-test band — never wrong, only slower."""
+    xs = np.concatenate([r[:, 0] for r in rings])
+    ys = np.concatenate([r[:, 1] for r in rings])
+    bbox = minx, miny, maxx, maxy = xs.min(), ys.min(), xs.max(), ys.max()
     sminx, smaxx, sminy, smaxy = _segment_bbox_mins_maxs(rings)
 
-    zoom = max_zoom
+    zoom = MAX_CLASSIFY_ZOOM
     while zoom > 0:
         c0, c1, r0, r1 = _cell_range(minx, miny, maxx, maxy, zoom)
-        if (c1 - c0 + 1) <= base_axis and (r1 - r0 + 1) <= base_axis:
+        if (c1 - c0 + 1) <= _BASE_AXIS and (r1 - r0 + 1) <= _BASE_AXIS:
             break
         zoom -= 1
-    # Snap to the shared level set ({8,12,16} for step 4).  A base below
-    # 8 only helps truly world-spanning polygons; lifting to 8 costs at
-    # most 256 cells/axis on the base grid (bounded) and removes a whole
-    # probe level from every query against the layer.
-    if zoom > level_step:
-        zoom -= zoom % level_step
-    else:
-        zoom = level_step
+    zoom = max(zoom - zoom % LEVEL_STEP, LEVEL_STEP)
+    # A base below 8 only helps truly world-spanning polygons; lifting to
+    # 8 costs at most 256 cells/axis on the base grid (bounded) and
+    # removes a whole probe level from every query against the layer.
     if zoom < 8:
         c0, c1, r0, r1 = _cell_range(minx, miny, maxx, maxy, 8)
         if (c1 - c0 + 1) <= 256 and (r1 - r0 + 1) <= 256:
@@ -249,10 +240,10 @@ def _quadtree_bands(
         bc, br = cur_c[touched], cur_r[touched]
         if len(bc) == 0:
             break
-        # Refine boundary cells in level_step-zoom steps so every level
+        # Refine boundary cells in LEVEL_STEP-zoom steps so every level
         # stays on the shared set.
-        step = min(level_step, max_zoom - zoom)
-        if step <= 0 or n_emitted + (1 << (2 * step)) * len(bc) > max_cells:
+        step = min(LEVEL_STEP, MAX_CLASSIFY_ZOOM - zoom)
+        if step <= 0 or n_emitted + (1 << (2 * step)) * len(bc) > _MAX_CELLS:
             out_cells.append(_cell_ids(zoom, br, bc))
             out_codes.append(np.full(len(bc), BOUNDARY, dtype=np.int8))
             break
@@ -266,71 +257,21 @@ def _quadtree_bands(
     cells = np.concatenate(out_cells) if out_cells else np.empty(0, dtype=np.int64)
     codes = np.concatenate(out_codes) if out_codes else np.empty(0, dtype=np.int8)
     order = np.argsort(cells)
-    return cells[order], codes[order]
+    return bbox, cells[order], codes[order]
 
 
-def prepare_polygon(
-    poly_id: str,
-    rings_blob: bytes,
-    max_tiles_per_axis: int = 64,
-    max_zoom: int = T.MAX_ZOOM,
-    level_step: int = 4,
-) -> PreparedPolygon:
-    """Classify grid cells into interior/boundary bands at an adaptive zoom.
-
-    Zoom is chosen so the polygon bbox spans ≤``max_tiles_per_axis`` cells
-    per axis (the reference instead descends its tile tree; same effect —
-    bounded per-polygon work).  The grid may be finer than the z12
-    storage pyramid (up to MAX_CLASSIFY_ZOOM) — a fine grid shrinks the
-    boundary band, which is exactly the set of rows that must take the
-    exact geometry kernel.  Boundary marking is conservative: every cell
-    touched by a ring segment's bbox becomes boundary; interior =
-    center-inside minus boundary.  Conservative boundary only moves rows
-    from the free band to the exact-test band — never wrong, only slower.
-    """
+def prepare_polygon(poly_id: str, rings_blob: bytes) -> PreparedPolygon:
+    """Driver-side preparation of one query polygon: its bbox, its
+    quadtree band classification (``_quadtree_bands``, the analog of the
+    reference descending its tile tree — bounded per-polygon work) and
+    the edges of every boundary slab for the exact test
+    (``_slab_edges``)."""
     rings = pip.unpack_rings(rings_blob)
-    xs = np.concatenate([r[:, 0] for r in rings])
-    ys = np.concatenate([r[:, 1] for r in rings])
-    minx, miny, maxx, maxy = xs.min(), ys.min(), xs.max(), ys.max()
-
-    zoom = max_zoom
-    while zoom > 0:
-        c0, c1, r0, r1 = _cell_range(minx, miny, maxx, maxy, zoom)
-        if (c1 - c0 + 1) <= max_tiles_per_axis and (r1 - r0 + 1) <= max_tiles_per_axis:
-            break
-        zoom -= 1
-
-    extent = np.int64(1) << (32 - zoom)
-
-    # Candidate grid = the polygon bbox at ``zoom`` (every segment bbox
-    # lies inside it).  Conservative boundary = cells whose bbox touches
-    # any segment bbox — ONE vectorized pass shared with the quadtree
-    # classifier (was a per-segment Python meshgrid + per-cell dict-store
-    # loop: O(segments) driver iterations on coastline-sized rings,
-    # r03 review).  Interior = center-inside and not boundary.
-    c0, c1, r0, r1 = _cell_range(minx, miny, maxx, maxy, zoom)
-    cols = np.arange(c0, c1 + 1, dtype=np.int64)
-    rows = np.arange(r0, r1 + 1, dtype=np.int64)
-    cc, rr = np.meshgrid(cols, rows)
-    cc, rr = cc.ravel(), rr.ravel()
-    sminx, smaxx, sminy, smaxy = _segment_bbox_mins_maxs(rings)
-    touched = _touched_mask(cc, rr, zoom, sminx, smaxx, sminy, smaxy)
-    cell_ids = _cell_ids(zoom, rr, cc)
-    cx = (cc << (32 - zoom)) - (1 << 31) + extent // 2
-    cy = (1 << 31) - 1 - (rr << (32 - zoom)) - extent // 2
-    inside = pip.points_in_polygon(cx.astype(np.float64), cy.astype(np.float64), rings)
-    keep = touched | inside
-    band_tiles = cell_ids[keep]
-    band_codes = np.where(touched[keep], BOUNDARY, INTERIOR).astype(np.int8)
-    order = np.argsort(band_tiles)
-    band_tiles = band_tiles[order]
-    band_codes = band_codes[order]
-    qt_cells, qt_codes = _quadtree_bands(rings, minx, miny, maxx, maxy,
-                                         level_step=level_step)
+    (minx, miny, maxx, maxy), qt_cells, qt_codes = _quadtree_bands(rings)
     slab_keys, slab_edges = _slab_edges(rings, qt_cells, qt_codes)
     return PreparedPolygon(
         poly_id, rings, float(minx), float(miny), float(maxx), float(maxy),
-        zoom, band_tiles, band_codes, qt_cells, qt_codes, slab_keys, slab_edges,
+        qt_cells, qt_codes, slab_keys, slab_edges,
     )
 
 
@@ -513,20 +454,16 @@ def contains_points(
     # over them, are query-compilation state (like the reference's
     # cached matchers, MatcherCompiler.java:37-46) — build them once per
     # (layer, session): rebuilding the expressions costs py4j round trips
-    # on every call.  The key hashes the cell AND ring CONTENT, not just
-    # the shape: re-preparing an edited polygon with the same id/count
-    # must miss the cache (rings are in the key because the slab edges
-    # come from them).
+    # on every call.  The key hashes the ring CONTENT, not just the
+    # shape: re-preparing an edited polygon with the same id/count must
+    # miss the cache.  Bands and slabs are a pure function of the rings,
+    # so the rings alone key them.
     import zlib
 
     cache_key = (
         tuple(
-            (
-                p.poly_id,
-                zlib.crc32(p.qt_cells.tobytes()),
-                zlib.crc32(p.qt_codes.tobytes()),
-                tuple(zlib.crc32(np.ascontiguousarray(r).tobytes()) for r in p.rings),
-            )
+            (p.poly_id,
+             tuple(zlib.crc32(np.ascontiguousarray(r).tobytes()) for r in p.rings))
             for p in prepared
         ),
         id(spark),

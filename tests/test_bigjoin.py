@@ -45,6 +45,15 @@ def test_big_join_matches_broadcast_and_bruteforce(spark, world, layer):
 
     # Broadcast flagship on the identical layer.
     prepared = spatial_join.prepare_layer(layer)
+    # ... whose driver-side band tables are byte-identical to the
+    # distributed layer_bands rows.
+    got_bands = sorted(map(tuple, bigjoin.layer_bands(_layer_df(spark, layer))
+                           .toPandas()[["cell", "poly_id", "band"]].to_numpy().tolist()))
+    want_bands = sorted(
+        (int(c), p.poly_id, int(b))
+        for p in prepared for c, b in zip(p.qt_cells, p.qt_codes)
+    )
+    assert got_bands == want_bands
     bc = (
         spatial_join.contains_points(df, prepared, keep_cols=["image_id"])
         .toPandas()

@@ -135,6 +135,32 @@ def test_custom_predicate_registry(spark, feats, prepared):
         predicates._CUSTOM.pop("centroid_within", None)
 
 
+def _never(rings, gkind, poly_rings):
+    """Custom predicate whose exact kernel is always False: with
+    ``interior_waive=True`` the join returns exactly the waived pairs."""
+    return False
+
+
+def test_interior_waive_fires_and_is_sound(spark, feats, prepared):
+    """The quadtree waive skips the exact test for many candidates, and
+    every pair it waives is ``within`` by the exact kernel."""
+    df, pdf = feats
+    predicates.register_predicate("never", _never, interior_waive=True)
+    try:
+        got = predicates.spatial_predicate_join(df, prepared, "never", keep_cols=["fid"])
+        waived = set(map(tuple, got.toPandas()[["fid", "poly_id"]].to_numpy().tolist()))
+    finally:
+        predicates._CUSTOM.pop("never", None)
+    assert waived
+    rows = pdf.set_index("fid")
+    polys = {p.poly_id: p for p in prepared}
+    for fid, pid in waived:
+        row = rows.loc[fid]
+        rings = pip.unpack_rings(row["geom"])
+        a = rings if row["gkind"] == "polygon" else rings[0]
+        assert geom.relate(a, polys[pid].rings)["within"], (fid, pid)
+
+
 def test_resample_along_segments(spark):
     """Spacing is exactly every_m meters (Mercator metric), endpoints and
     degenerate segments behave."""

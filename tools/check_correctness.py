@@ -45,7 +45,10 @@ def _fmt(v) -> str:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("correctness-check")
+    # codegen fallback off, as in the test session: a plan whose generated
+    # code fails to compile fails its query instead of running interpreted
+    spark = get_spark("correctness-check",
+                      extra_conf={"spark.sql.codegen.fallback": "false"})
     con = duckdb.connect()
     # spill to /tmp, not cwd/.tmp — a super-linear oracle once left 74 GB
     # of temp blocks inside the repo checkout
