@@ -412,10 +412,7 @@ def _q_knn(spark, sf_dir):
     """kNN via cell-ring expansion (north star; built on PointDistanceFilter
     semantics).  Exact — the oracle is brute-force window top-k."""
     df = _derived_orders(spark, sf_dir).withColumn("key", F.col("o_orderkey").cast("string"))
-    out = knn_mod.knn(
-        df.select("key", "x", "y"), KNN_QUERIES, k=KNN_K, id_col="key",
-        n_points=tables.parquet_rows(sf_dir, "orders"),  # footer metadata, no count job
-    )
+    out = knn_mod.knn(df.select("key", "x", "y"), KNN_QUERIES, k=KNN_K, id_col="key")
     return out.select("query_id", "key", F.col("rank").cast("int").alias("rank"))
 
 
@@ -503,10 +500,7 @@ def _q_idw(spark, sf_dir):
     guard — the classic interpolation consumer of the kNN north star."""
     df = _derived_orders(spark, sf_dir).withColumn("key", F.col("o_orderkey").cast("string"))
     pts = df.select("key", "x", "y", F.col("o_totalprice").cast("double").alias("v"))
-    out = knn_mod.idw_interpolate(
-        pts, KNN_QUERIES, k=IDW_K, val_col="v", id_col="key",
-        n_points=tables.parquet_rows(sf_dir, "orders"),
-    )
+    out = knn_mod.idw_interpolate(pts, KNN_QUERIES, k=IDW_K, val_col="v", id_col="key")
     return out.select(
         "query_id", "idw_value", F.col("n_samples").cast("int").alias("n_samples")
     )

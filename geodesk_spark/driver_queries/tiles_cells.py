@@ -231,7 +231,7 @@ def _morton_sql() -> str:
 
 
 def _q_geohash_cells(spark, sf_dir):
-    """Geohash base32 trie keys (geo/curve.py geohash8_col) — the fourth
+    """Geohash base32 trie keys (geo/curve.py with_geohash8) — the fourth
     index family: string prefixes form the multi-resolution cell
     hierarchy (substr rollups, prefix-range scans).  Pure JVM bit-spread
     + element_at lookup; lon/lat recovered from imps with the same op
@@ -242,11 +242,8 @@ def _q_geohash_cells(spark, sf_dir):
     lon = mercator.lon_from_x_col(F.col("x"))
     lat = mercator.lat_from_y_col(F.col("y"))
     return (
-        df.select(
-            F.col("o_orderkey").alias("key"),
-            curve.geohash8_col(lon, lat).alias("gh"),
-            F.substring(curve.geohash8_col(lon, lat), 1, 4).alias("gh4"),
-        )
+        curve.with_geohash8(df, lon, lat, "gh")
+        .select(F.col("o_orderkey").alias("key"), "gh", F.substring("gh", 1, 4).alias("gh4"))
         .orderBy("key")
     )
 

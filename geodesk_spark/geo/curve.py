@@ -196,9 +196,16 @@ def geohash8(lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     return np.array(["".join(row) for row in lut[idx]])
 
 
-def geohash8_col(lon_col, lat_col):
-    """Pure-Column geohash (JVM, no UDF): bit-spread + base32 lookup via
-    element_at over the alphabet array."""
+def with_geohash8(df, lon_col, lat_col, name: str):
+    """``df`` plus a pure-Column 8-char geohash ``name`` (JVM, no UDF):
+    bit-spread + base32 lookup via element_at over the alphabet array.
+
+    The 20-bit bins, each spread step, z and the string are successive
+    projected columns, and each step reads the previous one by name.
+    Written inline, each spread step copies its operand twice and each
+    character copies z: ~512 copies of the lon/lat expressions in one
+    plan, a multi-MiB task binary.  Spark keeps the projections apart
+    because each one's column is read more than once."""
     from pyspark.sql import functions as F
 
     def bin20(deg, lo, width):
@@ -206,21 +213,25 @@ def geohash8_col(lon_col, lat_col):
         b = F.floor(u * F.lit(1048576.0)).cast("long")
         return F.least(F.greatest(b, F.lit(0).cast("long")), F.lit(1048575).cast("long"))
 
-    def spread(v):
-        v = v.bitwiseAND(F.lit(0xFFFFF))
-        for shift, mask in _SPREAD20:
-            v = (v.bitwiseOR(F.shiftleft(v, shift))).bitwiseAND(F.lit(mask))
-        return v
-
-    z = F.shiftleft(spread(bin20(lon_col, -180.0, 360.0)), 1).bitwiseOR(
-        spread(bin20(lat_col, -90.0, 180.0))
-    )
+    lo, la, z = "_gh_lon", "_gh_lat", "_gh_z"
+    out = df.withColumns({
+        lo: bin20(lon_col, -180.0, 360.0).bitwiseAND(F.lit(0xFFFFF)),
+        la: bin20(lat_col, -90.0, 180.0).bitwiseAND(F.lit(0xFFFFF)),
+    })
+    for shift, mask in _SPREAD20:
+        out = out.withColumns({
+            c: (F.col(c).bitwiseOR(F.shiftleft(F.col(c), shift))).bitwiseAND(F.lit(mask))
+            for c in (lo, la)
+        })
+    out = out.withColumn(z, F.shiftleft(F.col(lo), 1).bitwiseOR(F.col(la)))
     alphabet = F.array(*[F.lit(c) for c in GEOHASH_ALPHABET])
     chars = [
-        F.element_at(alphabet, (F.shiftright(z, 35 - 5 * k).bitwiseAND(F.lit(31)) + 1).cast("int"))
+        F.element_at(
+            alphabet, (F.shiftright(F.col(z), 35 - 5 * k).bitwiseAND(F.lit(31)) + 1).cast("int")
+        )
         for k in range(8)
     ]
-    return F.concat(*chars)
+    return out.withColumn(name, F.concat(*chars)).drop(lo, la, z)
 
 
 def _spread20_sql(expr: str) -> str:

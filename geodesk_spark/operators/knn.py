@@ -15,25 +15,36 @@ fan-out bounded (TileIndexWalker.java:85-107).
 
 Spark shape (no per-query scans):
 
-1. Per round, each query's candidate cell cover is generated as
-   columns (``explode(sequence(...))`` over its clamped cell ranges).
-   Every round's Column expressions are built once per session and
-   round shape (``_round_exprs``), not once per call.
-2. Broadcast the (cell, query, in-small-window) table; candidates are
-   a pure-JVM broadcast hash join against the point's pyramid cell id,
-   exact Mercator distance as a codegen'd column — no Python workers
-   anywhere.
+1. One bounded hash sample of the points (the ``SAMPLE_ROWS`` smallest
+   ``xxhash64(id)``, :func:`_point_sample`) sizes the first window from
+   the estimated corpus size and gives each broadcast query a cap box:
+   ``CAP_SCALE`` × its Chebyshev distance to its ``CAP_RANK``-th nearest
+   sample point (:func:`_caps`).  Per round, each query's candidate cell
+   cover is generated as columns (``explode(sequence(...))`` over its
+   clamped cell ranges) and carries the query's cap.  Every round's
+   Column expressions are built once per session and round shape
+   (``_round_exprs``), not once per call.
+2. Broadcast the (cell, query, cap, in-small-window) table; candidates
+   are a pure-JVM broadcast hash join against the point's pyramid cell
+   id whose condition also keeps only points inside the query's cap box
+   (an int64 box test), exact Mercator distance as a codegen'd column —
+   no Python workers anywhere.
 3. ``Window.partitionBy(_qid).orderBy(dist)`` + row_number ≤ k;
    Spark cuts each query's top-k inside every map task (a partial
    ``WindowGroupLimit``) before the shuffle, so at most k rows per query
    per task move.  On the broadcast path ``_qid`` is a dense int the
    driver assigns per distinct query id, so that sort compares ints.
 4. Queries whose k-th distance is NOT provably inside their window
-   widen the window and re-run (only those queries).
+   widen the window and re-run (only those queries), uncapped.  A dense
+   query's cap box holds a few thousand points where its window holds
+   its whole city, so it ranks those instead.
 
-Acceptance proof: all points within Chebyshev radius ``radius_imps``
-of (qx,qy) are candidates, so if kth_dist_m ≤ radius_imps × (min
-meters-per-imp anywhere in the window), the top-k is exact.
+Acceptance proof: all points within Chebyshev radius
+``min(radius_imps, cap)`` of (qx,qy) are candidates — the cap box is
+itself a Chebyshev window around the query — so if kth_dist_m ≤ that
+radius × (min meters-per-imp anywhere in the window), the top-k is
+exact.  The world-window round is never capped, so every query still
+terminates exactly.
 """
 
 from __future__ import annotations
@@ -47,6 +58,13 @@ from geodesk_spark.operators.tiling import session_exprs
 
 I32_MAX = (1 << 31) - 1
 I32_MIN = -(1 << 31)
+
+# the point sample behind the first window and the per-query caps
+SAMPLE_ROWS = 4096
+CAP_RANK = 4  # a cap reaches at least this many sample points
+CAP_SCALE = 2
+CAP_FLOOR = 1 << 16  # one z16 cell: duplicate points give no zero box
+NO_CAP = 1 << 32  # wider than any |Δx| or |Δy| in imps
 
 
 def _window_zoom(radius_imps: int, max_per_axis: int = 32) -> int:
@@ -96,7 +114,6 @@ def knn(
     init_radius_imps: int | str = "auto",
     id_col: str = "image_id",
     assert_unique_ids: bool = False,
-    n_points: int | None = None,
 ) -> DataFrame:
     """queries: [(query_id, lon, lat), ...] → (query_id, id, dist_m, rank).
 
@@ -120,8 +137,7 @@ def knn(
             raise ValueError(f"knn: id column {id_col!r} has duplicate values")
     qdf = _query_frame(points.sparkSession, queries)
     return knn_join(
-        points, qdf, k, init_radius_imps=init_radius_imps, id_col=id_col,
-        n_points=n_points,
+        points, qdf, k, init_radius_imps=init_radius_imps, id_col=id_col
     ).select("query_id", id_col, "dist_m", "rank")
 
 
@@ -139,35 +155,85 @@ def _guarantee_col(qy_col, radius: int):
     return F_.lit(float(radius)) * mpi
 
 
-def _auto_radius(points: DataFrame, k: int, n_points: int | None = None) -> int:
-    """Density-derived initial window radius (VERDICT r03 #2): size the
-    Chebyshev window so a globally-uniform corpus puts ~6k points inside
-    it — E[pts in (2r)²] = 6k ⇒ r = W·sqrt(6k/n)/2 — so virtually every
-    query completes in ROUND ONE (each extra round is a full fact scan
-    + candidate window).  One column-pruned count() job up front buys
-    that; locally non-uniform data (ocean/polar windows) still escalates
-    through the exact guarantee, so this is a pure schedule heuristic —
-    results are provably exact either way.  Clamped to [1<<18, 1<<28]:
-    the floor keeps dense-city windows from degenerating below cell
-    granularity, the cap keeps a near-empty corpus from starting at a
-    near-world window (escalation reaches the world anyway).
+def _point_sample(points: DataFrame, id_col: str) -> tuple[np.ndarray, int]:
+    """One bounded, deterministic sample of ``points`` → ((m, 2) int64
+    imp x/y, n): the ``SAMPLE_ROWS`` rows with the smallest
+    ``xxhash64(id_col)`` (ties by id), and the corpus size.
 
-    ``n_points`` skips the count() job when the caller already knows the
-    corpus size (an APPROXIMATE figure is fine — the radius only needs
-    order-of-magnitude density; parquet footer metadata is the free
-    source)."""
-    n = max(n_points if n_points is not None else points.count(), 1)
-    r = int(mercator.MAP_WIDTH * float(np.sqrt(6.0 * k / n)) / 2)
+    ONE Spark job with no Exchange: the ordered limit plans as
+    ``TakeOrderedAndProject``, which keeps a heap of at most
+    ``SAMPLE_ROWS`` rows per task, so the sample is bounded at any scale
+    and does not depend on partitioning (a ``sample(fraction)`` is not
+    bounded on the fact table).  Below ``SAMPLE_ROWS`` rows it is the
+    whole corpus and n is exact; otherwise n is the KMV estimate
+    (m − 1) / u, u the largest sampled hash mapped to (0, 1] (≈1.6 %
+    relative error at 4,096 rows) — the figure the ``count()`` job this
+    replaces gave exactly."""
+    ex = session_exprs(points, ("knn_sample", id_col), lambda: {
+        "cols": [F.col("x"), F.col("y"), F.xxhash64(F.col(id_col)).alias("_h"), F.col(id_col)],
+        "order": [F.col("_h"), F.col(id_col)],
+    })
+    rows = points.select(ex["cols"]).orderBy(ex["order"]).limit(SAMPLE_ROWS).collect()
+    xy = np.array([(r[0], r[1]) for r in rows], dtype=np.int64).reshape(-1, 2)
+    if len(rows) < SAMPLE_ROWS:
+        return xy, len(rows)
+    u = (rows[-1][2] + (1 << 63) + 1) / 2.0**64
+    return xy, int((SAMPLE_ROWS - 1) / u)
+
+
+def _auto_radius(k: int, n: int) -> int:
+    """Density-derived initial window radius (VERDICT r03 #2): size the
+    Chebyshev window so a globally-uniform corpus of ``n`` points puts
+    ~6k points inside it — E[pts in (2r)²] = 6k ⇒ r = W·sqrt(6k/n)/2 —
+    so virtually every query completes in ROUND ONE (each extra round is
+    a full fact scan + candidate window).  ``n`` is
+    :func:`_point_sample`'s estimate: the radius only needs
+    order-of-magnitude density.  Locally non-uniform data (ocean/polar
+    windows) still escalates through the exact guarantee, and dense
+    queries are bounded by their caps (:func:`_caps`), so this is a pure
+    schedule heuristic — results are provably exact either way.
+    Clamped to [1<<18, 1<<28]: the floor keeps dense-city windows from
+    degenerating below cell granularity, the cap keeps a near-empty
+    corpus from starting at a near-world window (escalation reaches the
+    world anyway)."""
+    r = int(mercator.MAP_WIDTH * float(np.sqrt(6.0 * k / max(n, 1))) / 2)
     return min(max(r, 1 << 18), 1 << 28)
 
 
+def _caps(sample: np.ndarray, n: int, k: int, qx: np.ndarray, qy: np.ndarray) -> np.ndarray:
+    """Per-query cap radius in imps (int64, ``NO_CAP`` for none):
+    ``CAP_SCALE`` × the Chebyshev distance from (qx, qy) to its
+    ``rank``-th nearest sample point, floored at ``CAP_FLOOR``.
+
+    ``rank`` is ``CAP_RANK``, raised to k × the sampled fraction m/n, so
+    the cap box is expected to hold ≥ CAP_SCALE² × k points (a sample
+    that is the whole corpus ranks the k-th point itself).  No caps when
+    the sample holds fewer than ``rank`` points.  One chunked numpy pass
+    over (queries × sample), ≤ 4 M distances per chunk."""
+    m = len(sample)
+    rank = max(CAP_RANK, -(-k * m // max(n, 1)))
+    caps = np.full(len(qx), NO_CAP, dtype=np.int64)
+    if m < rank:
+        return caps
+    step = max(1, (1 << 22) // m)
+    for i in range(0, len(qx), step):
+        d = np.maximum(
+            np.abs(sample[:, 0] - qx[i : i + step, None]),
+            np.abs(sample[:, 1] - qy[i : i + step, None]),
+        )
+        kth = np.partition(d, rank - 1, axis=1)[:, rank - 1]
+        caps[i : i + step] = np.maximum(CAP_SCALE * kth, CAP_FLOOR)
+    return caps
+
+
 # the broadcast path's per-round query frame: a driver-assigned int per
-# distinct query id, and the query point in imps
+# distinct query id, the query point and its cap radius in imps
 _ACTIVE_SCHEMA = T_.StructType(
     [
         T_.StructField("_qid", T_.IntegerType()),
         T_.StructField("_qx", T_.LongType()),
         T_.StructField("_qy", T_.LongType()),
+        T_.StructField("_capr", T_.LongType()),
     ]
 )
 
@@ -178,15 +244,15 @@ def _round_exprs(
     """Column expressions of one :func:`knn_join` round, built once per
     (session, zoom, radius, big, id_col, query_id, k) in
     ``tiling._EXPR_CACHE``: the cover's row/column ranges and cell key,
-    the small-window flag, the probe's tile, the Mercator distance, the
-    top-k window and its filter, and the table path's stats, completion
-    test and output/next-round column lists.  Each expression node costs
+    the small-window flag, the probe's tile, the cap box test, the
+    Mercator distance, the top-k window and its filter, and the table
+    path's stats, completion test and output/next-round column lists.  Each expression node costs
     a py4j round trip to build; rebuilt on every call they were most of
     a warm call's ~2,700 round trips.  Both query paths plan from these."""
 
     def build():
         shift = 32 - zoom
-        qx, qy = F.col("_qx"), F.col("_qy")
+        qx, qy, capr = F.col("_qx"), F.col("_qy"), F.col("_capr")
         lo, hi = F.lit(I32_MIN).cast("long"), F.lit(I32_MAX).cast("long")
 
         def col_range(rad):
@@ -212,7 +278,8 @@ def _round_exprs(
         row, col = F.col("_row"), F.col("_col")
         qid, dist, small, done = F.col("_qid"), F.col("dist_m"), F.col("small"), F.col("done")
         w = Window.partitionBy("_qid").orderBy(dist.asc(), F.col(id_col).asc())
-        # the table path's completion test over the per-query stats
+        # the table path's completion test over the per-query stats; its
+        # queries carry NO_CAP, so their windows are the round's own
         ok_s = (
             (F.coalesce(F.col("cnt_s"), F.lit(0)) >= k)
             & F.col("kth_s").isNotNull()
@@ -235,9 +302,13 @@ def _round_exprs(
                 qid,
                 qx,
                 qy,
+                capr,
                 ((col >= sc0) & (col <= sc1) & (row >= sr0) & (row <= sr1)).alias("small"),
             ],
             "tile": T.tile_col(F.col("x"), F.col("y"), zoom).cast("long"),
+            # int64 only, so the join condition it is pushed into stays small
+            "box": (F.abs(F.col("x").cast("long") - qx) <= capr)
+            & (F.abs(F.col("y").cast("long") - qy) <= capr),
             "dist": mercator.distance_col(F.col("x"), F.col("y"), qx, qy),
             "cand": [F.col(id_col), qid, dist, small],
             "rank": F.row_number().over(w),
@@ -248,12 +319,14 @@ def _round_exprs(
                 F.count("*").alias("cnt_a"),
                 F.max(dist).alias("kth_a"),
             ],
-            "decide": [qid, qx, qy, (ok_s | ok_a | F.lit(big >= (1 << 31))).alias("done")],
+            "decide": [
+                qid, qx, qy, capr, (ok_s | ok_a | F.lit(big >= (1 << 31))).alias("done")
+            ],
             "qid": qid,
             "done": done,
             "not_done": ~done,
             "out": [F.col(id_col), qid.alias(query_id), dist, F.col("rank_all").alias("rank")],
-            "active": [qid, qx, qy],
+            "active": [qid, qx, qy, capr],
         }
 
     key = ("knn_round", zoom, radius, big, id_col, query_id, k)
@@ -269,7 +342,6 @@ def knn_join(
     query_id: str = "query_id",
     broadcast_queries: bool = True,
     max_per_axis: int = 32,
-    n_points: int | None = None,
 ) -> DataFrame:
     """Table×table kNN join: exact k nearest ``points`` for EVERY row of
     a DataFrame-sized query side → (id, query_id, dist_m, rank).
@@ -288,7 +360,11 @@ def knn_join(
     2. Candidates = one hash join on the cell id (broadcast when the
        query side is dimension-sized — ``broadcast_queries`` — else a
        shuffle join keyed on the cell) with exact Mercator distance.
-       They are ranked by ONE ``row_number()`` window per query under
+       On the broadcast path the join condition also keeps only points
+       inside each query's cap box (:func:`_caps`), so a query in a
+       dense city ranks the few thousand points around it, not the city;
+       the table path carries ``NO_CAP``.  They are ranked by ONE
+       ``row_number()`` window per query under
        the ``rank <= k`` filter, so Spark places a partial
        ``WindowGroupLimit`` before the ``Exchange``: each map task keeps
        only its top k rows per query, and the shuffle moves at most
@@ -300,12 +376,17 @@ def knn_join(
        :func:`_guarantee_col`) is a per-query COLUMN over the aggregated
        stats frame; finished queries' top-k detach via localCheckpoint,
        unfinished ones re-expand — the only driver-side signal per round
-       is the scalar "any queries left?".
+       is the scalar "any queries left?".  On the broadcast path the
+       test runs on the driver against min(window, cap); a capped query
+       that is not proven re-runs in the next round uncapped.
 
-    The radius schedule doubles-twice per probe (window r and 4r share
-    one scan) and multiplies 16× per round, capping at the world window,
-    so the loop is bounded at 4 rounds from the default init radius and
-    every query terminates (a world window makes every point a
+    The init radius comes from the sample's corpus-size estimate
+    (:func:`_auto_radius`; one sample job, taken when the radius is
+    "auto" or the query side is broadcast).  The radius schedule
+    doubles-twice per probe (window r and 4r share one scan) and
+    multiplies 16× per round, capping at the world window, so the loop
+    is bounded at 4 rounds from the default init radius and every query
+    terminates (a world window is never capped and makes every point a
     candidate).  Semantics match :func:`knn` exactly: same pyramid, same
     acceptance proof, same (dist, id) deterministic tie-break.
 
@@ -321,14 +402,17 @@ def knn_join(
     ``queries`` must carry (``query_id``, x, y) with imp-space coords;
     ``id_col`` must be unique per point (the tie-break).
     """
+    if init_radius_imps == "auto" or broadcast_queries:
+        sample, n = _point_sample(points, id_col)
     if init_radius_imps == "auto":
-        init_radius_imps = _auto_radius(points, k, n_points)
+        init_radius_imps = _auto_radius(k, n)
     sel = session_exprs(points, ("knn_select", id_col, query_id), lambda: {
         "pts": [F.col(id_col), F.col("x"), F.col("y")],
         "query": [
             F.col(query_id).alias("_qid"),
             F.col("x").cast("long").alias("_qx"),
             F.col("y").cast("long").alias("_qy"),
+            F.lit(NO_CAP).alias("_capr"),
         ],
     })
     pts = points.select(sel["pts"])
@@ -363,9 +447,14 @@ def knn_join(
         # back when the output frame is built.
         qid_type = active.schema["_qid"].dataType
         qrows = active.collect()
-        qids = list(dict.fromkeys(qid for qid, _, _ in qrows))  # first-seen order
+        qids = list(dict.fromkeys(r[0] for r in qrows))  # first-seen order
         qidx = {qid: i for i, qid in enumerate(qids)}
-        act_rows = [(qidx[qid], qx, qy) for qid, qx, qy in qrows]
+        caps = _caps(
+            sample, n, k,
+            np.array([r[1] for r in qrows], dtype=np.int64),
+            np.array([r[2] for r in qrows], dtype=np.int64),
+        )
+        act_rows = [(qidx[qid], qx, qy, int(c)) for (qid, qx, qy, _), c in zip(qrows, caps)]
         collected_rows: list = []
     for radius, big in schedule:
         zoom = _window_zoom(big, max_per_axis)
@@ -374,6 +463,8 @@ def knn_join(
         if broadcast_queries:
             if not act_rows:
                 break
+            if final_round:  # the world window is never capped
+                act_rows = [(qi, qx, qy, NO_CAP) for qi, qx, qy, _ in act_rows]
             # a LocalRelation, not an RDD scan: the broadcast build then
             # needs no job of its own (see _query_frame)
             active = spark.createDataFrame(
@@ -384,9 +475,12 @@ def knn_join(
             .withColumn("_col", ex["cols"])
             .select(ex["cover"])
         )
+        # the cap box is an int filter that Spark pushes into the join
+        # condition; never a dist_m filter (CLAUDE.md, 64 KB methods)
         cand = (
             pts.withColumn("_qcell", ex["tile"])
             .join(maybe_b(cover), "_qcell")
+            .filter(ex["box"])
             .withColumn("dist_m", ex["dist"])
             .select(ex["cand"])
         )
@@ -400,25 +494,29 @@ def knn_join(
             for r in rows:
                 by_q.setdefault(r["_qid"], []).append(r)
             next_act = []
-            for qi, qx, qy in act_rows:
+            for qi, qx, qy, capr in act_rows:
                 rs = by_q.get(qi, [])
                 small_rows = [r for r in rs if r["small"]]
                 kth_s = max((r["dist_m"] for r in small_rows), default=None)
                 kth_a = max((r["dist_m"] for r in rs), default=None)
+                # the cap box is a Chebyshev window too: the query's
+                # candidates are every point within min(window, cap)
                 ok_s = (
                     len(small_rows) >= k
                     and kth_s is not None
-                    and kth_s <= _guarantee_m(qy, radius)
+                    and kth_s <= _guarantee_m(qy, min(radius, capr))
                 )
                 ok_a = (
-                    len(rs) >= k and kth_a is not None and kth_a <= _guarantee_m(qy, big)
+                    len(rs) >= k
+                    and kth_a is not None
+                    and kth_a <= _guarantee_m(qy, min(big, capr))
                 )
                 if ok_s or ok_a or final_round:
                     collected_rows.extend(
                         (r[id_col], qids[qi], r["dist_m"], int(r["rank_all"])) for r in rs
                     )
                 else:
-                    next_act.append((qi, qx, qy))
+                    next_act.append((qi, qx, qy, NO_CAP))
             act_rows = next_act
             if final_round or not act_rows:
                 break
@@ -632,7 +730,6 @@ def idw_interpolate(
     k: int = 8,
     val_col: str = "v",
     id_col: str = "image_id",
-    n_points: int | None = None,
 ) -> DataFrame:
     """Inverse-distance-weighted interpolation at query locations — the
     classic spatial-interpolation consumer of kNN: estimate a field value
@@ -656,9 +753,7 @@ def idw_interpolate(
     # candidate machinery and the value join-back (r03 review: knn()
     # used to re-project the same list internally)
     qdf = _query_frame(points.sparkSession, queries)
-    nn = knn_join(points, qdf, k, id_col=id_col, n_points=n_points).select(
-        "query_id", id_col, "rank"
-    )
+    nn = knn_join(points, qdf, k, id_col=id_col).select("query_id", id_col, "rank")
     j = (
         points.select(id_col, "x", "y", F.col(val_col).cast("double").alias("v"))
         .join(F.broadcast(nn), id_col)

@@ -23,7 +23,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def parquet_rows(sf_dir: str, name: str) -> int:
     """Row count from the parquet FOOTER (driver-side, milliseconds —
-    no Spark job): the free density hint for knn's auto window radius."""
+    no Spark job)."""
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(f"{sf_dir}/{name}.parquet").metadata.num_rows

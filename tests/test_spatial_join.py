@@ -454,6 +454,120 @@ def test_knn_join_round_plan_limits_before_shuffle(spark):
     ]
 
 
+def _last_round_join_rows(spark, first_execution: int) -> int:
+    """BroadcastHashJoin output rows of the last knn_join round (the last
+    execution with a Window) since ``first_execution``, read from the SQL
+    status store."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList(first_execution, 1 << 20)
+    last = None
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        deadline = time.time() + 10
+        while store.execution(eid).get().completionTime().isEmpty() and time.time() < deadline:
+            time.sleep(0.05)
+        graph = store.planGraph(eid)
+        nodes = [graph.allNodes().apply(j) for j in range(graph.allNodes().size())]
+        if any(n.name() == "Window" for n in nodes):
+            last = (eid, nodes)
+    eid, nodes = last
+    values = store.executionMetrics(eid)
+    rows = 0
+    for n in nodes:
+        if n.name() == "BroadcastHashJoin":
+            for m in (n.metrics().apply(j) for j in range(n.metrics().size())):
+                if m.name() == "number of output rows":
+                    rows += int(values.get(m.accumulatorId()).get().replace(",", ""))
+    return rows
+
+
+def test_knn_join_caps_bound_dense_candidates(spark, monkeypatch):
+    """80 % of the points sit in one 0.1° cluster and every query is
+    inside it: each query's window holds the whole cluster, its cap box a
+    few dozen points.  The capped round joins ≥5× fewer candidates than
+    the same call with every cap forced to NO_CAP, with identical rows."""
+    rng = np.random.default_rng(8)
+    n, n_hot = 20_000, 16_000
+    lon = np.concatenate([10.0 + rng.uniform(-0.05, 0.05, n_hot), rng.uniform(-180, 180, n - n_hot)])
+    lat = np.concatenate([50.0 + rng.uniform(-0.05, 0.05, n_hot), rng.uniform(-85, 85, n - n_hot)])
+    pts = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"p{i}" for i in range(n)],
+        "x": mercator.x_from_lon(lon).astype(np.int64),
+        "y": mercator.y_from_lat(lat).astype(np.int64),
+    }))
+    queries = [
+        (f"q{i}", 10.0 + a, 50.0 + b) for i, (a, b) in enumerate(rng.uniform(-0.04, 0.04, (8, 2)))
+    ]
+    qdf = knn_mod._query_frame(spark, queries)
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def run():
+        first = store.executionsCount()
+        rows = sorted(map(tuple, knn_mod.knn_join(pts, qdf, k=5).collect()))
+        return rows, _last_round_join_rows(spark, first)
+
+    capped_rows, capped = run()
+    monkeypatch.setattr(
+        knn_mod, "_caps", lambda sample, n, k, qx, qy: np.full(len(qx), knn_mod.NO_CAP)
+    )
+    rows, uncapped = run()
+    assert rows == capped_rows
+    assert len(rows) == 8 * 5
+    assert capped > 0 and uncapped >= 5 * capped, (capped, uncapped)
+
+
+def test_knn_join_cap_is_sound_and_retries(spark, monkeypatch):
+    """A forced cap c on one query at the origin: its k nearest points in
+    the c-box sit near the box corners (≈1.4c away), and one point on the
+    x axis at 1.1c lies just outside the box.  The capped round cannot
+    prove its top k, so the query re-runs uncapped, and both paths equal
+    brute force with the axis point in the top k."""
+    c, k = 1 << 20, 4
+    corners = [(0.98, 0.97), (-0.97, 0.99), (0.99, -0.96), (-0.96, -0.98)]
+    rng = np.random.default_rng(5)
+    far = rng.integers(4 * c, 1 << 28, (40, 2)) * rng.choice([-1, 1], (40, 2))
+    xs = [int(a * c) for a, _ in corners] + [int(1.1 * c)] + far[:, 0].tolist()
+    ys = [int(b * c) for _, b in corners] + [0] + far[:, 1].tolist()
+    ids = [f"p{i:02d}" for i in range(len(xs))]
+    pts = spark.createDataFrame(pd.DataFrame({"image_id": ids, "x": xs, "y": ys}))
+    qdf = spark.createDataFrame([("q0", 0, 0)], "query_id string, x long, y long")
+    d = mercator.distance(np.array(xs, np.float64), np.array(ys, np.float64), 0.0, 0.0)
+    exp = [ids[i] for i in np.lexsort((ids, d))[:k]]
+    assert "p04" in exp  # the axis point
+    caps = []
+    monkeypatch.setattr(
+        knn_mod, "_caps", lambda sample, n, k, qx, qy: caps.append(c) or np.full(len(qx), c)
+    )
+    for bq in (True, False):
+        got = knn_mod.knn_join(
+            pts, qdf, k=k, init_radius_imps=1 << 24, broadcast_queries=bq
+        ).toPandas().sort_values("rank")
+        assert list(got["image_id"]) == exp, bq
+    assert caps == [c]  # the broadcast path capped the query
+
+
+def test_knn_point_sample_is_bounded_and_deterministic(spark):
+    """The sample holds ≤ SAMPLE_ROWS rows, is the same on every call and
+    partitioning, is the whole corpus (with its exact size) below
+    SAMPLE_ROWS, and estimates a larger corpus's size within 10 %."""
+    def frame(n):
+        i = F.col("id")
+        return spark.range(n).select(
+            i.alias("pid"), (i * 7919 % (1 << 30)).alias("x"), (i * 104729 % (1 << 30)).alias("y")
+        )
+
+    xy, n = knn_mod._point_sample(frame(1_000), "pid")
+    assert n == 1_000 and len(xy) == 1_000
+    big = frame(200_000)
+    a, n_a = knn_mod._point_sample(big, "pid")
+    b, n_b = knn_mod._point_sample(big.repartition(3), "pid")
+    assert len(a) == knn_mod.SAMPLE_ROWS
+    assert np.array_equal(a, b) and n_a == n_b
+    assert abs(n_a - 200_000) <= 20_000, n_a
+
+
 def test_knn_assert_unique_ids(spark):
     dup = spark.createDataFrame(
         [("a", 0, 0), ("a", 5, 5), ("b", 9, 9)], "image_id string, x int, y int"

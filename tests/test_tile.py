@@ -281,10 +281,7 @@ def test_geohash_golden_vectors_and_parity(spark):
     # Column parity.
     sdf = spark.createDataFrame(pd.DataFrame({"lon": lon, "lat": lat}))
     got_col = [
-        r["gh"]
-        for r in sdf.select(
-            curve.geohash8_col(F.col("lon"), F.col("lat")).alias("gh")
-        ).collect()
+        r["gh"] for r in curve.with_geohash8(sdf, F.col("lon"), F.col("lat"), "gh").collect()
     ]
     assert got_col == ref.tolist()
 
