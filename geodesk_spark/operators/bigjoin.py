@@ -344,7 +344,7 @@ def within_distance_join(
     imp distance ≤ ``delta_imps`` — BOTH sides table-sized, no
     broadcast.  The missing cell of the join matrix beside
     knn.distance_join (table×dimension broadcast, meters semantics),
-    knn.knn_join (table×table kNN) and contains_points_big (big-big
+    knn.knn_join (table×dimension kNN) and contains_points_big (big-big
     PIP).
 
     Radius semantics are PLANAR IMPS — the reference's own window

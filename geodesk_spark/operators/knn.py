@@ -17,13 +17,13 @@ Spark shape (no per-query scans):
 
 1. One bounded hash sample of the points (the ``SAMPLE_ROWS`` smallest
    ``xxhash64(id)``, :func:`_point_sample`) sizes the first window from
-   the estimated corpus size and gives each broadcast query a cap box:
+   the estimated corpus size and gives each query a cap box:
    ``CAP_SCALE`` × its Chebyshev distance to its ``CAP_RANK``-th nearest
-   sample point (:func:`_caps`).  Per round, each query's candidate cell
-   cover is generated as columns (``explode(sequence(...))`` over its
-   clamped cell ranges) and carries the query's cap.  Every round's
-   Column expressions are built once per session and round shape
-   (``_round_exprs``), not once per call.
+   sample point (:func:`_caps`).  Per round, each active query's
+   candidate cell cover is generated as columns (``explode(sequence(...))``
+   over its clamped cell ranges) and carries the query's cap.  Every
+   round's Column expressions are built once per session and round
+   shape (``_round_exprs``), not once per call.
 2. Broadcast the (cell, query, cap, in-small-window) table; candidates
    are a pure-JVM broadcast hash join against the point's pyramid cell
    id whose condition also keeps only points inside the query's cap box
@@ -32,12 +32,13 @@ Spark shape (no per-query scans):
 3. ``Window.partitionBy(_qid).orderBy(dist)`` + row_number ≤ k;
    Spark cuts each query's top-k inside every map task (a partial
    ``WindowGroupLimit``) before the shuffle, so at most k rows per query
-   per task move.  On the broadcast path ``_qid`` is a dense int the
-   driver assigns per distinct query id, so that sort compares ints.
-4. Queries whose k-th distance is NOT provably inside their window
-   widen the window and re-run (only those queries), uncapped.  A dense
-   query's cap box holds a few thousand points where its window holds
-   its whole city, so it ranks those instead.
+   per task move.  ``_qid`` is a dense int the driver assigns per
+   distinct query id, so that sort compares ints.
+4. The round's ranked top-k is collected and the completion proof runs
+   on the driver.  Queries whose k-th distance is NOT provably inside
+   their window widen the window and re-run (only those queries),
+   uncapped.  A dense query's cap box holds a few thousand points where
+   its window holds its whole city, so it ranks those instead.
 
 Acceptance proof: all points within Chebyshev radius
 ``min(radius_imps, cap)`` of (qx,qy) are candidates — the cap box is
@@ -45,6 +46,10 @@ itself a Chebyshev window around the query — so if kth_dist_m ≤ that
 radius × (min meters-per-imp anywhere in the window), the top-k is
 exact.  The world-window round is never capped, so every query still
 terminates exactly.
+
+Scale contract: the query side is dimension-sized.  The query rows and
+the k·|queries| ranked rows of a round must fit on the driver; the
+points are the table-sized side.
 """
 
 from __future__ import annotations
@@ -65,12 +70,14 @@ CAP_RANK = 4  # a cap reaches at least this many sample points
 CAP_SCALE = 2
 CAP_FLOOR = 1 << 16  # one z16 cell: duplicate points give no zero box
 NO_CAP = 1 << 32  # wider than any |Δx| or |Δy| in imps
+MAX_CELLS_PER_AXIS = 32  # a window's cover is at most this many cells wide
 
 
-def _window_zoom(radius_imps: int, max_per_axis: int = 32) -> int:
-    """Pyramid-adaptive zoom: coarsen until the window spans ≤max cells/axis."""
+def _window_zoom(radius_imps: int) -> int:
+    """Pyramid-adaptive zoom: coarsen until the window spans
+    ≤ ``MAX_CELLS_PER_AXIS`` cells per axis."""
     zoom = T.MAX_ZOOM
-    while zoom > 0 and ((2 * radius_imps) >> (32 - zoom)) + 1 > max_per_axis:
+    while zoom > 0 and ((2 * radius_imps) >> (32 - zoom)) + 1 > MAX_CELLS_PER_AXIS:
         zoom -= 2  # pyramid steps of 2, like the default level set
     return zoom
 
@@ -118,11 +125,10 @@ def knn(
     """queries: [(query_id, lon, lat), ...] → (query_id, id, dist_m, rank).
 
     The interactive front end of :func:`knn_join`: the query list is
-    projected to imp coordinates and handed to the distributed
-    table×table join, so BOTH entry points share one engine — no
-    per-query driver state anywhere (r02 carried a second, driver-loop
-    implementation here; ``test_knn_join_matches_knn`` pinned the two
-    row-for-row equal before it was removed).
+    projected to imp coordinates and handed to it, so both entry points
+    share one engine (r02 carried a second, driver-loop implementation
+    here; ``test_knn_join_matches_knn`` pinned the two row-for-row equal
+    before it was removed).
 
     ``id_col`` must be unique per point — it is the deterministic
     tie-break for equal distances.  Pass ``assert_unique_ids=True`` to
@@ -139,20 +145,6 @@ def knn(
     return knn_join(
         points, qdf, k, init_radius_imps=init_radius_imps, id_col=id_col
     ).select("query_id", id_col, "dist_m", "rank")
-
-
-def _guarantee_col(qy_col, radius: int):
-    """Column form of :func:`_guarantee_m`: max distance provably covered
-    by the Chebyshev window of ``radius`` imps around a query row at
-    projected latitude ``qy_col`` — radius × the minimum meters-per-imp
-    anywhere in the window (scale is monotone in |y|, so the min is at
-    one of the two clamped y endpoints)."""
-    F_ = F
-    mpi0 = F_.lit(mercator.EARTH_CIRCUMFERENCE / mercator.MAP_WIDTH)
-    y_lo = F_.greatest(qy_col - F_.lit(radius), F_.lit(I32_MIN)).cast("double")
-    y_hi = F_.least(qy_col + F_.lit(radius), F_.lit(I32_MAX)).cast("double")
-    mpi = F_.least(mpi0 / mercator.scale_col(y_lo), mpi0 / mercator.scale_col(y_hi))
-    return F_.lit(float(radius)) * mpi
 
 
 def _point_sample(points: DataFrame, id_col: str) -> tuple[np.ndarray, int]:
@@ -226,8 +218,8 @@ def _caps(sample: np.ndarray, n: int, k: int, qx: np.ndarray, qy: np.ndarray) ->
     return caps
 
 
-# the broadcast path's per-round query frame: a driver-assigned int per
-# distinct query id, the query point and its cap radius in imps
+# the per-round query frame: a driver-assigned int per distinct query id,
+# the query point and its cap radius in imps
 _ACTIVE_SCHEMA = T_.StructType(
     [
         T_.StructField("_qid", T_.IntegerType()),
@@ -238,17 +230,14 @@ _ACTIVE_SCHEMA = T_.StructType(
 )
 
 
-def _round_exprs(
-    points: DataFrame, zoom: int, radius: int, big: int, id_col: str, query_id: str, k: int
-) -> dict:
+def _round_exprs(points: DataFrame, zoom: int, radius: int, big: int, id_col: str, k: int) -> dict:
     """Column expressions of one :func:`knn_join` round, built once per
-    (session, zoom, radius, big, id_col, query_id, k) in
-    ``tiling._EXPR_CACHE``: the cover's row/column ranges and cell key,
-    the small-window flag, the probe's tile, the cap box test, the
-    Mercator distance, the top-k window and its filter, and the table
-    path's stats, completion test and output/next-round column lists.  Each expression node costs
-    a py4j round trip to build; rebuilt on every call they were most of
-    a warm call's ~2,700 round trips.  Both query paths plan from these."""
+    (session, zoom, radius, big, id_col, k) in ``tiling._EXPR_CACHE``:
+    the cover's row/column ranges and cell key, the small-window flag,
+    the probe's tile, the cap box test, the Mercator distance, and the
+    top-k window and its filter.  Each expression node costs a py4j
+    round trip to build; rebuilt on every call they were most of a warm
+    call's round trips."""
 
     def build():
         shift = 32 - zoom
@@ -276,20 +265,8 @@ def _round_exprs(
         sc0, sc1 = col_range(radius)
         sr0, sr1 = row_range(radius)
         row, col = F.col("_row"), F.col("_col")
-        qid, dist, small, done = F.col("_qid"), F.col("dist_m"), F.col("small"), F.col("done")
+        qid, dist = F.col("_qid"), F.col("dist_m")
         w = Window.partitionBy("_qid").orderBy(dist.asc(), F.col(id_col).asc())
-        # the table path's completion test over the per-query stats; its
-        # queries carry NO_CAP, so their windows are the round's own
-        ok_s = (
-            (F.coalesce(F.col("cnt_s"), F.lit(0)) >= k)
-            & F.col("kth_s").isNotNull()
-            & (F.col("kth_s") <= _guarantee_col(qy, radius))
-        )
-        ok_a = (
-            (F.coalesce(F.col("cnt_a"), F.lit(0)) >= k)
-            & F.col("kth_a").isNotNull()
-            & (F.col("kth_a") <= _guarantee_col(qy, big))
-        )
         return {
             "rows": F.explode(F.sequence(br0, br1)),
             "cols": F.explode(F.sequence(bc0, bc1)),
@@ -310,27 +287,12 @@ def _round_exprs(
             "box": (F.abs(F.col("x").cast("long") - qx) <= capr)
             & (F.abs(F.col("y").cast("long") - qy) <= capr),
             "dist": mercator.distance_col(F.col("x"), F.col("y"), qx, qy),
-            "cand": [F.col(id_col), qid, dist, small],
+            "cand": [F.col(id_col), qid, dist, F.col("small")],
             "rank": F.row_number().over(w),
             "top_k": F.col("rank_all") <= k,
-            "stats": [
-                F.sum(small.cast("int")).alias("cnt_s"),
-                F.max(F.when(small, dist)).alias("kth_s"),
-                F.count("*").alias("cnt_a"),
-                F.max(dist).alias("kth_a"),
-            ],
-            "decide": [
-                qid, qx, qy, capr, (ok_s | ok_a | F.lit(big >= (1 << 31))).alias("done")
-            ],
-            "qid": qid,
-            "done": done,
-            "not_done": ~done,
-            "out": [F.col(id_col), qid.alias(query_id), dist, F.col("rank_all").alias("rank")],
-            "active": [qid, qx, qy, capr],
         }
 
-    key = ("knn_round", zoom, radius, big, id_col, query_id, k)
-    return session_exprs(points, key, build)
+    return session_exprs(points, ("knn_round", zoom, radius, big, id_col, k), build)
 
 
 def knn_join(
@@ -340,49 +302,39 @@ def knn_join(
     init_radius_imps: int | str = "auto",
     id_col: str = "image_id",
     query_id: str = "query_id",
-    broadcast_queries: bool = True,
-    max_per_axis: int = 32,
 ) -> DataFrame:
-    """Table×table kNN join: exact k nearest ``points`` for EVERY row of
-    a DataFrame-sized query side → (id, query_id, dist_m, rank).
+    """kNN join: exact k nearest ``points`` for every row of the
+    ``queries`` DataFrame → (id, query_id, dist_m, rank).
 
-    The 100 TB consumer shape ("nearest POI for every image") that the
-    interactive :func:`knn` cannot serve: that variant keeps per-query
-    radii on the driver and ``collect()``\\ s per-round stats, capping the
-    query side at driver memory and serializing rounds.  Here the query
-    side stays a DataFrame end to end:
+    The query side is dimension-sized: its rows and the k·|queries|
+    ranked rows of a round are collected to the driver, which runs all
+    control flow (completion proof, output, next active set) — ONE Spark
+    action per round.  The points stay a DataFrame end to end.
 
-    1. Per-round, every active query shares one radius (init × 16^round),
+    1. Per round, every active query shares one radius (init × 16^round),
        so the window zoom is a compile-time constant and the candidate
        cell cover is generated AS COLUMNS — two chained
        ``explode(sequence(...))`` over the clamped col/row ranges, with
-       the in-small-window flag a pure range test.  No driver cell math.
-    2. Candidates = one hash join on the cell id (broadcast when the
-       query side is dimension-sized — ``broadcast_queries`` — else a
-       shuffle join keyed on the cell) with exact Mercator distance.
-       On the broadcast path the join condition also keeps only points
-       inside each query's cap box (:func:`_caps`), so a query in a
-       dense city ranks the few thousand points around it, not the city;
-       the table path carries ``NO_CAP``.  They are ranked by ONE
-       ``row_number()`` window per query under
-       the ``rank <= k`` filter, so Spark places a partial
+       the in-small-window flag a pure range test.  The cover is a
+       ``LocalRelation`` built from the driver's active rows.
+    2. Candidates = one broadcast hash join of the points on the cell id,
+       with exact Mercator distance.  The join condition also keeps only
+       points inside each query's cap box (:func:`_caps`), so a query in
+       a dense city ranks the few thousand points around it, not the
+       city.  They are ranked by ONE ``row_number()`` window per query
+       under the ``rank <= k`` filter, so Spark places a partial
        ``WindowGroupLimit`` before the ``Exchange``: each map task keeps
        only its top k rows per query, and the shuffle moves at most
        k × |queries| × tasks rows however many candidates the window
        holds.  The small window needs no rank of its own — it is proven
        only when all k surviving rows are small, and then their small
        rank is the overall one.
-    3. The completion test (k-th distance provably inside the window,
-       :func:`_guarantee_col`) is a per-query COLUMN over the aggregated
-       stats frame; finished queries' top-k detach via localCheckpoint,
-       unfinished ones re-expand — the only driver-side signal per round
-       is the scalar "any queries left?".  On the broadcast path the
-       test runs on the driver against min(window, cap); a capped query
-       that is not proven re-runs in the next round uncapped.
+    3. The collected top-k is proven on the driver: the k-th distance
+       must lie inside min(window, cap) (:func:`_guarantee_m`).  A query
+       that is not proven re-runs in the next round, uncapped.
 
     The init radius comes from the sample's corpus-size estimate
-    (:func:`_auto_radius`; one sample job, taken when the radius is
-    "auto" or the query side is broadcast).  The radius schedule
+    (:func:`_auto_radius`).  The radius schedule
     doubles-twice per probe (window r and 4r share one scan) and
     multiplies 16× per round, capping at the world window, so the loop
     is bounded at 4 rounds from the default init radius and every query
@@ -393,17 +345,15 @@ def knn_join(
     Planning is cheap on a warm session: each round's Column
     expressions (:func:`_round_exprs`) are built once per session and
     round shape, so a warm call makes a few hundred py4j round trips,
-    not thousands.
-    The broadcast path maps each distinct query id to a dense ``int``
-    on the driver (it holds the query rows anyway), ranks and shuffles
-    on that ``_qid``, and maps the ids back when it builds the output
-    frame, so the output's query-id values and type are the input's.
+    not thousands.  Each distinct query id maps to a dense ``int`` on
+    the driver; rounds rank and shuffle on that ``_qid``, and the ids are
+    mapped back when the output frame is built, so the output's query-id
+    values and type are the input's.
 
     ``queries`` must carry (``query_id``, x, y) with imp-space coords;
     ``id_col`` must be unique per point (the tie-break).
     """
-    if init_radius_imps == "auto" or broadcast_queries:
-        sample, n = _point_sample(points, id_col)
+    sample, n = _point_sample(points, id_col)
     if init_radius_imps == "auto":
         init_radius_imps = _auto_radius(k, n)
     sel = session_exprs(points, ("knn_select", id_col, query_id), lambda: {
@@ -412,12 +362,10 @@ def knn_join(
             F.col(query_id).alias("_qid"),
             F.col("x").cast("long").alias("_qx"),
             F.col("y").cast("long").alias("_qy"),
-            F.lit(NO_CAP).alias("_capr"),
         ],
     })
     pts = points.select(sel["pts"])
-    active = queries.select(sel["query"])
-    maybe_b = (lambda df: F.broadcast(df)) if broadcast_queries else (lambda df: df)
+    qsel = queries.select(sel["query"])
 
     # radius schedule: (r, 4r) per round, 16× between rounds, final round
     # capped at the world window (everything becomes a candidate)
@@ -431,45 +379,32 @@ def knn_join(
         radius *= 16
 
     spark = points.sparkSession
-    results: list[DataFrame] = []
-    if broadcast_queries:
-        # dimension-sized query side (that IS the broadcast contract): the
-        # per-round control state is ≤ |queries| rows and the round output
-        # ≤ k·|queries| rows, so the round's ranked top-k is collected and
-        # ALL control flow (stats, completion proof, output split, next
-        # active set) runs in Python — ONE Spark action per round.  The
-        # distributed alternative costs ~5 control jobs/round at ~0.2-0.5s
-        # fixed scheduler overhead each (measured: 3.8s → ~1.3s on the
-        # interactive bench query); the table×table path below keeps the
-        # fully distributed machinery because its state is table-sized.
-        # Rounds rank and shuffle on a dense int per distinct query id
-        # (an int sort key is cheaper than a string one); the ids come
-        # back when the output frame is built.
-        qid_type = active.schema["_qid"].dataType
-        qrows = active.collect()
-        qids = list(dict.fromkeys(r[0] for r in qrows))  # first-seen order
-        qidx = {qid: i for i, qid in enumerate(qids)}
-        caps = _caps(
-            sample, n, k,
-            np.array([r[1] for r in qrows], dtype=np.int64),
-            np.array([r[2] for r in qrows], dtype=np.int64),
-        )
-        act_rows = [(qidx[qid], qx, qy, int(c)) for (qid, qx, qy, _), c in zip(qrows, caps)]
-        collected_rows: list = []
+    # rounds rank and shuffle on a dense int per distinct query id (an
+    # int sort key is cheaper than a string one); the ids come back when
+    # the output frame is built
+    qid_type = qsel.schema["_qid"].dataType
+    qrows = qsel.collect()
+    qids = list(dict.fromkeys(r[0] for r in qrows))  # first-seen order
+    qidx = {qid: i for i, qid in enumerate(qids)}
+    caps = _caps(
+        sample, n, k,
+        np.array([r[1] for r in qrows], dtype=np.int64),
+        np.array([r[2] for r in qrows], dtype=np.int64),
+    )
+    act_rows = [(qidx[qid], qx, qy, int(c)) for (qid, qx, qy), c in zip(qrows, caps)]
+    collected_rows: list = []
     for radius, big in schedule:
-        zoom = _window_zoom(big, max_per_axis)
-        ex = _round_exprs(points, zoom, radius, big, id_col, query_id, k)
+        if not act_rows:
+            break
+        ex = _round_exprs(points, _window_zoom(big), radius, big, id_col, k)
         final_round = big >= (1 << 31)
-        if broadcast_queries:
-            if not act_rows:
-                break
-            if final_round:  # the world window is never capped
-                act_rows = [(qi, qx, qy, NO_CAP) for qi, qx, qy, _ in act_rows]
-            # a LocalRelation, not an RDD scan: the broadcast build then
-            # needs no job of its own (see _query_frame)
-            active = spark.createDataFrame(
-                pd.DataFrame(act_rows, columns=_ACTIVE_SCHEMA.names), _ACTIVE_SCHEMA
-            )
+        if final_round:  # the world window is never capped
+            act_rows = [(qi, qx, qy, NO_CAP) for qi, qx, qy, _ in act_rows]
+        # a LocalRelation, not an RDD scan: the broadcast build then
+        # needs no job of its own (see _query_frame)
+        active = spark.createDataFrame(
+            pd.DataFrame(act_rows, columns=_ACTIVE_SCHEMA.names), _ACTIVE_SCHEMA
+        )
         cover = (
             active.withColumn("_row", ex["rows"])
             .withColumn("_col", ex["cols"])
@@ -479,7 +414,7 @@ def knn_join(
         # condition; never a dist_m filter (CLAUDE.md, 64 KB methods)
         cand = (
             pts.withColumn("_qcell", ex["tile"])
-            .join(maybe_b(cover), "_qcell")
+            .join(F.broadcast(cover), "_qcell")
             .filter(ex["box"])
             .withColumn("dist_m", ex["dist"])
             .select(ex["cand"])
@@ -488,75 +423,47 @@ def knn_join(
         # 2): a second one blocks the partial WindowGroupLimit, and every
         # candidate row is shuffled again
         ranked = cand.withColumn("rank_all", ex["rank"]).filter(ex["top_k"])
-        if broadcast_queries:
-            rows = ranked.collect()  # the round's ONE action: ≤ k·|queries| rows
-            by_q: dict = {}
-            for r in rows:
-                by_q.setdefault(r["_qid"], []).append(r)
-            next_act = []
-            for qi, qx, qy, capr in act_rows:
-                rs = by_q.get(qi, [])
-                small_rows = [r for r in rs if r["small"]]
-                kth_s = max((r["dist_m"] for r in small_rows), default=None)
-                kth_a = max((r["dist_m"] for r in rs), default=None)
-                # the cap box is a Chebyshev window too: the query's
-                # candidates are every point within min(window, cap)
-                ok_s = (
-                    len(small_rows) >= k
-                    and kth_s is not None
-                    and kth_s <= _guarantee_m(qy, min(radius, capr))
+        rows = ranked.collect()  # the round's ONE action: ≤ k·|queries| rows
+        by_q: dict = {}
+        for r in rows:
+            by_q.setdefault(r["_qid"], []).append(r)
+        next_act = []
+        for qi, qx, qy, capr in act_rows:
+            rs = by_q.get(qi, [])
+            small_rows = [r for r in rs if r["small"]]
+            kth_s = max((r["dist_m"] for r in small_rows), default=None)
+            kth_a = max((r["dist_m"] for r in rs), default=None)
+            # the cap box is a Chebyshev window too: the query's
+            # candidates are every point within min(window, cap)
+            ok_s = (
+                len(small_rows) >= k
+                and kth_s is not None
+                and kth_s <= _guarantee_m(qy, min(radius, capr))
+            )
+            ok_a = (
+                len(rs) >= k
+                and kth_a is not None
+                and kth_a <= _guarantee_m(qy, min(big, capr))
+            )
+            if ok_s or ok_a or final_round:
+                collected_rows.extend(
+                    (r[id_col], qids[qi], r["dist_m"], int(r["rank_all"])) for r in rs
                 )
-                ok_a = (
-                    len(rs) >= k
-                    and kth_a is not None
-                    and kth_a <= _guarantee_m(qy, min(big, capr))
-                )
-                if ok_s or ok_a or final_round:
-                    collected_rows.extend(
-                        (r[id_col], qids[qi], r["dist_m"], int(r["rank_all"])) for r in rs
-                    )
-                else:
-                    next_act.append((qi, qx, qy, NO_CAP))
-            act_rows = next_act
-            if final_round or not act_rows:
-                break
-            continue
-        ranked = ranked.cache()
-        stats = ranked.groupBy(ex["qid"]).agg(*ex["stats"])
-        decide = active.join(stats, "_qid", "left").select(ex["decide"])
-        done_q = decide.filter(ex["done"]).select(ex["qid"])
-        round_out = ranked.join(maybe_b(done_q), "_qid").select(ex["out"])
-        # ≤ k rows per finished query: detach from the cached candidate
-        # lineage so the round cache releases immediately
-        results.append(round_out.localCheckpoint(eager=True))
-        if final_round:
-            ranked.unpersist()
-            break
-        active = (
-            decide.filter(ex["not_done"]).select(ex["active"]).localCheckpoint(eager=True)
-        )
-        ranked.unpersist()
-        if active.isEmpty():  # scalar signal only — no per-query collect
-            break
+            else:
+                next_act.append((qi, qx, qy, NO_CAP))
+        act_rows = next_act
 
-    if broadcast_queries:
-        out_schema = T_.StructType(
-            [
-                pts.schema[id_col],
-                T_.StructField(query_id, qid_type),
-                T_.StructField("dist_m", T_.DoubleType()),
-                T_.StructField("rank", T_.IntegerType()),
-            ]
-        )
-        return spark.createDataFrame(
-            pd.DataFrame(collected_rows, columns=out_schema.names), out_schema
-        )
-    # the schedule always runs ≥1 round and every round appends (possibly
-    # empty) output, so `results` is never empty — even for zero queries
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out
+    out_schema = T_.StructType(
+        [
+            pts.schema[id_col],
+            T_.StructField(query_id, qid_type),
+            T_.StructField("dist_m", T_.DoubleType()),
+            T_.StructField("rank", T_.IntegerType()),
+        ]
+    )
+    return spark.createDataFrame(
+        pd.DataFrame(collected_rows, columns=out_schema.names), out_schema
+    )
 
 
 def distance_join(

@@ -242,7 +242,7 @@ def map_match(
     two_sig2 = 2.0 * sigma_m * sigma_m
     beta = float(beta_m)
 
-    def decode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def decode(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values([seq_col, seg_id], kind="mergesort")
         steps = [g for _, g in pdf.groupby(seq_col, sort=True)]
         # forward pass
@@ -453,7 +453,7 @@ def trajectory_frechet_pairs(
         max_users_per_cell,
     )
 
-    def dp(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def dp(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         na = int(pdf["ia"].max())
         nb = int(pdf["ib"].max())
         D = np.empty((na, nb), dtype=np.float64)

@@ -35,7 +35,7 @@ def render_tiles(points: DataFrame, out_dir: str, tile_col: str = "tile_z8") -> 
     DataFrame (tile, zoom, col, row, n_points, raster_path, vector_path)."""
     os.makedirs(out_dir, exist_ok=True)
 
-    def render(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def render(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tile = int(key[0])
         z = int(T.zoom_of(tile)[()])
         c = int(T.column_of(tile)[()])
@@ -1071,7 +1071,7 @@ def mosaic_tiles(
         .filter(F.col("_rk") <= k)
     )
 
-    def compose(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compose(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         tile = int(key[0])
         z = int(T.zoom_of(tile)[()])
         c = int(T.column_of(tile)[()])
@@ -1682,7 +1682,7 @@ def overview_pyramid(
 
     os.makedirs(out_dir, exist_ok=True)
 
-    def compose_level(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def compose_level(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         parent = int(key[0])
         z = int(T.zoom_of(parent)[()])
         pc = int(T.column_of(parent)[()])

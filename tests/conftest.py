@@ -21,3 +21,8 @@ def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: bench-scale deployment smokes (minutes, not seconds)"
     )
+    # a grouped pandas kernel without full type hints (e.g. an untyped
+    # `key`) makes PySpark fall back with this warning: fail it instead
+    config.addinivalue_line(
+        "filterwarnings", "error:Cannot infer the eval type:UserWarning"
+    )

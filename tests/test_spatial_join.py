@@ -227,9 +227,11 @@ def test_knn_many_queries_bounded(world):
         assert list(sub["image_id"]) == exp, qid
 
 
-def test_knn_join_matches_bruteforce(world):
-    """Table×table kNN join: DataFrame query side, exact vs brute force —
-    includes an ocean query to force the distributed re-expansion path."""
+@pytest.mark.parametrize("init_radius_imps", ["auto", 1 << 20])
+def test_knn_join_matches_bruteforce(world, init_radius_imps):
+    """kNN join: DataFrame query side, exact vs brute force — includes an
+    ocean query that re-expands; from the small 1 << 20 first window its
+    k-th neighbour is not provably inside, so it takes later rounds."""
     df, pdf = world
     queries = [("q_tokyo", 139.7, 35.7), ("q_paris", 2.3, 48.9), ("q_ocean", -140.0, -30.0)]
     k = 10
@@ -239,7 +241,9 @@ def test_knn_join_matches_bruteforce(world):
         for qid, lon, lat in queries
     ]
     qdf = spark.createDataFrame(qrows, "query_id string, x long, y long")
-    got = knn_mod.knn_join(df.select("image_id", "x", "y"), qdf, k=k).toPandas()
+    got = knn_mod.knn_join(
+        df.select("image_id", "x", "y"), qdf, k=k, init_radius_imps=init_radius_imps
+    ).toPandas()
     assert len(got) == len(queries) * k
 
     x = pdf["x"].to_numpy(np.float64)
@@ -282,31 +286,10 @@ def test_knn_join_matches_knn(world):
     assert np.allclose(a["dist_m"].to_numpy(), b["dist_m"].to_numpy())
 
 
-def test_knn_join_shuffle_path(world):
-    """broadcast_queries=False (the huge-query-side path) returns the
-    identical rows through a shuffle join, also for a query that must
-    re-expand: from a small first window the ocean query's k-th
-    neighbour is not provably inside, so it takes later rounds."""
-    df, _ = world
-    queries = [("q_tokyo", 139.7, 35.7), ("q_paris", 2.3, 48.9), ("q_ocean", -140.0, -30.0)]
-    qdf = knn_mod._query_frame(df.sparkSession, queries)
-    pts = df.select("image_id", "x", "y")
-    key = ["query_id", "rank"]
-    cols = ["query_id", "image_id", "dist_m", "rank"]
-    a, b = (
-        knn_mod.knn_join(pts, qdf, k=5, init_radius_imps=1 << 20, broadcast_queries=bq)
-        .toPandas()[cols].sort_values(key).reset_index(drop=True)
-        for bq in (True, False)
-    )
-    assert len(a) == 3 * 5
-    assert a.to_dict("records") == b.to_dict("records")
-
-
 def test_knn_join_reuses_round_expressions(world, monkeypatch):
-    """knn_join builds each round's Column expressions once per session,
-    and both query paths plan from them: after the first call neither
-    the probe's tile nor the Mercator distance is built again, and the
-    rows stay the same."""
+    """knn_join builds each round's Column expressions once per session:
+    after the first call neither the probe's tile nor the Mercator
+    distance is built again, and the rows stay the same."""
     from geodesk_spark.geo import tile as T
 
     monkeypatch.setattr(tiling, "_EXPR_CACHE", {})
@@ -323,23 +306,21 @@ def test_knn_join_reuses_round_expressions(world, monkeypatch):
     key = ["query_id", "rank"]
     cols = ["query_id", "image_id", "dist_m", "rank"]
 
-    def run(bq):
-        out = knn_mod.knn_join(pts, qdf, k=5, init_radius_imps=1 << 20, broadcast_queries=bq)
+    def run():
+        out = knn_mod.knn_join(pts, qdf, k=5, init_radius_imps=1 << 20)
         return out.toPandas()[cols].sort_values(key).reset_index(drop=True).to_dict("records")
 
-    first = run(True)
+    first = run()
     assert "tile" in built and "dist" in built
     n_built = len(built)
-    assert run(True) == first
-    assert run(False) == first
+    assert run() == first
     assert len(built) == n_built
 
 
 @pytest.mark.parametrize("qtype", ["int", "bigint"])
 def test_knn_join_integer_query_ids_round_trip(world, qtype):
-    """Integer query ids come back unchanged, with their input type, on
-    both paths (the broadcast path ranks on its own dense int key and
-    maps it back)."""
+    """Integer query ids come back unchanged, with their input type
+    (rounds rank on their own dense int key and map it back)."""
     df, _ = world
     ids = [7, -3, (1 << 31) - 1] if qtype == "int" else [1 << 40, 5, -(1 << 35)]
     lonlat = [(139.7, 35.7), (2.3, 48.9), (-140.0, -30.0)]
@@ -352,16 +333,11 @@ def test_knn_join_integer_query_ids_round_trip(world, qtype):
         f"qid {qtype}, x long, y long",
     )
     pts = df.select("image_id", "x", "y")
-    got = []
-    for bq in (True, False):
-        out = knn_mod.knn_join(pts, qdf, k=3, query_id="qid", broadcast_queries=bq)
-        assert _knn_out_types(out)["qid"] == qtype
-        got.append(
-            out.toPandas().sort_values(["qid", "rank"]).reset_index(drop=True).to_dict("records")
-        )
-    assert got[0] == got[1]
-    assert sorted({r["qid"] for r in got[0]}) == sorted(ids)
-    assert len(got[0]) == 3 * 3
+    out = knn_mod.knn_join(pts, qdf, k=3, query_id="qid")
+    assert _knn_out_types(out)["qid"] == qtype
+    got = out.toPandas().to_dict("records")
+    assert sorted({r["qid"] for r in got}) == sorted(ids)
+    assert len(got) == 3 * 3
 
 
 # knn_join's output types: the id and query_id types come from the inputs
@@ -522,7 +498,7 @@ def test_knn_join_cap_is_sound_and_retries(spark, monkeypatch):
     """A forced cap c on one query at the origin: its k nearest points in
     the c-box sit near the box corners (≈1.4c away), and one point on the
     x axis at 1.1c lies just outside the box.  The capped round cannot
-    prove its top k, so the query re-runs uncapped, and both paths equal
+    prove its top k, so the query re-runs uncapped, and the result equals
     brute force with the axis point in the top k."""
     c, k = 1 << 20, 4
     corners = [(0.98, 0.97), (-0.97, 0.99), (0.99, -0.96), (-0.96, -0.98)]
@@ -540,12 +516,9 @@ def test_knn_join_cap_is_sound_and_retries(spark, monkeypatch):
     monkeypatch.setattr(
         knn_mod, "_caps", lambda sample, n, k, qx, qy: caps.append(c) or np.full(len(qx), c)
     )
-    for bq in (True, False):
-        got = knn_mod.knn_join(
-            pts, qdf, k=k, init_radius_imps=1 << 24, broadcast_queries=bq
-        ).toPandas().sort_values("rank")
-        assert list(got["image_id"]) == exp, bq
-    assert caps == [c]  # the broadcast path capped the query
+    got = knn_mod.knn_join(pts, qdf, k=k, init_radius_imps=1 << 24).toPandas().sort_values("rank")
+    assert list(got["image_id"]) == exp
+    assert caps == [c]  # the query was capped
 
 
 def test_knn_point_sample_is_bounded_and_deterministic(spark):

@@ -158,15 +158,15 @@ def main():
             "the physical strategy — that is Catalyst's call."
         ),
         "knn_join": (
-            "NB: each `Scan ExistingRDD` below is one expansion round's "
-            "top-k, detached via localCheckpoint so the round's candidate "
-            "cache releases immediately.  The INTERESTING plan is inside "
-            "each round and has the same shape as knn_cellring's: explode "
-            "the query-side cell cover as columns -> broadcast (or "
-            "shuffle) hash join on the cell id -> codegen'd Mercator "
-            "distance -> ONE dual-rank window shuffle; the completion "
-            "test is a column over the per-query stats aggregate, so the "
-            "only driver-side signal per round is a scalar isEmpty."
+            "NB: the plan below is the output frame, a LocalRelation of "
+            "the rows the rounds collected.  Each expansion round runs "
+            "its own plan: the active queries' cell cover, exploded as "
+            "columns over a LocalRelation -> broadcast hash join on the "
+            "cell id with the cap box in its condition -> codegen'd "
+            "Mercator distance -> partial WindowGroupLimit (top-k per "
+            "query per task) -> Exchange on _qid -> one Window -> ONE "
+            "collect per round; the completion proof runs on the driver "
+            "over those k rows per query."
         ),
         "dbscan_clusters": (
             "NB: the `Scan ExistingRDD` is the connected-components "
