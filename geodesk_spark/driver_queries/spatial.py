@@ -269,7 +269,8 @@ def _hex_grid_layer() -> list[tuple[str, np.ndarray]]:
 def _q_pip_partitioned(spark, sf_dir):
     """containing(point) with a DataFrame layer — the shuffle big-big
     path (operators/bigjoin.py): distributed Arrow layer prep, cell-id
-    shuffle equi-join, exact ray-cast fold over a segment COLUMN (no
+    shuffle equi-join, exact ray-cast fold over each BOUNDARY
+    candidate's slab edges, joined on (poly_id, slab key) as data (no
     broadcast, no plan literals).  Same three-band semantics as pip_join
     (Filter.filterForTile, FastTileFilter.java:40-60)."""
     from geodesk_spark.operators import bigjoin

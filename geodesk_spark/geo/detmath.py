@@ -98,14 +98,14 @@ def det_atan2(y, x) -> np.ndarray:
     y = np.asarray(y, dtype=np.float64) + 0.0
     x = np.asarray(x, dtype=np.float64) + 0.0
     ay, ax = np.abs(y), np.abs(x)
-    safe = lambda d: np.where(d == 0.0, 1.0, d)  # guarded, arm unused
     small = ay <= ax * _TAN_PI_8
     big = ax <= ay * _TAN_PI_8
-    v = np.where(
-        small,
-        ay / safe(ax),
-        np.where(big, ax / safe(ay), (ay - ax) / safe(ay + ax)),
-    )
+    # pick each element's operands, then divide once: no discarded arm
+    # divides (and overflows); a zero denominator only meets a zero
+    # numerator (x = y = 0), guarded to 0 / 1
+    num = np.where(small, ay, np.where(big, ax, ay - ax))
+    den = np.where(small, ax, np.where(big, ay, ay + ax))
+    v = num / np.where(den == 0.0, 1.0, den)
     p = v * _horner(v * v, _ATAN_C)
     base = np.where(small, p, np.where(big, _PI_2 - p, _PI_4 + p))
     # quadrant: x<0 reflects through π; sign of y applies last

@@ -14,10 +14,11 @@ Filter.filterForTile, FastTileFilter.java:40-60) but makes every stage
 distributed:
 
 1. **Layer preparation is a parallel Arrow pass**, not driver work:
-   ``layer_bands`` runs the adaptive quadtree classifier
-   (``spatial_join._quadtree_bands``) per polygon inside ``mapInPandas``
-   over the layer DataFrame, emitting (cell, poly_id, band) rows.  A
-   10^9-polygon layer prepares at full cluster parallelism.
+   ``layer_tables`` runs ``spatial_join.prepare_polygon`` (the adaptive
+   quadtree classifier and the slab edges) per polygon inside
+   ``mapInPandas`` over the layer DataFrame, emitting (cell, poly_id,
+   band) rows and (poly_id, slab key, edges) rows from the one result.
+   A 10^9-polygon layer prepares at full cluster parallelism.
 2. **The candidate join is a shuffle equi-join on the cell id** — both
    sides repartition by cell; no broadcast required (AQE may still
    elect a broadcast when the prepared layer turns out small, which is
@@ -26,19 +27,20 @@ distributed:
    (see ``_quadtree_bands``: every polygon's bands land on that fixed
    level set), so probe fan-out is 4 rows/point regardless of layer
    size or polygon size mix.
-3. **The exact ray-cast is the flagship's fold**
-   (``spatial_join.odd_crossings``), but over a whole-polygon segment
-   array fetched by a second shuffle equi-join on poly_id, where the
-   flagship broadcasts per-row slabs.  Geometry arrives as data, never
-   as plan literals, so plan size stays O(1) in the layer.  Only
-   BOUNDARY-band candidates take this join; INTERIOR matches bypass it
-   entirely.
+3. **The exact ray-cast is the flagship's fold over the flagship's
+   slab edges** (``spatial_join.odd_crossings``): every candidate
+   left-joins the slab rows on (poly_id, ``spatial_join.slab_key_col``)
+   — a shuffle equi-join where the flagship broadcasts — and one filter
+   keeps INTERIOR rows and the BOUNDARY rows whose slab edges it
+   crosses an odd number of times.  Geometry arrives as data, never as
+   plan literals, so plan size stays O(1) in the layer.
 
-Skew note: the boundary⋈segments join keys on poly_id, so one enormous
-polygon with millions of boundary candidates is a hot key — exactly the
-shape AQE's skew-join splitting handles (enabled in session.py), and
-the adaptive quadtree already bounds boundary-band *width* per polygon
-(max_cells), which bounds the duplication factor.
+Skew note: the slab join keys on (poly_id, slab), so one enormous
+polygon's boundary candidates spread over its slabs instead of landing
+on one key.  Its INTERIOR candidates carry a null slab key and so share
+the one key (poly_id, null); that, and a dense city inside one slab,
+are skew on the left side of a left outer join, the shape AQE's
+skew-join splitting handles (enabled in session.py).
 
 A point lies in at most one quadtree leaf of a given polygon (the
 adaptive refinement partitions the bbox disjointly across its mixed
@@ -53,17 +55,16 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from geodesk_spark.geo import pip
 from geodesk_spark.operators.spatial_join import (
     BOUNDARY,
     INTERIOR,
     EDGE_FIELDS,
     EDGE_SCHEMA,
-    _quadtree_bands,
-    _segments,
     edge_fields,
     odd_crossings,
     point_cell_col,
+    prepare_polygon,
+    slab_key_col,
 )
 
 #: The fixed quadtree level set every polygon's bands land on
@@ -71,61 +72,48 @@ from geodesk_spark.operators.spatial_join import (
 #: refines in steps of 4).
 SHARED_LEVELS = (4, 8, 12, 16)
 
+#: The ``band`` of a prepared-layer row that is a slab row, not a cell.
+_SLAB_ROW = 0
 
-def layer_bands(polygons: DataFrame) -> DataFrame:
+
+def layer_tables(polygons: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Distributed layer preparation: (poly_id string, rings binary) →
-    (cell long, poly_id string, band int).
+    the band frame (_band_cell long, poly_id string, _band int) and the slab
+    frame (poly_id string, _slab long, _edges array<struct<EDGE_FIELDS>>).
 
-    One Arrow pass over the layer; each task classifies its polygons with
-    the same adaptive quadtree kernel the broadcast path uses driver-side,
-    so both paths see byte-identical band tables for the same layer
-    (pinned in tests/test_bigjoin.py against ``prepare_layer``'s
-    ``qt_cells``/``qt_codes``).
+    One Arrow pass over the layer; each task prepares its polygons with
+    ``spatial_join.prepare_polygon``, the function the broadcast path
+    runs driver-side, so both paths see identical band and slab tables
+    for the same layer (pinned in tests/test_bigjoin.py against
+    ``prepare_layer``).  Both frames are filters of that one pass: slab
+    rows carry band ``_SLAB_ROW`` and their slab key in ``key``.
     """
 
     def gen(batches):
         for pdf in batches:
-            cells_out: list[np.ndarray] = []
-            ids_out: list[np.ndarray] = []
-            codes_out: list[np.ndarray] = []
+            parts = []
             for pid, blob in zip(pdf["poly_id"], pdf["rings"]):
-                _, cells, codes = _quadtree_bands(pip.unpack_rings(bytes(blob)))
-                cells_out.append(cells)
-                codes_out.append(codes.astype(np.int32))
-                ids_out.append(np.full(len(cells), pid, dtype=object))
-            if not cells_out:
-                continue
-            yield pd.DataFrame(
-                {
-                    "cell": np.concatenate(cells_out),
-                    "poly_id": np.concatenate(ids_out),
-                    "band": np.concatenate(codes_out),
-                }
-            )
+                p = prepare_polygon(pid, bytes(blob))
+                parts.append(pd.DataFrame({
+                    "poly_id": pid, "band": p.qt_codes.astype(np.int32), "key": p.qt_cells,
+                    **dict.fromkeys(EDGE_FIELDS),
+                }))
+                parts.append(pd.DataFrame(
+                    [(pid, _SLAB_ROW, int(k), *edge_fields(e))
+                     for k, e in zip(p.slab_keys, p.slab_edges)],
+                    columns=["poly_id", "band", "key", *EDGE_FIELDS],
+                ))
+            if parts:
+                yield pd.concat(parts, ignore_index=True)
 
-    return polygons.mapInPandas(gen, schema="cell long, poly_id string, band int")
-
-
-def layer_segments(polygons: DataFrame) -> DataFrame:
-    """(poly_id, rings binary) → (poly_id, segs array<struct<ylo,yhi,x1,y1,dx,dy>>).
-
-    The fold's per-edge fields (``spatial_join.edge_fields``) are emitted
-    as parallel double arrays (columnar through Arrow) and zipped
-    JVM-side — the exact-test fold then runs on a plain column, keeping
-    plan size independent of the layer.  All rings' segments
-    concatenate into one array: crossing parity over the union of rings
-    == XOR of per-ring parities (PointInPolygon.java:21-23).
-    """
-
-    def gen(batches):
-        for pdf in batches:
-            rows = [(pid, *edge_fields(_segments(pip.unpack_rings(bytes(blob)))))
-                    for pid, blob in zip(pdf["poly_id"], pdf["rings"])]
-            if rows:
-                yield pd.DataFrame(rows, columns=["poly_id", *EDGE_FIELDS])
-
-    cols = polygons.mapInPandas(gen, schema="poly_id string, " + EDGE_SCHEMA)
-    return cols.select("poly_id", F.arrays_zip(*EDGE_FIELDS).alias("segs"))
+    rows = polygons.mapInPandas(gen, schema="poly_id string, band int, key long, " + EDGE_SCHEMA)
+    bands = rows.filter(F.col("band") != _SLAB_ROW).select(
+        F.col("key").alias("_band_cell"), "poly_id", F.col("band").alias("_band")
+    )
+    slabs = rows.filter(F.col("band") == _SLAB_ROW).select(
+        "poly_id", F.col("key").alias("_slab"), F.arrays_zip(*EDGE_FIELDS).alias("_edges")
+    )
+    return bands, slabs
 
 
 def contains_points_big(
@@ -142,32 +130,32 @@ def contains_points_big(
     Returns (keep_cols…, poly_id) match rows (or, with ``anti=True``,
     the points matching NO polygon — keep_cols must identify a row).
     Results are identical to ``spatial_join.contains_points`` on the same
-    layer (pinned in tests/test_bigjoin.py); only the physical plan
-    differs: shuffle joins instead of broadcast, Arrow layer prep instead
-    of driver prep, whole-polygon segment arrays instead of slab edges.
+    layer (pinned in tests/test_bigjoin.py), and so is the plan's shape:
+    probe explode, band join on the cell, slab key, slab left join, one
+    INTERIOR-or-odd-crossings filter.  Only the physical plan differs:
+    shuffle joins instead of broadcast, Arrow layer prep instead of
+    driver prep.
     """
     keep = keep_cols or [c for c in points.columns if c not in ("x", "y")]
-    bands = layer_bands(polygons)
-    segs = layer_segments(polygons)
+    bands, slabs = layer_tables(polygons)
 
     probe = points.withColumn(
         "_cell", F.explode(F.array(*[point_cell_col(z) for z in SHARED_LEVELS]))
     )
-    j = probe.join(bands, probe["_cell"] == bands["cell"])
-
-    interior = j.filter(F.col("band") == INTERIOR).select(*keep, "poly_id")
-
-    boundary = (
-        j.filter(F.col("band") == BOUNDARY)
-        .select(*keep, F.col("x").cast("double").alias("_xd"),
-                F.col("y").cast("double").alias("_yd"), "poly_id")
-        .join(segs, "poly_id")
+    slab = F.coalesce(*[
+        F.when((F.col("_band") == BOUNDARY) & (F.shiftright("_band_cell", 40) == z),
+               slab_key_col(z))
+        for z in SHARED_LEVELS
+    ])
+    matches = (
+        probe.join(bands, F.col("_cell") == F.col("_band_cell"))
+        .withColumn("_slab", slab)
+        .join(slabs, ["poly_id", "_slab"], "left")
+        .withColumns({"_xd": F.col("x").cast("double"), "_yd": F.col("y").cast("double")})
+        .filter((F.col("_band") == INTERIOR)
+                | odd_crossings(F.col("_edges"), F.col("_xd"), F.col("_yd")))
+        .select(*keep, "poly_id")
     )
-    exact = boundary.filter(
-        odd_crossings(F.col("segs"), F.col("_xd"), F.col("_yd"))
-    ).select(*keep, "poly_id")
-
-    matches = interior.unionByName(exact)
     if not anti:
         return matches
     return points.select(*keep).join(

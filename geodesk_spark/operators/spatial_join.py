@@ -323,6 +323,13 @@ def point_cell_col(zoom: int):
     )
 
 
+def slab_key_col(zoom: int):
+    """Column: the slab key of the point in a BOUNDARY cell at ``zoom``,
+    (zoom + SLAB_STEP) << 20 | row — the key ``_slab_edges`` writes.
+    Both point-in-polygon joins fetch a candidate's edges by it."""
+    return F.shiftright(point_cell_col(zoom + SLAB_STEP), 20)
+
+
 #: Per-edge fields the exact-test fold reads, as parallel double arrays.
 EDGE_FIELDS = ("ylo", "yhi", "x1", "y1", "dx", "dy")
 EDGE_SCHEMA = ", ".join(f"{c} array<double>" for c in EDGE_FIELDS)
@@ -379,9 +386,9 @@ def _layer_plan(spark, prepared: list[PreparedPolygon]) -> dict:
     present in the layer (packed in the cell ids' high bits), joined
     once against the broadcast band table.  A quadtree leaf matches at
     most one zoom per polygon, so no duplicates arise.  A BOUNDARY row
-    keys the slab table by its polygon's index and its point's cell
-    >> 20 at the cell's zoom + SLAB_STEP, (zoom << 20) | row; INTERIOR
-    rows get a null key and pass the slab join untouched."""
+    keys the slab table by its polygon's index and its point's
+    ``slab_key_col``; INTERIOR rows get a null key and pass the slab
+    join untouched."""
     zoom_list = sorted(
         {int(z) for p in prepared for z in np.unique(p.qt_cells >> 40).tolist()}
     )
@@ -411,7 +418,7 @@ def _layer_plan(spark, prepared: list[PreparedPolygon]) -> dict:
         "on": F.col("_cell") == bands_df._band_cell,
         "slab": F.coalesce(*[
             F.when((F.col("_band") == BOUNDARY) & (F.shiftright("_band_cell", 40) == z),
-                   F.shiftleft("_pidx", 32) + F.shiftright(point_cell_col(z + SLAB_STEP), 20))
+                   F.shiftleft("_pidx", 32) + slab_key_col(z))
             for z in zoom_list
         ]),
         "xy": {"_xd": F.col("x").cast("double"), "_yd": F.col("y").cast("double")},

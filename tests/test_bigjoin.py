@@ -1,7 +1,7 @@
 """Shuffle big-big PIP join: parity vs the broadcast flagship + brute force.
 
-The two paths must agree exactly — same band kernel, same ray-cast
-convention — so any divergence is a real bug, not float noise.
+The two paths must agree exactly — same band and slab tables, same
+ray-cast fold — so any divergence is a real bug, not float noise.
 """
 
 import numpy as np
@@ -45,15 +45,24 @@ def test_big_join_matches_broadcast_and_bruteforce(spark, world, layer):
 
     # Broadcast flagship on the identical layer.
     prepared = spatial_join.prepare_layer(layer)
-    # ... whose driver-side band tables are byte-identical to the
-    # distributed layer_bands rows.
-    got_bands = sorted(map(tuple, bigjoin.layer_bands(_layer_df(spark, layer))
-                           .toPandas()[["cell", "poly_id", "band"]].to_numpy().tolist()))
+    # ... whose driver-side band and slab tables are identical to the
+    # distributed layer_tables rows.
+    bands, slabs = bigjoin.layer_tables(_layer_df(spark, layer))
+    got_bands = sorted(map(tuple, bands.toPandas()[["_band_cell", "poly_id", "_band"]]
+                           .to_numpy().tolist()))
     want_bands = sorted(
         (int(c), p.poly_id, int(b))
         for p in prepared for c, b in zip(p.qt_cells, p.qt_codes)
     )
     assert got_bands == want_bands
+    got_slabs = sorted(
+        (r["poly_id"], r["_slab"], [tuple(e) for e in r["_edges"]]) for r in slabs.collect()
+    )
+    want_slabs = sorted(
+        (p.poly_id, int(k), list(zip(*spatial_join.edge_fields(e))))
+        for p in prepared for k, e in zip(p.slab_keys, p.slab_edges)
+    )
+    assert got_slabs == want_slabs
     bc = (
         spatial_join.contains_points(df, prepared, keep_cols=["image_id"])
         .toPandas()
@@ -94,13 +103,20 @@ def test_big_join_no_duplicate_candidates(spark, world, layer):
     assert n == nd
 
 
-def test_big_join_plan_has_no_layer_literals(spark, world, layer):
+def test_big_join_plan_has_no_layer_literals(spark, world, layer, monkeypatch):
     """Plan size stays O(1) in the layer: geometry travels as data, so the
     analyzed plan string must not embed per-vertex literals (the same
-    check pins the broadcast path in tests/test_spatial_join.py)."""
+    check pins the broadcast path in tests/test_spatial_join.py).  And
+    the plan is the flagship's: no interior/exact Union, and every shared
+    level's slab key comes from the helper the flagship keys its slabs by."""
     df, _ = world
+    levels = []
+    real = spatial_join.slab_key_col
+    monkeypatch.setattr(bigjoin, "slab_key_col", lambda z: levels.append(z) or real(z))
     out = bigjoin.contains_points_big(df, _layer_df(spark, layer), keep_cols=["image_id"])
     assert_geometry_as_data(out, layer, max_len=100_000)
+    assert levels == list(bigjoin.SHARED_LEVELS)
+    assert "Union" not in out._jdf.queryExecution().optimizedPlan().toString()
 
 
 # ---------------------------------------------------------------- crossing join

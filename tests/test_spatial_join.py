@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from geodesk_spark.geo import mercator, pip
-from geodesk_spark.operators import knn as knn_mod, spatial_join, tiling
+from geodesk_spark.operators import bigjoin, knn as knn_mod, spatial_join, tiling
 from geodesk_spark.sources import synth
 
 
@@ -166,7 +166,8 @@ def assert_geometry_as_data(df, layer, max_len: int = 10_000):
 def test_contains_points_slab_exact_matches_bruteforce(spark, make_layer):
     """The one exact path (BOUNDARY candidates fold over their slab's
     edges only) equals the numpy ray-cast over every ring, including
-    points whose y sits exactly on a slab row's bottom and top value."""
+    points whose y sits exactly on a slab row's bottom and top value —
+    in the broadcast flagship and in the shuffle join alike."""
     layer = make_layer()
     prepared = spatial_join.prepare_layer(layer)
     rng = np.random.default_rng(5)
@@ -200,6 +201,10 @@ def test_contains_points_slab_exact_matches_bruteforce(spark, make_layer):
     assert got == exp
     assert len(exp) > 100
     assert_geometry_as_data(out, layer)
+    ldf = spark.createDataFrame([(p["poly_id"], bytearray(p["rings"])) for p in layer],
+                                "poly_id string, rings binary")
+    big = bigjoin.contains_points_big(pts, ldf, keep_cols=["image_id"])
+    assert set(map(tuple, big.toPandas()[["image_id", "poly_id"]].to_numpy().tolist())) == exp
 
 
 def test_knn_many_queries_bounded(world):

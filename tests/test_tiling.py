@@ -111,7 +111,7 @@ def test_exactly_once_dedup(spark):
     exploded = tiling.explode_bbox_tiles(spark.createDataFrame(pdf)).cache()
 
     for trial in range(5):
-        qminx, qminy, qmaxx, qmaxy = (int(v) for v in _random_bboxes(1, rng))
+        qminx, qminy, qmaxx, qmaxy = (v.item() for v in _random_bboxes(1, rng))
         tiles = tiling.query_tile_list(qminx, qminy, qmaxx, qmaxy)
         res = (
             exploded.filter(F.col("tile").isin(tiles))
