@@ -151,9 +151,9 @@ def contains_points_big(
         probe.join(bands, F.col("_cell") == F.col("_band_cell"))
         .withColumn("_slab", slab)
         .join(slabs, ["poly_id", "_slab"], "left")
-        .withColumns({"_xd": F.col("x").cast("double"), "_yd": F.col("y").cast("double")})
         .filter((F.col("_band") == INTERIOR)
-                | odd_crossings(F.col("_edges"), F.col("_xd"), F.col("_yd")))
+                | odd_crossings(F.col("_edges"), F.col("x").cast("double"),
+                                F.col("y").cast("double")))
         .select(*keep, "poly_id")
     )
     if not anti:

@@ -548,8 +548,13 @@ def segment_candidates(
     foot point written out at every use inside the distance polynomial,
     and the stage feeding the window's sort then overflows janino's
     64 KB method limit (interpreted fallback)."""
+    # the point's search delta (a det_cosh polynomial) is projected once
+    # per point: written into the join condition, the nested-loop join
+    # evaluates it four times per point × segment pair
     p = points.select(
-        *point_cols, F.col("x").alias("px"), F.col("y").alias("py")
+        *point_cols, F.col("x").alias("px"), F.col("y").alias("py"),
+        (mercator.delta_from_meters_col(F.lit(float(meters)), F.col("y"))
+         * F.lit(float(slack))).alias("_delta"),
     )
     s = segs.select(
         seg_id, "x1", "y1", "x2", "y2",
@@ -558,9 +563,7 @@ def segment_candidates(
         F.least("y1", "y2").alias("_sminy"),
         F.greatest("y1", "y2").alias("_smaxy"),
     )
-    delta = mercator.delta_from_meters_col(
-        F.lit(float(meters)), F.col("py")
-    ) * F.lit(float(slack))
+    delta = F.col("_delta")
     cand = p.join(
         F.broadcast(s),
         (F.col("px") >= F.col("_sminx") - delta)

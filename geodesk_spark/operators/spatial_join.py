@@ -345,9 +345,11 @@ def edge_fields(segs: np.ndarray) -> list[list[float]]:
 
 
 def odd_crossings(edges, x, y):
-    """Column: does the point (double columns ``x``, ``y``; pre-cast, as
-    Spark re-evaluates them per element) cross an odd number of
-    ``edges`` (array<struct<EDGE_FIELDS>>)?  A JVM higher-order fold with
+    """Column: does the point (double Columns ``x``, ``y``) cross an odd
+    number of ``edges`` (array<struct<EDGE_FIELDS>>)?  Pass the casts
+    themselves (``F.col("x").cast("double")``): the optimizer inlines a
+    projected cast back into the fold's lambda anyway, so a pre-cast
+    column saves nothing.  A JVM higher-order fold with
     geo/pip.points_in_ring's answer bit for bit: ``ylo <= y < yhi`` is
     its half-open ``y1 <= y < y2 or y2 <= y < y1``, and the intersection
     is the same float64 ops in the same order.  Crossing parity over
@@ -421,9 +423,8 @@ def _layer_plan(spark, prepared: list[PreparedPolygon]) -> dict:
                    F.shiftleft("_pidx", 32) + slab_key_col(z))
             for z in zoom_list
         ]),
-        "xy": {"_xd": F.col("x").cast("double"), "_yd": F.col("y").cast("double")},
         "match": (F.col("_band") == INTERIOR)
-        | odd_crossings(F.col("_edges"), F.col("_xd"), F.col("_yd")),
+        | odd_crossings(F.col("_edges"), F.col("x").cast("double"), F.col("y").cast("double")),
     }
 
 
@@ -498,7 +499,7 @@ def contains_points(
         .withColumn("_slab", entry["slab"])
         .join(F.broadcast(entry["rings_bc"]), "_slab", "left")
     )
-    matches = j.withColumns(entry["xy"]).filter(entry["match"]).select(*keep, "poly_id")
+    matches = j.filter(entry["match"]).select(*keep, "poly_id")
     if not anti:
         return matches
     return points.select(*keep).join(

@@ -42,6 +42,17 @@ rest are hard-linked into the new version), and ``compact`` bin-packs
 small files while linking the already-right-sized ones.  At 10^12 rows
 these three are the difference between touching a manifest and touching
 the table.
+
+Snapshot data is PLAIN-encoded: every data-version write (``stage``,
+``append_stage``, and the copy-on-write rewrites of ``merge_upsert``,
+``compact`` and ``rewrite_deletes``) goes through ``_write_data``, which
+turns parquet's dictionary encoding off.  The columns these stages write
+(ids, coordinates, cell ids) are high-cardinality: parquet-mr grows each
+column's dictionary toward its 1 MB limit, then falls back to plain and
+re-encodes the values already written, so the dictionary pass is paid
+and discarded.  Plain encoding is a fixed property of the format
+(Iceberg makes it a table write property), not a knob.  Footer min/max
+statistics do not depend on it, so the pruning above is unchanged.
 """
 
 from __future__ import annotations
@@ -84,6 +95,16 @@ def _scan(
     if isinstance(schema, dict):
         reader = reader.schema(StructType.fromJson(schema))
     return reader.parquet(*paths)
+
+
+def _write_data(df: DataFrame, out: str, partition_by: list[str] | None = None) -> None:
+    """The one parquet write of a snapshot version's data files:
+    overwrite ``out``, dictionary encoding off (see the module
+    docstring)."""
+    writer = df.write.mode("overwrite").option("parquet.enable.dictionary", "false")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(out)
 
 
 def _file_manifest(files: list[str], base: str) -> list[dict]:
@@ -274,10 +295,7 @@ class Pipeline:
         out = self._version_dir(name, (versions[-1] + 1) if versions else 1)
         t0 = time.time()
         df = fn(self.spark)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(out)
+        _write_data(df, out, partition_by)
         elapsed = time.time() - t0
 
         # per-partition lineage from the parquet FOOTERS (driver-side,
@@ -374,7 +392,7 @@ def append_stage(p: "Pipeline", name: str, fn) -> int:
     versions = p._versions(name)
     out = p._version_dir(name, (versions[-1] + 1) if versions else 1)
     df = fn(p.spark)
-    df.write.mode("overwrite").parquet(out)
+    _write_data(df, out)
     per_file = _file_manifest(_parquet_files(out), out)
     n_rows = sum(r["rows"] for r in per_file)
     manifest = {
@@ -552,6 +570,7 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     # is capped at the stage's data-file count, so the vector never has
     # more files than the data it deletes from.
     n_parts = min(len(parts), int(p.spark.conf.get("spark.sql.shuffle.partitions")))
+    # default encoding: the file column repeats a few names, so it dictionary-encodes well
     new_dels.repartition(n_parts, F.col("file")).write.mode("overwrite").parquet(
         _deletes_dir(out)
     )
@@ -656,8 +675,7 @@ def _commit_rewrite(
     per_file = list(kept)
     if rewritten is not None:
         tmp = out + ".data"
-        w = rewritten.coalesce(n_out_files) if n_out_files else rewritten
-        w.write.mode("overwrite").parquet(tmp)
+        _write_data(rewritten.coalesce(n_out_files) if n_out_files else rewritten, tmp)
         new_files = []
         for f in _parquet_files(tmp):
             dst = os.path.join(out, f"{prefix}-{os.path.basename(f)}")

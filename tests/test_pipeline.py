@@ -1549,3 +1549,44 @@ def test_empty_partitioned_stage_commits(spark, tmp_path):
     assert p.lineage("tbl")["n_rows"] == 0
     again = Pipeline(spark, root).stage("tbl", empty, partition_by=["part"])
     assert again.count() == 0 and len(calls) == 1
+
+
+def test_snapshot_data_files_are_plain_encoded(spark, tmp_path):
+    """Every data file a snapshot write commits (stage, a partitioned
+    stage, append_stage, merge_upsert, compact) has no dictionary page,
+    and its primitive columns still carry the footer min/max statistics
+    the manifest prunes with."""
+    import pyarrow.parquet as pq
+
+    from geodesk_spark.streaming.checkpoint import _parquet_files
+
+    def frame(s, lo, hi):
+        return s.range(lo, hi, 1, 4).select(
+            F.col("id"),
+            (F.col("id") * 0.5).alias("x"),
+            F.concat(F.lit("c"), (F.col("id") % 5).cast("string")).alias("cell"),
+            (F.col("id") % 3).alias("part"),
+        )
+
+    root = str(tmp_path / "pipe")
+    p = Pipeline(spark, root)
+    p.stage("tbl", lambda s: frame(s, 0, 400))
+    p.stage("parts", lambda s: frame(s, 0, 400), partition_by=["part"])
+    p.append_stage("ing", lambda s: frame(s, 0, 100))
+    p.merge_upsert("tbl", frame(spark, 350, 450), ["id"])
+    assert p.compact("tbl") is not None
+
+    files = _parquet_files(root)
+    names = {os.path.basename(f)[0] for f in files if "/tbl/" in f}
+    assert {"p", "u", "c"} <= names  # the stage's, merge's and compact's files
+    assert any("/parts/" in f for f in files) and any("/ing/" in f for f in files)
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        assert md.num_rows > 0, f
+        for rg in range(md.num_row_groups):
+            for i in range(md.num_columns):
+                col = md.row_group(rg).column(i)
+                assert not col.has_dictionary_page, (f, col.path_in_schema)
+                assert col.statistics is not None and col.statistics.has_min_max, (
+                    f, col.path_in_schema,
+                )

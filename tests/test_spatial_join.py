@@ -1,5 +1,7 @@
 """Three-band PIP join + distance filter + kNN vs brute-force numpy."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -611,6 +613,29 @@ def test_snap_to_segments_bruteforce(world):
         else:
             assert ids[i] not in got
     assert n_checked > 20  # the radius actually matched a useful subset
+
+
+def test_segment_candidates_join_reads_projected_delta(spark):
+    """segment_candidates' nested-loop join compares against the point's
+    projected ``_delta``: its condition is four short bbox tests, with
+    no Mercator polynomial evaluated per point × segment pair."""
+    pts = spark.createDataFrame(
+        [(i, 1_000_000 * i, -2_000_000 * i) for i in range(8)], "pid long, x long, y long"
+    )
+    segs = spark.createDataFrame(
+        [(0, 0, 0, 5_000_000, 0)], "seg_id long, x1 long, y1 long, x2 long, y2 long"
+    )
+    cand = knn_mod.segment_candidates(pts, segs, 500.0, ["pid"], max_cands=2)
+    plan = cand._jdf.queryExecution().executedPlan().toString()
+    conds = [
+        re.sub(r"#\d+L?", "", ln.split("Inner, ", 1)[1])
+        for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln
+    ]
+    assert conds, plan
+    for cond in conds:
+        assert "_delta" in cond, cond
+        # 249 chars; with the polynomial written in, 9,425
+        assert len(cond) < 1000, cond
 
 
 def test_idw_interpolate_matches_numpy_fold(world):
