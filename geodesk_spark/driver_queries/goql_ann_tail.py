@@ -353,8 +353,8 @@ def _semdedup_sql() -> str:
 def _q_ann_sq8(spark, sf_dir):
     """Scalar-int8-quantized ANN (ann.sq8_topk): per-vector max-abs/127
     scale, floor-form codes, INTEGER dot/norm scoring — the 4× smaller
-    stored index.  Pure JVM columns end to end (encode is a codegen'd
-    higher-order projection, scoring a broadcast NLJ + folds); oracle =
+    stored index.  Pure JVM columns end to end (encode is a higher-order
+    projection, scoring a broadcast NLJ + folds); oracle =
     the identical encode+score arithmetic in SQL, bit-exact because
     every intermediate is an exact integer (ann.sq8_topk_sql).
     Measured recall@5 vs float brute force: tests/test_ann.py."""

@@ -273,8 +273,9 @@ def _q_polygon_centroid(spark, sf_dir):
     """Area-weighted polygon centroid (StoredFeature.java:473-479's
     shoelace pass reused for centroid weights): rings as
     array<struct<x,y>>, one transform + one struct-accumulator
-    aggregate — higher-order functions in whole-stage codegen, no UDF,
-    no shuffle (geometry_ops.ring_centroid_cols)."""
+    aggregate — JVM higher-order functions (interpreted, outside
+    whole-stage codegen), no UDF, no shuffle
+    (geometry_ops.ring_centroid_cols)."""
     from geodesk_spark.operators import geometry_ops
 
     o = tables.load_spread(spark, sf_dir, "orders")
@@ -1091,8 +1092,9 @@ def _q_tile_clip_polygons(spark, sf_dir):
     """Sutherland–Hodgman clip of star-octagon polygons to the zoom-7
     tile grid (tiles_sink.clip_polygons_to_tiles): the AREA-feature side
     of the vector-tile emit clip (tile_clip_segments covers lines) —
-    bbox cover-explode then four chained higher-order half-plane passes,
-    one codegen stage, zero shuffle, output pre-keyed by tile."""
+    bbox cover-explode then four chained higher-order half-plane passes
+    (interpreted, outside whole-stage codegen), zero shuffle, output
+    pre-keyed by tile."""
     from geodesk_spark.operators import tiles_sink
 
     o = tables.load_spread(spark, sf_dir, "orders")

@@ -544,8 +544,9 @@ def pq_topk_sql(
 def _dot_fold_col(emb: str, centroid: np.ndarray) -> "F.Column":
     """Left-assoc Σ emb[i]·cᵢ as a HIGHER-ORDER-FUNCTION fold: the
     centroid enters as a constant-folded literal array and zip_with/
-    aggregate compile to a loop, not 64 inlined terms — 16 of these in
-    one projection stays far under janino's method-size/heap limits
+    aggregate run as one interpreted loop (higher-order functions stay
+    outside whole-stage codegen), not 64 inlined terms — so 16 of these
+    in one projection stay clear of janino's method-size/heap limits
     (the unrolled-expression form OOMed codegen).  aggregate folds left
     → the exact op ORDER of the SQL twin's sequential list_sum."""
     cl = F.array(*[F.lit(float(v)) for v in centroid])
@@ -1031,9 +1032,10 @@ def kcenter_select(
     the SQL twin, so selection is bit-deterministic across engines.
 
     Scale shape: k rounds; each round evaluates ONE literal-center
-    cosine over the table (codegen'd zip_with/aggregate fold, no
-    Python), folds it into a running min column (localCheckpoint — k
-    materializations), and takes a TakeOrdered limit-1.  Driver traffic
+    cosine over the table (a JVM zip_with/aggregate fold, interpreted
+    outside whole-stage codegen; no Python), folds it into a running
+    min column (localCheckpoint — k materializations), and takes a
+    TakeOrdered limit-1.  Driver traffic
     is one (id, vector) row per round — the same bounded per-round
     scalar signal knn_join uses.  Output: (sel_rank, vec_id), k rows.
     """
@@ -1313,9 +1315,10 @@ def sq8_encode(df: DataFrame, id_col: str = "vec_id", emb: str = "embedding") ->
     s = max|x|/127, codes q_i = floor(x_i/s + 0.5) ∈ [-127, 127].
 
     Output: (id, qvec array<bigint>, scale double).  Everything is a
-    JVM higher-order Column (one codegen'd projection, no shuffle, no
-    Python).  The scale is let-bound through a staged projection so the
-    max-abs fold is evaluated once per row, not once per element.
+    JVM higher-order Column (one projection, interpreted outside
+    whole-stage codegen, no shuffle, no Python).  The scale is let-bound
+    through a staged projection so the max-abs fold is evaluated once
+    per row, not once per element.
 
     Determinism: the encode is floor-form (the repo's rounding law) and
     the max-abs fold is order-free, so codes are bit-identical across
@@ -1346,8 +1349,9 @@ def sq8_topk(
     tests/test_ann.py (printed + pinned).
 
     Scale shape: the query side is a bounded broadcast (≤ |query_ids|
-    rows); the corpus side is ONE codegen'd scan — encode, integer
-    zip_with/aggregate folds, partial top-k via the rank window.  Only
+    rows); the corpus side is ONE scan — encode, integer
+    zip_with/aggregate folds (interpreted, outside whole-stage codegen),
+    partial top-k via the rank window.  Only
     (n_queries × candidates) rows reach the window shuffle.  At 100 TB
     the codes table is the thing you'd persist (sq8_encode → parquet:
     4× smaller scans); scoring math is unchanged.

@@ -141,8 +141,9 @@ def hard_negatives(
     both engines fold the dot in index order, so order is stable).
 
     Scale shape: the query side is a bounded broadcast; the corpus
-    side is ONE codegen'd scan — broadcast nested-loop against the tiny
-    query set, JVM zip_with/aggregate folds, label-mismatch filter
+    side is ONE scan — broadcast nested-loop against the tiny
+    query set, JVM zip_with/aggregate folds (interpreted, outside
+    whole-stage codegen), label-mismatch filter
     inside the same stage, then only (n_queries × candidates) rows
     reach the rank-window shuffle.  For table×table mining compose
     ann.with_lsh_bucket first (see hard_negatives_lsh) so candidates

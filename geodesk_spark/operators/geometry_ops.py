@@ -60,8 +60,9 @@ def ring_centroid_cols(ring):
     This is the reference's polygon centroid decomposition
     (StoredFeature.java:473-479 computes the same shoelace pass for
     area(); the centroid weights reuse each edge cross term).  One
-    ``transform`` + one struct-accumulator ``aggregate`` — higher-order
-    functions inside whole-stage codegen, no UDF, no shuffle.  The fold
+    ``transform`` + one struct-accumulator ``aggregate`` — JVM
+    higher-order functions, no UDF, no shuffle (interpreted: an operator
+    holding one runs outside whole-stage codegen).  The fold
     is a left fold in array order, so an oracle that sums the same
     terms left-associatively is bit-identical.  Degenerate rings
     (a2 == 0) yield NULL centroids via ANSI x/0 — filter on a2 first.

@@ -19,7 +19,10 @@ Spark shape (no per-query scans):
    ``xxhash64(id)``, :func:`_point_sample`) sizes the first window from
    the estimated corpus size and gives each query a cap box:
    ``CAP_SCALE`` × its Chebyshev distance to its ``CAP_RANK``-th nearest
-   sample point (:func:`_caps`).  Per round, each active query's
+   sample point (:func:`_caps`).  The sample is a statistic of the point
+   source, taken once per source and session (:func:`_source_sample`),
+   so a warm call on an unchanged source scans the points once, in its
+   round, not twice.  Per round, each active query's
    candidate cell cover is generated as columns (``explode(sequence(...))``
    over its clamped cell ranges) and carries the query's cap.  Every
    round's Column expressions are built once per session and round
@@ -59,6 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T_
 
 from geodesk_spark.geo import mercator, tile as T
+from geodesk_spark.operators.spatial_join import _PREPARED_CACHE
 from geodesk_spark.operators.tiling import session_exprs
 
 I32_MAX = (1 << 31) - 1
@@ -70,6 +74,7 @@ CAP_RANK = 4  # a cap reaches at least this many sample points
 CAP_SCALE = 2
 CAP_FLOOR = 1 << 16  # one z16 cell: duplicate points give no zero box
 NO_CAP = 1 << 32  # wider than any |Δx| or |Δy| in imps
+SAMPLE_CACHE_ENTRIES = 16  # point sources whose sample the memo keeps
 MAX_CELLS_PER_AXIS = 32  # a window's cover is at most this many cells wide
 
 
@@ -171,6 +176,50 @@ def _point_sample(points: DataFrame, id_col: str) -> tuple[np.ndarray, int]:
         return xy, len(rows)
     u = (rows[-1][2] + (1 << 63) + 1) / 2.0**64
     return xy, int((SAMPLE_ROWS - 1) / u)
+
+
+_SAMPLE_MEMO = "knn_sample"  # the sample memo's key in _PREPARED_CACHE
+
+
+def _sample_memo() -> dict:
+    """The point-sample memo, (session, id_col, source plan hash, source
+    files hash) -> :func:`_point_sample`'s (sample, n), oldest entry
+    first.  It is one entry of ``spatial_join._PREPARED_CACHE``, the
+    engine's memo of query-compilation state, so emptying that memo
+    drops the samples with the prepared layers, and the next call on
+    each source samples it again."""
+    return _PREPARED_CACHE.setdefault(_SAMPLE_MEMO, {})
+
+
+def _source_sample(points: DataFrame, id_col: str) -> tuple[np.ndarray, int]:
+    """:func:`_point_sample` of ``points``, taken once per point source:
+    memoized by session, ``id_col``, the semantic hash of the source's
+    analyzed plan (equal for two reads of one path) and the JVM's hash of
+    its input file list (an append or a rewrite changes it; the key costs
+    the same few gateway calls however many files the source has), at
+    most ``SAMPLE_CACHE_ENTRIES`` entries.  A miss runs the sampling job.
+
+    Exactness never rests on the sample: every query is proven against
+    min(window, cap), an unproven capped query re-runs uncapped, and the
+    world window is never capped.  So a stale entry, or two sources
+    whose keys collide, can cost rounds but never change a row."""
+    jdf = points._jdf
+    files = points.sparkSession._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(
+        jdf.inputFiles()
+    )  # a JVM-side view of the array: hashing it is one call
+    key = (
+        id(points.sparkSession),
+        id_col,
+        jdf.queryExecution().analyzed().semanticHash(),
+        files.hashCode(),
+    )
+    memo = _sample_memo()
+    hit = memo.get(key)
+    if hit is None:
+        if len(memo) >= SAMPLE_CACHE_ENTRIES:
+            del memo[next(iter(memo))]
+        hit = memo[key] = _point_sample(points, id_col)
+    return hit
 
 
 def _auto_radius(k: int, n: int) -> int:
@@ -334,7 +383,8 @@ def knn_join(
        that is not proven re-runs in the next round, uncapped.
 
     The init radius comes from the sample's corpus-size estimate
-    (:func:`_auto_radius`).  The radius schedule
+    (:func:`_auto_radius`); the sample is taken once per point source
+    and session (:func:`_source_sample`).  The radius schedule
     doubles-twice per probe (window r and 4r share one scan) and
     multiplies 16× per round, capping at the world window, so the loop
     is bounded at 4 rounds from the default init radius and every query
@@ -353,7 +403,7 @@ def knn_join(
     ``queries`` must carry (``query_id``, x, y) with imp-space coords;
     ``id_col`` must be unique per point (the tie-break).
     """
-    sample, n = _point_sample(points, id_col)
+    sample, n = _source_sample(points, id_col)
     if init_radius_imps == "auto":
         init_radius_imps = _auto_radius(k, n)
     sel = session_exprs(points, ("knn_select", id_col, query_id), lambda: {

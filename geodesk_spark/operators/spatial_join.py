@@ -295,6 +295,8 @@ def _slab_edges(rings, qt_cells, qt_codes) -> tuple[np.ndarray, list[np.ndarray]
     return keys, edges
 
 
+# prepared layers by ring content, and knn's point-sample memo under
+# knn._SAMPLE_MEMO: the engine's memo of query-compilation state
 _PREPARED_CACHE: dict = {}
 
 
@@ -354,7 +356,9 @@ def odd_crossings(edges, x, y):
     its half-open ``y1 <= y < y2 or y2 <= y < y1``, and the intersection
     is the same float64 ops in the same order.  Crossing parity over
     several rings' edges is the XOR of their parities
-    (PointInPolygon.java:21-23)."""
+    (PointInPolygon.java:21-23).  Spark's ``filter`` is a
+    ``CodegenFallback`` expression: the fold is evaluated interpreted,
+    and the operator holding it stays out of whole-stage codegen."""
 
     def crosses(e):
         return (

@@ -117,7 +117,8 @@ def c4_line_filter(df: DataFrame, text_col: str = "text", min_words: int = 3) ->
     lines re-joined with newlines; '' when nothing survives).
 
     All array higher-order functions over one split — zero shuffles,
-    zero Python; the filter lambda compiles to codegen'd predicates.
+    zero Python; the filter lambda is evaluated by the JVM's interpreter
+    (higher-order functions run outside whole-stage codegen).
     """
     lines = F.split(F.col(text_col), "\n")
     kept = F.filter(lines, lambda l: _c4_keep(l, min_words))
@@ -233,7 +234,8 @@ def gopher_quality_filter(
     audit the rule that fired.
 
     Pure Column algebra over two splits (words, lines) — zero shuffles,
-    zero Python, everything inside whole-stage codegen; at 10^12 rows
+    zero Python; its ``filter``/``aggregate`` folds keep the projection
+    outside whole-stage codegen (interpreted JVM); at 10^12 rows
     this rides the scan.  Ratios are exact-integer divisions rendered
     floor-form 1e6 (CLAUDE.md float law); ``keep`` compares the
     QUANTIZED values, so both engines decide boundary ties identically.

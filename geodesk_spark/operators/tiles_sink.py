@@ -512,8 +512,10 @@ def clip_polygons_to_tiles(
     Scale shape: bbox cover-explode (map-side fan-out, O(area/tile)) →
     four chained higher-order passes, each materialized as its own
     projection so Catalyst does not inline the (self-referencing) pass
-    expression multiple times — ONE codegen stage, ZERO shuffle, output
-    pre-keyed by ``cell`` for the tile writer's partitioning.
+    expression multiple times — ZERO shuffle, output pre-keyed by
+    ``cell`` for the tile writer's partitioning.  The passes are
+    higher-order functions, evaluated interpreted, so their projections
+    stay out of whole-stage codegen.
 
     Input: (id_col, ring array<struct<x:double,y:double>>) — OPEN ring
     (first vertex not repeated), any orientation, vertex order
@@ -1007,7 +1009,7 @@ def zonal_stats(
 
     Pure composition of existing machinery: grid_counts (one fact
     shuffle) → exact integer cell centers → the flagship broadcast PIP
-    join (contains_points: three-band prune + codegen ray-cast fold)
+    join (contains_points: three-band prune + JVM ray-cast fold)
     over the CELL table (tiny vs the fact table — the whole point of
     zonal stats at scale is that the raster rollup happens before the
     spatial test) → one bounded per-zone rollup.

@@ -492,7 +492,12 @@ def _deletes_dir(vd: str) -> str:
 
 
 def _read_deletes(spark: SparkSession, vd: str) -> DataFrame:
-    return spark.read.schema(_DELETES_SCHEMA).parquet(_deletes_dir(vd))
+    # the vector's part files, not its directory: given the hidden
+    # (`_`-prefixed) directory, Spark warns "All paths were ignored"
+    files = _parquet_files(_deletes_dir(vd))
+    if not files:
+        return spark.createDataFrame([], _DELETES_SCHEMA)
+    return spark.read.schema(_DELETES_SCHEMA).parquet(*files)
 
 
 def _read_with_pos(

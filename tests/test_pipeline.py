@@ -1313,9 +1313,19 @@ def test_delete_vector_not_single_file_funnel(spark, tmp_path):
     assert live.agg(F.sum("k")).first()[0] == sum(
         i for i in range(40_000) if i % 7 >= 3
     )
+    # the vector reads from its part files, not its hidden directory
+    # (Spark warns "All paths were ignored" on a `_`-prefixed one)
+    dels = cp._read_deletes(spark, vd)
+    assert len(dels.inputFiles()) == len(vec_files)
+    assert all(f.endswith(".parquet") for f in dels.inputFiles())
+    assert dels.count() == expect_deleted
     # materialize still works over the multi-file vector
     cp.rewrite_deletes(p, "base")
     assert p.read("base").count() == 40_000 - expect_deleted
+    # a vector directory with no part file reads as an empty vector
+    empty = cp._read_deletes(spark, str(tmp_path / "none"))
+    assert empty.schema.simpleString() == "struct<file:string,pos:bigint>"
+    assert empty.count() == 0
 
 
 def test_overview_pyramid_pixels(spark, tmp_path):

@@ -548,6 +548,146 @@ def test_knn_point_sample_is_bounded_and_deterministic(spark):
     assert abs(n_a - 200_000) <= 20_000, n_a
 
 
+def _write_points(spark, path: str, n: int, seed: int, mode: str = "overwrite") -> None:
+    """``n`` random points (image_id, x, y) within ±2^28 imps, appended
+    to or replacing the parquet source at ``path``."""
+    rng = np.random.default_rng(seed)
+    spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"s{seed}_{i}" for i in range(n)],
+        "x": rng.integers(-(1 << 28), 1 << 28, n),
+        "y": rng.integers(-(1 << 28), 1 << 28, n),
+    })).write.mode(mode).parquet(path)
+
+
+_MEMO_QUERIES = [("q_a", 10.0, 20.0), ("q_b", -60.0, -10.0), ("q_c", 100.0, 5.0)]
+
+
+def _knn_brute(pts, queries, k: int) -> list:
+    """(query_id, image_id) of each query's k nearest points by
+    (Mercator distance, id), in rank order — the kNN contract."""
+    pdf = pts.toPandas()
+    x, y = pdf["x"].to_numpy(np.float64), pdf["y"].to_numpy(np.float64)
+    ids = pdf["image_id"].to_numpy()
+    out = []
+    for qid, lon, lat in queries:
+        d = mercator.distance(x, y, float(mercator.x_from_lon(lon)[()]),
+                              float(mercator.y_from_lat(lat)[()]))
+        out += [(qid, i) for i in ids[np.lexsort((ids, d))[:k]]]
+    return out
+
+
+def _knn_rows(pts, queries, k: int) -> list:
+    qdf = knn_mod._query_frame(pts.sparkSession, queries)
+    out = knn_mod.knn_join(pts, qdf, k=k).toPandas().sort_values(["query_id", "rank"])
+    return list(zip(out["query_id"], out["image_id"]))
+
+
+def test_knn_join_samples_each_source_once(spark, tmp_path, monkeypatch):
+    """A second knn_join on a re-read of the same parquet source takes
+    the point sample from the memo: one Spark job fewer, the same rows.
+    Emptying the engine's memo of query-compilation state
+    (``spatial_join._PREPARED_CACHE``) drops the sample, so the next
+    call samples again, like the first."""
+    from tests.test_pipeline import _job_ids_after
+
+    monkeypatch.setitem(spatial_join._PREPARED_CACHE, knn_mod._SAMPLE_MEMO, {})
+    # the key hashes the file list in the JVM, never lists it in Python
+    monkeypatch.setattr(type(spark.range(1)), "inputFiles", lambda self: pytest.fail("files listed"))
+    path = str(tmp_path / "pts")
+    _write_points(spark, path, 6_000, seed=1)
+    rows = {}
+
+    def call(name):
+        return lambda: rows.setdefault(name, _knn_rows(spark.read.parquet(path), _MEMO_QUERIES, 5))
+
+    cold = _job_ids_after(spark, "knn-memo-cold", call("cold"))
+    warm = _job_ids_after(spark, "knn-memo-warm", call("warm"))
+    assert len(warm) == len(cold) - 1, (cold, warm)
+    assert rows["warm"] == rows["cold"] == _knn_brute(spark.read.parquet(path), _MEMO_QUERIES, 5)
+    assert len(knn_mod._sample_memo()) == 1
+    saved = dict(spatial_join._PREPARED_CACHE)
+    spatial_join._PREPARED_CACHE.clear()
+    try:
+        again = _job_ids_after(spark, "knn-memo-cleared", call("cleared"))
+    finally:
+        spatial_join._PREPARED_CACHE.update(saved)
+    assert len(again) == len(cold), (cold, again)
+    assert rows["cleared"] == rows["cold"]
+
+
+def test_knn_join_sample_memo_misses_changed_sources(spark, tmp_path, monkeypatch):
+    """An appended file, a filtered frame and another id column each
+    take a sample of their own, and each result equals brute force; a
+    re-read of the grown source takes the memo's."""
+    monkeypatch.setitem(spatial_join._PREPARED_CACHE, knn_mod._SAMPLE_MEMO, {})
+    sampled = []
+    real = knn_mod._point_sample
+    monkeypatch.setattr(
+        knn_mod, "_point_sample", lambda pts, id_col: sampled.append(id_col) or real(pts, id_col)
+    )
+    path = str(tmp_path / "pts")
+    _write_points(spark, path, 3_000, seed=2)
+    base = spark.read.parquet(path)
+    assert _knn_rows(base, _MEMO_QUERIES, 4) == _knn_brute(base, _MEMO_QUERIES, 4)
+    assert len(sampled) == 1
+    _write_points(spark, path, 3_000, seed=3, mode="append")
+    grown = spark.read.parquet(path)
+    assert len(grown.inputFiles()) > len(base.inputFiles())
+    filtered = grown.filter(F.col("x") > 0)
+    for pts in (grown, filtered):
+        assert _knn_rows(pts, _MEMO_QUERIES, 4) == _knn_brute(pts, _MEMO_QUERIES, 4)
+    assert len(sampled) == 3
+    knn_mod._source_sample(spark.read.parquet(path), "image_id")  # a re-read hits
+    knn_mod._source_sample(grown, "x")
+    assert sampled == ["image_id"] * 3 + ["x"]
+
+
+def test_knn_join_wrong_sample_memo_stays_exact(spark, tmp_path, monkeypatch):
+    """A planted memo entry that describes another corpus: every sample
+    point sits on a query, so each cap is the CAP_FLOOR box around an
+    empty patch of the real points, and the corpus estimate is far too
+    big.  No capped query can be proven; each re-runs uncapped, and the
+    rows still equal brute force.  The planted entry is used: no sampling
+    job runs."""
+    path = str(tmp_path / "pts")
+    _write_points(spark, path, 3_000, seed=4)
+    pts = spark.read.parquet(path)
+    qxy = np.array(
+        [(int(mercator.x_from_lon(lon)[()]), int(mercator.y_from_lat(lat)[()]))
+         for _, lon, lat in _MEMO_QUERIES], dtype=np.int64,
+    )
+    planted = np.repeat(qxy, knn_mod.SAMPLE_ROWS // len(qxy) + 1, axis=0)[: knn_mod.SAMPLE_ROWS]
+    monkeypatch.setitem(spatial_join._PREPARED_CACHE, knn_mod._SAMPLE_MEMO, {})
+    monkeypatch.setattr(knn_mod, "_point_sample", lambda *a: (planted, 10**9))
+    knn_mod._source_sample(pts, "image_id")  # plants the entry
+    monkeypatch.setattr(
+        knn_mod, "_point_sample", lambda *a: pytest.fail("the planted entry was not used")
+    )
+    caps = []
+    real_caps = knn_mod._caps
+    monkeypatch.setattr(knn_mod, "_caps", lambda *a: caps.append(real_caps(*a)) or caps[-1])
+    assert _knn_rows(pts, _MEMO_QUERIES, 5) == _knn_brute(pts, _MEMO_QUERIES, 5)
+    assert caps[0].tolist() == [knn_mod.CAP_FLOOR] * len(_MEMO_QUERIES)
+
+
+def test_knn_sample_memo_is_bounded(spark, monkeypatch):
+    """The memo keeps at most SAMPLE_CACHE_ENTRIES sources and drops the
+    oldest first."""
+    monkeypatch.setitem(spatial_join._PREPARED_CACHE, knn_mod._SAMPLE_MEMO, {})
+    frames = [
+        spark.range(50 + i).select(F.col("id").alias("pid"), F.col("id").alias("x"),
+                                   F.col("id").alias("y"))
+        for i in range(knn_mod.SAMPLE_CACHE_ENTRIES + 3)
+    ]
+    for f in frames:
+        knn_mod._source_sample(f, "pid")
+        assert len(knn_mod._sample_memo()) <= knn_mod.SAMPLE_CACHE_ENTRIES
+    assert len(knn_mod._sample_memo()) == knn_mod.SAMPLE_CACHE_ENTRIES
+    assert [n for _, n in knn_mod._sample_memo().values()] == [
+        50 + i for i in range(3, knn_mod.SAMPLE_CACHE_ENTRIES + 3)
+    ]
+
+
 def test_knn_assert_unique_ids(spark):
     dup = spark.createDataFrame(
         [("a", 0, 0), ("a", 5, 5), ("b", 9, 9)], "image_id string, x int, y int"
@@ -715,6 +855,18 @@ def test_route_measure_along_polyline(spark):
     assert out[3]["seq"] == 3 and out[3]["measure_um"] == 3 * seg_um
 
 
+def _flagship_join(spark, path: str):
+    """The flagship pipeline's join over 20 k synthetic points written to
+    ``path``: parquet scan → imp encode → tiles → contains_points."""
+    synth.images_df(spark, 20_000, with_bytes=False, partitions=4).write.parquet(path)
+    prepared = spatial_join.prepare_layer(synth.polygon_layer())
+    pts = tiling.with_point_tiles(tiling.with_imp_coords(spark.read.parquet(path)))
+    return spatial_join.contains_points(
+        pts.select("image_id", "x", "y", "cell"), prepared,
+        keep_cols=["image_id", "cell"],
+    )
+
+
 def test_flagship_plan_shape_regression(spark, tmp_path):
     """Pin the flagship pipeline's physical plan — the engine's headline
     scale claims as hard asserts, so a regression (an accidental
@@ -727,20 +879,7 @@ def test_flagship_plan_shape_regression(spark, tmp_path):
       nodes anywhere (no Python worker),
     - no ring-vertex literal in the analyzed plan, whose length stays
       bounded (the layer's geometry arrives as broadcast data)."""
-    import re
-
-    from geodesk_spark.operators import spatial_join, tiling
-    from geodesk_spark.sources import synth
-
-    path = str(tmp_path / "imgs")
-    synth.images_df(spark, 20_000, with_bytes=False, partitions=4).write.parquet(path)
-    prepared = spatial_join.prepare_layer(synth.polygon_layer())
-    imgs = spark.read.parquet(path)
-    pts = tiling.with_point_tiles(tiling.with_imp_coords(imgs))
-    joined = spatial_join.contains_points(
-        pts.select("image_id", "x", "y", "cell"), prepared,
-        keep_cols=["image_id", "cell"],
-    )
+    joined = _flagship_join(spark, str(tmp_path / "imgs"))
     plan = spark._jvm.PythonSQLUtils.explainString(
         joined._jdf.queryExecution(), "formatted"
     )
@@ -754,3 +893,29 @@ def test_flagship_plan_shape_regression(spark, tmp_path):
     assert re.search(r"ReadSchema: struct<image_id:string,lon:double,lat:double>", plan)
     # geometry travels as data: no ring-vertex literal, bounded plan
     assert_geometry_as_data(joined, synth.polygon_layer())
+
+
+def test_flagship_match_filter_is_the_only_codegen_fallback(spark, tmp_path):
+    """Spark's higher-order functions (``filter``, ``aggregate``,
+    ``exists`` …) are ``CodegenFallback`` expressions, and an operator
+    holding one stays out of whole-stage codegen.  In the flagship's
+    executed plan (AQE off, so the plan is final before it runs) the
+    match ``Filter`` with the ``odd_crossings`` fold is the one such
+    operator: every other one, apart from scans and exchanges, carries
+    a codegen stage id.  A second fallback operator fails here."""
+    joined = _flagship_join(spark, str(tmp_path / "imgs"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        tree = joined._jdf.queryExecution().executedPlan().treeString()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    outside = []
+    for line in tree.splitlines():
+        m = re.match(r"^[\s:|+-]*(\*\(\d+\) )?(\w+)", line)
+        name = m.group(2)
+        if m.group(1) or name.endswith(("Scan", "Exchange")) or name == "InMemoryRelation":
+            continue
+        outside.append((name, line))
+    assert [n for n, _ in outside] == ["Filter"], tree
+    assert "filter(_edges" in outside[0][1]
