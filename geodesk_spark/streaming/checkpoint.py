@@ -17,21 +17,33 @@ In production the checkpoint format is an Iceberg table (snapshot ids
 give time travel); no Iceberg catalog ships in this sandbox, so the
 parquet + _SUCCESS layout stands in with the same commit semantics.
 
-Lineage manifest per stage (<root>/<stage>/_lineage.json):
-  stage, inputs (upstream stage names), elapsed_sec, n_rows,
-  rows_per_sec, per-partition file entries
-  [{file, rows, bytes, stats: {col: [min, max]}}, ...], schema (the
+One commit path, one manifest format.  Every version — a ``stage``
+run, an ``append_stage`` batch, and the copy-on-write rewrites of
+``merge_upsert``, ``compact``, ``delete_where`` and ``rewrite_deletes``
+— commits through ``Pipeline._commit``: it writes the manifest
+(<root>/<stage>/v<N>/_lineage.json), touches ``_SUCCESS``, then appends
+the log entry.  Every manifest holds
+  stage, inputs (upstream stage names; a rewrite's is its own stage),
+  elapsed_sec, n_rows, rows_per_sec, partitions (per-file entries
+  [{file, rows, bytes, stats: {col: [min, max]}}, ...]), schema (the
   version's Spark data schema as JSON, without the ``partition_by``
-  columns a read takes from the directory names).
+  columns a read takes from the directory names), committed_at_unix,
+and a rewrite adds ``action`` plus its own keys (``rewrote_files``,
+``kept_files``, ``packed_files``, ``delete_files``, ...).  Every log
+entry holds {stage, version, n_rows, committed_at_unix, snapshot_id},
+plus ``mode: "append"`` for an append batch and ``expired`` once
+``expire_snapshots`` retires it.  A new version's number
+is one past the highest version directory on disk (``_new_version_dir``),
+so an uncommitted orphan is superseded, never reused, and a version is
+visible only when it is logged (and not expired), has ``_SUCCESS`` and
+has no ``_INVALIDATED`` (``Pipeline._visible``).
 
-Every version read passes that schema to ``spark.read.schema`` (see
-``_scan``): a schema-less ``spark.read.parquet(dir)`` re-reads the
-footers of files the pipeline has just written, and that costs a Spark
-job per read.  Append-stage batches record theirs too, and
-``read_all``/``read_incremental`` pass it when every batch they union
-recorded the same one (``_scan_batches``).  Only manifests written
-before the schema was recorded, or batches whose schemas differ, are
-inferred.
+Every version read passes the recorded schema to ``spark.read.schema``
+(``_with_schema``): a schema-less ``spark.read.parquet(dir)`` re-reads
+the footers of files the pipeline has just written, and that costs a
+Spark job per read.  A read of several append batches passes it when
+every batch recorded the same one.  Only manifests written before the
+schema was recorded, or batches whose schemas differ, are inferred.
 
 The per-file min/max ``stats`` (read from the parquet footers the
 manifest pass already parses — zero extra I/O) are the Iceberg
@@ -59,6 +71,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -82,19 +95,24 @@ def _data_schema(df: DataFrame, partition_by: list[str] | None, has_files: bool)
     return StructType([f for f in df.schema.fields if f.name not in drop]).jsonValue()
 
 
+def _with_schema(reader, manifests: list[dict]):
+    """``reader`` with the schema the ``manifests`` recorded, when every
+    one recorded the same dict.  Otherwise Spark infers it from the
+    footers: manifests written before the schema was recorded hold no
+    dict (or a simpleString), and append batches may differ."""
+    schema = manifests[0].get("schema")
+    if isinstance(schema, dict) and all(m.get("schema") == schema for m in manifests):
+        return reader.schema(StructType.fromJson(schema))
+    return reader
+
+
 def _scan(
     spark: SparkSession, vd: str, lin: dict, files: list[str] | None = None
 ) -> DataFrame:
     """The one parquet read of a version (all of it, or ``files``
-    relative to it) with the schema its manifest records.  A manifest
-    written before the schema was recorded holds no schema dict (or a
-    simpleString), and only then does Spark infer it from the footers."""
+    relative to it) with the schema its manifest records."""
     paths = [os.path.join(vd, f) for f in files] if files is not None else [vd]
-    reader = spark.read.option("basePath", vd)
-    schema = lin.get("schema")
-    if isinstance(schema, dict):
-        reader = reader.schema(StructType.fromJson(schema))
-    return reader.parquet(*paths)
+    return _with_schema(spark.read.option("basePath", vd), [lin]).parquet(*paths)
 
 
 def _write_data(df: DataFrame, out: str, partition_by: list[str] | None = None) -> None:
@@ -187,26 +205,105 @@ class Pipeline:
         os.makedirs(root, exist_ok=True)
         self._log_path = os.path.join(root, "_snapshots.json")
 
-    # -- snapshot log -----------------------------------------------------
+    # -- snapshot log and the one commit path -----------------------------
     def snapshots(self) -> list[dict]:
         if not os.path.exists(self._log_path):
             return []
         with open(self._log_path) as f:
             return json.load(f)
 
-    def _append_snapshot(self, entry: dict) -> int:
-        log = self.snapshots()
-        entry["snapshot_id"] = len(log) + 1
-        log.append(entry)
+    def _write_log(self, log: list[dict]) -> None:
+        """The one write of the snapshot log: tmp file, then os.replace,
+        the atomic commit point of every version and expiry."""
         tmp = self._log_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(log, f, indent=1)
-        os.replace(tmp, self._log_path)  # atomic commit point
+        os.replace(tmp, self._log_path)
+
+    def _commit(
+        self,
+        stage: str,
+        out: str,
+        inputs: list[str],
+        elapsed: float,
+        per_file: list[dict],
+        schema,
+        mode: str | None = None,
+        extra: dict | None = None,
+    ) -> int:
+        """The one commit of a snapshot version whose data files are in
+        ``out``: write its manifest to ``_lineage.json``, touch
+        ``_SUCCESS``, then append its log entry — the commit point.
+        Returns the new snapshot_id."""
+        n_rows = sum(r["rows"] for r in per_file)
+        committed = int(time.time())
+        manifest = {
+            "stage": stage,
+            "inputs": inputs,
+            "elapsed_sec": round(elapsed, 3),
+            "n_rows": n_rows,
+            "rows_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else None,
+            "partitions": per_file,
+            "schema": schema,
+            "committed_at_unix": committed,
+            **(extra or {}),
+        }
+        with open(os.path.join(out, "_lineage.json"), "w") as f:
+            json.dump(manifest, f, indent=1)
+        open(os.path.join(out, "_SUCCESS"), "w").close()
+        log = self.snapshots()
+        entry = {"stage": stage, "version": int(os.path.basename(out)[1:])}
+        if mode is not None:
+            entry["mode"] = mode
+        entry.update(n_rows=n_rows, committed_at_unix=committed, snapshot_id=len(log) + 1)
+        log.append(entry)
+        self._write_log(log)
         return entry["snapshot_id"]
+
+    def _write_version(
+        self,
+        stage: str,
+        fn,
+        out: str,
+        inputs: list[str],
+        partition_by: list[str] | None = None,
+        mode: str | None = None,
+    ) -> int:
+        """Run ``fn(spark)``, write its frame as the data of version dir
+        ``out`` and commit it.  ``elapsed_sec`` runs from before ``fn``
+        to after the data write; the footer pass is not in it."""
+        t0 = time.time()
+        df = fn(self.spark)
+        _write_data(df, out, partition_by)
+        elapsed = time.time() - t0
+        # per-partition lineage from the parquet FOOTERS (driver-side,
+        # pyarrow): the old groupBy(input_file_name) rescanned the whole
+        # just-written snapshot purely for metrics (r03 review)
+        per_file = _file_manifest(_parquet_files(out), out)
+        schema = _data_schema(df, partition_by, bool(per_file))
+        return self._commit(stage, out, inputs, elapsed, per_file, schema, mode)
 
     # -- version resolution ----------------------------------------------
     def _version_dir(self, stage: str, version: int) -> str:
         return os.path.join(self.root, stage, f"v{version}")
+
+    def _new_version_dir(self, stage: str, versions: list[int] | None = None) -> str:
+        """The dir of ``stage``'s next version: one past the highest
+        version dir on disk (``versions``, when already listed), so an
+        uncommitted orphan is superseded, never reused."""
+        if versions is None:
+            versions = self._versions(stage)
+        return self._version_dir(stage, versions[-1] + 1 if versions else 1)
+
+    def _visible(self, e: dict) -> bool:
+        """The one visibility rule, for the version of log entry ``e``:
+        logged and not expired, with _SUCCESS and without _INVALIDATED."""
+        vd = self._version_dir(e["stage"], e["version"])
+        return (
+            not e.get("expired")
+            and os.path.exists(os.path.join(vd, "_SUCCESS"))
+            and not os.path.exists(os.path.join(vd, "_INVALIDATED"))
+        )
 
     def _versions(self, stage: str) -> list[int]:
         base = os.path.join(self.root, stage)
@@ -222,26 +319,14 @@ class Pipeline:
         """(is an append stage, version dirs, active version) from ONE
         parse of the snapshot log and one listing of the stage dir.
 
-        The active version is the highest committed, non-invalidated
-        one.  Committed = _SUCCESS present AND recorded in the snapshot
-        log; the log append is the single commit point, so a crash after
-        the parquet write but before the log append leaves an invisible
-        orphan directory (re-run supersedes it), never a half-committed
-        'done' stage (r03 review)."""
+        The active version is the highest ``_visible`` one.  The log
+        append is the single commit point, so a crash after the parquet
+        write but before the log append leaves an invisible orphan
+        directory (re-run supersedes it), never a half-committed 'done'
+        stage (r03 review)."""
         mine = [e for e in self.snapshots() if e["stage"] == stage]
-        logged = {e["version"] for e in mine}
-        versions = self._versions(stage)
-        active = None
-        for v in reversed(versions):
-            vd = self._version_dir(stage, v)
-            if (
-                v in logged
-                and os.path.exists(os.path.join(vd, "_SUCCESS"))
-                and not os.path.exists(os.path.join(vd, "_INVALIDATED"))
-            ):
-                active = v
-                break
-        return any(e.get("mode") == "append" for e in mine), versions, active
+        active = max((e["version"] for e in mine if self._visible(e)), default=None)
+        return any(e.get("mode") == "append" for e in mine), self._versions(stage), active
 
     def _active_version(self, stage: str) -> int | None:
         return self._resolve(stage)[2]
@@ -267,7 +352,7 @@ class Pipeline:
     def _dir(self, stage: str) -> str:
         _, versions, v = self._resolve(stage)
         if v is None:
-            v = (versions[-1] + 1) if versions else 1
+            return self._new_version_dir(stage, versions)
         return self._version_dir(stage, v)
 
     def is_done(self, stage: str) -> bool:
@@ -291,39 +376,10 @@ class Pipeline:
                 f"{name!r} is an append stage — use append_stage/read_all"
             )
         if active is not None:
-            return self._read_version(name, active)
-        out = self._version_dir(name, (versions[-1] + 1) if versions else 1)
-        t0 = time.time()
-        df = fn(self.spark)
-        _write_data(df, out, partition_by)
-        elapsed = time.time() - t0
-
-        # per-partition lineage from the parquet FOOTERS (driver-side,
-        # pyarrow): the old groupBy(input_file_name) rescanned the whole
-        # just-written snapshot purely for metrics (r03 review)
-        per_file = _file_manifest(_parquet_files(out), out)
-        n_rows = sum(r["rows"] for r in per_file)
-        manifest = {
-            "stage": name,
-            "inputs": inputs or [],
-            "elapsed_sec": round(elapsed, 3),
-            "n_rows": n_rows,
-            "rows_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else None,
-            "partitions": per_file,
-            "schema": _data_schema(df, partition_by, bool(per_file)),
-            "committed_at_unix": int(time.time()),
-        }
-        with open(os.path.join(out, "_lineage.json"), "w") as f:
-            json.dump(manifest, f, indent=1)
-        self._append_snapshot(
-            {
-                "stage": name,
-                "version": int(os.path.basename(out)[1:]),
-                "n_rows": n_rows,
-                "committed_at_unix": manifest["committed_at_unix"],
-            }
-        )
-        return _scan(self.spark, out, manifest)
+            return self._read_dir(self._version_dir(name, active))
+        out = self._new_version_dir(name, versions)
+        self._write_version(name, fn, out, inputs or [], partition_by)
+        return self._read_dir(out)
 
     def read(self, stage: str, snapshot_id: int | None = None) -> DataFrame:
         """Current snapshot (append stages: union of ALL committed
@@ -350,10 +406,9 @@ class Pipeline:
                     f"snapshot {snapshot_id} was expired by expire_snapshots"
                 )
             v = e["version"]
-        return self._read_version(stage, v)
+        return self._read_dir(self._version_dir(stage, v))
 
-    def _read_version(self, stage: str, version: int) -> DataFrame:
-        vd = self._version_dir(stage, version)
+    def _read_dir(self, vd: str) -> DataFrame:
         return _apply_deletes(self.spark, vd, _load_manifest(vd))
 
     def invalidate(self, stage: str):
@@ -366,16 +421,12 @@ class Pipeline:
 
 
 def _committed_dirs(p: "Pipeline", stage: str) -> dict[int, str]:
-    out = {}
-    for e in p.snapshots():
-        if e["stage"] != stage:
-            continue
-        vd = p._version_dir(stage, e["version"])
-        if os.path.exists(os.path.join(vd, "_SUCCESS")) and not os.path.exists(
-            os.path.join(vd, "_INVALIDATED")
-        ):
-            out[e["snapshot_id"]] = vd
-    return out
+    """{snapshot_id: version dir} of ``stage``'s visible versions."""
+    return {
+        e["snapshot_id"]: p._version_dir(stage, e["version"])
+        for e in p.snapshots()
+        if e["stage"] == stage and p._visible(e)
+    }
 
 
 def append_stage(p: "Pipeline", name: str, fn) -> int:
@@ -389,41 +440,12 @@ def append_stage(p: "Pipeline", name: str, fn) -> int:
         # would silently flip read() to read_all and union the old batch
         # snapshot with the append batches (r03 review)
         raise ValueError(f"{name!r} is a batch stage — use stage()/invalidate()")
-    versions = p._versions(name)
-    out = p._version_dir(name, (versions[-1] + 1) if versions else 1)
-    df = fn(p.spark)
-    _write_data(df, out)
-    per_file = _file_manifest(_parquet_files(out), out)
-    n_rows = sum(r["rows"] for r in per_file)
-    manifest = {
-        "stage": name,
-        "n_rows": n_rows,
-        "partitions": per_file,
-        "schema": _data_schema(df, None, bool(per_file)),
-    }
-    with open(os.path.join(out, "_lineage.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
-    return p._append_snapshot(
-        {
-            "stage": name,
-            "version": int(os.path.basename(out)[1:]),
-            "mode": "append",
-            "n_rows": n_rows,
-            "committed_at_unix": int(time.time()),
-        }
-    )
+    return p._write_version(name, fn, p._new_version_dir(name), [], mode="append")
 
 
 def _scan_batches(spark: SparkSession, dirs: list[str]) -> DataFrame:
-    """The one parquet read of an append stage's batch ``dirs``, with
-    the schema their manifests record when every batch recorded the
-    same one; otherwise (batches written before the schema was recorded,
-    or batches whose schemas differ) Spark infers it from the footers."""
-    schemas = [_load_manifest(d).get("schema") for d in dirs]
-    reader = spark.read
-    if isinstance(schemas[0], dict) and all(s == schemas[0] for s in schemas):
-        reader = reader.schema(StructType.fromJson(schemas[0]))
-    return reader.parquet(*dirs)
+    """The one parquet read of an append stage's batch ``dirs``."""
+    return _with_schema(spark.read, [_load_manifest(d) for d in dirs]).parquet(*dirs)
 
 
 def read_all(p: "Pipeline", stage: str) -> DataFrame:
@@ -567,7 +589,7 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     if os.path.isdir(_deletes_dir(vd)):
         new_dels = new_dels.unionByName(_read_deletes(p.spark, vd)).distinct()
 
-    out = p._version_dir(stage, p._versions(stage)[-1] + 1)
+    out = p._new_version_dir(stage)
     os.makedirs(out, exist_ok=True)
     # The vector is O(deleted rows): hash-partition it by data file so a
     # mass delete (10% of 10^12 rows) spreads over the cluster instead of
@@ -579,10 +601,8 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
     new_dels.repartition(n_parts, F.col("file")).write.mode("overwrite").parquet(
         _deletes_dir(out)
     )
-    n_deleted = sum(
-        r["rows"]
-        for r in _file_manifest(_parquet_files(_deletes_dir(out)), _deletes_dir(out))
-    )
+    vector = _file_manifest(_parquet_files(_deletes_dir(out)), out)
+    n_deleted = sum(r["rows"] for r in vector)
     return _commit_rewrite(
         p,
         stage,
@@ -593,9 +613,7 @@ def delete_where(p: "Pipeline", stage: str, predicate) -> int:
         lin,
         "delete_where",
         {
-            "delete_files": [
-                os.path.relpath(f, out) for f in _parquet_files(_deletes_dir(out))
-            ],
+            "delete_files": [r["file"] for r in vector],
             "n_deleted_total": n_deleted,
             "n_rows_live": sum(r["rows"] for r in parts) - n_deleted,
         },
@@ -620,18 +638,17 @@ def rewrite_deletes(p: "Pipeline", stage: str) -> int | None:
     rewritten = None
     if affected:
         rewritten = _apply_deletes(p.spark, vd, lin, sorted(affected))
-    out = p._version_dir(stage, p._versions(stage)[-1] + 1)
     return _commit_rewrite(
         p,
         stage,
-        out,
+        p._new_version_dir(stage),
         rewritten,
         kept,
         vd,
         lin,
         "rewrite_deletes",
         {"rewrote_files": sorted(affected), "kept_files": len(kept)},
-        prefix=f"d{os.path.basename(out)}",
+        prefix="d",
     )
 
 
@@ -640,8 +657,6 @@ def _link_or_copy(src: str, dst: str):
     try:
         os.link(src, dst)  # CoW keep: zero-copy within one filesystem
     except OSError:
-        import shutil
-
         shutil.copy2(src, dst)
 
 
@@ -667,10 +682,10 @@ def _commit_rewrite(
     n_out_files: int | None = None,
     prefix: str = "u",
 ) -> int:
-    """Shared CoW commit: hard-link ``kept`` files from the old version,
-    write ``rewritten`` (if any) as fresh files, rebuild the manifest
-    (footers only; the schema is the old version's), and commit via the
-    snapshot log append."""
+    """Shared CoW rewrite: hard-link ``kept`` files from the old version,
+    write ``rewritten`` (if any) as fresh files named
+    ``<prefix>v<N>-part-…``, and commit the new version with the old
+    one's schema."""
     t0 = time.time()
     os.makedirs(out, exist_ok=True)
     for part in kept:
@@ -683,37 +698,19 @@ def _commit_rewrite(
         _write_data(rewritten.coalesce(n_out_files) if n_out_files else rewritten, tmp)
         new_files = []
         for f in _parquet_files(tmp):
-            dst = os.path.join(out, f"{prefix}-{os.path.basename(f)}")
+            dst = os.path.join(out, f"{prefix}{os.path.basename(out)}-{os.path.basename(f)}")
             os.replace(f, dst)
             new_files.append(dst)
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
         per_file = kept + _file_manifest(new_files, out)
-    elapsed = time.time() - t0
-    n_rows = sum(r["rows"] for r in per_file)
-    manifest = {
-        "stage": stage,
-        "inputs": [stage],
-        "action": action,
-        "elapsed_sec": round(elapsed, 3),
-        "n_rows": n_rows,
-        "rows_per_sec": round(n_rows / elapsed, 1) if elapsed > 0 else None,
-        "partitions": per_file,
-        "schema": lin_old.get("schema"),
-        "committed_at_unix": int(time.time()),
-        **extra,
-    }
-    with open(os.path.join(out, "_lineage.json"), "w") as f:
-        json.dump(manifest, f, indent=1)
-    open(os.path.join(out, "_SUCCESS"), "w").close()
-    return p._append_snapshot(
-        {
-            "stage": stage,
-            "version": int(os.path.basename(out)[1:]),
-            "n_rows": n_rows,
-            "committed_at_unix": manifest["committed_at_unix"],
-        }
+    return p._commit(
+        stage,
+        out,
+        [stage],
+        time.time() - t0,
+        per_file,
+        lin_old.get("schema"),
+        extra={"action": action, **extra},
     )
 
 
@@ -767,18 +764,16 @@ def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str])
         ).unionByName(updates.select(*cols))
     else:
         rewritten = updates.select(*cols)
-    out = p._version_dir(stage, p._versions(stage)[-1] + 1)
     return _commit_rewrite(
         p,
         stage,
-        out,
+        p._new_version_dir(stage),
         rewritten,
         kept,
         vd,
         lin,
         "merge_upsert",
         {"rewrote_files": sorted(affected), "kept_files": len(kept)},
-        prefix=f"u{os.path.basename(out)}",
     )
 
 
@@ -798,9 +793,9 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
     _flat_or_raise(parts, "compact")
 
     sizes = {
-        part["file"]: part.get(
-            "bytes", os.path.getsize(os.path.join(vd, part["file"]))
-        )
+        part["file"]: part["bytes"]
+        if "bytes" in part
+        else os.path.getsize(os.path.join(vd, part["file"]))
         for part in parts
     }
     small = [part for part in parts if sizes[part["file"]] < target_bytes]
@@ -810,11 +805,10 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
     total_small = sum(sizes[part["file"]] for part in small)
     n_out = max(1, -(-total_small // target_bytes))
     packed = _scan(p.spark, vd, lin, [part["file"] for part in small])
-    out = p._version_dir(stage, p._versions(stage)[-1] + 1)
     return _commit_rewrite(
         p,
         stage,
-        out,
+        p._new_version_dir(stage),
         packed,
         kept,
         vd,
@@ -822,7 +816,7 @@ def compact(p: "Pipeline", stage: str, target_bytes: int = 128 << 20) -> int | N
         "compact",
         {"packed_files": len(small), "kept_files": len(kept)},
         n_out_files=int(n_out),
-        prefix=f"c{os.path.basename(out)}",
+        prefix="c",
     )
 
 
@@ -840,11 +834,13 @@ def expire_snapshots(
     reference counter — exactly Iceberg's reachability rule, files
     delete only when no surviving snapshot references them).
 
+    The log write marking them expired is the commit point and comes
+    first, so a crash while deleting leaves ids that read as expired,
+    never log entries for half-deleted dirs.
+
     Refuses append stages: every committed batch of an append stage IS
     part of the current table, so none of them is expirable history.
     Returns the expired snapshot ids."""
-    import shutil
-
     if p._resolve(stage)[0]:
         raise ValueError(
             f"{stage!r} is an append stage — its batches are live data, "
@@ -857,17 +853,13 @@ def expire_snapshots(
     if not mine:
         raise ValueError(f"stage {stage!r} has no committed snapshot")
     expire = mine[:-keep_last]
-    expired_ids = []
+    for e in expire:
+        e["expired"] = True
+    if expire:
+        p._write_log(log)
     for e in expire:
         shutil.rmtree(p._version_dir(stage, e["version"]), ignore_errors=True)
-        e["expired"] = True
-        expired_ids.append(e["snapshot_id"])
-    if expired_ids:
-        tmp = p._log_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f, indent=1)
-        os.replace(tmp, p._log_path)
-    return expired_ids
+    return [e["snapshot_id"] for e in expire]
 
 
 Pipeline.append_stage = append_stage

@@ -26,3 +26,14 @@ def pytest_configure(config):
     config.addinivalue_line(
         "filterwarnings", "error:Cannot infer the eval type:UserWarning"
     )
+    # NumPy's scalar conversion of a 1-element array (an error in a
+    # future NumPy), and overflow/invalid warnings from the
+    # deterministic math kernels: both were mended at their root, so
+    # either coming back fails the suite
+    config.addinivalue_line(
+        "filterwarnings",
+        "error:Conversion of an array with ndim > 0 to a scalar:DeprecationWarning",
+    )
+    config.addinivalue_line(
+        "filterwarnings", "error::RuntimeWarning:geodesk_spark.geo.detmath"
+    )

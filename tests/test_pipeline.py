@@ -1600,3 +1600,77 @@ def test_snapshot_data_files_are_plain_encoded(spark, tmp_path):
                 assert col.statistics is not None and col.statistics.has_min_max, (
                     f, col.path_in_schema,
                 )
+
+
+def test_expire_snapshots_commits_before_it_deletes(spark, tmp_path, monkeypatch):
+    """The log write that marks versions expired is expire_snapshots'
+    commit point and precedes every delete: a crash while deleting
+    leaves the ids marked expired, and reading one raises the
+    documented error rather than a missing-file one."""
+    import shutil
+
+    p = Pipeline(spark, str(tmp_path / "ex"))
+    p.stage("tbl", lambda s: s.range(10))
+    sid1 = p.snapshots()[-1]["snapshot_id"]
+    p.invalidate("tbl")
+    p.stage("tbl", lambda s: s.range(20))
+
+    def crash(*args, **kwargs):
+        raise OSError("crash while deleting")
+
+    monkeypatch.setattr(shutil, "rmtree", crash)
+    with pytest.raises(OSError, match="crash while deleting"):
+        p.expire_snapshots("tbl", keep_last=1)
+    monkeypatch.undo()
+    assert [bool(e.get("expired")) for e in p.snapshots()] == [True, False]
+    with pytest.raises(ValueError, match="was expired"):
+        p.read("tbl", snapshot_id=sid1)
+    assert p.read("tbl").count() == 20
+
+
+def test_every_version_kind_commits_one_format(spark, tmp_path):
+    """stage, append_stage and the four rewrites write one manifest key
+    set (a rewrite adds its action and its own keys) and one log entry
+    shape (an append batch adds mode)."""
+    from geodesk_spark.streaming import checkpoint as cp
+
+    common = {
+        "stage", "inputs", "elapsed_sec", "n_rows", "rows_per_sec",
+        "partitions", "schema", "committed_at_unix",
+    }
+    log_fields = {"stage", "version", "n_rows", "committed_at_unix", "snapshot_id"}
+
+    def frame(s, lo, hi):
+        return s.range(lo, hi, 1, 4).select(F.col("id"), (F.col("id") % 7).alias("v"))
+
+    p = Pipeline(spark, str(tmp_path / "fmt"))
+    p.stage("src", lambda s: frame(s, 0, 40))
+    p.stage("tbl", lambda s: frame(s, 0, 100), inputs=["src"])
+    p.append_stage("ing", lambda s: frame(s, 0, 10))
+    p.merge_upsert("tbl", frame(spark, 90, 110), ["id"])
+    assert p.compact("tbl") is not None
+    cp.delete_where(p, "tbl", "v = 3")
+    assert cp.rewrite_deletes(p, "tbl") is not None
+
+    seen = []
+    for e in p.snapshots():
+        lin = cp._load_manifest(p._version_dir(e["stage"], e["version"]))
+        kind = lin.get("action") or ("append" if e.get("mode") else "stage")
+        seen.append(kind)
+        assert set(e) == log_fields | ({"mode"} if kind == "append" else set()), kind
+        assert common <= set(lin), (kind, common - set(lin))
+        if kind in ("stage", "append"):
+            assert set(lin) == common, kind
+        for k in ("stage", "n_rows", "committed_at_unix"):
+            assert lin[k] == e[k], (kind, k)
+        assert lin["n_rows"] == sum(part["rows"] for part in lin["partitions"]), kind
+        assert isinstance(lin["schema"], dict) and lin["elapsed_sec"] >= 0, kind
+    assert seen == [
+        "stage", "stage", "append",
+        "merge_upsert", "compact", "delete_where", "rewrite_deletes",
+    ]
+    assert p.snapshots()[2]["mode"] == "append"
+    assert p.lineage("src")["inputs"] == []
+    assert p.lineage("tbl")["inputs"] == ["tbl"]
+    assert cp._load_manifest(p._version_dir("tbl", 1))["inputs"] == ["src"]
+    assert cp._load_manifest(p._version_dir("ing", 1))["inputs"] == []
