@@ -1,51 +1,63 @@
 """Similarity search over an embedding column (`embeddings(vec_id,
 embedding array<float>, label)`).
 
-Two paths, per the build brief:
+Two families, each with one hot path:
 
-- ``cosine_topk``  — brute-force exact top-k per query vector.  The
-  per-batch kernel is one numpy matmul (Arrow → float32 matrix → BLAS),
-  i.e. the fastest possible single-pass scan; at cluster scale this is
-  the map side, and only (n_queries × k) candidate rows shuffle to the
-  final global top-k window.
-- ``lsh_topk``     — random-hyperplane LSH bucketing: signature bits
-  from deterministic hyperplanes, candidates = same bucket ∪ Hamming-1
-  buckets, exact re-rank inside candidates.  The scale path: the scan
-  prunes to a small candidate fraction; recall is tested vs brute force.
+- Cosine scans (``cosine_topk``, ``ivf_topk``, ``lsh_topk`` and
+  ``crossmodal.hard_negatives_ivf``) share ONE Arrow kernel,
+  :func:`_scan_topk`: per batch one numpy matmul of the unit rows
+  against the unit queries (BLAS), then a per-query partial top-k over
+  the rows the caller's candidate RULE admits — every row, the probed
+  IVF lists, or the Hamming ≤ 1 LSH buckets.  Only (n_queries × k) rows
+  per batch reach the final rank window.
+- ADC scans (``pq_topk``, ``ivfpq_topk``) share ONE encoder,
+  :func:`pq_encode`, and ONE scorer, :func:`_adc_topk`: JVM Column
+  folds on the vector side, a broadcast per-query lookup table, no
+  Python worker.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 
-def _query_vectors(df: DataFrame, query_ids: list[int]) -> tuple[np.ndarray, list[int]]:
+def _unit_rows(V: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm.  An all-zero row stays zero (its norm
+    counts as 1): as a NaN row it would rank arbitrary neighbors first,
+    since NaN sorts above every real double."""
+    norms = np.linalg.norm(V, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return V / norms
+
+
+def _nearest_list(Vn: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Each unit row's IVF list: the argmax-cosine centroid, ties to the
+    lowest index (numpy argmax)."""
+    return np.argmax(Vn @ C.T, axis=1)
+
+
+def _query_vectors(
+    df: DataFrame, query_ids: list[int], id_col: str = "vec_id", emb: str = "embedding"
+) -> tuple[np.ndarray, list[int]]:
     """Fetch the raw (unnormalized) query embeddings, preserving the
     requested id order and failing loudly if nothing matched — the one
     shared fetch path for the cosine/IVF/LSH query side and PQ's
     raw-query variant."""
-    rows = (
-        df.filter(F.col("vec_id").isin([int(q) for q in query_ids]))
-        .select("vec_id", "embedding")
-        .collect()
-    )
-    got = {int(r["vec_id"]): np.asarray(r["embedding"], dtype=np.float64) for r in rows}
+    rows = df.filter(F.col(id_col).isin([int(q) for q in query_ids])).select(id_col, emb).collect()
+    got = {int(r[0]): np.asarray(r[1], dtype=np.float64) for r in rows}
     qids = [q for q in query_ids if q in got]
     if not qids:
         raise ValueError(f"none of query_ids {query_ids!r} exist in the table")
     return np.stack([got[q] for q in qids]), qids
 
 
-def _query_matrix(df: DataFrame, query_ids: list[int]) -> tuple[np.ndarray, list[int]]:
-    Q, qids = _query_vectors(df, query_ids)
-    # zero-norm guard, same as every scan kernel's data side: an
-    # all-zero query would otherwise become a NaN row and silently rank
-    # arbitrary neighbors first (NaN sorts above every real double)
-    norms = np.linalg.norm(Q, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    return Q / norms, qids
+def _query_matrix(
+    df: DataFrame, query_ids: list[int], id_col: str = "vec_id", emb: str = "embedding"
+) -> tuple[np.ndarray, list[int]]:
+    Q, qids = _query_vectors(df, query_ids, id_col, emb)
+    return _unit_rows(Q), qids
 
 
 def _sample_matrix(df: DataFrame, sample: int) -> np.ndarray:
@@ -61,49 +73,104 @@ def _sample_matrix(df: DataFrame, sample: int) -> np.ndarray:
     return np.stack([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
 
 
+def _top_k(cand: DataFrame, k: int, score: Column, id_col: str = "vec_id") -> DataFrame:
+    """The rank tail of every top-k here: ``rank`` = row_number per
+    query_id over ``score`` (an ordered Column), ties to the smaller id,
+    kept while rank <= k.  The window holds nothing else, so Spark cuts
+    each query's candidates with a partial WindowGroupLimit before the
+    shuffle."""
+    w = Window.partitionBy("query_id").orderBy(score, F.col(id_col).asc())
+    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _scan_topk(
+    df: DataFrame,
+    Q: np.ndarray,
+    qids: list[int],
+    k: int,
+    rule,
+    aux,
+    id_col: str = "vec_id",
+    emb: str = "embedding",
+    cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """The one cosine top-k scan: (query_id, <id_col>, score, rank) for
+    the k best-scoring rows of each unit query row of ``Q``.
+
+    Per Arrow batch: the rows are scaled to unit norm (:func:`_unit_rows`)
+    and scored against every query by ONE matmul ``Vn @ Q.T``; then
+    ``rule(aux, pdf, V, Vn)`` — the caller's candidate rule, given the
+    batch (``pdf`` also holds ``cols``) and its raw and unit rows —
+    returns each query's row mask (n_queries × rows, or anything that
+    broadcasts to it).  A query never matches its own id; each query
+    keeps a partial top-k of its candidates, and :func:`_top_k` ranks
+    the survivors by score desc, id asc.  ``aux`` travels in the one
+    broadcast with the queries."""
+    bc = df.sparkSession.sparkContext.broadcast((Q, np.asarray(qids, dtype=np.int64), aux))
+
+    def scan(batches):
+        Qm, qv, aux_v = bc.value
+        for pdf in batches:
+            V = np.stack(pdf[emb].to_numpy()).astype(np.float64)
+            Vn = _unit_rows(V)
+            ids = pdf[id_col].to_numpy()
+            S = Vn @ Qm.T  # (rows, queries)
+            keep = rule(aux_v, pdf, V, Vn) & (ids[None, :] != qv[:, None])
+            out_q, out_v, out_s = [], [], []
+            for j, qid in enumerate(qv):
+                idx = np.flatnonzero(keep[j])
+                take = min(k, len(idx))
+                if take == 0:
+                    continue
+                part = idx[np.argpartition(-S[idx, j], take - 1)[:take]]
+                out_q.append(np.full(take, qid))
+                out_v.append(ids[part])
+                out_s.append(S[part, j])
+            if out_q:
+                yield pd.DataFrame(
+                    {
+                        "query_id": np.concatenate(out_q),
+                        id_col: np.concatenate(out_v),
+                        "score": np.concatenate(out_s),
+                    }
+                )
+
+    cand = df.select(id_col, emb, *cols).mapInPandas(
+        scan, schema=f"query_id long, `{id_col}` long, score double"
+    )
+    return _top_k(cand, k, F.col("score").desc(), id_col)
+
+
+def _every_row(aux, pdf, V, Vn):
+    """Exact rule: every row is a candidate."""
+    return True
+
+
+def _probed_lists(aux, pdf, V, Vn):
+    """IVF rule: rows whose list (:func:`_nearest_list` of the broadcast
+    centroids) the query probes; ``aux`` = (centroids, probe mask)."""
+    C, probed = aux
+    return probed[:, _nearest_list(Vn, C)]
+
+
+def _hamming1_buckets(aux, pdf, V, Vn):
+    """LSH rule: rows whose bucket (:func:`_lsh_buckets` of the RAW rows,
+    the with_lsh_bucket sign rule) is the query's or differs in one bit;
+    ``aux`` = (hyperplanes, query buckets).  x = a ^ b has at most one
+    bit set iff x & (x − 1) == 0."""
+    H, qb = aux
+    x = _lsh_buckets(V, H)[None, :] ^ qb[:, None]
+    return (x & (x - 1)) == 0
+
+
 def cosine_topk(df: DataFrame, query_ids: list[int], k: int = 5) -> DataFrame:
     """Exact cosine top-k: returns (query_id, vec_id, rank).
 
     Self-matches are excluded.  Ties broken by vec_id ascending so the
     result is fully deterministic (and oracle-comparable).
     """
-    spark = df.sparkSession
     Q, qids = _query_matrix(df, query_ids)
-    bc = spark.sparkContext.broadcast((Q, qids, k))
-
-    def scan(batches):
-        Qm, qid_list, kk = bc.value
-        for pdf in batches:
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            norms[norms == 0] = 1.0
-            S = (V / norms[:, None]) @ Qm.T  # (batch, nq)
-            vec_ids = pdf["vec_id"].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for j, qid in enumerate(qid_list):
-                s = S[:, j]
-                mask = vec_ids != qid
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                take = min(kk, len(idx))
-                # partial top-k per batch; global window finishes the job
-                part = idx[np.argpartition(-s[idx], take - 1)[:take]]
-                out_q.extend([qid] * len(part))
-                out_v.extend(vec_ids[part].tolist())
-                out_s.extend(s[part].tolist())
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "score": out_s})
-
-    cand = df.select("vec_id", "embedding").mapInPandas(
-        scan, schema="query_id long, vec_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank")
-    )
+    return _scan_topk(df, Q, qids, k, _every_row, None).select("query_id", "vec_id", "rank")
 
 
 def ivf_centroids(df: DataFrame, n_centroids: int = 16, iters: int = 3, sample: int = 2048) -> np.ndarray:
@@ -116,13 +183,28 @@ def ivf_centroids(df: DataFrame, n_centroids: int = 16, iters: int = 3, sample: 
     V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
     C = V[:: max(1, len(V) // n_centroids)][:n_centroids].copy()
     for _ in range(iters):
-        assign = np.argmax(V @ C.T, axis=1)
+        assign = _nearest_list(V, C)
         for c in range(len(C)):
             members = V[assign == c]
             if len(members):
                 m = members.mean(axis=0)
                 C[c] = m / max(np.linalg.norm(m), 1e-12)
     return C
+
+
+def _probe_lists(C: np.ndarray, Q: np.ndarray, nprobe: int) -> list[list[int]]:
+    """Each unit query's ``nprobe`` nearest IVF lists.  The sort is
+    STABLE, so ties go to the lowest list index (the oracles' `order by
+    dot desc, c asc`)."""
+    return [np.argsort(-(C @ q), kind="stable")[:nprobe].tolist() for q in Q]
+
+
+def _probe_mask(C: np.ndarray, Q: np.ndarray, nprobe: int) -> np.ndarray:
+    """:func:`_probe_lists` as a (queries × lists) bool mask."""
+    mask = np.zeros((len(Q), len(C)), dtype=bool)
+    for j, lists in enumerate(_probe_lists(C, Q, nprobe)):
+        mask[j, lists] = True
+    return mask
 
 
 def ivf_topk(
@@ -144,45 +226,10 @@ def ivf_topk(
     no cluster structure): mean recall@10 = 0.79 at nprobe=8/16 (half
     the lists probed); pinned ≥0.6 by tests/test_ann.py::test_ivf_recall.
     """
-    spark = df.sparkSession
     Q, qids = _query_matrix(df, query_ids)
     C = ivf_centroids(df, n_centroids=n_centroids)
-    probes = {qid: set(np.argsort(-(C @ Q[j]))[:nprobe].tolist()) for j, qid in enumerate(qids)}
-    bc = spark.sparkContext.broadcast((Q, qids, C, probes, k))
-
-    def scan(batches):
-        Qm, qid_list, Cm, pr, kk = bc.value
-        for pdf in batches:
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            norms[norms == 0] = 1.0
-            Vn = V / norms[:, None]
-            cent = np.argmax(Vn @ Cm.T, axis=1)
-            vec_ids = pdf["vec_id"].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for j, qid in enumerate(qid_list):
-                mask = np.isin(cent, list(pr[qid])) & (vec_ids != qid)
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                s = Vn[idx] @ Qm[j]
-                take = min(kk, len(idx))
-                part = np.argpartition(-s, take - 1)[:take]
-                out_q.extend([qid] * take)
-                out_v.extend(vec_ids[idx[part]].tolist())
-                out_s.extend(s[part].tolist())
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "score": out_s})
-
-    cand = df.select("vec_id", "embedding").mapInPandas(
-        scan, schema="query_id long, vec_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "score")
-    )
+    top = _scan_topk(df, Q, qids, k, _probed_lists, (C, _probe_mask(C, Q, nprobe)))
+    return top.select("query_id", "vec_id", "rank", "score")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
@@ -190,6 +237,12 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     rng = np.random.default_rng(seed)
     H = rng.standard_normal((n_planes, dim))
     return H / np.linalg.norm(H, axis=1, keepdims=True)
+
+
+def _lsh_buckets(V: np.ndarray, H: np.ndarray) -> np.ndarray:
+    """Each row's int64 LSH bucket: bit p set iff (V @ H.T)[:, p] > 0."""
+    bits = (V @ H.T) > 0
+    return bits.astype(np.int64) @ (np.int64(1) << np.arange(H.shape[0], dtype=np.int64))
 
 
 def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 12, seed: int = 42) -> DataFrame:
@@ -201,12 +254,8 @@ def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 12, seed: int 
         H = bc.value
         for pdf in batches:
             V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bits = (V @ H.T) > 0  # (batch, planes)
-            b = np.zeros(len(pdf), dtype=np.int64)
-            for j in range(bits.shape[1]):
-                b |= bits[:, j].astype(np.int64) << j
             out = pdf.copy()
-            out["bucket"] = b
+            out["bucket"] = _lsh_buckets(V, H)
             yield out
 
     from pyspark.sql.types import LongType, StructField, StructType
@@ -217,7 +266,9 @@ def with_lsh_bucket(df: DataFrame, dim: int = 64, n_planes: int = 12, seed: int 
 
 def lsh_topk(df: DataFrame, query_ids: list[int], k: int = 5, n_planes: int = 12, seed: int = 42) -> DataFrame:
     """Approximate cosine top-k: candidates from the query's bucket and all
-    Hamming-1 neighbor buckets, exact re-rank within candidates.
+    Hamming-1 neighbor buckets, exact re-rank within candidates.  The
+    buckets are computed inside the scan (the with_lsh_bucket rule), so
+    the plan has one Python node.
 
     At 10^12 scale the bucket column is a partition/cluster key, so the
     candidate read touches (n_planes+1)/2^n_planes of the data.
@@ -227,58 +278,10 @@ def lsh_topk(df: DataFrame, query_ids: list[int], k: int = 5, n_planes: int = 12
     random scan of the same fraction recalls); pinned vs the random-scan
     bar by tests/test_ann.py::test_lsh_beats_random_scan.
     """
-    spark = df.sparkSession
     Q, qids = _query_matrix(df, query_ids)
     H = _hyperplanes(Q.shape[1], n_planes, seed)
-    qbits = (Q @ H.T) > 0
-    qbuckets = {}
-    for j, qid in enumerate(qids):
-        b = 0
-        for p in range(n_planes):
-            b |= int(qbits[j, p]) << p
-        qbuckets[qid] = {b} | {b ^ (1 << p) for p in range(n_planes)}
-
-    # bucket only the two columns the scan reads: with_lsh_bucket's
-    # Arrow kernel pandas-copies every input column per batch, so a
-    # full-width table pays serialization for columns dropped right after
-    bucketed = with_lsh_bucket(
-        df.select("vec_id", "embedding"), dim=Q.shape[1], n_planes=n_planes, seed=seed
-    )
-    bc = spark.sparkContext.broadcast((Q, qids, qbuckets, k))
-
-    def scan(batches):
-        Qm, qid_list, qb, kk = bc.value
-        for pdf in batches:
-            V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            norms[norms == 0] = 1.0
-            Vn = V / norms[:, None]
-            vec_ids = pdf["vec_id"].to_numpy()
-            bkt = pdf["bucket"].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for j, qid in enumerate(qid_list):
-                cand_mask = np.isin(bkt, list(qb[qid])) & (vec_ids != qid)
-                idx = np.nonzero(cand_mask)[0]
-                if len(idx) == 0:
-                    continue
-                s = Vn[idx] @ Qm[j]
-                take = min(kk, len(idx))
-                part = np.argpartition(-s, take - 1)[:take]
-                out_q.extend([qid] * take)
-                out_v.extend(vec_ids[idx[part]].tolist())
-                out_s.extend(s[part].tolist())
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "score": out_s})
-
-    cand = bucketed.select("vec_id", "embedding", "bucket").mapInPandas(
-        scan, schema="query_id long, vec_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", "score")
-    )
+    top = _scan_topk(df, Q, qids, k, _hamming1_buckets, (H, _lsh_buckets(Q, H)))
+    return top.select("query_id", "vec_id", "rank", "score")
 
 
 # ----------------------------------------------------- product quantization
@@ -311,27 +314,32 @@ def pq_codebooks(
     return books
 
 
-def _subdist_col(emb: str, centroid: np.ndarray, offset: int):
-    """Left-assoc Σ (emb[i] − cᵢ)² as a Column — the op ORDER every
-    engine reproduces exactly (element_at is 1-based)."""
-    acc = None
-    for i, cv in enumerate(centroid):
-        t = (F.element_at(F.col(emb), offset + i + 1).cast("double") - F.lit(float(cv)))
-        term = t * t
-        acc = term if acc is None else acc + term
-    return acc
+def _subdist_col(emb: str, centroid: np.ndarray, offset: int) -> Column:
+    """Left-assoc Σ (emb[offset+i] − cᵢ)² as a HIGHER-ORDER-FUNCTION
+    fold, the :func:`_dot_fold_col` shape: the centroid enters as one
+    constant-folded literal array, zip_with pairs it with
+    slice(emb, offset+1, len(c)), and aggregate folds from 0.0 — the op
+    ORDER every engine reproduces (0.0 + t₀² is t₀² bit for bit)."""
+    cl = F.array(*[F.lit(float(v)) for v in centroid])
+    diff = F.zip_with(
+        F.slice(F.col(emb), offset + 1, len(centroid)), cl, lambda x, y: x.cast("double") - y
+    )
+    return F.aggregate(diff, F.lit(0.0), lambda a, t: a + t * t)
 
 
 def pq_encode(df: DataFrame, books: np.ndarray, emb: str = "embedding") -> DataFrame:
-    """Encode every vector to m sub-codes: per subspace, the distance
-    array is materialized in its OWN Project (CollapseProject keeps a
-    non-cheap expression used twice un-inlined), then argmin-with-
-    lowest-index-tie = array_position(arr, array_min(arr)) − 1.  Pure
-    Catalyst; the plan carries each distance tree exactly once instead
-    of the ~9× a least()+CASE chain pays."""
+    """Encode every vector to m sub-codes: the ``emb`` column is replaced
+    by code0..code{m-1}, every other column passes through.  Per
+    subspace, the distance array is materialized in its OWN Project
+    (CollapseProject keeps a non-cheap expression used twice
+    un-inlined), then argmin-with-lowest-index-tie =
+    array_position(arr, array_min(arr)) − 1.  Pure Catalyst; the plan
+    carries each distance fold exactly once instead of the ~9× a
+    least()+CASE chain pays."""
     m, ksub, sub = books.shape
+    keep = [c for c in df.columns if c != emb]
     darrs = df.select(
-        "vec_id",
+        *keep,
         *[
             F.array(*[_subdist_col(emb, books[mi, c], mi * sub) for c in range(ksub)]).alias(
                 f"darr{mi}"
@@ -340,7 +348,7 @@ def pq_encode(df: DataFrame, books: np.ndarray, emb: str = "embedding") -> DataF
         ],
     )
     return darrs.select(
-        "vec_id",
+        *keep,
         *[
             (F.array_position(F.col(f"darr{mi}"), F.array_min(F.col(f"darr{mi}"))) - 1)
             .cast("int")
@@ -348,6 +356,57 @@ def pq_encode(df: DataFrame, books: np.ndarray, emb: str = "embedding") -> DataF
             for mi in range(m)
         ],
     )
+
+
+def _adc_luts(Qraw: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """ADC lookup tables, shape (queries, m, ksub): entry [j, mi, c] is
+    Σ (q_i − c_i)² over subspace mi of raw query j, summed left to right
+    (cumsum is sequential) — the order of the Spark fold and of the
+    oracle's list_sum."""
+    m, ksub, sub = books.shape
+    T = Qraw.reshape(len(Qraw), m, 1, sub) - books[None]
+    return np.cumsum(T * T, axis=3)[..., -1]
+
+
+def _adc_topk(
+    codes: DataFrame,
+    qids: list[int],
+    Qraw: np.ndarray,
+    books: np.ndarray,
+    k: int,
+    probes: list[list[int]] | None = None,
+) -> DataFrame:
+    """The one ADC scorer: (query_id, vec_id, rank) for the k smallest
+    Σ_mi lut_mi[code_mi] per query over the (vec_id, code0..) table
+    ``codes``.  The queries arrive as ONE broadcast row each (an Arrow
+    LocalRelation: query_id and m LUT arrays of ksub doubles, plus the
+    query's probed lists when ``probes`` is given, which then admit
+    only rows whose ``cent`` is probed); a self-match never counts.
+
+    Rank-only output (the IVF-oracle precedent): scores order the
+    candidates, but tiny trainer float diffs between numpy and the
+    SQL-unrolled trainer must not enter the hash."""
+    m = books.shape[0]
+    luts = _adc_luts(Qraw, books)
+    names = [f"lut{mi}" for mi in range(m)]
+    q = pd.DataFrame({"query_id": qids, **{n: list(luts[:, mi]) for mi, n in enumerate(names)}})
+    schema = "query_id long, " + ", ".join(f"{n} array<double>" for n in names)
+    keep = F.col("vec_id") != F.col("query_id")
+    if probes is not None:
+        q["probes"] = probes
+        schema += ", probes array<int>"
+        keep = F.array_contains(F.col("probes"), F.col("cent")) & keep
+    qdf = codes.sparkSession.createDataFrame(q, schema)
+    score = None
+    for mi in range(m):
+        t = F.element_at(F.col(f"lut{mi}"), F.col(f"code{mi}") + 1)
+        score = t if score is None else score + t
+    cand = (
+        codes.crossJoin(F.broadcast(qdf))
+        .filter(keep)
+        .select("query_id", "vec_id", score.alias("score"))
+    )
+    return _top_k(cand, k, F.col("score").asc()).select("query_id", "vec_id", "rank")
 
 
 def pq_topk(
@@ -362,66 +421,30 @@ def pq_topk(
     distance (ADC) — per-subspace lookup tables summed left-assoc —
     and take the top-k smallest approximate L2 per query.
 
-    Scale shape: ONE scan encodes (JVM column expressions; the codebook
-    enters as plan literals — m·ksub·(dim/m) doubles, tiny), the
-    queries arrive as a BROADCAST LUT table (one row per query, m
-    arrays of ksub doubles) cross-joined against the codes, and one
-    bounded window does the ranking.  At 10^12 vectors the codes table
-    is the stored artifact (32× smaller than float32 at dim 64) and
-    rebuilding LUTs per query batch is free — the standard
-    billion-scale recipe.  Returns (query_id, vec_id, rank).
+    Scale shape: ONE scan encodes (JVM column expressions, no Python):
+    the codebook enters the plan as m·ksub literal arrays of dim/m
+    doubles, one per centroid, each folded against its slice of the
+    vector by zip_with/aggregate — higher-order functions, so that
+    projection runs interpreted, outside whole-stage codegen (unrolled
+    into one subtraction term per element, the same codebook made the
+    query's jobs ship 1.1-1.8 MiB task binaries).  The queries arrive
+    as a BROADCAST LUT table (one row per query, m arrays of ksub
+    doubles) cross-joined against the codes, and one bounded window
+    does the ranking.  At 10^12
+    vectors the codes table is the stored artifact (32× smaller than
+    float32 at dim 64) and rebuilding LUTs per query batch is free —
+    the standard billion-scale recipe.  Returns (query_id, vec_id,
+    rank).  RAW query vectors (no normalization): ADC approximates L2
+    in the raw space the codebooks were trained in.
 
     Measured recall (near-uniform sf0.001 embeddings, PQ's worst case):
     mean recall@10 = 0.09 at m=4/ksub=8 ≈ 4.4× a random scan of k
     candidates (0.02); pinned ≥3× random by tests/test_ann.py::test_pq_recall.
     """
-    spark = df.sparkSession
     books = pq_codebooks(df, m=m, ksub=ksub)
     Qraw, qids = _query_vectors(df, query_ids)
-    got = {qid: Qraw[i] for i, qid in enumerate(qids)}
-    sub = books.shape[2]
-    # LUT values are driver-computed floats: DATA (literal rows), summed
-    # sequentially to match both the Spark left-assoc score and the
-    # oracle's list_sum order.  RAW query vectors (no normalization):
-    # ADC approximates L2 in the raw space the codebooks were trained in.
-    lut_rows = []
-    for qid in qids:
-        q = got[qid]
-        luts = []
-        for mi in range(m):
-            qm = q[mi * sub : (mi + 1) * sub]
-            vals = []
-            for c in range(ksub):
-                acc = 0.0
-                for x, y in zip(qm, books[mi, c]):
-                    t = float(x) - float(y)
-                    acc += t * t
-                vals.append(acc)
-            luts.append(vals)
-        lut_rows.append((int(qid), *luts))
-    qdf = spark.createDataFrame(
-        lut_rows,
-        schema="query_id long, " + ", ".join(f"lut{mi} array<double>" for mi in range(m)),
-    )
-    codes = pq_encode(df, books)
-    score = None
-    for mi in range(m):
-        t = F.element_at(F.col(f"lut{mi}"), F.col(f"code{mi}") + 1)
-        score = t if score is None else score + t
-    cand = (
-        codes.crossJoin(F.broadcast(qdf))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id", score.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        # rank-only output (the IVF-oracle precedent): scores order the
-        # candidates but tiny trainer float diffs between numpy and the
-        # SQL-unrolled trainer must not enter the hash
-        .select("query_id", "vec_id", "rank")
-    )
+    codes = pq_encode(df.select("vec_id", "embedding"), books)
+    return _adc_topk(codes, qids, Qraw, books, k)
 
 
 def pq_topk_sql(
@@ -541,7 +564,7 @@ def pq_topk_sql(
     )
 
 
-def _dot_fold_col(emb: str, centroid: np.ndarray) -> "F.Column":
+def _dot_fold_col(emb: str, centroid: np.ndarray) -> Column:
     """Left-assoc Σ emb[i]·cᵢ as a HIGHER-ORDER-FUNCTION fold: the
     centroid enters as a constant-folded literal array and zip_with/
     aggregate run as one interpreted loop (higher-order functions stay
@@ -569,49 +592,24 @@ def ivfpq_topk(
     distances are estimated from PQ codes by asymmetric-distance lookup
     (ADC) — never touching the raw vectors at query time.
 
-    Scale shape: ONE vector-side projection computes BOTH the coarse
+    Scale shape: ONE vector-side pipeline computes BOTH the coarse
     assignment (argmax of 16 raw-dot columns; normalization cannot
     change an argmax over a positive scalar, so raw dots are exact and
-    engine-identical) and the m PQ codes (pq_encode's argmin pattern) —
-    at 10^12 vectors that (cent, code0..m) table IS the stored index,
-    ~32× smaller than float32, partitionable by cent so a probe touches
-    nprobe/n_centroids of the data.  Queries arrive as ONE broadcast
-    row each (probe list + m ADC LUTs); scoring is a broadcast join +
-    integer array lookups + one bounded top-k window.  Zero Python on
-    the vector side.  Rank-only output (the PQ-oracle precedent: tiny
-    trainer float diffs between numpy and the SQL-unrolled trainer must
-    not enter the hash).
+    engine-identical) and the m PQ codes (:func:`pq_encode`, with
+    ``cent`` passing through) — at 10^12 vectors that (cent, code0..m)
+    table IS the stored index, ~32× smaller than float32, partitionable
+    by cent so a probe touches nprobe/n_centroids of the data.  Queries
+    arrive as ONE broadcast row each (probe list + m ADC LUTs); scoring
+    is a broadcast join + integer array lookups + one bounded top-k
+    window (:func:`_adc_topk`, shared with pq_topk).  Zero Python on
+    the vector side.  Rank-only output.
 
     Probe lists use a STABLE argsort (ties → lowest centroid index,
     matching the oracle's `order by dot desc, c asc`).
     """
-    spark = df.sparkSession
     C = ivf_centroids(df, n_centroids=n_centroids)
     books = pq_codebooks(df, m=m, ksub=ksub)
-    Qn, qids = _query_matrix(df, query_ids)
-    Qraw, _ = _query_vectors(df, query_ids)
-    sub = books.shape[2]
-    lut_rows = []
-    for j, qid in enumerate(qids):
-        probes = [int(c) for c in np.argsort(-(C @ Qn[j]), kind="stable")[:nprobe]]
-        q = Qraw[j]
-        luts = []
-        for mi in range(m):
-            qm = q[mi * sub : (mi + 1) * sub]
-            vals = []
-            for c in range(ksub):
-                acc = 0.0
-                for x, y in zip(qm, books[mi, c]):
-                    t = float(x) - float(y)
-                    acc += t * t
-                vals.append(acc)
-            luts.append(vals)
-        lut_rows.append((int(qid), probes, *luts))
-    qdf = spark.createDataFrame(
-        lut_rows,
-        schema="query_id long, probes array<int>, "
-        + ", ".join(f"lut{mi} array<double>" for mi in range(m)),
-    )
+    Qraw, qids = _query_vectors(df, query_ids)
     with_cent = df.select(
         "vec_id",
         "embedding",
@@ -620,51 +618,13 @@ def ivfpq_topk(
         ),
     ).select(
         "vec_id",
-        "embedding",
         (F.array_position(F.col("cdot"), F.array_max(F.col("cdot"))) - 1)
         .cast("int")
         .alias("cent"),
+        "embedding",
     )
-    # inline pq_encode with cent riding along — one narrow pipeline, no
-    # fact-side join (same darr-per-Project structure pq_encode proved)
-    darrs = with_cent.select(
-        "vec_id",
-        "cent",
-        *[
-            F.array(
-                *[_subdist_col("embedding", books[mi, c], mi * sub) for c in range(ksub)]
-            ).alias(f"darr{mi}")
-            for mi in range(m)
-        ],
-    )
-    enc = darrs.select(
-        "vec_id",
-        "cent",
-        *[
-            (F.array_position(F.col(f"darr{mi}"), F.array_min(F.col(f"darr{mi}"))) - 1)
-            .cast("int")
-            .alias(f"code{mi}")
-            for mi in range(m)
-        ],
-    )
-    score = None
-    for mi in range(m):
-        t = F.element_at(F.col(f"lut{mi}"), F.col(f"code{mi}") + 1)
-        score = t if score is None else score + t
-    cand = (
-        enc.crossJoin(F.broadcast(qdf))
-        .filter(
-            F.array_contains(F.col("probes"), F.col("cent"))
-            & (F.col("vec_id") != F.col("query_id"))
-        )
-        .select("query_id", "vec_id", score.alias("score"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").asc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank")
-    )
+    probes = _probe_lists(C, _unit_rows(Qraw), nprobe)
+    return _adc_topk(pq_encode(with_cent, books), qids, Qraw, books, k, probes)
 
 
 def ivfpq_topk_sql(
@@ -872,9 +832,7 @@ def kmeans_assign(df: DataFrame, n_centroids: int = 16, iters: int = 3) -> DataF
         Cm = bc.value
         for pdf in batches:
             V = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            norms[norms == 0] = 1.0
-            cent = np.argmax((V / norms[:, None]) @ Cm.T, axis=1)
+            cent = _nearest_list(_unit_rows(V), Cm)
             yield pd.DataFrame(
                 {"vec_id": pdf["vec_id"].to_numpy(), "cluster": cent.astype("int32")}
             )
@@ -1046,10 +1004,9 @@ def kcenter_select(
     base = df.select(
         F.col(id_col).cast("bigint").alias("id"), F.col(emb_col).alias("e")
     )
-    first = base.orderBy("id").limit(1).collect()
-    if not first:
-        return df.sparkSession.createDataFrame([], "sel_rank long, vec_id long")
-    selected: list[tuple[int, list]] = [(int(first[0]["id"]), list(first[0]["e"]))]
+    selected: list[tuple[int, list]] = [
+        (int(r["id"]), list(r["e"])) for r in base.orderBy("id").limit(1).collect()
+    ]
     nrm_v = F.sqrt(
         F.aggregate(
             F.col("e"), F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
@@ -1057,7 +1014,7 @@ def kcenter_select(
     )
     cur = base.withColumn("mind", F.lit(None).cast("long"))
     prev = None
-    for _ in range(1, k):
+    for _ in range(1, k if selected else 1):  # an empty input runs no round
         cvec = selected[-1][1]
         nc = 0.0
         for x in cvec:  # left-to-right, the same order as the SQL list_sum
@@ -1095,7 +1052,9 @@ def kcenter_select(
             break
         selected.append((int(nxt[0]["id"]), list(nxt[0]["e"])))
     out = df.sparkSession.createDataFrame(
-        [(r + 1, i) for r, (i, _) in enumerate(selected)],
+        pd.DataFrame(
+            [(r + 1, i) for r, (i, _) in enumerate(selected)], columns=["sel_rank", "vec_id"]
+        ),
         "sel_rank long, vec_id long",
     )
     if prev is not None:
@@ -1375,13 +1334,8 @@ def sq8_topk(
     # greatest(·, 1): a zero vector has zero norm — guard the denominator
     # identically on both engines (kcenter null-ordering lesson)
     score = dot.cast("double") / F.sqrt(F.greatest(nv * nq, F.lit(1).cast("bigint")).cast("double"))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return (
-        j.select("query_id", F.col(id_col), score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank")
-    )
+    cand = j.select("query_id", F.col(id_col), score.alias("score"))
+    return _top_k(cand, k, F.col("score").desc(), id_col).select("query_id", id_col, "rank")
 
 
 def sq8_topk_sql(query_ids: list[int], k: int = 5, table: str = "embeddings") -> str:
@@ -1516,13 +1470,8 @@ def two_stage_topk(
         F.col("_qe"), F.lit(0.0), lambda a, x: a + x.cast("double") * x.cast("double")
     )
     score = dot / (F.sqrt(nv) * F.sqrt(nq))
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col(id_col).asc())
-    return (
-        j.select("query_id", F.col(id_col), score.alias("score"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank")
-    )
+    cand = j.select("query_id", F.col(id_col), score.alias("score"))
+    return _top_k(cand, k, F.col("score").desc(), id_col).select("query_id", id_col, "rank")
 
 
 def two_stage_topk_sql(

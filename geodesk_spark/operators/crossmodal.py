@@ -22,9 +22,9 @@ on identical bits.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from geodesk_spark.operators import ann
 
 
 def _norm(col):
@@ -145,9 +145,8 @@ def hard_negatives(
     query set, JVM zip_with/aggregate folds (interpreted, outside
     whole-stage codegen), label-mismatch filter
     inside the same stage, then only (n_queries × candidates) rows
-    reach the rank-window shuffle.  For table×table mining compose
-    ann.with_lsh_bucket first (see hard_negatives_lsh) so candidates
-    are bucket-local instead of the full corpus.
+    reach the rank-window shuffle.  To scan only part of the corpus,
+    use hard_negatives_ivf (probed IVF lists; recall < 1).
     """
     q = df.filter(F.col(id_col).isin([int(i) for i in query_ids])).select(
         F.col(id_col).alias("query_id"),
@@ -167,12 +166,9 @@ def hard_negatives(
     # greatest(·, 1e-12): zero-norm guard, same law as kcenter_select
     score = dot / F.greatest(_norm(F.col(emb)) * _norm(F.col("_qe")), F.lit(1e-12))
     cos6 = F.floor(score * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    w = Window.partitionBy("query_id").orderBy(F.col("_s").desc(), F.col(id_col).asc())
-    return (
-        j.select("query_id", F.col(id_col), score.alias("_s"), cos6.alias("cos6"))
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank", "cos6")
+    cand = j.select("query_id", F.col(id_col), score.alias("_s"), cos6.alias("cos6"))
+    return ann._top_k(cand, k, F.col("_s").desc(), id_col).select(
+        "query_id", id_col, "rank", "cos6"
     )
 
 
@@ -207,59 +203,27 @@ def hard_negatives_ivf(
     exact miner above is the correctness anchor; this one trades
     declared recall for a bounded scan.
     """
-    from geodesk_spark.operators.ann import _query_matrix, ivf_centroids
-
-    spark = df.sparkSession
-    Q, qids = _query_matrix(df, query_ids)
-    qlab = {
-        int(r[0]): r[1]
-        for r in df.filter(F.col(id_col).isin([int(i) for i in query_ids]))
-        .select(id_col, label)
-        .collect()
-    }
-    C = ivf_centroids(df, n_centroids=n_centroids)
-    probes = {qid: set(np.argsort(-(C @ Q[j]))[:nprobe].tolist()) for j, qid in enumerate(qids)}
-    bc = spark.sparkContext.broadcast((Q, qids, qlab, C, probes, k))
-
-    def scan(batches):
-        Qm, qid_list, qlab_m, Cm, pr, kk = bc.value
-        for pdf in batches:
-            V = np.stack(pdf[emb].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(V, axis=1)
-            norms[norms == 0] = 1.0
-            Vn = V / norms[:, None]
-            cent = np.argmax(Vn @ Cm.T, axis=1)
-            vec_ids = pdf[id_col].to_numpy()
-            labs = pdf[label].to_numpy()
-            out_q, out_v, out_s = [], [], []
-            for j, qid in enumerate(qid_list):
-                mask = (
-                    np.isin(cent, list(pr[qid]))
-                    & (vec_ids != qid)
-                    & (labs != qlab_m[qid])
-                )
-                idx = np.nonzero(mask)[0]
-                if len(idx) == 0:
-                    continue
-                s = Vn[idx] @ Qm[j]  # Qm rows are unit-norm (_query_matrix)
-                take = min(kk, len(idx))
-                part = np.argpartition(-s, take - 1)[:take]
-                out_q.extend([qid] * take)
-                out_v.extend(vec_ids[idx[part]].tolist())
-                out_s.extend(s[part].tolist())
-            if out_q:
-                yield pd.DataFrame({"query_id": out_q, "vec_id": out_v, "score": out_s})
-
-    cand = df.select(F.col(id_col), F.col(emb), F.col(label)).mapInPandas(
-        scan, schema="query_id long, vec_id long, score double"
+    Q, qids = ann._query_matrix(df, query_ids, id_col, emb)
+    labels = (
+        df.filter(F.col(id_col).isin(qids)).select(id_col, label).toPandas().set_index(id_col)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
+    C = ann.ivf_centroids(
+        df.select(F.col(id_col).alias("vec_id"), F.col(emb).alias("embedding")),
+        n_centroids=n_centroids,
+    )
+    aux = (C, ann._probe_mask(C, Q, nprobe), label, labels[label].loc[qids].to_numpy())
+    top = ann._scan_topk(df, Q, qids, k, _probed_other_label, aux, id_col, emb, (label,))
     cos6 = F.floor(F.col("score") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "rank", cos6.alias("cos6"))
-    )
+    return top.select("query_id", id_col, "rank", cos6.alias("cos6"))
+
+
+def _probed_other_label(aux, pdf, V, Vn):
+    """hard_negatives_ivf's candidate rule: rows in the query's probed
+    IVF lists whose label differs from the query's; ``aux`` =
+    (centroids, probe mask, label column, query labels)."""
+    C, probed, label, qlab = aux
+    other = pdf[label].to_numpy()[None, :] != qlab[:, None]
+    return ann._probed_lists((C, probed), pdf, V, Vn) & other
 
 
 def hard_negatives_sql(

@@ -74,6 +74,7 @@ import os
 import shutil
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -714,6 +715,27 @@ def _commit_rewrite(
     )
 
 
+def _key_range_hits(
+    spark: SparkSession, parts: list[dict], updates: DataFrame, key: str
+) -> DataFrame:
+    """(file) for every manifest entry whose footer [min, max] on ``key``
+    holds a key of ``updates``: the per-file ranges are a small
+    local frame, so they come from pandas (an Arrow
+    LocalRelation, broadcast without a Spark job of its own)."""
+    ranges = spark.createDataFrame(
+        pd.DataFrame(
+            [(part["file"], *part["stats"][key]) for part in parts], columns=["file", "mn", "mx"]
+        )
+    )
+    return (
+        updates.select(F.col(key).alias("_k"))
+        .distinct()
+        .join(F.broadcast(ranges), (F.col("_k") >= F.col("mn")) & (F.col("_k") <= F.col("mx")))
+        .select("file")
+        .distinct()
+    )
+
+
 def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str]) -> int:
     """MERGE (upsert) as a copy-on-write snapshot commit — the Iceberg
     ``MERGE INTO … WHEN MATCHED UPDATE WHEN NOT MATCHED INSERT`` analog:
@@ -741,18 +763,7 @@ def merge_upsert(p: "Pipeline", stage: str, updates: DataFrame, keys: list[str])
 
     key = keys[0]
     if parts and all(part.get("stats", {}).get(key) for part in parts):
-        sdf = p.spark.createDataFrame(
-            [(part["file"], part["stats"][key][0], part["stats"][key][1]) for part in parts],
-            ["file", "mn", "mx"],
-        )
-        hit = (
-            updates.select(F.col(key).alias("_k"))
-            .distinct()
-            .join(F.broadcast(sdf), (F.col("_k") >= F.col("mn")) & (F.col("_k") <= F.col("mx")))
-            .select("file")
-            .distinct()
-        )
-        affected = {r["file"] for r in hit.collect()}
+        affected = {r["file"] for r in _key_range_hits(p.spark, parts, updates, key).collect()}
     else:
         affected = {part["file"] for part in parts}
 

@@ -624,3 +624,60 @@ def test_pca_project_recovers_planted_axes(spark):
     got8 = {r.vec_id: (r.c0, r.c1)
             for r in ann_mod.pca_project(df.repartition(8), dim=dim, k=2).collect()}
     assert got8 == got
+
+
+def test_ann_operators_python_nodes(spark, emb):
+    """The ADC operators plan no Python worker; each cosine scan plans
+    exactly one, its shared Arrow kernel (lsh_topk buckets inside it)."""
+    from planlint import python_nodes
+
+    from geodesk_spark.operators import crossmodal
+
+    assert python_nodes(ann.pq_topk(emb, QUERY_IDS, k=K)) == []
+    assert python_nodes(ann.ivfpq_topk(emb, QUERY_IDS, k=K)) == []
+    for scan in (
+        ann.cosine_topk(emb, QUERY_IDS, k=K),
+        ann.ivf_topk(emb, QUERY_IDS, k=K),
+        ann.lsh_topk(emb, QUERY_IDS, k=K),
+        crossmodal.hard_negatives_ivf(emb, QUERY_IDS, k=K),
+    ):
+        assert python_nodes(scan) == ["MapInPandas"]
+
+
+def test_hard_negatives_ivf_keeps_id_col(spark, emb):
+    """With the id and vector columns renamed, hard_negatives_ivf names
+    its output like hard_negatives does and returns the rows it returns
+    on the original names."""
+    from geodesk_spark.operators import crossmodal
+
+    ren = emb.withColumnRenamed("vec_id", "item_id").withColumnRenamed("embedding", "vec")
+    kw = dict(k=K, id_col="item_id", emb="vec")
+    exact = crossmodal.hard_negatives(ren, QUERY_IDS, **kw)
+    ivf = crossmodal.hard_negatives_ivf(ren, QUERY_IDS, **kw)
+    assert [(f.name, f.dataType) for f in ivf.schema] == [
+        (f.name, f.dataType) for f in exact.schema
+    ]
+    assert ivf.columns == ["query_id", "item_id", "rank", "cos6"]
+    base = crossmodal.hard_negatives_ivf(emb, QUERY_IDS, k=K)
+    assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, base.collect()))
+
+
+def test_adc_luts_and_lsh_buckets_match_loops():
+    """The vectorized LUT tables and bucket packer equal their loop
+    forms bit for bit: each LUT entry is Σ (q − c)² summed left to
+    right, each bucket ORs bit p for a positive p-th hyperplane dot."""
+    rng = np.random.default_rng(5)
+    Q = rng.normal(size=(6, 16)).astype(np.float32).astype(np.float64)
+    books = rng.normal(size=(4, 8, 4))
+    luts = ann._adc_luts(Q, books)
+    for j, q in enumerate(Q):
+        for mi in range(4):
+            for c in range(8):
+                acc = 0.0
+                for x, y in zip(q[mi * 4 : (mi + 1) * 4], books[mi, c]):
+                    acc += (x - y) * (x - y)
+                assert luts[j, mi, c] == acc
+    H = ann._hyperplanes(16, 12)
+    bits = (Q @ H.T) > 0
+    want = [sum(int(bits[j, p]) << p for p in range(12)) for j in range(len(Q))]
+    assert ann._lsh_buckets(Q, H).tolist() == want

@@ -412,6 +412,33 @@ def test_merge_upsert_cow(spark, tmp_path):
         p.merge_upsert("ap", upd, keys=["k"])
 
 
+def test_merge_upsert_file_probe_is_local(spark, tmp_path):
+    """merge_upsert's per-file key ranges reach its probe join as a
+    LocalRelation built from pandas, never a Scan ExistingRDD (which
+    costs a Spark job of its own), and the probe finds exactly the
+    files whose [min, max] holds an update key."""
+    from pyspark.sql import functions as F
+
+    from geodesk_spark.streaming import checkpoint as cp
+    from geodesk_spark.streaming.checkpoint import Pipeline
+    from planlint import plan_nodes
+
+    p = Pipeline(spark, str(tmp_path / "mu"))
+    p.stage(
+        "tbl",
+        lambda s: s.range(4_000)
+        .select(F.col("id").alias("k"), (F.col("id") % 10).alias("v"))
+        .repartitionByRange(4, "k"),
+    )
+    parts = p.lineage("tbl")["partitions"]
+    upd = spark.range(3_990, 4_010).select(F.col("id").alias("k"))
+    probe = cp._key_range_hits(spark, parts, upd, "k")
+    nodes = plan_nodes(probe)
+    assert "LocalTableScan" in nodes and "Scan ExistingRDD" not in nodes, nodes
+    want = {part["file"] for part in parts if part["stats"]["k"][1] >= 3_990}
+    assert {r["file"] for r in probe.collect()} == want and len(want) == 1
+
+
 def test_compact_binpack(spark, tmp_path):
     """compact bin-packs sub-target files into few packed files, links
     the right-sized ones untouched, and preserves the rows exactly."""

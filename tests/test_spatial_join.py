@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from geodesk_spark.geo import mercator, pip
 from geodesk_spark.operators import bigjoin, knn as knn_mod, spatial_join, tiling
 from geodesk_spark.sources import synth
+from planlint import formatted_plan, plan_nodes, python_nodes
 
 
 @pytest.fixture(scope="module")
@@ -875,20 +876,15 @@ def test_flagship_plan_shape_regression(spark, tmp_path):
     - ZERO shuffle Exchange before the rollup (one fact-side pass),
     - the polygon band table arrives by BroadcastExchange into a
       BroadcastHashJoin,
-    - no BatchEvalPython / ArrowEvalPython / MapInPandas / FlatMapsInPandas
-      nodes anywhere (no Python worker),
+    - no Python-worker node anywhere (planlint.python_nodes),
     - no ring-vertex literal in the analyzed plan, whose length stays
       bounded (the layer's geometry arrives as broadcast data)."""
     joined = _flagship_join(spark, str(tmp_path / "imgs"))
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        joined._jdf.queryExecution(), "formatted"
-    )
-    nodes = re.findall(r"\(\d+\) ([A-Za-z]+)", plan)
+    plan = formatted_plan(joined)
+    nodes = plan_nodes(joined)
     assert "BroadcastHashJoin" in nodes and "BroadcastExchange" in nodes
     assert "Exchange" not in nodes  # shuffle-free: only BroadcastExchange
-    for py_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
-                    "FlatMapGroupsInPandas"):
-        assert py_node not in nodes, py_node
+    assert python_nodes(joined) == []
     # the projection must prune to the three columns the kernel needs
     assert re.search(r"ReadSchema: struct<image_id:string,lon:double,lat:double>", plan)
     # geometry travels as data: no ring-vertex literal, bounded plan
