@@ -95,14 +95,6 @@ def parse(s: str, strict: bool = False) -> int:
     return ((-value if negative else value) << 4) | scale
 
 
-def scale_of(d: int) -> int:
-    return d & 15
-
-
-def mantissa_of(d: int) -> int:
-    return d >> 4
-
-
 def of(mantissa: int, scale: int) -> int:
     assert 0 <= scale <= 15
     return (mantissa << 4) | scale

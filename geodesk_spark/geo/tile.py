@@ -171,10 +171,6 @@ def tile_col(x_col, y_col, zoom: int):
     return (F.lit(zoom << 24).cast("long") + F.shiftleft(row, 12) + col).cast("int")
 
 
-def zoom_of_col(tile_c):
-    return _F().shiftright(tile_c, 24)
-
-
 def column_of_col(tile_c):
     return tile_c.bitwiseAND(_F().lit(0xFFF))
 

@@ -30,7 +30,7 @@ codegen); there is no UDF anywhere in GOQL evaluation.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 from geodesk_spark.goql import parser as P
 
@@ -136,8 +136,3 @@ def compile_goql(query: str, check_types: bool = True) -> Column:
     for s in sel_cols[1:]:
         out = out | s
     return out
-
-
-def select_goql(df: DataFrame, query: str) -> DataFrame:
-    """Features.select(goql) — view refinement (feature/Features.java:48)."""
-    return df.filter(compile_goql(query))

@@ -169,7 +169,7 @@ def _proper_crossing(zoom: int):
     icell): the exact int64 orientation test, the intersection point and
     the ``zoom`` cover cell holding it (steps 3-4 of
     ``crossing_segments_join``)."""
-    from geodesk_spark.operators.tiling import cover_cell_col
+    from geodesk_spark.operators.tiling import cover_cell_col, cover_ranges
 
     ax1, ay1, ax2, ay2 = (F.col(f"a{c}") for c in ("x1", "y1", "x2", "y2"))
     bx1, by1, bx2, by2 = (F.col(f"b{c}") for c in ("x1", "y1", "x2", "y2"))
@@ -180,16 +180,11 @@ def _proper_crossing(zoom: int):
     proper = (((d1 > 0) & (d2 < 0)) | ((d1 < 0) & (d2 > 0))) & (
         ((d3 > 0) & (d4 < 0)) | ((d3 < 0) & (d4 > 0))
     )
-    step = 1 << (32 - zoom)
     t = d1 / (d1 - d2)
     ix = ax1 + t * (ax2 - ax1)
     iy = ay1 + t * (ay2 - ay1)
-    icell = cover_cell_col(
-        zoom,
-        F.floor((F.lit(2147483647) - iy) / F.lit(step)),
-        F.floor((ix + F.lit(2147483648)) / F.lit(step)),
-    )
-    return proper, t, ix, iy, icell
+    ic, _, ir, _ = cover_ranges(zoom, ix, iy, ix, iy)  # the point's own cell
+    return proper, t, ix, iy, cover_cell_col(zoom, ir, ic)
 
 
 def crossing_segments_join(

@@ -55,15 +55,6 @@ def minhash_from_hashes(hh: Column, j: int) -> Column:
     return F.array_min(F.transform(hh, lambda h: F.substring(h, 1 + 8 * j, 8)))
 
 
-def minhash_sig_cols(text: Column) -> list[Column]:
-    """N_MINHASH independent minwise hashes via slice-of-md5 (above).
-
-    NB: transform lambdas must take exactly ONE parameter — PySpark binds
-    a second parameter to the array index, silently shadowing closures."""
-    hh = shingle_hash_col(shingles_col(text))
-    return [minhash_from_hashes(hh, j).alias(f"mh{j}") for j in range(N_MINHASH)]
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact duplicate groups by normalized-text md5; keeps the min doc_id
     as the canonical representative (hash-groupBy — one shuffle)."""
@@ -373,16 +364,18 @@ def _release_local_checkpoint(df: DataFrame) -> None:
     """Free a SPENT localCheckpoint's storage blocks — safe only when the
     frame is never read again (we release round k−1 after round k is
     eagerly materialized).  DataFrame.unpersist can't reach checkpoint
-    blocks, so this goes through the LogicalRDD plan leaf; guarded, so
-    on any Spark-internals change it degrades to GC-based cleanup."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        for i in range(leaves.size()):
-            leaf = leaves.apply(i)
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
-    except Exception:
-        pass
+    blocks, so this goes through the LogicalRDD plan leaf and drops its
+    blocks with ``SparkContext.unpersistRDD``: ``RDD.unpersist`` would
+    also warn, once per released round, that a locally checkpointed RDD
+    cannot be recomputed, which is what "spent" means here.  Unguarded:
+    a change in Spark's internals raises instead of silently leaving
+    every round's blocks to the garbage collector."""
+    sc = df.sparkSession.sparkContext._jsc.sc()
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            sc.unpersistRDD(leaf.rdd().id(), False)
 
 
 def _star_round(e: DataFrame, large: bool) -> DataFrame:

@@ -199,17 +199,6 @@ def transcode(df: DataFrame, fmt: str = "jpeg") -> DataFrame:
     )
 
 
-def frame_sample(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Video-frame-sampling stub: the Spark plumbing for a binary video
-    column → exploded frame rows.  Real video decode is unavailable in
-    this container — gate clearly."""
-    raise NotImplementedError(
-        "video decode requires ffmpeg/pyav (absent in this container); "
-        "the operator shape is df.mapInPandas(batch → one row per sampled "
-        "frame with columns (video_id, frame_idx, bytes))"
-    )
-
-
 def audio_features(df: DataFrame, frame_ms: int = 25, sr: int = 16_000) -> DataFrame:
     # `sr` is the fallback when the input lacks a per-row sr column
     """Audio feature extraction over an opaque binary column.

@@ -23,10 +23,10 @@ Spark shape (no per-query scans):
    source, taken once per source and session (:func:`_source_sample`),
    so a warm call on an unchanged source scans the points once, in its
    round, not twice.  Per round, each active query's
-   candidate cell cover is generated as columns (``explode(sequence(...))``
-   over its clamped cell ranges) and carries the query's cap.  Every
-   round's Column expressions are built once per session and round
-   shape (``_round_exprs``), not once per call.
+   candidate cell cover is :func:`tiling.range_cover` of its window (the
+   engine's one box → cell keys owner) and carries the query's cap.
+   Every round's Column expressions are built once per session and
+   round shape (``_round_exprs``), not once per call.
 2. Broadcast the (cell, query, cap, in-small-window) table; candidates
    are a pure-JVM broadcast hash join against the point's pyramid cell
    id whose condition also keeps only points inside the query's cap box
@@ -63,7 +63,9 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T_
 
 from geodesk_spark.geo import mercator, tile as T
 from geodesk_spark.operators.spatial_join import _PREPARED_CACHE
-from geodesk_spark.operators.tiling import session_exprs
+from geodesk_spark.operators.tiling import (
+    ZOOM_LEVELS, cover_ranges, explode_bbox_tiles, range_cover, session_exprs,
+)
 
 I32_MAX = (1 << 31) - 1
 I32_MIN = -(1 << 31)
@@ -85,17 +87,6 @@ def _window_zoom(radius_imps: int) -> int:
     while zoom > 0 and ((2 * radius_imps) >> (32 - zoom)) + 1 > MAX_CELLS_PER_AXIS:
         zoom -= 2  # pyramid steps of 2, like the default level set
     return zoom
-
-
-def _cells_at_zoom(qx: int, qy: int, radius_imps: int, zoom: int) -> np.ndarray:
-    x0, x1 = max(qx - radius_imps, I32_MIN), min(qx + radius_imps, I32_MAX)
-    y0, y1 = max(qy - radius_imps, I32_MIN), min(qy + radius_imps, I32_MAX)
-    c0, c1 = int(T.column_from_x(x0, zoom)[()]), int(T.column_from_x(x1, zoom)[()])
-    r0, r1 = int(T.row_from_y(y1, zoom)[()]), int(T.row_from_y(y0, zoom)[()])
-    cols = np.arange(c0, c1 + 1, dtype=np.int64)
-    rows = np.arange(r0, r1 + 1, dtype=np.int64)
-    cc, rr = np.meshgrid(cols, rows)
-    return ((zoom << 24) | (rr.ravel() << 12) | cc.ravel()).astype(np.int64)
 
 
 def _guarantee_m(qy: int, radius_imps: int) -> float:
@@ -279,57 +270,34 @@ _ACTIVE_SCHEMA = T_.StructType(
 )
 
 
+def _round_box(radius: int) -> tuple[str, str, str, str]:
+    """A round's window around each active query (a range_cover box)."""
+    return (f"_qx - {radius}", f"_qy - {radius}", f"_qx + {radius}", f"_qy + {radius}")
+
+
 def _round_exprs(points: DataFrame, zoom: int, radius: int, big: int, id_col: str, k: int) -> dict:
     """Column expressions of one :func:`knn_join` round, built once per
     (session, zoom, radius, big, id_col, k) in ``tiling._EXPR_CACHE``:
-    the cover's row/column ranges and cell key, the small-window flag,
-    the probe's tile, the cap box test, the Mercator distance, and the
-    top-k window and its filter.  Each expression node costs a py4j
-    round trip to build; rebuilt on every call they were most of a warm
-    call's round trips."""
+    the cover's projection and small-window flag (a range test on the
+    cover's ``_cc``/``_rr``), the probe's tile, the cap box test, the
+    Mercator distance, and the top-k window and its filter.  Each
+    expression node costs a py4j round trip to build; rebuilt on every
+    call they were most of a warm call's round trips."""
 
     def build():
-        shift = 32 - zoom
         qx, qy, capr = F.col("_qx"), F.col("_qy"), F.col("_capr")
-        lo, hi = F.lit(I32_MIN).cast("long"), F.lit(I32_MAX).cast("long")
-
-        def col_range(rad):
-            r, off = F.lit(rad).cast("long"), F.lit(1 << 31).cast("long")
-            x0, x1 = F.greatest(qx - r, lo), F.least(qx + r, hi)
-            return (
-                F.shiftright(x0 + off, shift).cast("int"),
-                F.shiftright(x1 + off, shift).cast("int"),
-            )
-
-        def row_range(rad):
-            r = F.lit(rad).cast("long")
-            y0, y1 = F.greatest(qy - r, lo), F.least(qy + r, hi)
-            return (
-                F.shiftright(hi - y1, shift).cast("int"),
-                F.shiftright(hi - y0, shift).cast("int"),
-            )
-
-        bc0, bc1 = col_range(big)
-        br0, br1 = row_range(big)
-        sc0, sc1 = col_range(radius)
-        sr0, sr1 = row_range(radius)
-        row, col = F.col("_row"), F.col("_col")
+        sc0, sc1, sr0, sr1 = cover_ranges(zoom, *(F.expr(b) for b in _round_box(radius)))
+        cc, rr = F.col("_cc"), F.col("_rr")
         qid, dist = F.col("_qid"), F.col("dist_m")
         w = Window.partitionBy("_qid").orderBy(dist.asc(), F.col(id_col).asc())
         return {
-            "rows": F.explode(F.sequence(br0, br1)),
-            "cols": F.explode(F.sequence(bc0, bc1)),
             "cover": [
-                (
-                    F.lit(zoom << 24).cast("long")
-                    + F.shiftleft(row.cast("long"), 12)
-                    + col.cast("long")
-                ).alias("_qcell"),
+                F.col("cell").alias("_qcell"),
                 qid,
                 qx,
                 qy,
                 capr,
-                ((col >= sc0) & (col <= sc1) & (row >= sr0) & (row <= sr1)).alias("small"),
+                ((cc >= sc0) & (cc <= sc1) & (rr >= sr0) & (rr <= sr1)).alias("small"),
             ],
             "tile": T.tile_col(F.col("x"), F.col("y"), zoom).cast("long"),
             # int64 only, so the join condition it is pushed into stays small
@@ -362,10 +330,10 @@ def knn_join(
 
     1. Per round, every active query shares one radius (init × 16^round),
        so the window zoom is a compile-time constant and the candidate
-       cell cover is generated AS COLUMNS — two chained
-       ``explode(sequence(...))`` over the clamped col/row ranges, with
-       the in-small-window flag a pure range test.  The cover is a
-       ``LocalRelation`` built from the driver's active rows.
+       cell cover is :func:`tiling.range_cover` of each query's window,
+       with the in-small-window flag a pure range test on its
+       ``_cc``/``_rr``.  The cover is a ``LocalRelation`` built from the
+       driver's active rows.
     2. Candidates = one broadcast hash join of the points on the cell id,
        with exact Mercator distance.  The join condition also keeps only
        points inside each query's cap box (:func:`_caps`), so a query in
@@ -446,7 +414,8 @@ def knn_join(
     for radius, big in schedule:
         if not act_rows:
             break
-        ex = _round_exprs(points, _window_zoom(big), radius, big, id_col, k)
+        zoom = _window_zoom(big)
+        ex = _round_exprs(points, zoom, radius, big, id_col, k)
         final_round = big >= (1 << 31)
         if final_round:  # the world window is never capped
             act_rows = [(qi, qx, qy, NO_CAP) for qi, qx, qy, _ in act_rows]
@@ -455,11 +424,7 @@ def knn_join(
         active = spark.createDataFrame(
             pd.DataFrame(act_rows, columns=_ACTIVE_SCHEMA.names), _ACTIVE_SCHEMA
         )
-        cover = (
-            active.withColumn("_row", ex["rows"])
-            .withColumn("_col", ex["cols"])
-            .select(ex["cover"])
-        )
+        cover = range_cover(active, zoom, _round_box(big)).select(ex["cover"])
         # the cap box is an int filter that Spark pushes into the join
         # condition; never a dist_m filter (CLAUDE.md, 64 KB methods)
         cand = (
@@ -528,34 +493,31 @@ def distance_join(
     Generalizes the reference's single-target radius filter
     (PointDistanceFilter.java:28-122) to a broadcast join: per target,
     the Chebyshev box of deltaFromMeters(meters, target_y) imps is
-    covered with pyramid cells (zoom adaptive per target); candidates
-    come from ONE pure-JVM broadcast hash join on exploded cell ids.
-    The exact test mirrors the reference: bbox first (the deltaFromMeters
-    box IS the semantics, Box.java:421), then Mercator distance ≤ m —
-    all codegen'd columns.
+    covered with pyramid cells by :func:`tiling.range_cover`, all
+    targets at ONE zoom (:func:`_window_zoom` of the largest box), so
+    each point probes its one cell at that zoom and a (point, target)
+    pair meets at most once.  Candidates come from ONE pure-JVM
+    broadcast hash join on the cell id.  The exact test mirrors the
+    reference: bbox first (the deltaFromMeters box IS the semantics,
+    Box.java:421), then Mercator distance ≤ m — all codegen'd columns.
     """
-    spark = points.sparkSession
     rows = []
-    zooms = set()
     for tid, lon, lat in targets:
         qx = int(mercator.x_from_lon(lon)[()])
         qy = int(mercator.y_from_lat(lat)[()])
         delta = int(np.ceil(float(mercator.delta_from_meters(meters, qy)[()])))
-        zoom = _window_zoom(delta)
-        zooms.add(zoom)
-        for c in _cells_at_zoom(qx, qy, delta, zoom).tolist():
-            rows.append((int(c), tid, qx, qy, delta))
-    tcells = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["_qcell", "target_id", "qx", "qy", "delta"]),
-        schema="_qcell long, target_id string, qx long, qy long, delta long",
+        rows.append((tid, qx, qy, delta))
+    zoom = _window_zoom(max((r[3] for r in rows), default=0))
+    # from pandas: a LocalRelation, so the broadcast needs no job of its own
+    tdf = points.sparkSession.createDataFrame(
+        pd.DataFrame(rows, columns=["target_id", "qx", "qy", "delta"]),
+        "target_id string, qx long, qy long, delta long",
     )
+    tcells = range_cover(
+        tdf, zoom, ("qx - delta", "qy - delta", "qx + delta", "qy + delta")
+    ).select(F.col("cell").alias("_qcell"), "target_id", "qx", "qy", "delta")
     probe = points.select(id_col, "x", "y").withColumn(
-        "_qcell",
-        F.explode(
-            F.array(
-                *[T.tile_col(F.col("x"), F.col("y"), z).cast("long") for z in sorted(zooms)]
-            )
-        ),
+        "_qcell", T.tile_col(F.col("x"), F.col("y"), zoom).cast("long")
     )
     xd = F.col("x").cast("long")
     yd = F.col("y").cast("long")
@@ -590,6 +552,24 @@ def segment_candidates(
     int64-exact projection and exact Mercator foot distance (expression
     order documented in snap_to_segments — its oracle mirrors this).
 
+    A candidate lies in the segment's bbox widened by its own ``_delta``
+    = delta_from_meters(meters, py) × ``slack``.  The join is GeoDesk's
+    tile assignment, not a nested loop: each segment's bbox, widened by
+    a bound D_s on ``_delta``, goes through :func:`tiling.explode_bbox_tiles`
+    (one level, ≤ 4 disjoint tiles) and each point probes its tile at
+    zoom 0 and every ``ZOOM_LEVELS`` level, so one broadcast hash join
+    meets a pair at most once; the exact box test runs on its rows.  For
+    every point p passing that test against segment s,
+
+        _delta(py) ≤ D_s = _delta(min(Y_s + ⌈R⌉ + 1, 2³¹)),
+        Y_s = max(|sminy|, |smaxy|),  R = _delta(2³¹):
+
+    the computed ``_delta`` is non-decreasing in |y| (a Horner polynomial
+    in y² with positive coefficients; IEEE rounding is monotone), so
+    ``_delta`` ≤ R and |py| ≤ Y_s + _delta(py) + 1 (the 1 absorbs the box
+    test's double rounding).  The bbox widens by ⌈D_s⌉ + 1, clamped to
+    the int32 world.
+
     ``max_cands`` keeps only each point's nearest ``max_cands`` by
     (dist_m, seg_id), ranked by one ``row_number()`` window BEFORE the
     ``dist_m <= meters`` filter.  That filter drops a suffix of every
@@ -598,28 +578,50 @@ def segment_candidates(
     foot point written out at every use inside the distance polynomial,
     and the stage feeding the window's sort then overflows janino's
     64 KB method limit (interpreted fallback)."""
+
+    def delta_at(y):
+        return mercator.delta_from_meters_col(F.lit(float(meters)), y) * F.lit(float(slack))
+
     # the point's search delta (a det_cosh polynomial) is projected once
-    # per point: written into the join condition, the nested-loop join
-    # evaluates it four times per point × segment pair
+    # per point, below the probe's explode, so no join condition holds it
     p = points.select(
         *point_cols, F.col("x").alias("px"), F.col("y").alias("py"),
-        (mercator.delta_from_meters_col(F.lit(float(meters)), F.col("y"))
-         * F.lit(float(slack))).alias("_delta"),
+        delta_at(F.col("y")).alias("_delta"),
     )
+    probe = p.withColumn(
+        "_tile",
+        F.explode(F.array(*[T.tile_col(F.col("px"), F.col("py"), z) for z in (0, *ZOOM_LEVELS)])),
+    )
+    # R = the largest _delta of any point (|py| ≤ 2³¹), numpy's op order
+    # being the Column's; D_s per segment as in the docstring
+    reach = int(np.ceil(float(mercator.delta_from_meters(meters, 1 << 31)[()]) * slack)) + 1
     s = segs.select(
         seg_id, "x1", "y1", "x2", "y2",
-        F.least("x1", "x2").alias("_sminx"),
-        F.greatest("x1", "x2").alias("_smaxx"),
-        F.least("y1", "y2").alias("_sminy"),
-        F.greatest("y1", "y2").alias("_smaxy"),
+        F.least("x1", "x2").cast("long").alias("_sminx"),
+        F.greatest("x1", "x2").cast("long").alias("_smaxx"),
+        F.least("y1", "y2").cast("long").alias("_sminy"),
+        F.greatest("y1", "y2").cast("long").alias("_smaxy"),
+    )
+    poleward = F.greatest(F.abs(F.col("_sminy")), F.abs(F.col("_smaxy")))
+    wide = F.ceil(delta_at(F.least(poleward + F.lit(reach), F.lit(1 << 31)))) + 1
+    lo, hi = F.lit(I32_MIN).cast("long"), F.lit(I32_MAX).cast("long")
+    s = explode_bbox_tiles(
+        s.withColumns({
+            "minx": F.greatest(F.col("_sminx") - wide, lo),
+            "miny": F.greatest(F.col("_sminy") - wide, lo),
+            "maxx": F.least(F.col("_smaxx") + wide, hi),
+            "maxy": F.least(F.col("_smaxy") + wide, hi),
+        })
+    ).select(
+        seg_id, "x1", "y1", "x2", "y2", "_sminx", "_smaxx", "_sminy", "_smaxy",
+        F.col("tile").alias("_tile"),
     )
     delta = F.col("_delta")
-    cand = p.join(
-        F.broadcast(s),
+    cand = probe.join(F.broadcast(s), "_tile").filter(
         (F.col("px") >= F.col("_sminx") - delta)
         & (F.col("px") <= F.col("_smaxx") + delta)
         & (F.col("py") >= F.col("_sminy") - delta)
-        & (F.col("py") <= F.col("_smaxy") + delta),
+        & (F.col("py") <= F.col("_smaxy") + delta)
     )
     abx, aby = F.col("x2") - F.col("x1"), F.col("y2") - F.col("y1")
     apx, apy = F.col("px") - F.col("x1"), F.col("py") - F.col("y1")
@@ -668,16 +670,15 @@ def snap_to_segments(
     their latitude span — then the exact Mercator distance to that foot
     point (Mercator.java:194-201).
 
-    Plan shape: ONE broadcast join (the segment layer is dimension-
-    sized; for planet-scale layers use the cell-blocked ``distance_join``
-    candidates instead), candidate filter = segment bbox expanded by
-    ``delta_from_meters(meters, point_y) × slack`` — a strict superset
-    of the radius ball whenever cosh(y_seg)/cosh(y_pt) ≤ slack, i.e.
-    for any sane radius — then argmin per point via one bounded window
-    (tie-break on seg id).  Dot products stay in exact int64 (|Δseg| ≤
-    2²⁶ imps for derived layers keeps them < 2⁶⁰); the t = dot/len²
-    division is the only float step before the distance itself, so an
-    oracle mirroring the op order is hash-exact.
+    Plan shape: :func:`segment_candidates`' broadcast tile join (the
+    segment layer is dimension-sized), candidate filter = segment bbox
+    expanded by ``delta_from_meters(meters, point_y) × slack`` — a
+    strict superset of the radius ball whenever cosh(y_seg)/cosh(y_pt)
+    ≤ slack, i.e. for any sane radius — then argmin per point via one
+    bounded window (tie-break on seg id).  Dot products stay in exact
+    int64 (|Δseg| ≤ 2²⁶ imps for derived layers keeps them < 2⁶⁰); the
+    t = dot/len² division is the only float step before the distance
+    itself, so an oracle mirroring the op order is hash-exact.
     """
     return segment_candidates(
         points, segs, meters, [point_id], seg_id=seg_id, slack=slack, max_cands=1
@@ -763,7 +764,7 @@ def route_measure(
     ``route_segs`` carries (route_id, seq, x1, y1, x2, y2) with seq
     ordering the segments along the route (seq < 2^20).  Each point
     snaps to the globally nearest segment within ``meters``
-    (snap_to_segments machinery: one broadcast join + one bounded
+    (snap_to_segments machinery: one broadcast tile join + one bounded
     window), then
 
         measure_um = prefix_um(route, seq) + floor(t · len_um + 0.5)

@@ -220,10 +220,10 @@ def map_match(
     every point with ≥1 candidate within ``radius_m``; candidate-less
     points drop out (their step contributes no lattice column).
 
-    Plan shape: candidates = the snap_to_segments broadcast bbox join
-    (planet-scale road networks: swap in cell-blocked candidates à la
-    ``distance_join``), then a bounded per-point top-``max_cands``
-    window, then ONE ``applyInPandas`` per trajectory for the Viterbi
+    Plan shape: candidates = ``knn.segment_candidates``, the
+    snap_to_segments broadcast hash join of point tiles against the
+    segments' tile assignment (no nested loop), then a bounded per-point
+    top-``max_cands`` window, then ONE ``applyInPandas`` per trajectory for the Viterbi
     decode — the DP state is inherently per-trajectory, trajectories
     are bounded (10³-10⁴ points) while the corpus is not, so the
     trajectory is the correct parallel grain at 10^12 rows.  All float

@@ -37,13 +37,6 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def bpe_ish_token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """BPE-like subword proxy: count word chunks + digit runs + punctuation
-    as separate tokens (regex split), the standard cheap token estimator."""
-    pieces = F.regexp_extract_all(F.col(text_col), F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"), 0)
-    return df.select("doc_id", F.size(pieces).alias("n_bpe_tokens"))
-
-
 def quality_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Length / punctuation / stopword / uppercase ratios + composite score."""
     text = F.col(text_col)

@@ -245,14 +245,6 @@ def rasterize_pixel_counts(points: DataFrame, zoom: int = 8):
     )
 
 
-def rasterize_counts(points: DataFrame, tile_col: str = "tile_z8"):
-    """Vector→raster aggregate without file IO: per-tile point counts
-    (the partition-pruned rollup used by bench/lineage metrics)."""
-    from pyspark.sql import functions as F
-
-    return points.groupBy(tile_col).agg(F.count("*").alias("n_points"))
-
-
 def quantize_for_tiles(
     lines: DataFrame,
     zoom: int,
@@ -526,20 +518,14 @@ def clip_polygons_to_tiles(
     """
     from pyspark.sql import functions as F
 
-    from geodesk_spark.operators.tiling import cover_cell_col
+    from geodesk_spark.operators.tiling import range_cover
 
     step = 1 << (32 - zoom)
     r = F.col(ring_col)
-    xs = F.transform(r, lambda p: p["x"])
-    ys = F.transform(r, lambda p: p["y"])
+    xs, ys = (f"transform(`{ring_col}`, p -> p.{a})" for a in ("x", "y"))
+    box = (f"array_min({xs})", f"array_min({ys})", f"array_max({xs})", f"array_max({ys})")
     covered = (
-        polys.withColumn("_cmin", F.floor((F.array_min(xs) + F.lit(2147483648)) / F.lit(step)))
-        .withColumn("_cmax", F.floor((F.array_max(xs) + F.lit(2147483648)) / F.lit(step)))
-        .withColumn("_rmin", F.floor((F.lit(2147483647) - F.array_max(ys)) / F.lit(step)))
-        .withColumn("_rmax", F.floor((F.lit(2147483647) - F.array_min(ys)) / F.lit(step)))
-        .withColumn("_cc", F.explode(F.sequence(F.col("_cmin"), F.col("_cmax"))))
-        .withColumn("_rr", F.explode(F.sequence(F.col("_rmin"), F.col("_rmax"))))
-        .withColumn("cell", cover_cell_col(zoom, F.col("_rr"), F.col("_cc")))
+        range_cover(polys, zoom, box)
         .withColumn("_txmin", F.col("_cc") * F.lit(step) - F.lit(2147483648))
         .withColumn(
             "_tymin", F.lit(2147483647) - F.col("_rr") * F.lit(step) - F.lit(step)
@@ -554,7 +540,6 @@ def clip_polygons_to_tiles(
                 ),
             ),
         )
-        .drop("_cmin", "_cmax", "_rmin", "_rmax")
     )
     cur = "_r0"
     for i, (bound, axis, keep_ge) in enumerate(SH_TILE_PASSES(step), 1):

@@ -368,27 +368,10 @@ def tile_index_walk(
     return out
 
 
-# --- shared segment-bbox cell cover (fixed zoom) ----------------------------
-# ONE definition of the cover arithmetic used by the big-big joins and the
-# tile clip (bigjoin.crossing_segments_join, tiles_sink.clip_segments_to_tiles)
-# and by their SQL oracles: the exactly-once rules (intersection-cell,
-# point-owns-bucket) require every copy to be bit-identical, so there are no
-# copies — Python and SQL call sites both come here.
-
-
-def cover_bounds_cols(zoom: int):
-    """(cmin, cmax, rmin, rmax) Columns over x1/y1/x2/y2 segment endpoints."""
-    from pyspark.sql import functions as F
-
-    step = 1 << (32 - zoom)
-    x1, y1 = F.col("x1"), F.col("y1")
-    x2, y2 = F.col("x2"), F.col("y2")
-    return (
-        F.floor((F.least(x1, x2) + F.lit(2147483648)) / F.lit(step)),
-        F.floor((F.greatest(x1, x2) + F.lit(2147483648)) / F.lit(step)),
-        F.floor((F.lit(2147483647) - F.greatest(y1, y2)) / F.lit(step)),
-        F.floor((F.lit(2147483647) - F.least(y1, y2)) / F.lit(step)),
-    )
+# --- the range cover: box -> cell keys at one zoom ---------------------------
+# The one owner of "box -> packed cell keys" (explode_cover, the tile clips,
+# the kNN rounds, distance_join).  cover_bounds_sql / cover_cell_sql are its
+# oracles' twins, which the big-big joins' exactly-once rules need bit-equal.
 
 
 def cover_cell_col(zoom: int, rr, cc):
@@ -397,27 +380,56 @@ def cover_cell_col(zoom: int, rr, cc):
     zoom ≤ 12 only: rows/cols beyond 4095 would silently collide in the
     12-bit row shift — and this packing is THE single definition behind
     the exactly-once intersection-cell rule of the big-big joins."""
-    from pyspark.sql import functions as F
-
     assert zoom <= 12, f"cover_cell packing is 12-bit row/col; got zoom={zoom}"
     return F.lit(zoom * (1 << 24)).cast("long") + rr * 4096 + cc
 
 
-def explode_cover(df, zoom: int):
-    """Explode a segment frame (… x1 y1 x2 y2) to one row per covered
-    cell, adding _cc/_rr/cell.  Pure JVM; fan-out O(len/cellsize)²."""
-    from pyspark.sql import functions as F
+def cover_ranges(zoom: int, minx: Column, miny: Column, maxx: Column, maxy: Column):
+    """(c0, c1, r0, r1) bigint Columns: ``zoom``'s col/row ranges of the
+    imp box [minx, maxx] × [miny, maxy], clamped to the grid so a box past
+    the world edge cannot spill into the next row's bits.  In the world
+    they equal :func:`cover_bounds_sql`'s floor((v + 2³¹) / step)."""
+    step = F.lit(float(1 << (32 - zoom)))
+    lo, hi = F.lit(0).cast("long"), F.lit((1 << zoom) - 1).cast("long")
+    west, north = F.lit(1 << 31).cast("long"), F.lit((1 << 31) - 1).cast("long")
 
-    cmin, cmax, rmin, rmax = cover_bounds_cols(zoom)
+    def index(v):
+        return F.least(F.greatest(F.floor(v / step), lo), hi)
+
     return (
-        df.withColumn("_cmin", cmin)
-        .withColumn("_cmax", cmax)
-        .withColumn("_rmin", rmin)
-        .withColumn("_rmax", rmax)
-        .withColumn("_cc", F.explode(F.sequence(F.col("_cmin"), F.col("_cmax"))))
-        .withColumn("_rr", F.explode(F.sequence(F.col("_rmin"), F.col("_rmax"))))
-        .withColumn("cell", cover_cell_col(zoom, F.col("_rr"), F.col("_cc")))
-        .drop("_cmin", "_cmax", "_rmin", "_rmax")
+        index(minx + west),
+        index(maxx + west),
+        index(north - maxy),
+        index(north - miny),
+    )
+
+
+def range_cover(df: DataFrame, zoom: int, box: tuple[str, str, str, str]) -> DataFrame:
+    """``df`` exploded to one row per ``zoom`` cell of its box (four SQL
+    expressions over ``df``: minx, miny, maxx, maxy), adding ``_cc``,
+    ``_rr`` and ``cell``; the expressions are built once per session and
+    (zoom, box) through :func:`session_exprs`."""
+
+    def build():
+        c0, c1, r0, r1 = cover_ranges(zoom, *(F.expr(b) for b in box))
+        return {
+            "cc": F.explode(F.sequence(c0, c1)),
+            "rr": F.explode(F.sequence(r0, r1)),
+            "cell": cover_cell_col(zoom, F.col("_rr"), F.col("_cc")),
+        }
+
+    ex = session_exprs(df, ("range_cover", zoom, box), build)
+    return (
+        df.withColumn("_cc", ex["cc"])
+        .withColumn("_rr", ex["rr"])
+        .withColumn("cell", ex["cell"])
+    )
+
+
+def explode_cover(df: DataFrame, zoom: int) -> DataFrame:
+    """:func:`range_cover` of each segment's bbox (… x1 y1 x2 y2)."""
+    return range_cover(
+        df, zoom, ("least(x1, x2)", "least(y1, y2)", "greatest(x1, x2)", "greatest(y1, y2)")
     )
 
 
@@ -481,14 +493,6 @@ def hierarchical_cover(
     assert 0 <= z_min <= z_max <= 12, "packing is 12-bit row/col (zoom <= 12)"
     HALF = 1 << 31
 
-    def _bounds(z: int):
-        step = float(1 << (32 - z))
-        c0 = F.floor((F.col(minx).cast("double") + F.lit(float(HALF))) / F.lit(step)).cast("long")
-        c1 = F.floor((F.col(maxx).cast("double") + F.lit(float(HALF))) / F.lit(step)).cast("long")
-        r0 = F.floor((F.lit(float(HALF - 1)) - F.col(maxy).cast("double")) / F.lit(step)).cast("long")
-        r1 = F.floor((F.lit(float(HALF - 1)) - F.col(miny).cast("double")) / F.lit(step)).cast("long")
-        return c0, c1, r0, r1
-
     def _full(z: int, cc, rr):
         step = 1 << (32 - z)
         fx = ((cc * F.lit(step) - F.lit(HALF)) >= F.col(minx).cast("long")) & (
@@ -501,7 +505,7 @@ def hierarchical_cover(
 
     levels = []
     for z in range(z_min, z_max + 1):
-        c0, c1, r0, r1 = _bounds(z)
+        c0, c1, r0, r1 = cover_ranges(z, *(F.col(c) for c in (minx, miny, maxx, maxy)))
         lvl = df
         if z == z_min:
             strips = F.array(F.struct(c0.alias("clo"), c1.alias("chi"), r0.alias("rlo"), r1.alias("rhi")))
@@ -617,17 +621,12 @@ def cover_join(
     BETWEEN miny AND maxy`` (tests/test_tiling.py pins the equality).
     """
     cover = hierarchical_cover(boxes, z_min, z_max)
-    ancestors = F.array(
-        *[
-            (
-                F.lit(z << 24)
-                + F.floor((F.lit(float(1 << 31) - 1.0) - F.col(y).cast("double")) / F.lit(float(1 << (32 - z)))).cast("long") * 4096
-                + F.floor((F.col(x).cast("double") + F.lit(float(1 << 31))) / F.lit(float(1 << (32 - z)))).cast("long")
-            )
-            for z in range(z_min, z_max + 1)
-        ]
-    )
-    pts = points.withColumn("tile", F.explode(ancestors))
+
+    def ancestor(z):
+        c, _, r, _ = cover_ranges(z, F.col(x), F.col(y), F.col(x), F.col(y))
+        return cover_cell_col(z, r, c)
+
+    pts = points.withColumn("tile", F.explode(F.array(*[ancestor(z) for z in range(z_min, z_max + 1)])))
     j = pts.join(cover, "tile")
     exact = (
         (F.col(x) >= F.col("minx"))

@@ -133,25 +133,6 @@ def running_tile_stats(tiled: DataFrame) -> DataFrame:
     )
 
 
-def drain_available_now(
-    result: DataFrame, out_dir: str, checkpoint_dir: str, output_mode: str = "append"
-) -> None:
-    """Run the stream to exhaustion of currently-available files, then
-    stop — the resumable batch-incremental mode.  Re-invoking after new
-    files arrive processes ONLY the delta (file ledger + state live in
-    the checkpoint), the streaming analog of streaming/checkpoint.py's
-    stage-skip rule."""
-    q = (
-        result.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def drain_to_memory(
     spark: SparkSession, result: DataFrame, name: str, checkpoint_dir: str, output_mode: str
 ) -> DataFrame:

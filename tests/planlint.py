@@ -24,3 +24,10 @@ def python_nodes(df) -> list[str]:
     return [
         n for n in plan_nodes(df) if "Python" in n or "InPandas" in n or "InArrow" in n
     ]
+
+
+def nested_loop_joins(df) -> list[str]:
+    """The plan's nested-loop joins (BroadcastNestedLoopJoin,
+    CartesianProduct): joins that pair every row of one side with every
+    row of the other, so their cost grows as the product of the sides."""
+    return [n for n in plan_nodes(df) if n in ("BroadcastNestedLoopJoin", "CartesianProduct")]

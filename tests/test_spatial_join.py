@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from geodesk_spark.geo import mercator, pip
 from geodesk_spark.operators import bigjoin, knn as knn_mod, spatial_join, tiling
 from geodesk_spark.sources import synth
-from planlint import formatted_plan, plan_nodes, python_nodes
+from planlint import formatted_plan, nested_loop_joins, plan_nodes, python_nodes
 
 
 @pytest.fixture(scope="module")
@@ -296,16 +296,21 @@ def test_knn_join_matches_knn(world):
 
 def test_knn_join_reuses_round_expressions(world, monkeypatch):
     """knn_join builds each round's Column expressions once per session:
-    after the first call neither the probe's tile nor the Mercator
-    distance is built again, and the rows stay the same."""
+    after the first call neither the probe's tile, the Mercator distance
+    nor the range cover of the round's windows is built again, and the
+    rows stay the same."""
     from geodesk_spark.geo import tile as T
 
     monkeypatch.setattr(tiling, "_EXPR_CACHE", {})
     built = []
     real_tile, real_dist = T.tile_col, mercator.distance_col
+    real_cover = tiling.cover_ranges
     monkeypatch.setattr(T, "tile_col", lambda *a: built.append("tile") or real_tile(*a))
     monkeypatch.setattr(
         mercator, "distance_col", lambda *a: built.append("dist") or real_dist(*a)
+    )
+    monkeypatch.setattr(
+        tiling, "cover_ranges", lambda *a: built.append("cover") or real_cover(*a)
     )
     df, _ = world
     queries = [("q_tokyo", 139.7, 35.7), ("q_paris", 2.3, 48.9), ("q_ocean", -140.0, -30.0)]
@@ -319,7 +324,7 @@ def test_knn_join_reuses_round_expressions(world, monkeypatch):
         return out.toPandas()[cols].sort_values(key).reset_index(drop=True).to_dict("records")
 
     first = run()
-    assert "tile" in built and "dist" in built
+    assert "tile" in built and "dist" in built and "cover" in built
     n_built = len(built)
     assert run() == first
     assert len(built) == n_built
@@ -757,9 +762,11 @@ def test_snap_to_segments_bruteforce(world):
 
 
 def test_segment_candidates_join_reads_projected_delta(spark):
-    """segment_candidates' nested-loop join compares against the point's
-    projected ``_delta``: its condition is four short bbox tests, with
-    no Mercator polynomial evaluated per point × segment pair."""
+    """segment_candidates reads the point's ``_delta`` from ONE projection
+    per point, made below the probe's explode, so no join condition holds
+    the Mercator polynomial: each is four short bbox tests against
+    ``_delta``.  The join is a hash join on the tile id, never a nested
+    loop."""
     pts = spark.createDataFrame(
         [(i, 1_000_000 * i, -2_000_000 * i) for i in range(8)], "pid long, x long, y long"
     )
@@ -767,16 +774,166 @@ def test_segment_candidates_join_reads_projected_delta(spark):
         [(0, 0, 0, 5_000_000, 0)], "seg_id long, x1 long, y1 long, x2 long, y2 long"
     )
     cand = knn_mod.segment_candidates(pts, segs, 500.0, ["pid"], max_cands=2)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    conds = [
-        re.sub(r"#\d+L?", "", ln.split("Inner, ", 1)[1])
-        for ln in plan.splitlines() if "BroadcastNestedLoopJoin" in ln
-    ]
+    assert nested_loop_joins(cand) == []
+    plan = re.sub(r"#\d+L?", "", cand._jdf.queryExecution().executedPlan().toString())
+    lines = plan.splitlines()
+    conds = [ln.split("Inner, ", 1)[1] for ln in lines if "Join" in ln and "Inner, " in ln]
     assert conds, plan
+    # the det_cosh polynomial's leading coefficient marks every copy of it
+    poly = repr(mercator._COSH_C[0])
     for cond in conds:
         assert "_delta" in cond, cond
-        # 249 chars; with the polynomial written in, 9,425
+        assert poly not in cond, cond
         assert len(cond) < 1000, cond
+    defs = [ln for ln in lines if " AS _delta" in ln]
+    assert len(defs) == 1 and "Project [" in defs[0], defs
+
+
+def _across_row_edge(meters: float, lat: float, north: bool) -> tuple[int, int]:
+    """(segment y, point y) straddling a zoom-12 row edge near ``lat``,
+    the point poleward of the segment and as far from it as a candidate
+    within ``meters`` can be.  The point lies past the segment's y
+    widened by ``_delta`` at the segment itself (slack 1): a cover that
+    took ``_delta`` at the bbox's own edge would leave it a row short."""
+    from geodesk_spark.geo import tile as T
+
+    step = 1 << 20
+    r = int(T.row_from_y(int(mercator.y_from_lat(lat if north else -lat)[()]), 12))
+    # the first y past row r's top (north) or bottom (south) edge
+    py = (1 << 31) - r * step if north else (1 << 31) - (r + 1) * step - 1
+    sign = -1 if north else 1
+    d = int(np.ceil(float(mercator.delta_from_meters(meters, py)[()])))
+    while float(mercator.distance(0, py, 0, py + sign * d)[()]) > meters:
+        d -= 1
+    ys = py + sign * d
+    assert d > np.ceil(float(mercator.delta_from_meters(meters, ys)[()]))
+    return ys, py
+
+
+def test_segment_candidates_equal_the_bbox_definition_near_the_poles(spark):
+    """segment_candidates' tile join finds exactly the pairs of its
+    definition (the point inside the segment bbox widened by its own
+    ``_delta``, then the distance filter and the top-``max_cands``
+    window), written here as a cross join, at slack 1.  Segments sit at
+    |lat| ≥ 80°, where ``_delta`` grows fastest toward the pole: each
+    has a point across a zoom-12 row edge, poleward and as far as a
+    candidate can be (:func:`_across_row_edge`), one across a column
+    edge, and random points around it."""
+    rng = np.random.default_rng(5)
+    meters, slack = 300.0, 1.0
+    col_step = 1 << 20
+    segs, pts = [], []
+    for sid, lat in enumerate([80.0, 81.5, 83.0, 84.0, 85.0] * 2):
+        north = sid < 5
+        ys, py = _across_row_edge(meters, lat, north)
+        # a short horizontal segment in the middle of its column
+        c = int(rng.integers(100, 3_900))
+        x1 = c * col_step - (1 << 31) + col_step // 2 - 500
+        segs.append((sid, x1, ys, x1 + 1_000, ys))
+        pts.append((x1 + 500, py))
+        # across the column's west edge, on the segment's own row
+        d = int(np.floor(float(mercator.delta_from_meters(meters, ys)[()]))) - 1
+        x_west = c * col_step - (1 << 31)  # the column's first x
+        segs.append((100 + sid, x_west, ys, x_west + 1_000, ys))
+        pts.append((x_west - d, ys))
+        for _ in range(30):
+            pts.append((
+                int(rng.integers(x1 - 60_000, x1 + 61_000)),
+                int(rng.integers(ys - 60_000, ys + 60_000)),
+            ))
+    pdf = pd.DataFrame(pts, columns=["x", "y"])
+    pdf.insert(0, "pid", np.arange(len(pdf), dtype=np.int64))
+    pts_df = spark.createDataFrame(pdf, "pid long, x long, y long")
+    seg_df = spark.createDataFrame(
+        pd.DataFrame(segs, columns=["seg_id", "x1", "y1", "x2", "y2"]),
+        "seg_id long, x1 long, y1 long, x2 long, y2 long",
+    )
+
+    def definition(max_cands):
+        from pyspark.sql import Window
+
+        p = pts_df.select(
+            "pid", F.col("x").alias("px"), F.col("y").alias("py"),
+            (mercator.delta_from_meters_col(F.lit(meters), F.col("y")) * F.lit(slack)).alias("d"),
+        )
+        s = seg_df.select(
+            "seg_id", "x1", "y1", "x2", "y2",
+            F.least("x1", "x2").alias("a"), F.greatest("x1", "x2").alias("b"),
+            F.least("y1", "y2").alias("c"), F.greatest("y1", "y2").alias("e"),
+        )
+        j = p.crossJoin(s).filter(
+            (F.col("px") >= F.col("a") - F.col("d")) & (F.col("px") <= F.col("b") + F.col("d"))
+            & (F.col("py") >= F.col("c") - F.col("d")) & (F.col("py") <= F.col("e") + F.col("d"))
+        )
+        abx, aby = F.col("x2") - F.col("x1"), F.col("y2") - F.col("y1")
+        dot = (F.col("px") - F.col("x1")) * abx + (F.col("py") - F.col("y1")) * aby
+        len2 = abx * abx + aby * aby
+        t = F.when(len2 == 0, F.lit(0.0)).otherwise(F.least(F.greatest(dot / len2, F.lit(0.0)), F.lit(1.0)))
+        foot = j.select(
+            "pid", "seg_id", (F.col("x1") + t * abx).alias("sx"), (F.col("y1") + t * aby).alias("sy"),
+            "px", "py",
+        ).withColumn("dist_m", mercator.distance_col(F.col("px"), F.col("py"), F.col("sx"), F.col("sy")))
+        if max_cands is not None:
+            w = Window.partitionBy("pid").orderBy(F.asc("dist_m"), F.asc("seg_id"))
+            foot = foot.withColumn("_rk", F.row_number().over(w)).filter(F.col("_rk") <= max_cands)
+        return foot.filter(F.col("dist_m") <= meters)
+
+    for max_cands in (None, 1):
+        got = knn_mod.segment_candidates(
+            pts_df, seg_df, meters, ["pid"], slack=slack, max_cands=max_cands
+        ).select("pid", "seg_id", "dist_m")
+        want = definition(max_cands).select("pid", "seg_id", "dist_m")
+        g = sorted(map(tuple, got.collect()))
+        w = sorted(map(tuple, want.collect()))
+        assert g == w
+        # every edge pair is a candidate, and so are random ones
+        assert len(w) >= 40 + 20
+
+
+def test_proximity_operators_plan_no_nested_loop_join(spark, monkeypatch):
+    """The proximity operators join through cell or tile keys, never a
+    nested loop: segment_candidates, snap_to_segments, route_measure,
+    mobility.map_match, distance_join and knn_join's last round plan no
+    BroadcastNestedLoopJoin or CartesianProduct."""
+    from geodesk_spark.operators import mobility
+
+    pts = spark.createDataFrame(
+        [(i, i // 4, i % 4, 1_000_000 * i, -2_000_000 * i) for i in range(8)],
+        "pid long, traj_id long, seq int, x long, y long",
+    )
+    segs = spark.createDataFrame(
+        [(0, 0, 0, 5_000_000, 0)], "seg_id long, x1 long, y1 long, x2 long, y2 long"
+    )
+    route = spark.createDataFrame(
+        [(1, 0, 0, 0, 5_000_000, 0), (1, 1, 5_000_000, 0, 9_000_000, 0)],
+        "route_id long, seq long, x1 long, y1 long, x2 long, y2 long",
+    )
+    plans = {
+        "segment_candidates": knn_mod.segment_candidates(pts, segs, 500.0, ["pid"]),
+        "snap_to_segments": knn_mod.snap_to_segments(pts, segs, 500.0, point_id="pid"),
+        "route_measure": knn_mod.route_measure(pts, route, 500.0),
+        "map_match": mobility.map_match(pts, segs, 500.0),
+        "distance_join": knn_mod.distance_join(
+            pts, [("t", 0.0, 0.0), ("u", 10.0, 80.0)], 1_000.0, id_col="pid"
+        ),
+    }
+    rounds = []
+    frame = type(pts)  # the session's DataFrame class
+    real_collect = frame.collect
+    monkeypatch.setattr(
+        frame, "collect",
+        lambda self: (rounds.append(self) if "rank_all" in self.columns else None)
+        or real_collect(self),
+    )
+    qdf = knn_mod._query_frame(spark, [("q", 0.0, 0.0)])
+    knn_mod.knn_join(
+        pts.select(F.col("pid").cast("string").alias("image_id"), "x", "y"), qdf, k=3,
+        init_radius_imps=1 << 20,
+    )
+    assert rounds
+    plans["knn_join last round"] = rounds[-1]
+    for name, df in plans.items():
+        assert nested_loop_joins(df) == [], name
 
 
 def test_idw_interpolate_matches_numpy_fold(world):

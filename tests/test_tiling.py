@@ -96,6 +96,41 @@ def test_explode_matches_slow_reference(spark):
     assert got_set == exp_set
 
 
+def test_range_cover_matches_enumeration_and_clamps(spark):
+    """range_cover = every (col, row) of the box at the zoom, packed
+    zoom<<24 | row<<12 | col, each cell once; a box reaching past the
+    world edge is clamped to the grid instead of spilling into the next
+    row's bits, and double boxes cover like integer ones."""
+    rng = np.random.default_rng(3)
+    zoom = 6
+    minx, miny, maxx, maxy = _random_bboxes(200, rng)
+    boxes = list(zip(range(200), minx.tolist(), miny.tolist(), maxx.tolist(), maxy.tolist()))
+    past = (1 << 31) + 5_000_000
+    boxes += [
+        (200, -past, -past, past, past),  # the whole world and more
+        (201, I32_MAX - 10, I32_MIN, past, I32_MIN + 10),  # the south-east corner
+    ]
+    df = spark.createDataFrame(boxes, "k long, a long, b long, c long, d long")
+
+    def want(a, b, c, d):
+        clamp = lambda v: min(max(v, I32_MIN), I32_MAX)  # noqa: E731
+        c0, c1 = (int(T.column_from_x(clamp(v), zoom)) for v in (a, c))
+        r0, r1 = (int(T.row_from_y(clamp(v), zoom)) for v in (d, b))
+        return sorted(
+            (zoom << 24) | (r << 12) | cc for r in range(r0, r1 + 1) for cc in range(c0, c1 + 1)
+        )
+
+    for cast in ("long", "double"):
+        box = tuple(f"cast({c} as {cast})" for c in "abcd")
+        rows = tiling.range_cover(df, zoom, box).select("k", "cell").collect()
+        got: dict = {}
+        for r in rows:
+            got.setdefault(r["k"], []).append(r["cell"])
+        for k, a, b, c, d in boxes:
+            assert sorted(got[k]) == want(a, b, c, d), (cast, k)
+    assert len(got[200]) == 1 << (2 * zoom)
+
+
 def test_exactly_once_dedup(spark):
     """For random query windows, exploded copies filtered by the NW rule give
     each bbox-intersecting feature exactly once — no distinct needed."""
